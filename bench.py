@@ -110,6 +110,7 @@ def main() -> None:
             import re as _re
             import shutil as _shutil
 
+            from chinook_music_database_analysis_spark.cache import invalidate
             from chinook_music_database_analysis_spark.plans.extensions import (
                 _INDEX_ROOT,
             )
@@ -118,7 +119,8 @@ def main() -> None:
             target = os.path.join(_INDEX_ROOT, tag)
             if os.path.isdir(target):
                 _shutil.rmtree(target, ignore_errors=True)
-                index_wiped = True
+                index_wiped = not os.path.isdir(target)
+                invalidate(sf_dir)
             print(
                 f"# index store wiped for cold pass: {index_wiped} ({target})",
                 file=sys.stderr,
@@ -208,7 +210,7 @@ def main() -> None:
 
         # Machine-readable serving provenance (r13, verdict item 3):
         # which warm medians time a memo-served relation (plan contains
-        # an InMemoryRelation — the session `_MEMO` caches) and which
+        # an InMemoryRelation — a persisted session-cache relation) and which
         # read the on-disk index store (a scan over `.index/`), plus
         # the per-kind store events (trained in THIS run vs pre-baked
         # load).  Untimed: plans are rendered once per query after the

@@ -175,7 +175,7 @@ def _candidate_intersections(
     r12 form persisted sh_cand HERE, which leaked: every build pinned a
     new relation that no reset path could release (r12 advice) — the
     cache lifetime decision now belongs to the caller (plans/extensions
-    memoizes it per session+corpus, released by reset_memo).
+    memoizes it per session+corpus, released by ``cache.invalidate``).
     """
     if sh_cand is None:
         sh_cand = candidate_restricted_shingles(sh, cand)

@@ -30,9 +30,10 @@ from . import scale_queries  # noqa: E402,F401
 # settled by matched-window A/B this round, scripts/ab_r13.py);
 # (1) the queries MUTATED in r13: tx_tfidf / tx_surprisal now read the
 # persisted BM25 postings relation, sim_bruteforce_topk / tx_hybrid_*
-# the persisted norm relation, dd_ngram_jaccard / dd_containment*
-# route the candidate-restricted shingle relation through the session
-# memo (persist-leak fix); (2) the r8-stale cohort (last driver green
+# the persisted norm relation, dd_ngram_jaccard routes the
+# candidate-restricted shingle relation through the session memo and
+# dd_containment* no longer persist it per build (persist-leak fix);
+# (2) the r8-stale cohort (last green correctness row
 # five rounds ago); (3) 22 of the r9-stale 40.  The r9 leftovers
 # (q15/q17/q18/q20, s01-s07, s11, s13, s15, sim_ivf_topk,
 # sim_filtered_ivf_topk) lead the r14 window.

@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..cache import memo
 from ..operators.curation import (
     DECONTAM_K,
     PII_RULES,
@@ -28,7 +29,6 @@ from ..operators.curation import (
 from ..operators.text import shingles_from_tokens, tokens_expr
 from ..sources import load_tables
 from .extensions import (
-    _SCALAR_MEMO,
     _SQL_BANDS,
     _SQL_CAND,
     _SQL_SHINGLES,
@@ -36,7 +36,6 @@ from .extensions import (
     _cand_pairs,
     _dup_clusters,
     _persisted_index,
-    _table_set_id,
 )
 from .registry import register
 
@@ -56,10 +55,10 @@ def _doc_count(spark: SparkSession, sf_dir: str) -> int:
     """Corpus size for the relative boilerplate threshold, counted once
     per (session, table set) — same stats-collection pattern as the ANN
     parameter derivation in extensions."""
-    key = ("doc_count", spark.sparkContext.applicationId, sf_dir, _table_set_id(sf_dir))
-    if key not in _SCALAR_MEMO:
-        _SCALAR_MEMO[key] = load_tables(spark, sf_dir)["documents"].count()
-    return _SCALAR_MEMO[key]
+    return memo(
+        "doc_count", spark, sf_dir,
+        lambda: load_tables(spark, sf_dir)["documents"].count(),
+    )
 
 
 def _sql_shingles_k(k: int, alias: str = "wsh") -> str:
@@ -1102,40 +1101,22 @@ def _bm25_doclens(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _token_count(spark: SparkSession, sf_dir: str) -> int:
-    """Corpus token total for the BM25 length normalization, computed
-    once per (session, table set) — same stats pattern as _doc_count.
-    Aggregates the store-served doclen relation (sum(dl) == the direct
-    tokenize-and-sum over documents, without re-tokenizing the corpus
-    in a cold session); the max is memoized alongside for the int64
-    overflow guard."""
-    # key shape (kind, appId, sf_dir, table_set_id) — reset_memo evicts
-    # on k[2] == sf_dir, so both scalars use the standard 4-tuple
-    key = ("token_count", spark.sparkContext.applicationId, sf_dir,
-           _table_set_id(sf_dir))
-    if key not in _SCALAR_MEMO:
+def _doclen_stats(spark: SparkSession, sf_dir: str) -> tuple[int, int]:
+    """(corpus token total, max document length) for the BM25 length
+    normalization and its int64 overflow guard, computed once per
+    (session, table set) by one aggregate over the store-served doclen
+    relation (sum(dl) == the direct tokenize-and-sum over documents,
+    without re-tokenizing the corpus in a cold session)."""
+
+    def stats() -> tuple[int, int]:
         row = (
             _bm25_doclens(spark, sf_dir)
             .agg(F.sum("dl").alias("n"), F.max("dl").alias("mx"))
             .collect()[0]
         )
-        _SCALAR_MEMO[key] = int(row["n"])
-        _SCALAR_MEMO[("max_dl",) + key[1:]] = int(row["mx"])
-    return int(_SCALAR_MEMO[key])
+        return (int(row["n"]), int(row["mx"]))
 
-
-def _max_dl(spark: SparkSession, sf_dir: str) -> int:
-    """Corpus max document length — the int64 overflow-guard input of
-    the BM25 scorers; computed by the same doclen-store aggregate as
-    _token_count (calling that first if the memo is cold)."""
-    key = ("max_dl", spark.sparkContext.applicationId, sf_dir,
-           _table_set_id(sf_dir))
-    if key not in _SCALAR_MEMO:
-        # force _token_count's aggregate to (re)run — both scalars come
-        # from the same pass, so a half-evicted memo heals here
-        _SCALAR_MEMO.pop(("token_count",) + key[1:], None)
-        _token_count(spark, sf_dir)
-    return _SCALAR_MEMO[key]
+    return memo("doclen_stats", spark, sf_dir, stats)
 
 
 def _sql_bm25(limit: int = BM25_TOP_K) -> str:
@@ -1205,7 +1186,7 @@ def tx_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.text import bm25_topk
 
     docs = load_tables(spark, sf_dir)["documents"]
-    total_tokens = _token_count(spark, sf_dir)
+    total_tokens, max_dl = _doclen_stats(spark, sf_dir)
     return bm25_topk(
         docs,
         BM25_QUERY,
@@ -1214,7 +1195,7 @@ def tx_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         top_k=BM25_TOP_K,
         postings=_bm25_postings(spark, sf_dir),
         doclens=_bm25_doclens(spark, sf_dir),
-        max_dl=_max_dl(spark, sf_dir),
+        max_dl=max_dl,
     )
 
 
@@ -1294,7 +1275,7 @@ def tx_bm25_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     never re-tokenized."""
     from ..operators.text import bm25_batch_topk
 
-    total_tokens = _token_count(spark, sf_dir)
+    total_tokens, max_dl = _doclen_stats(spark, sf_dir)
     return bm25_batch_topk(
         _bm25_postings(spark, sf_dir),
         _bm25_doclens(spark, sf_dir),
@@ -1302,7 +1283,7 @@ def tx_bm25_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_docs=_doc_count(spark, sf_dir),
         total_tokens=total_tokens,
         top_k=BM25_BATCH_K,
-        max_dl=_max_dl(spark, sf_dir),
+        max_dl=max_dl,
     )
 
 
@@ -1367,7 +1348,7 @@ def tx_hybrid_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.similarity import cosine_topk
     from ..operators.text import bm25_batch_topk, rrf_fuse
 
-    total_tokens = _token_count(spark, sf_dir)
+    total_tokens, max_dl = _doclen_stats(spark, sf_dir)
     sparse = bm25_batch_topk(
         _bm25_postings(spark, sf_dir),
         _bm25_doclens(spark, sf_dir),
@@ -1375,7 +1356,7 @@ def tx_hybrid_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_docs=_doc_count(spark, sf_dir),
         total_tokens=total_tokens,
         top_k=HYBRID_DEPTH,
-        max_dl=_max_dl(spark, sf_dir),
+        max_dl=max_dl,
     ).select("query_id", "doc_id", "rank")
     from .extensions import _emb_norms
 
@@ -1441,7 +1422,7 @@ def tx_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.text import bm25_topk, rrf_fuse
 
     docs = load_tables(spark, sf_dir)["documents"]
-    total_tokens = _token_count(spark, sf_dir)
+    total_tokens, max_dl = _doclen_stats(spark, sf_dir)
     sparse = bm25_topk(
         docs,
         BM25_QUERY,
@@ -1450,7 +1431,7 @@ def tx_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
         top_k=HYBRID_DEPTH,
         postings=_bm25_postings(spark, sf_dir),
         doclens=_bm25_doclens(spark, sf_dir),
-        max_dl=_max_dl(spark, sf_dir),
+        max_dl=max_dl,
     ).select("doc_id", "rank")
     from .extensions import _emb_norms
 

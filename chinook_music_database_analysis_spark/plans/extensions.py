@@ -48,40 +48,10 @@ from ..operators.similarity import (
 from ..operators.pipeline import MIN_QUALITY, MIN_TOKENS, clean_corpus
 from ..operators.text import LANG_STOPWORDS, SHINGLE_K, fingerprint, lang_id, text_stats
 from ..functions import money_sum, round2
+from ..cache import depends_on, memo
 from ..sources import load_tables
+from ..sources.session import table_set_seq
 from .registry import register
-
-# ---------------------------------------------------------------------------
-# Cached intermediates: the shingle and LSH-band relations are consumed
-# multiple times per query (self-join sides, intersection sides) and
-# across the dedup queries — persist once per (session, sf).  At 100 TB
-# the same role is played by a checkpointed/stored signature table.
-# ---------------------------------------------------------------------------
-
-_MEMO: dict[tuple, DataFrame] = {}
-
-
-def _table_set_id(sf_dir: str) -> int | None:
-    """Identity of the mounted table set behind an override handle —
-    re-mounting new tables under the same handle yields a new seq, so
-    stale cached relations can't be served (parquet dirs return None:
-    the path itself is the identity).  Delegates to
-    sources.session.table_set_seq, which holds the mounted dict
-    strongly so the identity can never be a recycled id() (r11)."""
-    from ..sources.session import table_set_seq
-
-    return table_set_seq(sf_dir)
-
-
-def _cached(
-    kind: str, spark: SparkSession, sf_dir: str, build, cache: bool = True
-) -> DataFrame:
-    key = (kind, spark.sparkContext.applicationId, sf_dir, _table_set_id(sf_dir))
-    if key not in _MEMO:
-        df = build()
-        _MEMO[key] = df.cache() if cache else df
-    return _MEMO[key]
-
 
 # ---------------------------------------------------------------------------
 # Persisted index store.
@@ -190,14 +160,8 @@ def _corpus_fp(spark: SparkSession, sf_dir: str, table: str = "embeddings") -> s
             return h.hexdigest()
 
     tables = (table,) if isinstance(table, str) else tuple(table)
-    # key shape MUST match _cached/_emb_count ((kind, appId, sf_dir,
-    # table_set_id)) — reset_memo evicts on k[2] == sf_dir, so a
-    # differently-shaped key would survive a corpus re-mount and let a
-    # stale fingerprint keep matching the old store (regression-tested
-    # by test_fp_memo_evicted_on_reset).
-    key = ("fp:" + "|".join(tables), spark.sparkContext.applicationId,
-           sf_dir, _table_set_id(sf_dir))
-    if key not in _SCALAR_MEMO:
+
+    def manifest_md5() -> str:
         entries: list[str] = []
         for t in tables:
             root = _os.path.join(sf_dir, f"{t}.parquet")
@@ -220,8 +184,9 @@ def _corpus_fp(spark: SparkSession, sf_dir: str, table: str = "embeddings") -> s
                     f"|{_tail_probe(root, st.st_size)}"
                 )
         manifest = "\n".join(sorted(entries))
-        _SCALAR_MEMO[key] = _hashlib.md5(manifest.encode()).hexdigest()
-    return _SCALAR_MEMO[key]
+        return _hashlib.md5(manifest.encode()).hexdigest()
+
+    return memo("fp:" + "|".join(tables), spark, sf_dir, manifest_md5)
 
 
 def _persisted_index(
@@ -266,9 +231,9 @@ def _persisted_index(
     """
     if cache is False and writer is None:
         writer = lambda df, path: df.write.mode("overwrite").parquet(path)  # noqa: E731
-    if _table_set_id(sf_dir) is not None:
+    if table_set_seq(sf_dir) is not None:
         _store_event(kind, "session")
-        return _cached(kind, spark, sf_dir, build, cache=writer is None)
+        return memo(kind, spark, sf_dir, build, persist=writer is None)
 
     def load_or_build() -> DataFrame:
         fp = _corpus_fp(spark, sf_dir, table)
@@ -277,10 +242,15 @@ def _persisted_index(
         tag = _re.sub(r"[^A-Za-z0-9.]+", "_", sf_dir).strip("_")
         d = _os.path.join(_INDEX_ROOT, tag, kind)
         fp_file = _os.path.join(d, "_FINGERPRINT")
+
+        def served() -> DataFrame:
+            depends_on(fp_file)
+            return spark.read.parquet(_os.path.join(d, "data"))
+
         try:
             if _os.path.exists(fp_file) and open(fp_file).read().strip() == fp:
                 _store_event(kind, "load")
-                return spark.read.parquet(_os.path.join(d, "data"))
+                return served()
         except Exception:
             pass  # unreadable store — rebuild below
         _store_event(kind, "train")
@@ -331,7 +301,7 @@ def _persisted_index(
                     fh.write(fp)
                 _shutil.rmtree(d, ignore_errors=True)
                 _os.rename(tmp, d)
-                return spark.read.parquet(_os.path.join(d, "data"))
+                return served()
             except Exception:
                 _shutil.rmtree(tmp, ignore_errors=True)
                 # swap lost to a concurrent writer: its store is valid
@@ -340,7 +310,7 @@ def _persisted_index(
                 # in-session build
                 try:
                     if open(fp_file).read().strip() == fp:
-                        return spark.read.parquet(_os.path.join(d, "data"))
+                        return served()
                 except Exception:
                     pass
                 return build()
@@ -370,7 +340,7 @@ def _persisted_index(
                 fh.write(fp)
             _shutil.rmtree(d, ignore_errors=True)
             _os.rename(tmp, d)
-            out = spark.read.parquet(_os.path.join(d, "data"))
+            out = served()
             df.unpersist()
             return out
         except Exception:
@@ -380,56 +350,16 @@ def _persisted_index(
             _shutil.rmtree(tmp, ignore_errors=True)
         return df
 
-    return _cached(kind, spark, sf_dir, load_or_build, cache=writer is None)
-
-
-#: memoized scalars (corpus counts / stats tuples) keyed like _MEMO.
-#: scalar/statistic memo.  Mostly plain Python values, but the BPE
-#: fold chain (scale_queries._bpe_seqs) stores (rnd, x, y, n_pair,
-#: seq_df) tuples whose seq_df is a PERSISTED DataFrame — reset_memo
-#: must unpersist those too, so it walks values for DataFrames.
-_SCALAR_MEMO: dict[tuple, object] = {}
-
-
-def _unpersist_in(value) -> None:
-    """Unpersist any DataFrame reachable one level deep inside a memo
-    value (bare, or as an element of a list/tuple of tuples)."""
-    from pyspark.sql import DataFrame as _DF
-
-    stack = [value]
-    while stack:
-        v = stack.pop()
-        if isinstance(v, _DF):
-            try:
-                v.unpersist()
-            except Exception:
-                pass  # session already stopped — nothing to release
-        elif isinstance(v, (list, tuple)):
-            stack.extend(v)
-
-
-def reset_memo(sf_dir: str | None = None) -> None:
-    """Unpersist and drop memoized relations (all, or those built for
-    one sf_dir/handle).  Long-lived sessions that re-mount table sets
-    call this to release executor storage."""
-    for key in [k for k in _MEMO if sf_dir is None or k[2] == sf_dir]:
-        try:
-            _MEMO[key].unpersist()
-        except Exception:
-            pass  # session already stopped — nothing to release
-        del _MEMO[key]
-    for key in [k for k in _SCALAR_MEMO if sf_dir is None or k[2] == sf_dir]:
-        _unpersist_in(_SCALAR_MEMO[key])
-        del _SCALAR_MEMO[key]
+    return memo(kind, spark, sf_dir, load_or_build, persist=writer is None)
 
 
 def _emb_count(spark: SparkSession, sf_dir: str) -> int:
     """Corpus size for ANN parameter derivation, counted once per
     (session, table set) — the stats-collection analog."""
-    key = ("emb_count", spark.sparkContext.applicationId, sf_dir, _table_set_id(sf_dir))
-    if key not in _SCALAR_MEMO:
-        _SCALAR_MEMO[key] = load_tables(spark, sf_dir)["embeddings"].count()
-    return _SCALAR_MEMO[key]
+    return memo(
+        "emb_count", spark, sf_dir,
+        lambda: load_tables(spark, sf_dir)["embeddings"].count(),
+    )
 
 
 def _emb_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -504,11 +434,12 @@ def _dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _cand_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shared MinHash-LSH candidate pair relation — referenced several
     times by the verify/cluster stages, so cached like the bands."""
-    return _cached(
+    return memo(
         "cand_pairs", spark, sf_dir,
         lambda: minhash_candidate_pairs(
             load_tables(spark, sf_dir)["documents"], bands=_bands(spark, sf_dir)
         ),
+        persist=True,
     )
 
 
@@ -518,15 +449,16 @@ def _ngram_sh_cand(spark: SparkSession, sf_dir: str) -> DataFrame:
     inside operators.dedup per BUILD, which leaked executor storage
     (every execution pinned a new relation no reset path could
     release).  One memoized instance per (session, corpus) serves all
-    three downstream references and every bench rep, and reset_memo
-    releases it with the rest of the _MEMO relations."""
+    three downstream references and every bench rep, and
+    ``cache.invalidate`` releases it with the other cached relations."""
     from ..operators.dedup import candidate_restricted_shingles
 
-    return _cached(
+    return memo(
         "ngram_sh_cand", spark, sf_dir,
         lambda: candidate_restricted_shingles(
             _shingles(spark, sf_dir), _cand_pairs(spark, sf_dir)
         ),
+        persist=True,
     )
 
 
@@ -548,9 +480,10 @@ def _simhash_nib(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-deriving the four 12-bit blocks per branch."""
     from ..operators.dedup import _simhash_nibbles
 
-    return _cached(
+    return memo(
         "simhash_nib", spark, sf_dir,
         lambda: _simhash_nibbles(_simhash_sig(spark, sf_dir)),
+        persist=True,
     )
 
 
@@ -1026,9 +959,7 @@ def _containment_join_stats(spark: SparkSession, sf_dir: str) -> tuple[int, int]
     parquet read."""
     from ..operators.dedup import containment_join_stats
 
-    key = ("containment_join_stats", spark.sparkContext.applicationId,
-           sf_dir, _table_set_id(sf_dir))
-    if key not in _SCALAR_MEMO:
+    def stats() -> tuple[int, int]:
         row = _persisted_index(
             "containment_stats", spark, sf_dir,
             lambda: spark.createDataFrame(
@@ -1038,8 +969,9 @@ def _containment_join_stats(spark: SparkSession, sf_dir: str) -> tuple[int, int]
             table="documents",
             params=f"k={SHINGLE_K}",
         ).collect()[0]
-        _SCALAR_MEMO[key] = (int(row["n_rows"]), int(row["join_rows"]))
-    return _SCALAR_MEMO[key]
+        return (int(row["n_rows"]), int(row["join_rows"]))
+
+    return memo("containment_join_stats", spark, sf_dir, stats)
 
 
 @register(
@@ -2451,9 +2383,10 @@ def mm_phash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the session memo is the same move as the store-served bulk
     # signature next to it; detection still goes through the live
     # kernel (its first execution), exactly as documented.
-    inj = _cached(
+    inj = memo(
         "phash_inject", spark, sf_dir,
         lambda: media_phash(copies.union(edits)),
+        persist=True,
     )
     sig = _phash_sig(spark, sf_dir).union(inj)
     return phash_near_dup_pairs(docs, sig=sig)
@@ -3971,12 +3904,6 @@ def _register_sim_ivf_append() -> None:
         base = emb.filter(
             F.col("vec_id") % IVF_APPEND_MOD != IVF_APPEND_RESIDUE
         )
-        key = (
-            "ivf_append_nbase",
-            spark.sparkContext.applicationId,
-            sf_dir,
-            _table_set_id(sf_dir),
-        )
 
         # the STALE centroid relation is an index artifact like
         # _ivf_cents: trained once per corpus version, store-served
@@ -3985,9 +3912,9 @@ def _register_sim_ivf_append() -> None:
         # ran eagerly before the fingerprint check, paying a corpus
         # count job even on a warm store hit).
         def _build_cents():
-            if key not in _SCALAR_MEMO:
-                _SCALAR_MEMO[key] = base.count()
-            return kmeans_centroids(base, _SCALAR_MEMO[key])
+            return kmeans_centroids(
+                base, memo("ivf_append_nbase", spark, sf_dir, base.count)
+            )
 
         cents = _persisted_index(
             "ivf_append_cents", spark, sf_dir, _build_cents,

@@ -1,12 +1,10 @@
 from __future__ import annotations
 
 import functools
-import os
-import threading
-import weakref
-from collections import OrderedDict
 from collections.abc import Callable
 from typing import TYPE_CHECKING
+
+from ..cache import memo
 
 if TYPE_CHECKING:
     from pyspark.sql import DataFrame, SparkSession
@@ -15,90 +13,6 @@ if TYPE_CHECKING:
 QUERIES: dict[str, "Callable[[SparkSession, str], DataFrame]"] = {}
 #: name -> equivalent ANSI SQL for DuckDB (omitted for non-SQL-expressible ops)
 ORACLES: dict[str, str] = {}
-
-# ---------------------------------------------------------------------------
-# Session plan memo (r13, guide §1/§7.3 "planning time itself can become
-# the bottleneck"): building a registry DataFrame costs 0.08-0.35 s of
-# driver-side Python + py4j + Catalyst analysis (measured via
-# scripts/qprof.py build_med), paid on EVERY execution of EVERY query —
-# a long-lived serving session pays it once per (session, corpus), the
-# prepared-statement / plan-cache behavior every SQL engine ships.
-# This memoizes the BUILT DataFrame object, not any result: a DataFrame
-# is a lazy plan, and every action on it still executes the full DAG
-# against the parquet inputs (the bench's cold pass builds fresh and is
-# unaffected; BENCH_DETAIL's plan_flags record which plans additionally
-# reference session-cached relations).
-#
-# Staleness guards, in the key:
-#   * the owning session (applicationId + object id + a liveness
-#     weakref, the sources.session._READ_MEMO pattern — id() reuse
-#     cannot serve a dead session's plan);
-#   * the mounted-table-set seq (re-mounting a handle invalidates);
-#   * a stat signature (size + mtime_ns per table file/dir) over every
-#     driver table under sf_dir — any corpus rewrite is a miss, the
-#     same guard the reader memo uses;
-#   * PLAN_EPOCH, a process-global A/B hook: harnesses that flip
-#     module-level behavior knobs (e.g. operators.similarity.VECTOR_DOT)
-#     bump it so both variants build fresh plans.
-# Builders that raise (e.g. dd_containment's hot-corpus guard) are
-# never memoized — the guard re-evaluates per call.
-# ---------------------------------------------------------------------------
-
-_PLAN_MEMO: OrderedDict = OrderedDict()
-_PLAN_MEMO_MAX = 1024
-_PLAN_MEMO_LOCK = threading.Lock()
-
-#: bump to invalidate every memoized plan (A/B harness hook).
-PLAN_EPOCH = 0
-
-#: env kill-switch: SPARK_GRAFT_PLAN_MEMO=0 builds every plan fresh.
-_PLAN_MEMO_ENABLED = os.environ.get("SPARK_GRAFT_PLAN_MEMO", "1") != "0"
-
-
-def plan_memo_clear() -> None:
-    """Drop every memoized plan (no executor state is held — plans are
-    lazy; relation-level caches are owned by extensions._MEMO)."""
-    with _PLAN_MEMO_LOCK:
-        _PLAN_MEMO.clear()
-
-
-def _corpus_sig(sf_dir: str) -> tuple:
-    from ..sources.session import TABLES, _path_sig
-
-    return tuple(
-        _path_sig(os.path.join(sf_dir, f"{t}.parquet")) for t in TABLES
-    )
-
-
-def _plan_memoized(name: str, fn):
-    @functools.wraps(fn)
-    def build(spark: "SparkSession", sf_dir: str) -> "DataFrame":
-        if not _PLAN_MEMO_ENABLED:
-            return fn(spark, sf_dir)
-        from ..sources.session import _app_id, table_set_seq
-
-        key = (
-            name,
-            PLAN_EPOCH,
-            _app_id(spark),
-            id(spark),
-            sf_dir,
-            table_set_seq(sf_dir),
-            _corpus_sig(sf_dir),
-        )
-        with _PLAN_MEMO_LOCK:
-            rec = _PLAN_MEMO.get(key)
-            if rec is not None and rec[1]() is spark:
-                _PLAN_MEMO.move_to_end(key)
-                return rec[0]
-        df = fn(spark, sf_dir)
-        with _PLAN_MEMO_LOCK:
-            _PLAN_MEMO[key] = (df, weakref.ref(spark))
-            while len(_PLAN_MEMO) > _PLAN_MEMO_MAX:
-                _PLAN_MEMO.popitem(last=False)
-        return df
-
-    return build
 
 
 def register(name: str, oracle: str | None = None):
@@ -110,8 +24,11 @@ def register(name: str, oracle: str | None = None):
     twice, byte-identical; had the copies diverged, only the later one
     would have taken effect).
 
-    The registered callable is wrapped in the session plan memo (see
-    module header); the raw builder stays reachable as
+    The registered callable serves the built DataFrame from the session
+    cache (``cache.memo``): building costs 0.08-0.35 s of Python, py4j
+    and Catalyst analysis, and a lazy plan can be reused for as long as
+    the session and the corpus snapshot are unchanged — every action on
+    it still executes in full.  The raw builder stays reachable as
     ``QUERIES[name].__wrapped__``.
     """
 
@@ -121,10 +38,15 @@ def register(name: str, oracle: str | None = None):
                 f"duplicate query registration: {name!r} is already in the "
                 f"registry (defined by {QUERIES[name].__module__})"
             )
-        QUERIES[name] = _plan_memoized(name, fn)
+
+        @functools.wraps(fn)
+        def query(spark: "SparkSession", sf_dir: str) -> "DataFrame":
+            return memo(f"plan:{name}", spark, sf_dir, lambda: fn(spark, sf_dir))
+
+        query.query_name = name
+        QUERIES[name] = query
         if oracle is not None:
             ORACLES[name] = oracle
-        fn.query_name = name
         return fn
 
     return deco

@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..cache import memo
 from ..functions import SQL_REVENUE, revenue_expr, round2
 from ..sources import load_tables
 
@@ -24,16 +25,6 @@ import os
 #: SQL_file.sql:43).  On the driver tables this is NATION_0; a Chinook
 #: deployment (sources.chinook_adapter) sets CHINOOK_SPARK_NATION0=USA.
 NATION0 = os.environ.get("CHINOOK_SPARK_NATION0", "NATION_0")
-
-#: Memoized + Spark-cached view instances keyed by
-#: (app id, sf_dir, mounted-table-set seq or None for parquet dirs) —
-#: the seq (sources.session.table_set_seq) makes a re-mounted handle a
-#: cache MISS.  The reference view is consumed by four statements
-#: (ref:168, :197, :221, :270); caching the 6-row aggregate means the
-#: underlying star join runs once per session instead of once per
-#: consumer — the Spark-native analog of a materialized view,
-#: correctness-neutral.
-_VIEW_CACHE: dict[tuple[str, str, int | None], DataFrame] = {}
 
 #: DuckDB text of the 5-way star join — THE one definition (r11: the
 #: view SQL and parity.py carried independent copies); parity.py
@@ -100,30 +91,31 @@ def nation0_type_sales(spark: SparkSession, sf_dir: str) -> DataFrame:
     grow with SF and would NOT be broadcastable at 100 TB.  The global
     share/rank windows run over a 6-row aggregate — negligible at any
     scale because aggregation reduced cardinality first.
-    """
-    from .extensions import _table_set_id
 
-    key = (spark.sparkContext.applicationId, sf_dir, _table_set_id(sf_dir))
-    if key in _VIEW_CACHE:
-        return _VIEW_CACHE[key]
-    t = load_tables(spark, sf_dir)
-    sales = (
-        _star_n0(t)
-        .groupBy("p_type")
-        .agg(F.sum(revenue_expr()).alias("rev_d"))
-    )
-    w_all = Window.partitionBy()
-    w_rank = Window.orderBy(F.col("rev_d").desc())
-    out = sales.select(
-        "p_type",
-        round2(F.col("rev_d")).alias("revenue"),
-        F.round(
-            F.lit(100.0)
-            * F.col("rev_d").cast("double")
-            / F.sum("rev_d").over(w_all).cast("double"),
-            2,
-        ).alias("pct_of_nation"),
-        F.rank().over(w_rank).alias("rnk"),
-    ).cache()
-    _VIEW_CACHE[key] = out
-    return out
+    The reference view feeds four statements (ref:168, :197, :221,
+    :270), so the 6-row aggregate is cached in the session cache: the
+    star join runs once per session and corpus snapshot instead of once
+    per consumer — the analog of a materialized view.
+    """
+
+    def build() -> DataFrame:
+        sales = (
+            _star_n0(load_tables(spark, sf_dir))
+            .groupBy("p_type")
+            .agg(F.sum(revenue_expr()).alias("rev_d"))
+        )
+        w_all = Window.partitionBy()
+        w_rank = Window.orderBy(F.col("rev_d").desc())
+        return sales.select(
+            "p_type",
+            round2(F.col("rev_d")).alias("revenue"),
+            F.round(
+                F.lit(100.0)
+                * F.col("rev_d").cast("double")
+                / F.sum("rev_d").over(w_all).cast("double"),
+                2,
+            ).alias("pct_of_nation"),
+            F.rank().over(w_rank).alias("rnk"),
+        )
+
+    return memo("view:nation0_type_sales", spark, sf_dir, build, persist=True)

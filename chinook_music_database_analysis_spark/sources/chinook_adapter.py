@@ -169,17 +169,10 @@ def mount_chinook(
 
     if handle in TABLE_OVERRIDES:
         # Re-mount: release relations cached against the old table set
-        # (the memo/view caches are also keyed on table-set identity,
-        # so stale hits are impossible either way — this frees storage).
-        from ..plans.extensions import reset_memo
-        from ..plans.views import _VIEW_CACHE
+        # (the session cache keys on table-set identity, so stale hits
+        # are impossible either way — this frees executor storage).
+        from ..cache import invalidate
 
-        reset_memo(handle)
-        for key in [k for k in _VIEW_CACHE if k[1] == handle]:
-            try:
-                _VIEW_CACHE[key].unpersist()
-            except Exception:
-                pass
-            del _VIEW_CACHE[key]
+        invalidate(handle)
     TABLE_OVERRIDES[handle] = adapt_chinook_tables(chinook, brand_from=brand_from)
     return handle

@@ -21,9 +21,10 @@ Scale notes (100 TB design point):
 from __future__ import annotations
 
 import os
-from collections import OrderedDict
 
 from pyspark.sql import DataFrame, SparkSession
+
+from ..cache import memo
 
 #: Every table the driver generates (TESTDATA.md).
 TABLES = (
@@ -101,85 +102,18 @@ def ensure_session_confs(spark: SparkSession) -> None:
         pass  # conf locked down (e.g. Spark Connect policy) — proceed
 
 
-#: (app id, table path) -> (file-stat signature, DataFrame).  Reader
-#: memo (r12): every query build calls ``spark.read.parquet`` per table
-#: it touches, and each call re-lists the path and re-reads the footer
-#: through py4j (~15-40 ms) — pure per-query fixed cost that the bench
-#: pays on EVERY rep of EVERY query.  The DataFrame is a lazy plan, not
-#: data, so reusing it is catalog-style plan reuse, not result caching:
-#: every action still scans the parquet files.  Staleness guard: the
-#: signature (size + mtime_ns of the file, or of every entry of a
-#: directory table) is re-checked on every lookup, so a rewritten
-#: table is a miss and reloads — the failure mode of identity-keyed
-#: caches that bit r11 cannot occur.  LRU-capped so long sessions
-#: touching many generated corpora don't accumulate dead plans.
-_READ_MEMO: OrderedDict = OrderedDict()
-_READ_MEMO_MAX = 256
-_READ_MEMO_LOCK = __import__("threading").Lock()
-
-
-def _path_sig(path: str) -> tuple | None:
-    try:
-        st = os.stat(path)
-        if not os.path.isdir(path):
-            return (st.st_mtime_ns, st.st_size)
-        # Recurse (r12 advice): a partitioned layout rewrites part
-        # files one level down without touching the parent listing's
-        # mtime, so a top-level-only signature could serve a stale
-        # file index.  os.walk covers every data file at any depth.
-        entries = []
-        for dirpath, _dirs, files in os.walk(path):
-            for f in files:
-                p = os.path.join(dirpath, f)
-                s2 = os.stat(p)
-                entries.append(
-                    (os.path.relpath(p, path), s2.st_size, s2.st_mtime_ns)
-                )
-        entries.sort()
-        return (st.st_mtime_ns, st.st_size, tuple(entries))
-    except OSError:
-        return None  # unreadable/odd layout -> never memoize
-
-
-def _app_id(spark: SparkSession) -> str:
-    sc = spark.sparkContext
-    app = getattr(sc, "_graft_app_id", None)
-    if app is None:
-        app = sc.applicationId
-        sc._graft_app_id = app
-    return app
-
-
 def _load_one(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    import weakref
+    """``spark.read.parquet`` of one corpus table, memoized in the session
+    cache: each read re-lists the path and re-reads the footer through
+    py4j (~15-40 ms per table per build).  The DataFrame is a lazy plan,
+    so every action still scans the files, and a rewritten corpus is a
+    new snapshot and reloads."""
 
-    path = f"{sf_dir}/{name}.parquet"
-    sig = _path_sig(path)
-    # Key includes the SESSION object's id (r12 advice): sessions built
-    # via newSession() share one applicationId but must not share
-    # memoized DataFrames bound to another session.  id() reuse after
-    # GC cannot serve a stale entry because the record also holds a
-    # weakref to the owning session, verified `is spark` on lookup.
-    key = (_app_id(spark), id(spark), path)
-    with _READ_MEMO_LOCK:
-        rec = _READ_MEMO.get(key)
-        if (
-            rec is not None
-            and sig is not None
-            and rec[0] == sig
-            and rec[2]() is spark
-        ):
-            _READ_MEMO.move_to_end(key)
-            return rec[1]
-    df = spark.read.parquet(path)
-    if name == "events":
-        df = _normalize_event_ts(df)
-    if sig is not None:
-        with _READ_MEMO_LOCK:
-            _READ_MEMO[key] = (sig, df, weakref.ref(spark))
-            while len(_READ_MEMO) > _READ_MEMO_MAX:
-                _READ_MEMO.popitem(last=False)
-    return df
+    def read() -> DataFrame:
+        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+        return _normalize_event_ts(df) if name == "events" else df
+
+    return memo(f"read:{name}", spark, sf_dir, read)
 
 
 def _normalize_event_ts(df: DataFrame) -> DataFrame:
@@ -242,7 +176,7 @@ def table_set_seq(handle: str) -> int | None:
     """Stable identity of the table set mounted under ``handle`` —
     changes iff the mounted dict OBJECT changes (raw re-assignment to
     TABLE_OVERRIDES included), None for plain parquet dirs (the path
-    is the identity there).  Plan/scalar caches key on this."""
+    is the identity there).  The session cache keys on this."""
     tables = TABLE_OVERRIDES.get(handle)
     if tables is None:
         # Unmounted handle: drop its record so the strongly-held table

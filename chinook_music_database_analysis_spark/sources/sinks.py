@@ -195,8 +195,8 @@ def delete_rows(spark, path: str, predicate) -> int:
     the rows matching ``predicate`` (a Column or SQL string) and
     return how many were removed — the right-to-be-forgotten
     primitive.  Derived stores (signature tables, caches) must be
-    re-derived or deleted alongside; plans/extensions.reset_memo
-    drops the session-cached ones.
+    re-derived or deleted alongside; ``cache.invalidate`` drops the
+    session-cached ones.
     """
     from pyspark.sql import functions as F
 

@@ -17,10 +17,6 @@ import statistics
 import sys
 import time
 
-# fresh plan per build on BOTH sides (see scripts/vec_ab.py) — must be
-# set before the package imports.
-os.environ["SPARK_GRAFT_PLAN_MEMO"] = "0"
-
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
@@ -186,6 +182,7 @@ def main() -> None:
             names.append(a)
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
+    from chinook_music_database_analysis_spark.cache import invalidate
     from chinook_music_database_analysis_spark.plans import QUERIES
     from chinook_music_database_analysis_spark.sources import get_spark
 
@@ -214,6 +211,8 @@ def main() -> None:
         samples: dict[str, list[float]] = {"new": [], "old": []}
         for _ in range(reps):
             for tag, fn in (("new", new_fn), ("old", old_fn)):
+                # fresh plan per build on both sides (see scripts/vec_ab.py)
+                invalidate(sf_dir)
                 spark.sparkContext.setJobDescription(f"ab:{name}:{tag}")
                 t0 = time.perf_counter()
                 fn(spark, sf_dir).count()

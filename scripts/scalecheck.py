@@ -6,7 +6,7 @@ the measurement backing them.  It synthesizes a seeded corpus with the
 same vocabulary/length/cluster structure as the driver's documents +
 embeddings tables (plus ~5% injected near-duplicates so the dedup path
 does real work), then cold-times each query at both scales in the SAME
-session (fresh memo caches per sf_dir — `_cached` keys include sf_dir).
+session (fresh memo caches per sf_dir — session-cache keys include sf_dir).
 
 Expected exponents (time ~ N^e): ~1 for the hash/shuffle families
 (minhash, simhash, boilerplate, stats), ~1.5 for IVF (N*sqrt(N)

@@ -13,11 +13,6 @@ import statistics
 import sys
 import time
 
-# fresh plan per build on BOTH sides: the registry's session plan memo
-# would otherwise serve variant A's plan to variant B (and hide the
-# build cost asymmetry) — must be set before the package imports.
-os.environ["SPARK_GRAFT_PLAN_MEMO"] = "0"
-
 DEFAULT_QUERIES = [
     "sim_bruteforce_topk",
     "sim_filtered_topk",
@@ -46,6 +41,7 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
     import chinook_music_database_analysis_spark.operators.similarity as S
+    from chinook_music_database_analysis_spark.cache import invalidate
     from chinook_music_database_analysis_spark.plans import QUERIES
     from chinook_music_database_analysis_spark.sources import get_spark
 
@@ -56,6 +52,10 @@ def main() -> None:
     spark.range(64).repartition(8).mapInPandas(lambda it: it, "id bigint").count()
 
     def build(name, vec):
+        # fresh plan per build on BOTH sides: the session cache would
+        # otherwise serve variant A's plan to variant B (and hide the
+        # build cost asymmetry)
+        invalidate(sf_dir)
         S.VECTOR_DOT = vec
         try:
             return QUERIES[name](spark, sf_dir)

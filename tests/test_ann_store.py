@@ -7,6 +7,8 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from chinook_music_database_analysis_spark import cache
+from chinook_music_database_analysis_spark.cache import invalidate
 from chinook_music_database_analysis_spark.operators.similarity import (
     embedding_near_dup_pairs,
     load_ann_store,
@@ -96,7 +98,7 @@ def test_index_store_fingerprint_guard(spark, tmp_path, monkeypatch):
     from chinook_music_database_analysis_spark.plans import extensions as ext
 
     monkeypatch.setattr(ext, "_INDEX_ROOT", str(tmp_path))
-    ext.reset_memo(SF_TEST_DIR)
+    invalidate(SF_TEST_DIR)
     try:
         full = ext._ivf_cents(spark, SF_TEST_DIR)
         n_full = full.count()
@@ -112,25 +114,25 @@ def test_index_store_fingerprint_guard(spark, tmp_path, monkeypatch):
 
         shutil.rmtree(os.path.join(d, "data"))
         os.rename(os.path.join(d, "data.new"), os.path.join(d, "data"))
-        ext.reset_memo(SF_TEST_DIR)
+        invalidate(SF_TEST_DIR)
         assert ext._ivf_cents(spark, SF_TEST_DIR).count() == n_full - 1
 
         # Invalidate the fingerprint: the loader must retrain (full
         # cardinality restored) and replace the store.
         with open(os.path.join(d, "_FINGERPRINT"), "w") as fh:
             fh.write("stale")
-        ext.reset_memo(SF_TEST_DIR)
+        invalidate(SF_TEST_DIR)
         assert ext._ivf_cents(spark, SF_TEST_DIR).count() == n_full
         assert open(os.path.join(d, "_FINGERPRINT")).read().strip() != "stale"
     finally:
-        ext.reset_memo(SF_TEST_DIR)
+        invalidate(SF_TEST_DIR)
 
 
 def test_fp_memo_evicted_on_reset_and_retrain_after_regen(spark, tmp_path, monkeypatch):
-    """The corpus-fingerprint memo must share the (kind, appId, sf_dir,
-    table_set_id) key shape so reset_memo(sf_dir) evicts it — otherwise
-    an in-session corpus regeneration followed by the documented
-    reset_memo() re-mount keeps serving the OLD fingerprint, which
+    """The corpus-fingerprint memo must live in the session cache under
+    sf_dir so invalidate(sf_dir) evicts it — otherwise an in-session
+    corpus regeneration followed by the documented invalidate()
+    re-mount keeps serving the OLD fingerprint, which
     still matches the old store's _FINGERPRINT, and _persisted_index
     silently serves an index trained on the replaced corpus."""
     import shutil
@@ -145,18 +147,18 @@ def test_fp_memo_evicted_on_reset_and_retrain_after_regen(spark, tmp_path, monke
     emb.limit(n_all - 10).write.parquet(f"{sf_dir}/embeddings.parquet")
 
     monkeypatch.setattr(ext, "_INDEX_ROOT", str(tmp_path / "idx"))
-    ext.reset_memo(sf_dir)
+    invalidate(sf_dir)
     try:
         fp1 = ext._corpus_fp(spark, sf_dir)
         assert any(k[2] == sf_dir and str(k[0]).startswith("fp:")
-                   for k in ext._SCALAR_MEMO), "fp key not sf_dir-evictable"
+                   for k in cache._ENTRIES), "fp key not sf_dir-evictable"
         ext._ivf_cents(spark, sf_dir)
 
         # Regenerate the corpus in place (different contents), re-mount.
         shutil.rmtree(f"{sf_dir}/embeddings.parquet")
         emb.limit(n_all - 3).write.parquet(f"{sf_dir}/embeddings.parquet")
-        ext.reset_memo(sf_dir)
-        assert not any(k[2] == sf_dir for k in ext._SCALAR_MEMO)
+        invalidate(sf_dir)
+        assert not any(k[2] == sf_dir for k in cache._ENTRIES)
 
         fp2 = ext._corpus_fp(spark, sf_dir)
         assert fp2 != fp1, "fingerprint did not track the regenerated corpus"
@@ -170,7 +172,7 @@ def test_fp_memo_evicted_on_reset_and_retrain_after_regen(spark, tmp_path, monke
         # constants are mixed in); the corpus half must track fp2
         assert fps and open(fps[0]).read().strip().split("|", 1)[0] == fp2
     finally:
-        ext.reset_memo(sf_dir)
+        invalidate(sf_dir)
 
 
 def test_stale_staging_dirs_reclaimed(spark, tmp_path, monkeypatch):
@@ -185,7 +187,7 @@ def test_stale_staging_dirs_reclaimed(spark, tmp_path, monkeypatch):
     from chinook_music_database_analysis_spark.plans import extensions as ext
 
     monkeypatch.setattr(ext, "_INDEX_ROOT", str(tmp_path))
-    ext.reset_memo(SF_TEST_DIR)
+    invalidate(SF_TEST_DIR)
     try:
         # Predict the store dir the same way _persisted_index does.
         import re
@@ -209,7 +211,7 @@ def test_stale_staging_dirs_reclaimed(spark, tmp_path, monkeypatch):
         for p in (live, odd):
             os.rmdir(p)
     finally:
-        ext.reset_memo(SF_TEST_DIR)
+        invalidate(SF_TEST_DIR)
 
 
 def test_fingerprint_sees_footer_content(tmp_path):
@@ -226,11 +228,8 @@ def test_fingerprint_sees_footer_content(tmp_path):
 
     from chinook_music_database_analysis_spark.plans import extensions as ext
 
-    class _FakeCtx:
-        applicationId = "fp-test"
-
-    class _FakeSpark:
-        sparkContext = _FakeCtx()
+    class _FakeSpark:  # the fingerprint reads files only; no session needed
+        pass
 
     corpus = tmp_path / "corpus"
     corpus.mkdir()
@@ -242,7 +241,7 @@ def test_fingerprint_sees_footer_content(tmp_path):
     write([1, 2, 3, 4])
     st = os.stat(f)
     fp1 = ext._corpus_fp(_FakeSpark(), str(corpus), "documents")
-    ext._SCALAR_MEMO.clear()
+    invalidate(str(corpus))
     write([1, 2, 3, 9])  # same schema/rowcount/writer -> same size
     assert os.path.getsize(f) == st.st_size, "fixture requires equal sizes"
     os.utime(f, ns=(st.st_atime_ns, st.st_mtime_ns))  # mtime-preserving restore
@@ -264,11 +263,8 @@ def test_fingerprint_probes_footer_head_region(tmp_path):
 
     from chinook_music_database_analysis_spark.plans import extensions as ext
 
-    class _FakeCtx:
-        applicationId = "fp-head-test"
-
     class _FakeSpark:
-        sparkContext = _FakeCtx()
+        pass
 
     corpus = tmp_path / "corpus"
     corpus.mkdir()
@@ -296,7 +292,7 @@ def test_fingerprint_probes_footer_head_region(tmp_path):
 
     st = os.stat(f)
     fp1 = ext._corpus_fp(_FakeSpark(), str(corpus), "documents")
-    ext._SCALAR_MEMO.clear()
+    invalidate(str(corpus))
     write(True)  # only early row groups' head-of-footer stats change
     assert os.path.getsize(f) == st.st_size, "fixture requires equal sizes"
     os.utime(f, ns=(st.st_atime_ns, st.st_mtime_ns))
@@ -316,7 +312,7 @@ def test_eperm_staging_dir_never_reclaimed(spark, tmp_path, monkeypatch):
     from chinook_music_database_analysis_spark.plans import extensions as ext
 
     monkeypatch.setattr(ext, "_INDEX_ROOT", str(tmp_path))
-    ext.reset_memo(SF_TEST_DIR)
+    invalidate(SF_TEST_DIR)
     real_kill = os.kill
     eperm_pid = 999999 + os.getpid()  # never a real pid we own
 
@@ -343,7 +339,7 @@ def test_eperm_staging_dir_never_reclaimed(spark, tmp_path, monkeypatch):
         assert not os.path.isdir(old_odd), "aged unparseable dir must be GC'd"
         os.rmdir(eperm)
     finally:
-        ext.reset_memo(SF_TEST_DIR)
+        invalidate(SF_TEST_DIR)
 
 
 def test_store_params_mismatch_invalidates(spark, tmp_path, monkeypatch):
@@ -364,28 +360,28 @@ def test_store_params_mismatch_invalidates(spark, tmp_path, monkeypatch):
         return build
 
     try:
-        ext.reset_memo(SF_TEST_DIR)
+        invalidate(SF_TEST_DIR)
         ext._persisted_index(
             "params_probe", spark, SF_TEST_DIR, make_build("a"),
             table="documents", params="k=1",
         ).count()
         assert builds == ["a"]
         # same params, fresh session-memo: served from the store
-        ext.reset_memo(SF_TEST_DIR)
+        invalidate(SF_TEST_DIR)
         ext._persisted_index(
             "params_probe", spark, SF_TEST_DIR, make_build("a2"),
             table="documents", params="k=1",
         ).count()
         assert builds == ["a"], "matching params must hit the store"
         # changed params: must rebuild
-        ext.reset_memo(SF_TEST_DIR)
+        invalidate(SF_TEST_DIR)
         ext._persisted_index(
             "params_probe", spark, SF_TEST_DIR, make_build("b"),
             table="documents", params="k=2",
         ).count()
         assert builds == ["a", "b"], "changed params must invalidate the store"
     finally:
-        ext.reset_memo(SF_TEST_DIR)
+        invalidate(SF_TEST_DIR)
 
 
 def test_mrl_recall_floor_and_shortlist_bound(spark):
@@ -922,7 +918,7 @@ def test_index_store_concurrent_writer_fallback(spark, tmp_path, monkeypatch):
     from chinook_music_database_analysis_spark.plans import extensions as ext
 
     monkeypatch.setattr(ext, "_INDEX_ROOT", str(tmp_path))
-    ext.reset_memo(SF_TEST_DIR)
+    invalidate(SF_TEST_DIR)
 
     emb = spark.read.parquet(f"{SF_TEST_DIR}/embeddings.parquet")
     loser_build = lambda: emb.select("vec_id").limit(20)  # noqa: E731
@@ -976,4 +972,4 @@ def test_index_store_concurrent_writer_fallback(spark, tmp_path, monkeypatch):
     # ...and the winner's store is left in place, not clobbered.
     d_same = next(tmp_path.glob("*/race_c_same"))
     assert spark.read.parquet(str(d_same / "data")).count() == 7
-    ext.reset_memo(SF_TEST_DIR)
+    invalidate(SF_TEST_DIR)

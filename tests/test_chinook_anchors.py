@@ -32,6 +32,7 @@ import pytest
 
 import chinook_music_database_analysis_spark.plans.parity as parity
 import chinook_music_database_analysis_spark.plans.views as views
+from chinook_music_database_analysis_spark.cache import invalidate
 from chinook_music_database_analysis_spark.plans import QUERIES
 from chinook_music_database_analysis_spark.sources.chinook_adapter import mount_chinook
 
@@ -96,9 +97,9 @@ def _reference_constants(monkeypatch):
     monkeypatch.setattr(views, "NATION0", "USA")
     monkeypatch.setattr(parity, "NATION0", "USA")
     monkeypatch.setattr(parity, "OLD_YEAR", 2017)
-    views._VIEW_CACHE.clear()
+    invalidate()
     yield
-    views._VIEW_CACHE.clear()
+    invalidate()
 
 
 def test_genre_pair_anchors(spark, real_handle):

@@ -14,6 +14,7 @@ import pytest
 
 import chinook_music_database_analysis_spark.plans.parity as parity
 import chinook_music_database_analysis_spark.plans.views as views
+from chinook_music_database_analysis_spark.cache import invalidate
 from chinook_music_database_analysis_spark.plans import QUERIES
 from chinook_music_database_analysis_spark.sources.chinook_adapter import mount_chinook
 
@@ -82,9 +83,9 @@ def _usa_nation0(monkeypatch):
     # The 'NATION_0' filter means USA on Chinook data (ref:43).
     monkeypatch.setattr(views, "NATION0", "USA")
     monkeypatch.setattr(parity, "NATION0", "USA")
-    views._VIEW_CACHE.clear()
+    invalidate()
     yield
-    views._VIEW_CACHE.clear()
+    invalidate()
 
 
 def test_q02_top_tracks_usa_golden(spark, chinook_handle):

@@ -6,6 +6,8 @@ import os
 
 from pyspark.sql import functions as F
 
+from chinook_music_database_analysis_spark import cache
+from chinook_music_database_analysis_spark.cache import invalidate
 from chinook_music_database_analysis_spark.engine import Engine
 from chinook_music_database_analysis_spark.operators.quality import (
     drop_duplicate_keys,
@@ -671,11 +673,7 @@ def test_plan_memo_reuses_and_detects_rewrite(spark, tmp_path):
     df3 = QUERIES["q01_dupes"](spark, sf)
     assert df3 is not df1, "corpus rewrite must be a plan-memo miss"
 
-    from chinook_music_database_analysis_spark.plans.registry import (
-        plan_memo_clear,
-    )
-
-    plan_memo_clear()
+    invalidate(sf)
     assert QUERIES["q01_dupes"](spark, sf) is not df3
 
 
@@ -734,9 +732,8 @@ def test_dd_ngram_no_persist_growth_across_executions(spark):
     """r13 (r12 advice/verdict item 7): the candidate-restricted shingle
     relation used by the jaccard/containment verify stages must NOT pin
     a fresh persisted relation per build — executor storage must stay
-    flat across repeated executions, and reset_memo must release it."""
+    flat across repeated executions, and invalidate must release it."""
     from chinook_music_database_analysis_spark.plans import QUERIES
-    from chinook_music_database_analysis_spark.plans.extensions import reset_memo
 
     def n_persisted() -> int:
         return spark.sparkContext._jsc.sc().getPersistentRDDs().size()
@@ -746,8 +743,8 @@ def test_dd_ngram_no_persist_growth_across_executions(spark):
     for _ in range(3):
         QUERIES["dd_ngram_jaccard"](spark, SF_TEST_DIR).count()
     assert n_persisted() == n1, "repeated builds must not grow executor storage"
-    reset_memo(SF_TEST_DIR)
-    assert n_persisted() < n1 or n1 == 0, "reset_memo must release the memoized relations"
+    invalidate(SF_TEST_DIR)
+    assert n_persisted() < n1 or n1 == 0, "invalidate must release the memoized relations"
 
 
 def test_reader_memo_reuses_and_detects_rewrite(spark, tmp_path):
@@ -759,7 +756,6 @@ def test_reader_memo_reuses_and_detects_rewrite(spark, tmp_path):
     import shutil
 
     from chinook_music_database_analysis_spark.sources import load_tables
-    from chinook_music_database_analysis_spark.sources.session import _READ_MEMO
 
     d = tmp_path / "memo_sf"
     d.mkdir()
@@ -781,7 +777,97 @@ def test_reader_memo_reuses_and_detects_rewrite(spark, tmp_path):
     assert df3 is not df1, "rewritten path must be a signature miss"
     assert df3.count() == 1 and n_before > 1
 
-    # memo stays LRU-bounded
-    from chinook_music_database_analysis_spark.sources.session import _READ_MEMO_MAX
+    # the session cache stays LRU-bounded
+    assert len(cache._ENTRIES) <= cache._MAX_ENTRIES
 
-    assert len(_READ_MEMO) <= _READ_MEMO_MAX
+
+def test_registered_callables_carry_query_name():
+    from chinook_music_database_analysis_spark.plans import QUERIES
+
+    for name, fn in QUERIES.items():
+        assert fn.query_name == name
+
+
+def _copy_corpus(dst) -> str:
+    import shutil
+
+    from chinook_music_database_analysis_spark.sources import TABLES
+
+    dst.mkdir()
+    for t in TABLES:
+        shutil.copy(f"{SF_TEST_DIR}/{t}.parquet", dst / f"{t}.parquet")
+    return str(dst)
+
+
+def test_corpus_rewrite_mid_session_matches_fresh_build(spark, tmp_path, monkeypatch):
+    """Rewriting the corpus in place mid-session must rebuild every cached
+    part of a plan — corpus statistics, store relations and reads — so
+    the rebuilt tx_bm25_topk returns what a fresh build over the new
+    corpus returns."""
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    from chinook_music_database_analysis_spark.plans import QUERIES
+    from chinook_music_database_analysis_spark.plans import extensions as ext
+
+    monkeypatch.setattr(ext, "_INDEX_ROOT", str(tmp_path / "idx"))
+    sf = _copy_corpus(tmp_path / "live")
+    QUERIES["tx_bm25_topk"](spark, sf).collect()
+
+    for t in ("documents", "embeddings"):
+        tab = pq.read_table(f"{sf}/{t}.parquet")
+        pq.write_table(tab.slice(0, tab.num_rows * 2 // 3), f"{sf}/{t}.parquet")
+    got = sorted(map(tuple, QUERIES["tx_bm25_topk"](spark, sf).collect()))
+
+    fresh = str(tmp_path / "fresh")
+    shutil.copytree(sf, fresh)
+    want = sorted(map(tuple, QUERIES["tx_bm25_topk"](spark, fresh).collect()))
+    assert got == want
+    invalidate(sf)
+    invalidate(fresh)
+
+
+def test_index_wipe_mid_session_retrains(spark, tmp_path, monkeypatch):
+    """Deleting the index store under a session must retrain it on the next
+    execution instead of scanning the deleted store files."""
+    import shutil
+
+    from chinook_music_database_analysis_spark.plans import QUERIES
+    from chinook_music_database_analysis_spark.plans import extensions as ext
+
+    root = tmp_path / "idx"
+    monkeypatch.setattr(ext, "_INDEX_ROOT", str(root))
+    sf = _copy_corpus(tmp_path / "sf")
+    n = QUERIES["tx_bm25_topk"](spark, sf).count()
+    shutil.rmtree(root)
+    assert QUERIES["tx_bm25_topk"](spark, sf).count() == n
+    assert root.is_dir(), "the store was not trained again"
+    invalidate(sf)
+
+
+def test_invalidate_drops_plans_and_releases_storage(spark):
+    from chinook_music_database_analysis_spark.plans import QUERIES
+
+    def n_persisted() -> int:
+        return spark.sparkContext._jsc.sc().getPersistentRDDs().size()
+
+    df = QUERIES["dd_ngram_jaccard"](spark, SF_TEST_DIR)
+    df.count()
+    n1 = n_persisted()
+    invalidate(SF_TEST_DIR)
+    assert n_persisted() < n1
+    assert QUERIES["dd_ngram_jaccard"](spark, SF_TEST_DIR) is not df
+
+
+def test_new_session_gets_no_cached_plans_or_relations(spark):
+    from chinook_music_database_analysis_spark.plans import QUERIES
+    from chinook_music_database_analysis_spark.plans.extensions import _cand_pairs
+
+    other = spark.newSession()
+    q = QUERIES["dd_ngram_jaccard"]
+    assert q(spark, SF_TEST_DIR) is q(spark, SF_TEST_DIR)
+    assert q(other, SF_TEST_DIR) is not q(spark, SF_TEST_DIR)
+    assert _cand_pairs(other, SF_TEST_DIR) is not _cand_pairs(spark, SF_TEST_DIR)
+    assert q(other, SF_TEST_DIR).sparkSession is other
+    invalidate(SF_TEST_DIR)

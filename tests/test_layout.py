@@ -11,6 +11,7 @@ import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
+from chinook_music_database_analysis_spark.cache import invalidate
 from chinook_music_database_analysis_spark.operators.layout import (
     morton_code,
     morton_sql,
@@ -233,7 +234,7 @@ def test_layout_rebuild_prunes(spark, tmp_path, monkeypatch):
     from chinook_music_database_analysis_spark.plans import QUERIES
 
     monkeypatch.setattr(ext, "_INDEX_ROOT", str(tmp_path))
-    ext.reset_memo(SF_TEST_DIR)
+    invalidate(SF_TEST_DIR)
     try:
         fact = _zordered_lineitem(spark, SF_TEST_DIR)
 
@@ -267,7 +268,7 @@ def test_layout_rebuild_prunes(spark, tmp_path, monkeypatch):
         li = spark.read.parquet(f"{SF_TEST_DIR}/lineitem.parquet")
         assert fact.count() == li.count()
     finally:
-        ext.reset_memo(SF_TEST_DIR)
+        invalidate(SF_TEST_DIR)
 
 
 def test_zorder_writers_handle_empty_input(spark, tmp_path):

@@ -9,6 +9,7 @@ from __future__ import annotations
 import pandas as pd
 import pytest
 
+from chinook_music_database_analysis_spark.cache import invalidate
 from chinook_music_database_analysis_spark.plans import QUERIES
 
 from conftest import SF_TEST_DIR
@@ -884,14 +885,14 @@ def test_hot_shingle_guard_and_containment_router(spark):
     handle = "hot-containment-handle"
     TABLE_OVERRIDES[handle] = {"documents": hot}
     try:
-        ext.reset_memo(handle)
+        invalidate(handle)
         with pytest.raises(ValueError, match="dd_containment_scale"):
             QUERIES["dd_containment"](spark, handle)
         # the documented escape hatch still works on the hot corpus
         assert QUERIES["dd_containment_scale"](spark, handle).count() >= 0
     finally:
         del TABLE_OVERRIDES[handle]
-        ext.reset_memo(handle)
+        invalidate(handle)
 
     exact = QUERIES["dd_containment"](spark, SF_TEST_DIR)
     plan2 = exact._jdf.queryExecution().analyzed().toString()
@@ -1222,7 +1223,6 @@ def test_bpe_blank_document_corpus_matches_oracle(spark, tmp_path):
     import duckdb
 
     from chinook_music_database_analysis_spark.plans import ORACLES, QUERIES
-    from chinook_music_database_analysis_spark.plans.extensions import reset_memo
 
     from conftest import assert_frames_match
 
@@ -1261,23 +1261,22 @@ def test_bpe_blank_document_corpus_matches_oracle(spark, tmp_path):
             assert len(spark_pdf) > 0, name
     finally:
         con.close()
-        reset_memo(sf_dir)
+        invalidate(sf_dir)
 
 
 def test_reset_memo_unpersists_bpe_fold_chain(spark):
-    """reset_memo promises to RELEASE executor storage, and since r10
-    the BPE fold chain's persisted relations live inside _SCALAR_MEMO
-    values (tuples) rather than _MEMO — the reset must walk values and
+    """invalidate promises to RELEASE executor storage, and since r10
+    the BPE fold chain's persisted relations live inside a memoized
+    list of tuples rather than as bare relations — the reset must walk values and
     unpersist the DataFrames it finds, not just drop the dict keys."""
-    from chinook_music_database_analysis_spark.plans.extensions import reset_memo
     from chinook_music_database_analysis_spark.plans.scale_queries import _bpe_seqs
 
     seqs = _bpe_seqs(spark, SF_TEST_DIR)
     dfs = [s[4] for s in seqs]
     assert dfs and all(df.storageLevel.useMemory for df in dfs)
     try:
-        reset_memo(SF_TEST_DIR)
+        invalidate(SF_TEST_DIR)
         assert all(not df.storageLevel.useMemory for df in dfs)
     finally:
         # leave the session memo in a clean state for later tests
-        reset_memo(SF_TEST_DIR)
+        invalidate(SF_TEST_DIR)
