@@ -20,9 +20,9 @@ next round diff wall time without re-deriving the noise story from
 PERF.md narrative.
 
 Store/memo accounting (round-13, the r12 verdict's item 3): the
-on-disk index store for THIS corpus is wiped before the cold pass
-(SPARK_GRAFT_BENCH_WIPE_INDEX=0 keeps it), so cold numbers pay index
-training on every invocation; the JSON line carries
+on-disk index store for THIS corpus is wiped before the cold pass,
+so cold numbers pay index training on every invocation; the JSON
+line carries
 ``"index": {"wiped", "tr", "ld"}`` (store kinds trained in-run vs
 served pre-baked) plus ``memo_n``/``store_n`` — how many warm plans
 contain an InMemoryRelation (session-memoized relations) or scan the
@@ -39,13 +39,17 @@ perf-relevant tail); the COMPLETE per-query detail (warm + cold +
 errors) is written to BENCH_DETAIL.json next to this file and echoed
 to stderr.  Failures never kill the run: broken queries land in an
 "errors" section of the sidecar (and an "errors_n" count in the
-headline line), and the JSON line prints regardless.
+headline line), as do failed harness steps (warm-up, plan probe,
+re-read probe) under a ``_bench:<step>`` key, and the JSON line
+prints regardless.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import re
+import shutil
 import sys
 import time
 
@@ -69,7 +73,15 @@ def _cache_state() -> dict:
     return out
 
 
-def _reread_probe(spark, sf_dir: str) -> list[float]:
+def _bench_error(errors: dict, step: str, ex: Exception) -> None:
+    """Record a failed harness step (not a query) in the sidecar's
+    ``errors`` under ``_bench:<step>``, so it counts in ``errors_n``."""
+    msg = f"{type(ex).__name__}: {ex}"[:200]
+    errors[f"_bench:{step}"] = {"error": msg}
+    print(f"# {step}: ERROR {msg}", file=sys.stderr)
+
+
+def _reread_probe(spark, sf_dir: str, errors: dict) -> list[float]:
     """Two back-to-back full scans of the largest table: if the second
     is not much faster than the first, the host is evicting the page
     cache between runs and EVERY timing in this file is storage-bound
@@ -81,52 +93,43 @@ def _reread_probe(spark, sf_dir: str) -> list[float]:
             t0 = time.perf_counter()
             spark.read.parquet(path).selectExpr("sum(l_partkey)").collect()
             times.append(round(time.perf_counter() - t0, 3))
-    except Exception:
-        pass
+    except Exception as ex:
+        _bench_error(errors, "reread_probe", ex)
     return times
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    from chinook_music_database_analysis_spark.cache import invalidate
     from chinook_music_database_analysis_spark.plans import QUERIES
+    from chinook_music_database_analysis_spark.plans.extensions import (
+        _INDEX_ROOT,
+        STORE_EVENTS,
+    )
     from chinook_music_database_analysis_spark.sources import get_spark
 
     spark = get_spark("chinook-spark-bench")
     spark.sparkContext.setLogLevel("ERROR")
+    # Queries that fail land here by name; failed harness steps under
+    # ``_bench:<step>`` (see _bench_error).
+    errors: dict[str, dict] = {}
 
     # De-gamed store accounting (r13, r12 verdict item 3): the on-disk
     # ANN/signature index store (`.index/`) survives between bench runs
     # by design (it models a corpus-versioned index artifact), which
     # meant the COLD pass never paid index training after the first
-    # run on a corpus.  The bench now wipes the store for its own
-    # corpus before the cold pass (default; SPARK_GRAFT_BENCH_WIPE_
-    # INDEX=0 keeps it, e.g. for quick re-runs), so cold_total includes
-    # training at least once per bench invocation, and the JSON line
-    # reports which store kinds were trained vs served pre-baked plus
-    # which warm numbers are memo-served (see store/memo fields below).
-    index_wiped = False
-    if os.environ.get("SPARK_GRAFT_BENCH_WIPE_INDEX", "1") != "0":
-        try:
-            import re as _re
-            import shutil as _shutil
-
-            from chinook_music_database_analysis_spark.cache import invalidate
-            from chinook_music_database_analysis_spark.plans.extensions import (
-                _INDEX_ROOT,
-            )
-
-            tag = _re.sub(r"[^A-Za-z0-9.]+", "_", sf_dir).strip("_")
-            target = os.path.join(_INDEX_ROOT, tag)
-            if os.path.isdir(target):
-                _shutil.rmtree(target, ignore_errors=True)
-                index_wiped = not os.path.isdir(target)
-                invalidate(sf_dir)
-            print(
-                f"# index store wiped for cold pass: {index_wiped} ({target})",
-                file=sys.stderr,
-            )
-        except Exception as ex:
-            print(f"# index wipe: ERROR {type(ex).__name__}: {ex}"[:200], file=sys.stderr)
+    # run on a corpus.  The bench wipes the store for its own corpus
+    # before the cold pass, so cold_total includes training on every
+    # bench invocation, and the JSON line reports which store kinds
+    # were trained vs served pre-baked plus which warm numbers are
+    # memo-served (see store/memo fields below).
+    target = os.path.join(
+        _INDEX_ROOT, re.sub(r"[^A-Za-z0-9.]+", "_", sf_dir).strip("_")
+    )
+    shutil.rmtree(target, ignore_errors=True)
+    index_wiped = not os.path.isdir(target)
+    invalidate(sf_dir)
+    print(f"# index store wiped for cold pass: {index_wiped} ({target})", file=sys.stderr)
 
     try:
         names = sorted(QUERIES)
@@ -145,8 +148,8 @@ def main() -> None:
             spark.range(64).repartition(8).mapInPandas(
                 lambda it: it, "id bigint"
             ).count()
-        except Exception:
-            pass
+        except Exception as ex:
+            _bench_error(errors, "warmup", ex)
         # Cold pass: run every query once (codegen, footer caches,
         # memoized shared relations all cold).  Timed and emitted in
         # the JSON alongside the warm numbers so both methodologies
@@ -167,7 +170,6 @@ def main() -> None:
 
         reps = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3")))
         samples: dict[str, list[float]] = {}
-        errors: dict[str, dict] = {}
         for rep in range(reps):
             for name in names:
                 t0 = time.perf_counter()
@@ -206,7 +208,7 @@ def main() -> None:
         }
         total = round(sum(timings.values()), 3)
         cache_after_warm = _cache_state()
-        reread = _reread_probe(spark, sf_dir)
+        reread = _reread_probe(spark, sf_dir, errors)
 
         # Machine-readable serving provenance (r13, verdict item 3):
         # which warm medians time a memo-served relation (plan contains
@@ -216,12 +218,6 @@ def main() -> None:
         # load).  Untimed: plans are rendered once per query after the
         # warm pass.
         plan_flags: dict[str, dict] = {}
-        try:
-            from chinook_music_database_analysis_spark.plans.extensions import (
-                _INDEX_ROOT as _idx_root,
-            )
-        except Exception:
-            _idx_root = "/.index"
         for name in names:
             if name in errors:
                 continue
@@ -230,18 +226,11 @@ def main() -> None:
                 txt = qe.optimizedPlan().toString() + qe.executedPlan().toString()
                 plan_flags[name] = {
                     "memo": "InMemoryRelation" in txt,
-                    "store": _idx_root in txt,
+                    "store": _INDEX_ROOT in txt,
                 }
-            except Exception:
-                pass
-        try:
-            from chinook_music_database_analysis_spark.plans.extensions import (
-                STORE_EVENTS,
-            )
-
-            store_events = dict(sorted(STORE_EVENTS.items()))
-        except Exception:
-            store_events = {}
+            except Exception as ex:
+                _bench_error(errors, f"plan_flags:{name}", ex)
+        store_events = dict(sorted(STORE_EVENTS.items()))
         memo_served = sorted(n for n, f in plan_flags.items() if f["memo"])
         store_read = sorted(n for n, f in plan_flags.items() if f["store"])
         store_trained = sorted(k for k, v in store_events.items() if v == "train")

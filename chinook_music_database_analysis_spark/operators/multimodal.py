@@ -296,41 +296,6 @@ def sample_frames(
     return media.mapInPandas(_sample_batch, schema=FRAME_SCHEMA)
 
 
-def _decode_arrow(batches: "Iterator") -> "Iterator":
-    """RecordBatch-level decode: identical kernel to ``_decode_batch``
-    without the Arrow<->pandas conversion on either side of the
-    boundary."""
-    import pyarrow as pa
-
-    for batch in batches:
-        doc_ids = batch.column("doc_id")
-        decoded = [_decode_media(p.as_py()) for p in batch.column("media_bytes")]
-        yield pa.RecordBatch.from_arrays(
-            [
-                doc_ids,
-                pa.array([d[0] for d in decoded], pa.int32()),
-                pa.array([d[1] for d in decoded], pa.int32()),
-                pa.array([d[2] for d in decoded], pa.int32()),
-                pa.array([d[3] for d in decoded], pa.int32()),
-            ],
-            names=["doc_id", "n_bytes", "width", "height", "channels"],
-        )
-
-
-def media_features_arrow(docs: DataFrame) -> DataFrame:
-    """``media_features`` over ``mapInArrow``: the same layered decode
-    kernel fed raw Arrow RecordBatches, skipping the pandas
-    materialization mapInPandas performs on both sides of the Python
-    boundary.  For binary-heavy columns that conversion is a real copy
-    (bytes objects in/out of BlockManager-backed frames), so the Arrow
-    iterator is the lowest-overhead Python boundary Spark offers —
-    the right default when the per-row kernel is cheap relative to the
-    payload bytes.  Pinned row-identical to the pandas form in
-    tests/test_multimodal.py."""
-    media = with_media(docs.repartition("doc_id"))
-    return media.mapInArrow(_decode_arrow, schema=MEDIA_FEATURES_SCHEMA)
-
-
 #: Perceptual average-hash geometry: 48 bits (sign-safe int64 like
 #: SimHash), banded 4 x 12 for candidate generation.  The pigeonhole
 #: bound — two hashes within hamming distance 3 must agree on one of

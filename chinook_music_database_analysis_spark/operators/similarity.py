@@ -93,128 +93,17 @@ def plane_signs(p: int, dim: int = EMB_DIM) -> tuple[float, ...]:
     )
 
 
-def _dot_jvm(a: str, b: str) -> F.Column:
+def _dot(a: str, b: str) -> F.Column:
     """Index-ordered double-precision dot product of two float arrays
-    — the JVM higher-order-function form.  aggregate/zip_with are
-    CodegenFallback expressions (interpreted per element, with a zipped
-    array allocation per row), which is why the hot pair-scoring paths
-    route through the Arrow kernel below; this form remains the
-    semantics reference and the fallback for degenerate rows."""
+    — the JVM higher-order-function fold.  This fold is the semantics
+    the DuckDB oracle mirrors (``list_sum(list_transform(...))``):
+    float32 -> float64 casts are exact, products round once, and both
+    engines accumulate in index order from +0.0, so they agree
+    bit-for-bit."""
     return F.expr(
         f"aggregate(zip_with({a}, {b}, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)),"
         f" CAST(0 AS DOUBLE), (acc, v) -> acc + v)"
     )
-
-
-#: route _dot through the Arrow-vectorized fold kernel (guide §4).
-#: DEFAULT OFF — measured and rejected at bench scale (r13, matched-
-#: window A/B via scripts/vec_ab.py, rows verified equal first): at
-#: sf0.1 the corpus is 2000×64-dim vectors, so every scoring relation
-#: is KB-sized and the ArrowEvalPython round-trips (one per _dot site
-#: per stage) cost more than they save — JVM-over-kernel speedups
-#: 0.57-0.92 across all 10 consumers (sim_bruteforce 0.536 vs 0.942 s,
-#: mrl 0.612 vs 1.081, outlier 0.594 vs 0.943, ivf_append 0.858 vs
-#: 1.068, hybrid_batch 0.826 vs 1.122 ...).  The kernel preserves the
-#: index-ordered fold bit-for-bit (test_vector_dot_kernel), so at real
-#: scale — where pair relations are GB-sized and the interpreted
-#: CodegenFallback fold dominates — flip SPARK_GRAFT_VECTOR_DOT=1;
-#: module-level so A/B harnesses can flip it per build.
-VECTOR_DOT = __import__("os").environ.get("SPARK_GRAFT_VECTOR_DOT", "0") != "0"
-
-_DOT_KERNEL = None
-
-
-def _dot_kernel():
-    """Arrow-batched, ORDER-PRESERVING dot-product kernel (r13,
-    guide §4.2): batches of (a, b) array pairs cross the boundary as
-    Arrow and fold column-wise in numpy — ``acc = acc + A[:, i] *
-    B[:, i]`` for i ascending — so every row performs the exact same
-    IEEE-754 double multiply/add sequence as the JVM fold
-    (:func:`_dot_jvm`) and the DuckDB oracle's
-    ``list_sum(list_transform(...))``: float32 -> float64 casts are
-    exact, products round once, the accumulation is a left fold from
-    +0.0.  numpy does not fuse multiply-add, and no pairwise/BLAS
-    summation is involved, so outputs are bit-identical.
-
-    Degenerate rows (NULL array, length mismatch, NULL elements —
-    which Arrow surfaces as NaN or None) return NaN from the kernel;
-    the :func:`_dot` wrapper routes exactly those rows back through
-    the JVM fold, which reproduces the engine-native NULL/NaN
-    semantics bit-for-bit (genuine-NaN inputs also take that path, so
-    NaN-vs-NULL is never conflated)."""
-    global _DOT_KERNEL
-    if _DOT_KERNEL is None:
-        import pandas as pd
-        from pyspark.sql.functions import pandas_udf
-
-        def dot_fold(a, b):
-            import numpy as np
-
-            va, vb = a.to_numpy(), b.to_numpy()
-            n = len(va)
-            out = np.full(n, np.nan)
-            lens = np.full(n, -1, dtype=np.int64)
-            for j in range(n):
-                x, y = va[j], vb[j]
-                if x is None or y is None:
-                    continue
-                lx = len(x)
-                if lx == len(y):
-                    lens[j] = lx
-            for d in np.unique(lens):
-                if d < 0:
-                    continue
-                idx = np.nonzero(lens == d)[0]
-                if d == 0:
-                    # aggregate([], 0.0) == 0.0 on both engines
-                    out[idx] = 0.0
-                    continue
-                try:
-                    A = np.stack(
-                        [np.asarray(va[j], dtype=np.float64) for j in idx]
-                    )
-                    B = np.stack(
-                        [np.asarray(vb[j], dtype=np.float64) for j in idx]
-                    )
-                except (TypeError, ValueError):
-                    continue  # None elements -> NaN marker -> JVM fallback
-                acc = np.zeros(len(idx))
-                for i in range(d):
-                    acc = acc + A[:, i] * B[:, i]
-                out[idx] = acc
-            return pd.Series(out)
-
-        # Real annotation objects (not strings): the module uses
-        # `from __future__ import annotations`, under which inline
-        # hints stringify and pyspark's eval-type inference cannot
-        # resolve them from a closure-local pandas import.
-        dot_fold.__annotations__ = {
-            "a": pd.Series, "b": pd.Series, "return": pd.Series,
-        }
-        _DOT_KERNEL = pandas_udf(dot_fold, "double")
-    return _DOT_KERNEL
-
-
-def _dot(a: str, b: str) -> F.Column:
-    """Index-ordered double-precision dot product of two float arrays.
-
-    Routed through the Arrow fold kernel when :data:`VECTOR_DOT` is on:
-    the kernel output is used verbatim unless it is NaN, in which case
-    the row re-evaluates through the JVM fold — NaN marks exactly the
-    rows where the two forms could diverge (NULL elements vs genuine
-    NaN/Inf arithmetic), and the JVM fold is the semantics of record
-    for them.  Both branches reference ONE kernel expression, so the
-    plan carries a single ArrowEvalPython node."""
-    jvm = _dot_jvm(a, b)
-    if not VECTOR_DOT:
-        return jvm
-    k = _dot_kernel()(F.expr(a), F.expr(b))
-    # NaN marks the kernel's degenerate rows, and the pandas->Arrow
-    # boundary converts NaN to NULL (pandas' null sentinel), so the
-    # marker arrives as NULL — both forms route to the JVM fold, which
-    # recomputes the engine-native value (NULL for NULL/ragged inputs,
-    # NaN for genuine NaN/Inf arithmetic) bit-for-bit.
-    return F.when(k.isNull() | F.isnan(k), jvm).otherwise(k)
 
 
 def _norm(a: str) -> F.Column:
@@ -938,30 +827,6 @@ def range_search(
         )
         .filter(F.col("cos_sim") >= tau)
     )
-
-
-def l2_norms_pandas(emb: DataFrame) -> DataFrame:
-    """Vectorized Pandas-UDF L2 norms — the Arrow-batched Python path
-    for numeric kernels the built-ins can't express (here they can;
-    tests cross-check this against the JVM-side aggregate to pin the
-    Arrow array handling)."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    def _l2(v):
-        # Upcast before accumulating: float32 dot products drift ~1e-8
-        # from the double-precision JVM path.
-        return v.map(
-            lambda arr: float(np.sqrt(np.dot(a64 := np.asarray(arr, dtype=np.float64), a64)))
-        )
-
-    # Real annotation objects (PEP-563 string hints from `from
-    # __future__ import annotations` would be unresolvable for
-    # pyspark's Series->Series signature inference).
-    _l2.__annotations__ = {"v": pd.Series, "return": pd.Series}
-    l2 = pandas_udf(_l2, "double")
-    return emb.select("vec_id", l2("embedding").alias("l2_norm"))
 
 
 #: Lloyd iterations for the k-means centroid training pass.  Fixed and

@@ -27,7 +27,7 @@ from . import scale_queries  # noqa: E402,F401
 # rewrites whose CURRENT code has no driver CORRECTNESS row (the
 # window was rotated before the rewrites landed) plus their two
 # flagged cohort-mates (sim_knn_graph, s04_scaled — r12-green but
-# settled by matched-window A/B this round, scripts/ab_r13.py);
+# settled by matched-window A/B this round);
 # (1) the queries MUTATED in r13: tx_tfidf / tx_surprisal now read the
 # persisted BM25 postings relation, sim_bruteforce_topk / tx_hybrid_*
 # the persisted norm relation, dd_ngram_jaccard routes the

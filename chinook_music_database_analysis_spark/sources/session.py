@@ -10,8 +10,10 @@ Scale notes (100 TB design point):
   * AQE is enabled — runtime coalescing of shuffle partitions, skew-join
     splitting, and dynamic broadcast conversion are the main levers that
     keep the same logical plans healthy at 1000 executors.
-  * ``spark.sql.shuffle.partitions`` defaults low for local testing; on
-    a real cluster it should be ~2-3x total cores (AQE coalesces down).
+  * ``spark.sql.shuffle.partitions`` equals the core count
+    (``$SPARK_GRAFT_CPUS``, default: the cores this process may run on),
+    so a local session has one reduce task per slot; on a real cluster
+    it should be ~2-3x total cores (AQE coalesces down).
   * Facts (``orders``/``lineitem``/``events``) would be date-partitioned
     and bucketed by join key at scale; the loaders read plain Parquet
     directories, which is layout-agnostic — partition pruning kicks in
@@ -50,13 +52,13 @@ def get_spark(app_name: str = "chinook-spark") -> SparkSession:
     deployment would set: AQE on, Arrow on for any Pandas-UDF path,
     UTC session timezone for deterministic date math.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
     builder = (
         SparkSession.builder.appName(app_name)
         .master(os.environ.get("SPARK_MASTER", f"local[{cpus}]"))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        # AQE partition coalescing knobs, env-parameterised and MEASURED
+        # AQE partition coalescing settings, MEASURED
         # (r12, guide §2.2 / OPTIMIZATION_r12.md): parallelismFirst
         # stays at Spark's default TRUE.  The byte-respecting variant
         # (false + 64 MB advisory) was swept against it over 16
@@ -67,18 +69,11 @@ def get_spark(app_name: str = "chinook-spark") -> SparkSession:
         # two-stage agg) by squeezing them to 1 task.  On a cluster
         # whose shuffles are TB-sized the two settings converge
         # (bytes/parallelism >> advisory), so the default is also the
-        # scale-correct choice; deployments with many small concurrent
-        # queries can flip it via env.
-        .config(
-            "spark.sql.adaptive.coalescePartitions.parallelismFirst",
-            os.environ.get("SPARK_AQE_PARALLELISM_FIRST", "true"),
-        )
-        .config(
-            "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-            os.environ.get("SPARK_ADVISORY_PARTITION_BYTES", "64m"),
-        )
+        # scale-correct choice.
+        .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "true")
+        .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64m")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.shuffle.partitions", os.environ.get("SPARK_SHUFFLE_PARTITIONS", "32"))
+        .config("spark.sql.shuffle.partitions", cpus)
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         # events.parquet stores TIMESTAMP(NANOS); Spark's reader has no

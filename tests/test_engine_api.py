@@ -79,20 +79,6 @@ def test_date_partitioned_sink_prunes(spark, tmp_path):
     assert pruned.count() > 0
 
 
-def test_pandas_udf_norms_match_jvm(spark):
-    from chinook_music_database_analysis_spark.operators.similarity import l2_norms_pandas
-
-    emb = spark.read.parquet(f"{SF_TEST_DIR}/embeddings.parquet")
-    got = l2_norms_pandas(emb).toPandas().set_index("vec_id").sort_index()
-    jvm = emb.selectExpr(
-        "vec_id",
-        "sqrt(aggregate(zip_with(embedding, embedding,"
-        " (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)),"
-        " CAST(0 AS DOUBLE), (a, v) -> a + v)) AS l2_norm",
-    ).toPandas().set_index("vec_id").sort_index()
-    assert (abs(got.l2_norm - jvm.l2_norm) < 1e-9).all()
-
-
 def test_csv_json_readers_roundtrip(spark, tmp_path):
     from chinook_music_database_analysis_spark.sources.readers import read_csv, read_json
 
@@ -273,6 +259,14 @@ def test_engine_profile_metrics(spark):
     assert prof["n_rows"] == 25
     assert prof["wall_sec"] > 0
     assert "HashAggregate" in prof["plan"] or "Aggregate" in prof["plan"]
+
+
+def test_shuffle_partitions_follow_core_count(spark):
+    """get_spark derives spark.sql.shuffle.partitions from the same
+    core count as local[N], so a session never shuffles into more
+    partitions than it has task slots."""
+    parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert parts == spark.sparkContext.defaultParallelism
 
 
 def test_sorted_write_layout_enables_rowgroup_skipping(spark, tmp_path):
@@ -675,57 +669,6 @@ def test_plan_memo_reuses_and_detects_rewrite(spark, tmp_path):
 
     invalidate(sf)
     assert QUERIES["q01_dupes"](spark, sf) is not df3
-
-
-def test_vector_dot_kernel_matches_jvm_fold(spark):
-    """r13: the env-gated Arrow dot-product kernel must be bit-identical
-    to the JVM aggregate/zip_with fold on every input class — clean
-    vectors, NULL arrays, ragged lengths, NULL elements, empty arrays,
-    NaN and Inf arithmetic (the fuzz-gate edge shapes)."""
-    import math
-    import struct
-
-    import chinook_music_database_analysis_spark.operators.similarity as S
-    from pyspark.sql import functions as F
-
-    rows = [
-        (1, [1.0, 2.0, 3.0], [4.0, 5.0, 6.0]),
-        (2, None, [1.0, 2.0, 3.0]),
-        (3, [1.0, 2.0], None),
-        (4, [1.0, 2.0], [1.0]),  # ragged -> NULL
-        (5, [], []),  # empty fold -> 0.0
-        (6, [float("nan"), 1.0], [1.0, 1.0]),  # NaN propagates
-        (7, [float("inf"), 1.0], [1.0, 1.0]),
-        (8, [float("inf"), float("-inf")], [1.0, 1.0]),  # inf + -inf -> NaN
-        (9, [1.0, None, 3.0], [1.0, 1.0, 1.0]),  # NULL element -> NULL
-        (10, [0.1] * 64, [0.3] * 64),  # fold-order-sensitive repeats
-        (11, [1e308, 1e308, -1e308], [2.0, -2.0, 2.0]),  # overflow order
-    ]
-    df = spark.createDataFrame(rows, "id long, a array<float>, b array<float>")
-
-    def run(vec: bool) -> dict:
-        old = S.VECTOR_DOT
-        S.VECTOR_DOT = vec
-        try:
-            return {
-                r["id"]: r["d"]
-                for r in df.select("id", S._dot("a", "b").alias("d")).collect()
-            }
-        finally:
-            S.VECTOR_DOT = old
-
-    jvm, vec = run(False), run(True)
-    assert set(jvm) == set(vec)
-    for k in jvm:
-        x, y = jvm[k], vec[k]
-        if x is None or y is None:
-            assert x is None and y is None, f"id {k}: {x!r} vs {y!r}"
-        elif math.isnan(x) or math.isnan(y):
-            assert math.isnan(x) and math.isnan(y), f"id {k}: {x!r} vs {y!r}"
-        else:
-            assert struct.pack("d", x) == struct.pack("d", y), (
-                f"id {k}: {x!r} vs {y!r} differ bitwise"
-            )
 
 
 def test_dd_ngram_no_persist_growth_across_executions(spark):

@@ -107,24 +107,6 @@ def test_resize_media_routes_ppm_through_real_kernel(spark):
     ]
 
 
-def test_media_features_arrow_matches_pandas_form(spark):
-    """mapInArrow and mapInPandas decode paths must be row-identical —
-    same kernel, different Python-boundary serialization — on a mix of
-    real P6 payloads and stub-routed plain text."""
-    from chinook_music_database_analysis_spark.operators.multimodal import (
-        media_features_arrow,
-    )
-
-    text = "P6 4 3 255\n" + "A" * 36
-    docs = spark.createDataFrame(
-        [(1, text), (2, "plain text"), (3, "x" * 100)],
-        "doc_id long, text string",
-    )
-    a = sorted(map(tuple, media_features(docs).collect()))
-    b = sorted(map(tuple, media_features_arrow(docs).collect()))
-    assert a == b and len(a) == 3
-
-
 def test_media_phash_kernel_and_pair_detection(spark):
     """The perceptual hash is the documented integer aHash (cross-
     multiplied block-mean bits over code points, checked against a
