@@ -39,16 +39,16 @@ perf-relevant tail); the COMPLETE per-query detail (warm + cold +
 errors) is written to BENCH_DETAIL.json next to this file and echoed
 to stderr.  Failures never kill the run: broken queries land in an
 "errors" section of the sidecar (and an "errors_n" count in the
-headline line), as do failed harness steps (warm-up, plan probe,
-re-read probe) under a ``_bench:<step>`` key, and the JSON line
-prints regardless.
+headline line), as do failed harness steps (warm-up, cold-pass
+query, plan probe, re-read probe, streaming set-up and paths, synthetic
+source, a store loaded after the wipe) under a ``_bench:<step>`` key,
+and the JSON line prints regardless.
 """
 
 from __future__ import annotations
 
 import json
 import os
-import re
 import shutil
 import sys
 import time
@@ -102,11 +102,8 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     from chinook_music_database_analysis_spark.cache import invalidate
     from chinook_music_database_analysis_spark.plans import QUERIES
-    from chinook_music_database_analysis_spark.plans.extensions import (
-        _INDEX_ROOT,
-        STORE_EVENTS,
-    )
     from chinook_music_database_analysis_spark.sources import get_spark
+    from chinook_music_database_analysis_spark.store import ROOT, STORE_EVENTS, store_dir
 
     spark = get_spark("chinook-spark-bench")
     spark.sparkContext.setLogLevel("ERROR")
@@ -123,9 +120,7 @@ def main() -> None:
     # bench invocation, and the JSON line reports which store kinds
     # were trained vs served pre-baked plus which warm numbers are
     # memo-served (see store/memo fields below).
-    target = os.path.join(
-        _INDEX_ROOT, re.sub(r"[^A-Za-z0-9.]+", "_", sf_dir).strip("_")
-    )
+    target = store_dir(sf_dir)
     shutil.rmtree(target, ignore_errors=True)
     index_wiped = not os.path.isdir(target)
     invalidate(sf_dir)
@@ -164,8 +159,16 @@ def main() -> None:
                 cold[name] = round(time.perf_counter() - t0, 3)
                 print(f"# cold {name}: {cold[name]:.3f}s", file=sys.stderr)
             except Exception as ex:
-                print(f"# cold {name}: ERROR {type(ex).__name__}: {ex}"[:200], file=sys.stderr)
+                _bench_error(errors, f"cold:{name}", ex)
         cold_total = round(time.perf_counter() - t_cold, 3)
+        # A kind served from disk in the cold pass means the wipe did
+        # not take: the cold total then hides that store's training.
+        loaded = sorted(k for k, v in STORE_EVENTS.items() if v == "load")
+        if loaded:
+            _bench_error(
+                errors, "index_wipe",
+                RuntimeError(f"store kinds loaded after the wipe: {loaded}"),
+            )
         cache_after_cold = _cache_state()
 
         reps = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3")))
@@ -226,7 +229,7 @@ def main() -> None:
                 txt = qe.optimizedPlan().toString() + qe.executedPlan().toString()
                 plan_flags[name] = {
                     "memo": "InMemoryRelation" in txt,
-                    "store": _INDEX_ROOT in txt,
+                    "store": ROOT in txt,
                 }
             except Exception as ex:
                 _bench_error(errors, f"plan_flags:{name}", ex)
@@ -351,7 +354,7 @@ def main() -> None:
             }
         except Exception as ex:
             paths = {}
-            print(f"# streaming setup: ERROR {type(ex).__name__}: {ex}"[:200], file=sys.stderr)
+            _bench_error(errors, "streaming:setup", ex)
         # Same median-of-reps methodology as the queries, except the
         # FIRST run is dropped: it pays Python-worker + checkpoint cold
         # start (~8s even in a fresh session), which is noise for
@@ -400,10 +403,7 @@ def main() -> None:
                     file=sys.stderr,
                 )
             except Exception as ex:
-                print(
-                    f"# streaming {name}: ERROR {type(ex).__name__}: {ex}"[:200],
-                    file=sys.stderr,
-                )
+                _bench_error(errors, f"streaming:{name}", ex)
 
         # Source-throughput micro-bench: the custom Python streaming
         # DataSource driven to completion (availableNow), so Python-
@@ -437,7 +437,7 @@ def main() -> None:
             source_rows_per_sec = round(n_rows / (time.perf_counter() - t0), 1)
             print(f"# synthetic_source: {source_rows_per_sec} rows/s", file=sys.stderr)
         except Exception as ex:
-            print(f"# synthetic_source: ERROR {type(ex).__name__}: {ex}"[:200], file=sys.stderr)
+            _bench_error(errors, "synthetic_source", ex)
 
         sf_token = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
         try:

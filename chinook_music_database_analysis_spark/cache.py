@@ -8,8 +8,9 @@ corpus statistic and the derived view are all entries under one key::
 * **session** — ``id()`` plus a weakref checked on every hit, so a
   ``newSession()`` never shares entries with its parent and a recycled
   ``id()`` cannot serve a dead session's value;
-* **snapshot** — the stat signature (size + mtime_ns of every data file)
-  of each corpus table under ``sf_dir`` plus the mounted table-set seq,
+* **snapshot** — the stat signature (:func:`table_files`: size +
+  mtime_ns of every data file) of each corpus table under ``sf_dir``, or
+  the mounted table-set seq,
   so a rewritten corpus or a re-mounted handle is a miss for every kind.
 
 Entries built over the on-disk index store also record the stat of each
@@ -52,21 +53,36 @@ class _Builds(threading.local):
 _BUILDS = _Builds()
 
 
-def _path_sig(path: str) -> tuple | None:
-    try:
-        st = os.stat(path)
-        if not stat.S_ISDIR(st.st_mode):
-            return (st.st_mtime_ns, st.st_size)
-        # A partitioned layout rewrites part files below the top level
-        # without touching its mtime, so walk every data file.
-        entries = []
-        for dirpath, _dirs, files in os.walk(path):
-            for f in files:
+def _ignored(name: str) -> bool:
+    """Names Spark's file index skips when it lists a table."""
+    return name.startswith(".") or (name.startswith("_") and "=" not in name)
+
+
+def table_files(path: str) -> list[tuple[str, int, int]]:
+    """The data files of the table at ``path`` (one parquet file, or a
+    directory of them) as sorted (path relative to ``path``, size,
+    mtime_ns) — ``""`` for a plain file.  Stat only, no file reads;
+    raises OSError when ``path`` is missing.  The corpus manifest both
+    the snapshot below and the index store's fingerprint hash."""
+    st = os.stat(path)
+    if not stat.S_ISDIR(st.st_mode):
+        return [("", st.st_size, st.st_mtime_ns)]
+    # A partitioned layout rewrites part files below the top level
+    # without touching its mtime, so walk every data file.
+    entries = []
+    for dirpath, dirs, files in os.walk(path):
+        dirs[:] = [d for d in dirs if not _ignored(d)]
+        for f in files:
+            if not _ignored(f):
                 p = os.path.join(dirpath, f)
                 s2 = os.stat(p)
                 entries.append((os.path.relpath(p, path), s2.st_size, s2.st_mtime_ns))
-        entries.sort()
-        return (st.st_mtime_ns, st.st_size, tuple(entries))
+    return sorted(entries)
+
+
+def _path_sig(path: str) -> tuple | None:
+    try:
+        return tuple(table_files(path))
     except OSError:
         return None
 

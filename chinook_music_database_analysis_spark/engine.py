@@ -105,17 +105,19 @@ class Engine:
         engine's data directory and compare exactly (row count, column
         set, order-insensitive values) — the correctness harness as a
         first-class API, so a deployment can spot-check any query
-        against an independent engine without the test suite.
+        against an independent engine without the test suite.  Values
+        use the driver compare the test suite and the fuzz gate share
+        (:func:`testing.frames_mismatch`).
 
         Returns {"query", "rows_match", "schema_match", "values_match",
         "spark_rows", "oracle_rows"}; queries without an oracle (none
         currently) report {"oracle": None}.
         """
         import duckdb
-        import pandas as pd
 
         from .sources import TABLES
         from .sources.session import TABLE_OVERRIDES
+        from .testing import frames_mismatch
 
         if self.sf_dir in TABLE_OVERRIDES:
             # A mounted table set has no parquet directory for DuckDB
@@ -142,23 +144,11 @@ class Engine:
             oracle_pdf = con.sql(oracle).df()
         finally:
             con.close()
-
-        def norm(pdf: "pd.DataFrame") -> "pd.DataFrame":
-            pdf = pdf.reindex(sorted(pdf.columns), axis=1).reset_index(drop=True)
-            for c in pdf.columns:
-                if pd.api.types.is_datetime64_any_dtype(pdf[c]):
-                    pdf[c] = pd.to_datetime(pdf[c]).astype("datetime64[us]")
-            if len(pdf):
-                key = pdf.astype(str).agg("|".join, axis=1)
-                pdf = pdf.loc[key.sort_values(kind="mergesort").index]
-            return pdf.reset_index(drop=True)
-
-        a, b = norm(spark_pdf), norm(oracle_pdf)
         return {
             "query": name,
             "rows_match": len(spark_pdf) == len(oracle_pdf),
             "schema_match": sorted(spark_pdf.columns) == sorted(oracle_pdf.columns),
-            "values_match": a.shape == b.shape and a.astype(str).equals(b.astype(str)),
+            "values_match": frames_mismatch(spark_pdf, oracle_pdf, name) is None,
             "spark_rows": len(spark_pdf),
             "oracle_rows": len(oracle_pdf),
         }

@@ -1251,40 +1251,6 @@ def lsh_topk(
     return scored.withColumn("rnk", F.row_number().over(w)).filter(F.col("rnk") <= k)
 
 
-def persist_ann_store(
-    spark, emb: DataFrame, prefix: str, n_bits: int, n_buckets: int = 16
-) -> None:
-    """Persist the ANN signature relations as BUCKETED tables — the
-    production shape of the session-cached `_emb_buckets`/`_emb_norms`
-    relations: at 100 TB the signature store is written once per
-    corpus version and every near-dup / top-k run reads it back, so
-    the bucket-projection work is paid once and the candidate
-    self-join's shuffle disappears entirely.
-
-    * ``{prefix}_buckets`` (vec_id, tbl, bucket) bucketed+sorted by
-      (tbl, bucket) — exactly the candidate self-join's keys, so both
-      sides are co-located by layout and the join plans as a
-      zero-Exchange sort-merge join (tests/test_ann_store.py asserts
-      this on the executed plan).
-    * ``{prefix}_norms`` (vec_id, embedding, norm) bucketed by
-      ``vec_id``: the verify stage's two key-joins against surviving
-      candidate pairs read co-located buckets.
-    """
-    from ..sources.sinks import write_bucketed
-
-    write_bucketed(
-        lsh_buckets(emb, n_bits), f"{prefix}_buckets", ["tbl", "bucket"], n_buckets
-    )
-    write_bucketed(with_norms(emb), f"{prefix}_norms", "vec_id", n_buckets)
-
-
-def load_ann_store(spark, prefix: str) -> tuple[DataFrame, DataFrame]:
-    """Read back a persisted signature store: (buckets, norms) in the
-    exact shape ``embedding_near_dup_pairs`` / ``lsh_topk`` accept via
-    their ``buckets=``/``norms=`` parameters."""
-    return spark.table(f"{prefix}_buckets"), spark.table(f"{prefix}_norms")
-
-
 def sq8_dequantized(emb: DataFrame) -> DataFrame:
     """Scalar-quantize each embedding to int8 and return the
     dequantized reconstruction — the SQ8 compression step that cuts an
@@ -1738,34 +1704,6 @@ def ivfpq_topk(
     )
     w = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("neighbor_id"))
     return exact.withColumn("rnk", F.row_number().over(w)).filter(F.col("rnk") <= k)
-
-
-def persist_pq_index(spark, emb: DataFrame, prefix: str, n_buckets: int = 16) -> None:
-    """Persist the PQ index beside the corpus — codebooks (PQ_M x 256
-    rows at ANY corpus size) plus per-vector reconstructions — so the
-    expensive part of the PQ family (per-subspace k-means training +
-    encode, the dominant cold cost of sim_pq/ivfpq) is paid once per
-    corpus version instead of per session.  Serving then reads the
-    index tables: the ADC scan scores ``{prefix}_recon`` directly and
-    only the rerank slice touches full embeddings.
-
-    ``{prefix}_recon`` is bucketed by ``vec_id``: the exact-rerank
-    stage and any id-keyed maintenance join read co-located buckets
-    (same rationale as the LSH store's norms table).
-    """
-    from ..sources.sinks import write_bucketed
-
-    books = pq_codebooks(emb, emb.count())
-    books.write.mode("overwrite").saveAsTable(f"{prefix}_books")
-    recon = pq_reconstruct(pq_encode(emb, spark.table(f"{prefix}_books")),
-                           spark.table(f"{prefix}_books"))
-    write_bucketed(recon, f"{prefix}_recon", "vec_id", n_buckets)
-
-
-def load_pq_index(spark, prefix: str) -> tuple[DataFrame, DataFrame]:
-    """(books, recon) in the shape :func:`pq_topk` accepts via its
-    ``books=``/``recon=`` parameters."""
-    return spark.table(f"{prefix}_books"), spark.table(f"{prefix}_recon")
 
 
 def contrastive_negatives(

@@ -28,6 +28,7 @@ from ..operators.curation import (
 )
 from ..operators.text import shingles_from_tokens, tokens_expr
 from ..sources import load_tables
+from ..store import persisted
 from .extensions import (
     _SQL_BANDS,
     _SQL_CAND,
@@ -35,7 +36,6 @@ from .extensions import (
     _SQL_SIG,
     _cand_pairs,
     _dup_clusters,
-    _persisted_index,
 )
 from .registry import register
 
@@ -321,7 +321,7 @@ def cur_pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _doc_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct (doc_id, bigram) relation — on-disk index store entry
     shared by the boilerplate filter and the keyphrase extractor."""
-    return _persisted_index(
+    return persisted(
         "doc_bigrams",
         spark,
         sf_dir,
@@ -369,7 +369,7 @@ def cur_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:
             boiler_set=_boiler_set(spark, sf_dir),
         )
 
-    return _persisted_index(
+    return persisted(
         "boiler_scores",
         spark,
         sf_dir,
@@ -385,7 +385,7 @@ def _boiler_set(spark: SparkSession, sf_dir: str) -> DataFrame:
     cost; the dictionary itself is tiny by construction of min_df)."""
     from ..operators.curation import boilerplate_set
 
-    return _persisted_index(
+    return persisted(
         "boiler_set",
         spark,
         sf_dir,
@@ -883,7 +883,7 @@ def dd_minhash_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import N_HASHES, minhash_signatures
     from ..operators.text import SHINGLE_K
 
-    from .extensions import _persisted_index, _shingles
+    from .extensions import _shingles
 
     docs = load_tables(spark, sf_dir)["documents"]
     # The signature table is the persisted artifact of a production
@@ -891,7 +891,7 @@ def dd_minhash_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # shingle relations (N_HASHES min-aggregations over the corpus
     # shingle stream, the family's dominant per-session cost: measured
     # 3.8 s at sf0.1 when recomputed, ~0.3 s read back).
-    sig = _persisted_index(
+    sig = persisted(
         "minhash_sig",
         spark,
         sf_dir,
@@ -1071,7 +1071,7 @@ def _bm25_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
     that is a pushed-down postings scan — the RAG-serving shape."""
     from ..operators.text import bm25_corpus_relations
 
-    return _persisted_index(
+    return persisted(
         "bm25_postings",
         spark,
         sf_dir,
@@ -1092,7 +1092,7 @@ def _bm25_doclens(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus state from the store without re-tokenizing)."""
     from ..operators.text import bm25_corpus_relations
 
-    return _persisted_index(
+    return persisted(
         "bm25_doclens",
         spark,
         sf_dir,

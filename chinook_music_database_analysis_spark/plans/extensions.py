@@ -48,309 +48,11 @@ from ..operators.similarity import (
 from ..operators.pipeline import MIN_QUALITY, MIN_TOKENS, clean_corpus
 from ..operators.text import LANG_STOPWORDS, SHINGLE_K, fingerprint, lang_id, text_stats
 from ..functions import money_sum, round2
-from ..cache import depends_on, memo
+from ..cache import memo
 from ..sources import load_tables
-from ..sources.session import table_set_seq
+from ..store import persisted
+from ..store import STORE_EVENTS  # noqa: F401  perfbench/run.py imports it from here
 from .registry import register
-
-# ---------------------------------------------------------------------------
-# Persisted index store.
-#
-# The expensive ANN index relations (k-means centroids, PQ codebooks,
-# encoded reconstructions) are deterministic functions of the embedding
-# corpus, so they are paid ONCE PER CORPUS VERSION, not per session:
-# the first session to need one trains it and writes it beside the
-# engine as a parquet index directory; every later session — including
-# a brand-new JVM (the "cold" path of bench.py) — loads it back.
-#
-# Staleness guard: each index directory carries the fingerprint of the
-# corpus it was trained on (row count + order-independent sum of
-# per-row hashes — one narrow scan).  A fingerprint mismatch (the
-# test-data generator re-ran) silently falls back to retrain-and-
-# replace, so a stale index can never serve wrong results — the oracle
-# retrains from the live corpus unconditionally, and hash-compare
-# would catch any divergence.  Writes go to a temp dir and are
-# os.rename-swapped so a crashed write can't leave a half-index with a
-# valid fingerprint.
-#
-# At 100 TB the analog is the index table a production ANN deployment
-# versions beside the corpus (FAISS index files / a bucketed warehouse
-# table — sources.sinks.write_bucketed + similarity.persist_pq_index
-# is the metastore-backed variant, kept result-identical by
-# tests/test_ann_store.py); the fingerprint is the corpus snapshot id.
-# Mounted override table sets (TABLE_OVERRIDES) stay session-cached:
-# they are ephemeral by construction.
-# ---------------------------------------------------------------------------
-
-import os as _os
-import re as _re
-import shutil as _shutil
-
-_INDEX_ROOT = _os.environ.get(
-    "SPARK_GRAFT_INDEX_DIR", _os.path.join(_os.path.dirname(_os.path.dirname(
-        _os.path.dirname(_os.path.abspath(__file__)))), ".index")
-)
-
-#: kind -> "load" | "train" | "session", recorded by _persisted_index
-#: for every store access in this process (r13, verdict item 3): the
-#: bench reads this to report machine-readably which index relations
-#: were served pre-baked from disk ("load") vs actually trained inside
-#: the measured run ("train") vs session-cached without a store
-#: ("session", mounted override tables).  Append-only per kind with
-#: "train" winning over "load" — a kind that trained at least once in
-#: the run was PAID in the run.
-STORE_EVENTS: dict[str, str] = {}
-
-
-def _store_event(kind: str, event: str) -> None:
-    if event == "train" or STORE_EVENTS.get(kind) != "train":
-        STORE_EVENTS[kind] = event
-
-
-def _corpus_fp(spark: SparkSession, sf_dir: str, table: str = "embeddings") -> str:
-    """Corpus fingerprint: md5 over the source's file manifest
-    (relative path, byte size, mtime_ns per data file) — the snapshot
-    id a production table format (Delta/Iceberg) would hand us, with
-    NO Spark job: an earlier content-hash scan here was measured at
-    4.4 s of a cold session's first query (it paid the whole first-job
-    warmup before the index store could even be consulted).
-
-    Staleness safety: any rewrite of the corpus changes size or
-    mtime_ns (nanosecond granularity) — and because mtime-preserving
-    tooling exists (``rsync -a`` / ``cp -p`` restores of a different
-    corpus version keep both), each file also contributes a TAIL PROBE:
-    its final 16 bytes, which in a parquet file are the thrift footer's
-    tail + 4-byte footer length + ``PAR1`` magic and change with any
-    content rewrite in practice.  A spurious mismatch (touch without
-    change) merely retrains — never serves stale.  The oracle side
-    retrains from the live corpus unconditionally, so a wrong-serve bug
-    would surface as a CORRECTNESS hash mismatch, not silence."""
-    import hashlib as _hashlib
-
-    def _tail_probe(p: str, size: int) -> str:
-        # Hash a footer-proportional slice without a Spark job: a
-        # parquet file ends with [thrift footer][4-byte footer len]
-        # ["PAR1"].  Hash the LAST min(4 KiB, footer_len + 8) bytes,
-        # and — when the footer exceeds that tail slice — ALSO the
-        # FIRST 4 KiB of the footer region: in many-row-group files
-        # the differing row-group statistics can sit entirely at the
-        # head of the footer, which a tail-only probe (a SUFFIX, the
-        # r6 form) never reads (r6 review hardening; two seeks, still
-        # no Spark job).  A same-size, same-mtime rewrite with
-        # different contents now has to collide on the footer
-        # statistics themselves to go undetected.  Files too small /
-        # non-parquet hash their last 16 bytes.
-        with open(p, "rb") as fh:
-            h = _hashlib.md5()
-            n = 16
-            head_start = None
-            if size >= 8:
-                fh.seek(size - 8)
-                trailer = fh.read(8)
-                if trailer[4:] == b"PAR1":
-                    footer_len = int.from_bytes(trailer[:4], "little")
-                    n = min(4096, footer_len + 8, size)
-                    if footer_len + 8 > n:
-                        head_start = max(0, size - 8 - footer_len)
-            if head_start is not None:
-                fh.seek(head_start)
-                h.update(fh.read(min(4096, size - head_start)))
-            fh.seek(max(0, size - n))
-            h.update(fh.read(n))
-            return h.hexdigest()
-
-    tables = (table,) if isinstance(table, str) else tuple(table)
-
-    def manifest_md5() -> str:
-        entries: list[str] = []
-        for t in tables:
-            root = _os.path.join(sf_dir, f"{t}.parquet")
-            if _os.path.isdir(root):
-                for dirpath, _dirs, files in _os.walk(root):
-                    for f in sorted(files):
-                        if f.startswith((".", "_")):
-                            continue
-                        p = _os.path.join(dirpath, f)
-                        st = _os.stat(p)
-                        rel = _os.path.join(t, _os.path.relpath(p, root))
-                        entries.append(
-                            f"{rel}|{st.st_size}|{st.st_mtime_ns}"
-                            f"|{_tail_probe(p, st.st_size)}"
-                        )
-            else:
-                st = _os.stat(root)
-                entries.append(
-                    f"{t}.parquet|{st.st_size}|{st.st_mtime_ns}"
-                    f"|{_tail_probe(root, st.st_size)}"
-                )
-        manifest = "\n".join(sorted(entries))
-        return _hashlib.md5(manifest.encode()).hexdigest()
-
-    return memo("fp:" + "|".join(tables), spark, sf_dir, manifest_md5)
-
-
-def _persisted_index(
-    kind: str,
-    spark: SparkSession,
-    sf_dir: str,
-    build,
-    table: str | tuple[str, ...] = "embeddings",
-    writer=None,
-    params: str = "",
-    cache: bool | None = None,
-) -> DataFrame:
-    """Session-memoized relation backed by the on-disk index store:
-    load when the fingerprint matches, else train, persist, reload.
-    Falls back to the plain session cache when persistence is
-    impossible (mounted override tables, read-only filesystem).
-
-    ``params`` names the GOVERNING CONSTANTS of the build (banding
-    knobs, df caps, shingle k, damping...) and is mixed into the
-    stored fingerprint: without it, editing a knob between versions
-    would keep serving a stale store trained under different semantics
-    — corpus bytes alone can't see a code change (r6 review).  Call
-    sites pass a stable human-readable string (e.g. ``"k=8,cap=4"``)
-    so a knob edit invalidates exactly the stores it governs.
-
-    ``writer(df, path)`` overrides the plain parquet write for stores
-    whose PHYSICAL LAYOUT is the point (partitioned/z-ordered
-    rewrites): the build relation is then written directly (the write
-    job is its single execution) and the read-back — which carries the
-    rebuilt layout — is what consumers get, in the build session too.
-    Layout stores are memoized UNCACHED — an InMemoryRelation would
-    swallow the partition pruning and filter pushdown the rewrite
-    exists to enable.
-
-    ``cache=False`` requests the same UNCACHED treatment for a
-    plain-parquet store: consumers then scan the store files directly,
-    so scan-level predicate pushdown (e.g. the BM25 postings term
-    filter pruning term-clustered row groups) keeps working — an
-    InMemoryRelation would materialize the FULL relation into executor
-    storage and filter per cache batch instead (r7: exactly the wrong
-    shape for a 100 TB postings table).
-    """
-    if cache is False and writer is None:
-        writer = lambda df, path: df.write.mode("overwrite").parquet(path)  # noqa: E731
-    if table_set_seq(sf_dir) is not None:
-        _store_event(kind, "session")
-        return memo(kind, spark, sf_dir, build, persist=writer is None)
-
-    def load_or_build() -> DataFrame:
-        fp = _corpus_fp(spark, sf_dir, table)
-        if params:
-            fp = f"{fp}|{params}"
-        tag = _re.sub(r"[^A-Za-z0-9.]+", "_", sf_dir).strip("_")
-        d = _os.path.join(_INDEX_ROOT, tag, kind)
-        fp_file = _os.path.join(d, "_FINGERPRINT")
-
-        def served() -> DataFrame:
-            depends_on(fp_file)
-            return spark.read.parquet(_os.path.join(d, "data"))
-
-        try:
-            if _os.path.exists(fp_file) and open(fp_file).read().strip() == fp:
-                _store_event(kind, "load")
-                return served()
-        except Exception:
-            pass  # unreadable store — rebuild below
-        _store_event(kind, "train")
-        # Staging dir is unique per process+attempt so two concurrent
-        # sessions building the same store can't rmtree each other's
-        # in-progress tmp; a lost rename race (the other writer just
-        # swapped its build in) falls back to this session's own build.
-        import glob as _glob
-        import uuid as _uuid
-
-        # GC stale staging siblings before starting a new build: a
-        # build killed mid-write would otherwise orphan its unique
-        # d.tmp.<pid>.<rand> directory forever (r5 review).  Reclaim
-        # when the owning pid is gone; age out (>1 day) when the name
-        # doesn't parse or liveness can't be checked.
-        import time as _time
-
-        for stale in _glob.glob(f"{d}.tmp.*"):
-            try:
-                pid = int(stale[len(d) + 5:].split(".", 1)[0])
-                if pid == _os.getpid():
-                    continue
-                _os.kill(pid, 0)  # raises if the owner is gone
-            except PermissionError:
-                # EPERM from kill(pid, 0) means the pid EXISTS (e.g.
-                # another user's build) — the owner is alive, never
-                # reclaim its in-progress staging dir (r6 review)
-                continue
-            except (ValueError, IndexError):
-                # unparseable name — liveness unknowable; age out >1 day
-                try:
-                    if _time.time() - _os.path.getmtime(stale) < 86400:
-                        continue
-                except OSError:
-                    pass
-                _shutil.rmtree(stale, ignore_errors=True)
-            except ProcessLookupError:
-                _shutil.rmtree(stale, ignore_errors=True)
-
-        def _stage_dir() -> str:
-            return f"{d}.tmp.{_os.getpid()}.{_uuid.uuid4().hex[:8]}"
-
-        if writer is not None:
-            tmp = _stage_dir()
-            try:
-                writer(build(), _os.path.join(tmp, "data"))
-                with open(_os.path.join(tmp, "_FINGERPRINT"), "w") as fh:
-                    fh.write(fp)
-                _shutil.rmtree(d, ignore_errors=True)
-                _os.rename(tmp, d)
-                return served()
-            except Exception:
-                _shutil.rmtree(tmp, ignore_errors=True)
-                # swap lost to a concurrent writer: its store is valid
-                # for the same fingerprint — serve it; otherwise (store
-                # unwritable / still stale) fall back to the unswapped
-                # in-session build
-                try:
-                    if open(fp_file).read().strip() == fp:
-                        return served()
-                except Exception:
-                    pass
-                return build()
-        # Train once into the session cache, then write FROM the cache
-        # (the training lineage executes exactly once; the write is a
-        # cache scan).  After a successful swap the BUILD SESSION also
-        # serves the parquet read-back, not the cached build: an
-        # iterative trainer's lineage is hundreds of logical nodes
-        # (k-means / PQ unroll), and every consumer query composed on
-        # top re-pays Catalyst analysis over that whole tree on every
-        # execution — the r12 profile measured the ivfpq family's plans
-        # at 1400+ nodes and ~0.2-0.4 s of pure planning per run.  The
-        # read-back is a one-scan plan over the just-written bytes
-        # (same rows by construction: the write's input IS the cached
-        # relation), so lineage truncation here is the §3.3
-        # "materialize an intermediate" move, result-identical.
-        df = build().cache()
-        df.count()
-        tmp = _stage_dir()
-        try:
-            # Natural partitioning: index relations range from ~sqrt(N)
-            # rows (centroids, codebooks) to N rows (reconstructions) —
-            # no driver-side coalesce, the writer parallelism scales
-            # with the relation.
-            df.write.mode("overwrite").parquet(_os.path.join(tmp, "data"))
-            with open(_os.path.join(tmp, "_FINGERPRINT"), "w") as fh:
-                fh.write(fp)
-            _shutil.rmtree(d, ignore_errors=True)
-            _os.rename(tmp, d)
-            out = served()
-            df.unpersist()
-            return out
-        except Exception:
-            # store not writable, or swap lost to a concurrent writer
-            # (same fingerprint -> same relation) — the in-session
-            # cached build serves either way
-            _shutil.rmtree(tmp, ignore_errors=True)
-        return df
-
-    return memo(kind, spark, sf_dir, load_or_build, persist=writer is None)
 
 
 def _emb_count(spark: SparkSession, sf_dir: str) -> int:
@@ -369,7 +71,7 @@ def _emb_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     cold path)."""
     from ..operators.similarity import lsh_buckets, lsh_n_bits
 
-    return _persisted_index(
+    return persisted(
         "emb_buckets", spark, sf_dir,
         lambda: lsh_buckets(
             load_tables(spark, sf_dir)["embeddings"],
@@ -384,7 +86,7 @@ def _emb_norms(spark: SparkSession, sf_dir: str) -> DataFrame:
     every pair scoring stage)."""
     from ..operators.similarity import with_norms
 
-    return _persisted_index(
+    return persisted(
         "emb_norms", spark, sf_dir,
         lambda: with_norms(load_tables(spark, sf_dir)["embeddings"]),
     )
@@ -395,7 +97,7 @@ def _shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     table, served from the on-disk index store like the ANN relations
     (tokenize + explode of the whole corpus, paid once per corpus
     version)."""
-    return _persisted_index(
+    return persisted(
         "doc_shingles", spark, sf_dir,
         lambda: doc_shingles(load_tables(spark, sf_dir)["documents"]),
         table="documents",
@@ -407,7 +109,7 @@ def _bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash band relation — on-disk index store entry (the N_HASHES
     md5 min-aggregations over the shingle relation are the dominant
     cost of the MinHash family's cold path)."""
-    return _persisted_index(
+    return persisted(
         "minhash_bands", spark, sf_dir,
         lambda: minhash_bands(
             load_tables(spark, sf_dir)["documents"], shingles=_shingles(spark, sf_dir)
@@ -423,7 +125,7 @@ def _dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     iterative multi-job build) run once per corpus version; consumers
     (dd_dup_clusters, dd_canonical) read the tiny (doc_id, cluster_id)
     result."""
-    return _persisted_index(
+    return persisted(
         "dup_clusters", spark, sf_dir,
         lambda: duplicate_clusters(_cand_pairs(spark, sf_dir)),
         table="documents",
@@ -465,7 +167,7 @@ def _ngram_sh_cand(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _simhash_sig(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-doc SimHash signatures — on-disk index store entry (the
     word x 48-bit vote tally is the family's dominant cold cost)."""
-    return _persisted_index(
+    return persisted(
         "simhash", spark, sf_dir,
         lambda: simhash(load_tables(spark, sf_dir)["documents"]),
         table="documents",
@@ -945,7 +647,7 @@ def dd_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     # dup_clusters / brand_pagerank pattern), so it is store-served;
     # the oracle recomputes from the live corpus unconditionally, so a
     # stale or wrong store would fail the hash gate, not hide.
-    return _persisted_index(
+    return persisted(
         "containment_pairs", spark, sf_dir, build, table="documents",
         params=f"k={SHINGLE_K},thr=0.5,factor={HOT_JOIN_FACTOR}",
     )
@@ -960,7 +662,7 @@ def _containment_join_stats(spark: SparkSession, sf_dir: str) -> tuple[int, int]
     from ..operators.dedup import containment_join_stats
 
     def stats() -> tuple[int, int]:
-        row = _persisted_index(
+        row = persisted(
             "containment_stats", spark, sf_dir,
             lambda: spark.createDataFrame(
                 [containment_join_stats(_shingles(spark, sf_dir))],
@@ -1046,7 +748,7 @@ def dd_containment_scale(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Store-served like dd_containment: the capped-path pair table is
     # the same corpus-versioned dedup artifact, built from the
     # persisted candidate spine.
-    return _persisted_index(
+    return persisted(
         "containment_pairs_capped", spark, sf_dir,
         lambda: containment_pairs(
             docs,
@@ -1086,7 +788,7 @@ def _containment_cand(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..operators.dedup import PROBE_DF_CAP_FRAC, PROBE_DF_CAP_MIN
 
-    return _persisted_index(
+    return persisted(
         "containment_cand", spark, sf_dir, build, table="documents",
         params=(
             f"k={SHINGLE_K},h={N_HASHES},b={BANDS},probe_k={PROBE_K},"
@@ -1461,7 +1163,7 @@ def _ivf_cents(spark: SparkSession, sf_dir: str) -> DataFrame:
     version; consumers: sim_ivf_topk, sim_ivfpq_topk, dd_semantic)."""
     from ..operators.similarity import KMEANS_C, kmeans_centroids
 
-    return _persisted_index(
+    return persisted(
         "ivf_cents", spark, sf_dir,
         lambda: kmeans_centroids(
             load_tables(spark, sf_dir)["embeddings"], _emb_count(spark, sf_dir)
@@ -1704,7 +1406,7 @@ def _ivf_stride_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     stride filter of the corpus, so only the assignment is stored)."""
     from ..operators.similarity import ivf_assignments
 
-    return _persisted_index(
+    return persisted(
         "ivf_stride_assign", spark, sf_dir,
         lambda: ivf_assignments(
             load_tables(spark, sf_dir)["embeddings"],
@@ -1782,7 +1484,7 @@ def _pq_books(spark: SparkSession, sf_dir: str) -> DataFrame:
     family; paid once per corpus version, loaded thereafter)."""
     from ..operators.similarity import PQ_C, PQ_K, PQ_M, pq_codebooks
 
-    return _persisted_index(
+    return persisted(
         "pq_books", spark, sf_dir,
         lambda: pq_codebooks(
             load_tables(spark, sf_dir)["embeddings"], _emb_count(spark, sf_dir)
@@ -1799,7 +1501,7 @@ def _pq_recon(spark: SparkSession, sf_dir: str) -> DataFrame:
     production deployment persists beside the codebook)."""
     from ..operators.similarity import PQ_C, PQ_K, PQ_M, pq_encode, pq_reconstruct
 
-    return _persisted_index(
+    return persisted(
         "pq_recon", spark, sf_dir,
         lambda: pq_reconstruct(
             pq_encode(
@@ -1898,7 +1600,7 @@ def _ivfpq_recon(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..operators.similarity import KMEANS_C, PQ_C, PQ_K, PQ_M
 
-    return _persisted_index(
+    return persisted(
         "ivfpq_recon", spark, sf_dir, build,
         params=f"m={PQ_M},k={PQ_K},iters={KMEANS_ITERS},c={PQ_C},kc={KMEANS_C}",
     )
@@ -2293,7 +1995,7 @@ def _phash_sig(spark: SparkSession, sf_dir: str) -> DataFrame:
     kernel runs once per corpus version)."""
     from ..operators.multimodal import PHASH_BITS, media_phash
 
-    return _persisted_index(
+    return persisted(
         "media_phash", spark, sf_dir,
         lambda: media_phash(load_tables(spark, sf_dir)["documents"]),
         table="documents",
@@ -2433,7 +2135,7 @@ def mm_phash_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import duplicate_clusters
     from ..operators.multimodal import PHASH_BITS
 
-    return _persisted_index(
+    return persisted(
         "phash_clusters", spark, sf_dir,
         lambda: duplicate_clusters(
             mm_phash_pairs(spark, sf_dir).select("doc_a", "doc_b")
@@ -2944,7 +2646,7 @@ def ev_scd2_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
             "user_id", "state", "valid_from", "valid_to", "is_current", "version"
         )
 
-    return _persisted_index(
+    return persisted(
         "scd2_inc_history", spark, sf_dir, build, table="events",
         params="batches=3",
     )
@@ -3601,7 +3303,7 @@ def _ivf_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     persists beside its centroids."""
     from ..operators.similarity import KMEANS_C, ivf_assignments
 
-    return _persisted_index(
+    return persisted(
         "ivf_assign", spark, sf_dir,
         lambda: ivf_assignments(
             load_tables(spark, sf_dir)["embeddings"], _ivf_cents(spark, sf_dir)
@@ -3916,7 +3618,7 @@ def _register_sim_ivf_append() -> None:
                 base, memo("ivf_append_nbase", spark, sf_dir, base.count)
             )
 
-        cents = _persisted_index(
+        cents = persisted(
             "ivf_append_cents", spark, sf_dir, _build_cents,
             params=f"iters={KMEANS_ITERS};mod={IVF_APPEND_MOD};"
                    f"res={IVF_APPEND_RESIDUE};kc={KMEANS_C}",

@@ -487,7 +487,7 @@ def s14_brand_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference it, and without materialization the lazy plan re-runs
     the fact self-join once per reference."""
     from ..operators.graph import pagerank_integer
-    from .extensions import _persisted_index
+    from ..store import persisted
 
     def build() -> DataFrame:
         edges = memo(
@@ -498,7 +498,7 @@ def s14_brand_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..operators.graph import PAGERANK_D_NUM, PAGERANK_SCALE
 
-    return _persisted_index(
+    return persisted(
         "brand_pagerank", spark, sf_dir, build, table=("lineitem", "part"),
         params=f"iters=3,d={PAGERANK_D_NUM},scale={PAGERANK_SCALE}",
     )
@@ -525,9 +525,9 @@ def _zordered_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     (tests/test_layout.py::test_layout_rebuild_prunes proves both on
     the actual store)."""
     from ..operators.layout import write_zordered_partitioned
-    from .extensions import _persisted_index
+    from ..store import persisted
 
-    return _persisted_index(
+    return persisted(
         "lineitem_zorder",
         spark,
         sf_dir,
@@ -539,6 +539,9 @@ def _zordered_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
             df, path, "l_ship_year", "l_partkey", "l_suppkey"
         ),
         params="part=l_ship_year,z=l_partkey:l_suppkey",
+        # UNCACHED: an InMemoryRelation would swallow the directory and
+        # row-group pruning the rewritten layout exists to enable
+        cache=False,
     )
 
 

@@ -1,20 +1,17 @@
-"""Persisted bucketed ANN signature store: results identical to the
-session-cached relations, and the candidate self-join over the
-bucketed table plans with ZERO Exchange (the layout replaces the
-runtime shuffle — the 100 TB signature-store shape)."""
+"""The on-disk index store (``store.persisted``): fingerprint guard,
+staging-dir GC, concurrent-writer fallback — plus the ANN operators'
+recall, routing and PCA-drift checks."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from chinook_music_database_analysis_spark import cache
+from chinook_music_database_analysis_spark import cache, store
 from chinook_music_database_analysis_spark.cache import invalidate
 from chinook_music_database_analysis_spark.operators.similarity import (
     embedding_near_dup_pairs,
-    load_ann_store,
     lsh_n_bits,
     lsh_topk,
-    persist_ann_store,
 )
 
 from conftest import SF_TEST_DIR
@@ -24,70 +21,8 @@ def _pairs_set(df):
     return {(r.vec_a, r.vec_b, r.cos_sim) for r in df.collect()}
 
 
-def test_persisted_store_matches_and_dedup_join_is_shuffle_free(spark):
-    emb = spark.read.parquet(f"{SF_TEST_DIR}/embeddings.parquet")
-    n_bits = lsh_n_bits(emb.count())
-    persist_ann_store(spark, emb, "ann_t", n_bits)
-    try:
-        buckets, norms = load_ann_store(spark, "ann_t")
-
-        # 1. Same answers as the derive-in-session path.
-        stored = embedding_near_dup_pairs(emb, buckets=buckets, norms=norms)
-        derived = embedding_near_dup_pairs(emb, n_bits=n_bits)
-        assert _pairs_set(stored) == _pairs_set(derived)
-
-        # 2. The candidate self-join (keys tbl+bucket == the table's
-        # bucket spec, so both sides' layout already satisfies the
-        # join's distribution) must plan with no Exchange.  Broadcast
-        # disabled to force the SMJ path.
-        old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        try:
-            cand = (
-                buckets.alias("a")
-                .join(buckets.alias("b"), ["tbl", "bucket"])
-                .filter(F.col("a.vec_id") < F.col("b.vec_id"))
-            )
-            plan = cand._jdf.queryExecution().executedPlan().toString()
-            assert "Exchange" not in plan, plan
-            assert cand.count() >= 0
-        finally:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-
-        # 3. The top-k path accepts the stored relations too.
-        got = lsh_topk(emb, buckets=buckets, norms=norms)
-        ref = lsh_topk(emb, n_bits=n_bits)
-        assert {tuple(r) for r in got.collect()} == {tuple(r) for r in ref.collect()}
-    finally:
-        spark.sql("DROP TABLE IF EXISTS ann_t_buckets")
-        spark.sql("DROP TABLE IF EXISTS ann_t_norms")
-
-
-def test_persisted_pq_index_matches_derived(spark):
-    """pq_topk over the persisted index tables must return exactly the
-    in-session-derived results — train/encode once per corpus version,
-    serve from the stored books + reconstructions."""
-    from chinook_music_database_analysis_spark.operators.similarity import (
-        load_pq_index,
-        persist_pq_index,
-        pq_topk,
-    )
-
-    emb = spark.read.parquet(f"{SF_TEST_DIR}/embeddings.parquet")
-    persist_pq_index(spark, emb, "pq_t")
-    try:
-        books, recon = load_pq_index(spark, "pq_t")
-        got = pq_topk(emb, books=books, recon=recon)
-        ref = pq_topk(emb)
-        assert {tuple(r) for r in got.collect()} == {tuple(r) for r in ref.collect()}
-        assert books.count() > 0 and recon.count() == emb.count()
-    finally:
-        spark.sql("DROP TABLE IF EXISTS pq_t_books")
-        spark.sql("DROP TABLE IF EXISTS pq_t_recon")
-
-
 def test_index_store_fingerprint_guard(spark, tmp_path, monkeypatch):
-    """The on-disk index store (plans.extensions._persisted_index) must
+    """The on-disk index store (store.persisted) must
     (a) serve later sessions from disk — proven by doctoring the stored
     relation and observing the doctored row count — and (b) refuse a
     store whose corpus fingerprint mismatches, retraining instead (the
@@ -97,7 +32,7 @@ def test_index_store_fingerprint_guard(spark, tmp_path, monkeypatch):
 
     from chinook_music_database_analysis_spark.plans import extensions as ext
 
-    monkeypatch.setattr(ext, "_INDEX_ROOT", str(tmp_path))
+    monkeypatch.setattr(store, "ROOT", str(tmp_path))
     invalidate(SF_TEST_DIR)
     try:
         full = ext._ivf_cents(spark, SF_TEST_DIR)
@@ -133,7 +68,7 @@ def test_fp_memo_evicted_on_reset_and_retrain_after_regen(spark, tmp_path, monke
     sf_dir so invalidate(sf_dir) evicts it — otherwise an in-session
     corpus regeneration followed by the documented invalidate()
     re-mount keeps serving the OLD fingerprint, which
-    still matches the old store's _FINGERPRINT, and _persisted_index
+    still matches the old store's _FINGERPRINT, and store.persisted
     silently serves an index trained on the replaced corpus."""
     import shutil
 
@@ -146,10 +81,10 @@ def test_fp_memo_evicted_on_reset_and_retrain_after_regen(spark, tmp_path, monke
     n_all = emb.count()
     emb.limit(n_all - 10).write.parquet(f"{sf_dir}/embeddings.parquet")
 
-    monkeypatch.setattr(ext, "_INDEX_ROOT", str(tmp_path / "idx"))
+    monkeypatch.setattr(store, "ROOT", str(tmp_path / "idx"))
     invalidate(sf_dir)
     try:
-        fp1 = ext._corpus_fp(spark, sf_dir)
+        fp1 = store.corpus_fp(spark, sf_dir)
         assert any(k[2] == sf_dir and str(k[0]).startswith("fp:")
                    for k in cache._ENTRIES), "fp key not sf_dir-evictable"
         ext._ivf_cents(spark, sf_dir)
@@ -160,7 +95,7 @@ def test_fp_memo_evicted_on_reset_and_retrain_after_regen(spark, tmp_path, monke
         invalidate(sf_dir)
         assert not any(k[2] == sf_dir for k in cache._ENTRIES)
 
-        fp2 = ext._corpus_fp(spark, sf_dir)
+        fp2 = store.corpus_fp(spark, sf_dir)
         assert fp2 != fp1, "fingerprint did not track the regenerated corpus"
         # And the store retrains rather than serving the stale index:
         # the persisted fingerprint now matches the NEW corpus.
@@ -186,14 +121,10 @@ def test_stale_staging_dirs_reclaimed(spark, tmp_path, monkeypatch):
 
     from chinook_music_database_analysis_spark.plans import extensions as ext
 
-    monkeypatch.setattr(ext, "_INDEX_ROOT", str(tmp_path))
+    monkeypatch.setattr(store, "ROOT", str(tmp_path))
     invalidate(SF_TEST_DIR)
     try:
-        # Predict the store dir the same way _persisted_index does.
-        import re
-
-        tag = re.sub(r"[^A-Za-z0-9.]+", "_", SF_TEST_DIR).strip("_")
-        d = os.path.join(str(tmp_path), tag, "ivf_cents")
+        d = os.path.join(store.store_dir(SF_TEST_DIR), "ivf_cents")
         os.makedirs(os.path.dirname(d), exist_ok=True)
         proc = subprocess.Popen(["true"])  # a pid guaranteed dead
         proc.wait()
@@ -226,8 +157,6 @@ def test_fingerprint_sees_footer_content(tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from chinook_music_database_analysis_spark.plans import extensions as ext
-
     class _FakeSpark:  # the fingerprint reads files only; no session needed
         pass
 
@@ -240,12 +169,12 @@ def test_fingerprint_sees_footer_content(tmp_path):
 
     write([1, 2, 3, 4])
     st = os.stat(f)
-    fp1 = ext._corpus_fp(_FakeSpark(), str(corpus), "documents")
+    fp1 = store.corpus_fp(_FakeSpark(), str(corpus), "documents")
     invalidate(str(corpus))
     write([1, 2, 3, 9])  # same schema/rowcount/writer -> same size
     assert os.path.getsize(f) == st.st_size, "fixture requires equal sizes"
     os.utime(f, ns=(st.st_atime_ns, st.st_mtime_ns))  # mtime-preserving restore
-    fp2 = ext._corpus_fp(_FakeSpark(), str(corpus), "documents")
+    fp2 = store.corpus_fp(_FakeSpark(), str(corpus), "documents")
     assert fp1 != fp2
 
 
@@ -260,8 +189,6 @@ def test_fingerprint_probes_footer_head_region(tmp_path):
 
     import pyarrow as pa
     import pyarrow.parquet as pq
-
-    from chinook_music_database_analysis_spark.plans import extensions as ext
 
     class _FakeSpark:
         pass
@@ -291,12 +218,12 @@ def test_fingerprint_probes_footer_head_region(tmp_path):
     assert footer_len + 8 > 4096, "fixture must exceed the 4 KiB tail slice"
 
     st = os.stat(f)
-    fp1 = ext._corpus_fp(_FakeSpark(), str(corpus), "documents")
+    fp1 = store.corpus_fp(_FakeSpark(), str(corpus), "documents")
     invalidate(str(corpus))
     write(True)  # only early row groups' head-of-footer stats change
     assert os.path.getsize(f) == st.st_size, "fixture requires equal sizes"
     os.utime(f, ns=(st.st_atime_ns, st.st_mtime_ns))
-    fp2 = ext._corpus_fp(_FakeSpark(), str(corpus), "documents")
+    fp2 = store.corpus_fp(_FakeSpark(), str(corpus), "documents")
     assert fp1 != fp2
 
 
@@ -306,12 +233,11 @@ def test_eperm_staging_dir_never_reclaimed(spark, tmp_path, monkeypatch):
     older than the 1-day age-out that applies to unparseable names
     (r6 review: EPERM was previously lumped with 'liveness unknown')."""
     import os
-    import re
     import time
 
     from chinook_music_database_analysis_spark.plans import extensions as ext
 
-    monkeypatch.setattr(ext, "_INDEX_ROOT", str(tmp_path))
+    monkeypatch.setattr(store, "ROOT", str(tmp_path))
     invalidate(SF_TEST_DIR)
     real_kill = os.kill
     eperm_pid = 999999 + os.getpid()  # never a real pid we own
@@ -321,10 +247,9 @@ def test_eperm_staging_dir_never_reclaimed(spark, tmp_path, monkeypatch):
             raise PermissionError("operation not permitted")
         return real_kill(pid, sig)
 
-    monkeypatch.setattr(ext._os, "kill", fake_kill)
+    monkeypatch.setattr(store.os, "kill", fake_kill)
     try:
-        tag = re.sub(r"[^A-Za-z0-9.]+", "_", SF_TEST_DIR).strip("_")
-        d = os.path.join(str(tmp_path), tag, "ivf_cents")
+        d = os.path.join(store.store_dir(SF_TEST_DIR), "ivf_cents")
         os.makedirs(os.path.dirname(d), exist_ok=True)
         eperm = f"{d}.tmp.{eperm_pid}.cccccccc"
         old_odd = f"{d}.tmp.unparseable_old"
@@ -347,9 +272,8 @@ def test_store_params_mismatch_invalidates(spark, tmp_path, monkeypatch):
     ``params``: the same corpus with a different params string must
     retrain instead of serving the stale store (r6 review — a knob
     edit is invisible to corpus-byte fingerprints)."""
-    from chinook_music_database_analysis_spark.plans import extensions as ext
 
-    monkeypatch.setattr(ext, "_INDEX_ROOT", str(tmp_path))
+    monkeypatch.setattr(store, "ROOT", str(tmp_path))
     builds = []
 
     def make_build(tagval):
@@ -361,21 +285,21 @@ def test_store_params_mismatch_invalidates(spark, tmp_path, monkeypatch):
 
     try:
         invalidate(SF_TEST_DIR)
-        ext._persisted_index(
+        store.persisted(
             "params_probe", spark, SF_TEST_DIR, make_build("a"),
             table="documents", params="k=1",
         ).count()
         assert builds == ["a"]
         # same params, fresh session-memo: served from the store
         invalidate(SF_TEST_DIR)
-        ext._persisted_index(
+        store.persisted(
             "params_probe", spark, SF_TEST_DIR, make_build("a2"),
             table="documents", params="k=1",
         ).count()
         assert builds == ["a"], "matching params must hit the store"
         # changed params: must rebuild
         invalidate(SF_TEST_DIR)
-        ext._persisted_index(
+        store.persisted(
             "params_probe", spark, SF_TEST_DIR, make_build("b"),
             table="documents", params="k=2",
         ).count()
@@ -904,25 +828,23 @@ def test_pca_power_model_method_routing():
 
 
 def test_index_store_concurrent_writer_fallback(spark, tmp_path, monkeypatch):
-    """r12 (r11 verdict task 3): two sessions racing the staged
-    ``os.rename`` swap.  The loser's rename hits a non-empty target
-    (the winner just swapped its build in) and must (a) serve the
-    WINNER's store when the fingerprints agree, (b) fall back to its
-    own in-session build when they don't, and (c) on the cache path,
-    serve its own cached relation either way.  Simulated by planting a
-    winner store at the target between the loser's rmtree and rename —
-    exactly the lost-race interleaving."""
+    """Two sessions racing the staged ``os.rename`` swap.  The loser's
+    rename hits a non-empty target (the winner just swapped its build
+    in) and must (a) serve the WINNER's store when the fingerprints
+    agree and (b) fall back to its own in-session build when they
+    don't — with the default parquet writer and an explicit one alike
+    (one write path).  Simulated by planting a winner store at the
+    target between the loser's rmtree and rename — exactly the
+    lost-race interleaving."""
     import os
     import shutil
 
-    from chinook_music_database_analysis_spark.plans import extensions as ext
-
-    monkeypatch.setattr(ext, "_INDEX_ROOT", str(tmp_path))
+    monkeypatch.setattr(store, "ROOT", str(tmp_path))
     invalidate(SF_TEST_DIR)
 
     emb = spark.read.parquet(f"{SF_TEST_DIR}/embeddings.parquet")
     loser_build = lambda: emb.select("vec_id").limit(20)  # noqa: E731
-    fp = ext._corpus_fp(spark, SF_TEST_DIR)  # default table="embeddings"
+    fp = store.corpus_fp(spark, SF_TEST_DIR)  # default table="embeddings"
 
     # Pre-materialize the winner's store payload (7 rows — count is the
     # tell for WHOSE relation got served).
@@ -947,29 +869,33 @@ def test_index_store_concurrent_writer_fallback(spark, tmp_path, monkeypatch):
                 fh.write(state["winner_fp"])
         return real_rename(src, dst, *a, **kw)
 
-    monkeypatch.setattr(ext._os, "rename", losing_rename)
+    monkeypatch.setattr(store.os, "rename", losing_rename)
     pq_writer = lambda df, path: df.write.mode("overwrite").parquet(path)  # noqa: E731
 
     def run(kind, winner_fp, writer):
         state.update(kind=kind, winner_fp=winner_fp, planted=False)
-        got = ext._persisted_index(
+        got = store.persisted(
             kind, spark, SF_TEST_DIR, loser_build, writer=writer
         )
         assert state["planted"], "race never triggered"
         return got
 
-    # (a) writer path, fingerprints agree -> the winner's store serves.
-    assert run("race_w_same", fp, pq_writer).count() == 7
-    # (b) writer path, fingerprint mismatch -> loser's own build.
-    assert run("race_w_diff", "someone-elses-corpus", pq_writer).count() == 20
-    # the mismatched winner store stays on disk untouched (next session
-    # with the matching corpus will replace it through the normal path)
-    d_diff = next(tmp_path.glob("*/race_w_diff"))
-    assert open(d_diff / "_FINGERPRINT").read() == "someone-elses-corpus"
-    # (c) cache path (writer=None): the in-session cached build serves
-    # regardless of the winner's fingerprint...
-    assert run("race_c_same", fp, None).count() == 20
-    # ...and the winner's store is left in place, not clobbered.
-    d_same = next(tmp_path.glob("*/race_c_same"))
-    assert spark.read.parquet(str(d_same / "data")).count() == 7
+    for tag, writer in (("default", None), ("writer", pq_writer)):
+        # (a) fingerprints agree -> the winner's store serves.
+        assert run(f"race_{tag}_same", fp, writer).count() == 7, tag
+        # (b) fingerprint mismatch -> the loser's own build serves...
+        assert run(f"race_{tag}_diff", "someone-elses-corpus", writer).count() == 20, tag
+        # ...and the mismatched winner store stays on disk untouched
+        # (the next session with the matching corpus replaces it
+        # through the normal path).
+        d_diff = next(tmp_path.glob(f"*/race_{tag}_diff"))
+        assert open(d_diff / "_FINGERPRINT").read() == "someone-elses-corpus"
     invalidate(SF_TEST_DIR)
+
+
+def test_store_events_shared_with_extensions():
+    """perfbench/run.py reads STORE_EVENTS from plans.extensions: that
+    name must stay the store's own dict, not a copy."""
+    from chinook_music_database_analysis_spark.plans import extensions
+
+    assert extensions.STORE_EVENTS is store.STORE_EVENTS

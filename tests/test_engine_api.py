@@ -751,10 +751,10 @@ def test_corpus_rewrite_mid_session_matches_fresh_build(spark, tmp_path, monkeyp
 
     import pyarrow.parquet as pq
 
+    from chinook_music_database_analysis_spark import store
     from chinook_music_database_analysis_spark.plans import QUERIES
-    from chinook_music_database_analysis_spark.plans import extensions as ext
 
-    monkeypatch.setattr(ext, "_INDEX_ROOT", str(tmp_path / "idx"))
+    monkeypatch.setattr(store, "ROOT", str(tmp_path / "idx"))
     sf = _copy_corpus(tmp_path / "live")
     QUERIES["tx_bm25_topk"](spark, sf).collect()
 
@@ -776,11 +776,11 @@ def test_index_wipe_mid_session_retrains(spark, tmp_path, monkeypatch):
     execution instead of scanning the deleted store files."""
     import shutil
 
+    from chinook_music_database_analysis_spark import store
     from chinook_music_database_analysis_spark.plans import QUERIES
-    from chinook_music_database_analysis_spark.plans import extensions as ext
 
     root = tmp_path / "idx"
-    monkeypatch.setattr(ext, "_INDEX_ROOT", str(root))
+    monkeypatch.setattr(store, "ROOT", str(root))
     sf = _copy_corpus(tmp_path / "sf")
     n = QUERIES["tx_bm25_topk"](spark, sf).count()
     shutil.rmtree(root)

@@ -224,7 +224,7 @@ def test_layout_rebuild_prunes(spark, tmp_path, monkeypatch):
     the box (footer-level skipping)."""
     import os
 
-    from chinook_music_database_analysis_spark.plans import extensions as ext
+    from chinook_music_database_analysis_spark import store as index_store
     from chinook_music_database_analysis_spark.plans.scale_queries import (
         ZP_PART_HI,
         ZP_PART_LO,
@@ -233,7 +233,7 @@ def test_layout_rebuild_prunes(spark, tmp_path, monkeypatch):
     )
     from chinook_music_database_analysis_spark.plans import QUERIES
 
-    monkeypatch.setattr(ext, "_INDEX_ROOT", str(tmp_path))
+    monkeypatch.setattr(index_store, "ROOT", str(tmp_path))
     invalidate(SF_TEST_DIR)
     try:
         fact = _zordered_lineitem(spark, SF_TEST_DIR)
