@@ -3,9 +3,15 @@
 
     {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
-Timing is end-to-end per query: plan + execute + count (a count()
-action materializes the full result without shipping rows to the
-driver).  Warm-run methodology: every query executes once untimed
+Timing is end-to-end per query, taken by ``engine.profile_query``:
+the builder call, the DataFrame's own planning, and a ``noop``-format
+write that computes every output column without shipping rows to the
+driver (a ``count()`` would let Catalyst prune the projections it does
+not need).  BENCH_DETAIL.json keeps the three layers per rep
+(``queries_layers``) and the operator counts and memo/store flags of
+each query's last warm run (``plan_stats``).  The JSON line and the
+sidecar name the core count, default parallelism, shuffle partitions
+and timed action of the run.  Warm-run methodology: every query executes once untimed
 before the timed pass, so the numbers measure steady-state engine
 throughput (codegen compiled, file footers cached, shared memoized
 relations built) rather than JVM/JIT cold-start — matching how these
@@ -25,8 +31,8 @@ so cold numbers pay index training on every invocation; the JSON
 line carries
 ``"index": {"wiped", "tr", "ld"}`` (store kinds trained in-run vs
 served pre-baked) plus ``memo_n``/``store_n`` — how many warm plans
-contain an InMemoryRelation (session-memoized relations) or scan the
-index store — with per-query flags and full lists in
+executed an InMemoryRelation (session-memoized relations) or a scan of
+the index store — with per-query flags and full lists in
 BENCH_DETAIL.json.  Cold totals are therefore not comparable to
 pre-r13 rounds (whose colds served pre-baked stores).
 
@@ -40,8 +46,8 @@ errors) is written to BENCH_DETAIL.json next to this file and echoed
 to stderr.  Failures never kill the run: broken queries land in an
 "errors" section of the sidecar (and an "errors_n" count in the
 headline line), as do failed harness steps (warm-up, cold-pass
-query, plan probe, re-read probe, streaming set-up and paths, synthetic
-source, a store loaded after the wipe) under a ``_bench:<step>`` key,
+query, re-read probe, streaming set-up and paths, synthetic source, a
+store loaded after the wipe) under a ``_bench:<step>`` key,
 and the JSON line prints regardless.
 """
 
@@ -49,9 +55,14 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import shutil
 import sys
 import time
+
+#: Byte budget of the final stdout line: the capture that parses it
+#: keeps only the last ~2000 bytes of stdout.
+LINE_BYTES = 1900
 
 
 def _cache_state() -> dict:
@@ -71,6 +82,14 @@ def _cache_state() -> dict:
     except (OSError, ValueError):
         pass
     return out
+
+
+_LAYERS = ("build_sec", "plan_sec", "wall_sec")
+
+
+def _total_sec(prof: dict) -> float:
+    """A profiled run's end-to-end seconds: build + plan + write."""
+    return round(sum(prof[k] for k in _LAYERS), 3)
 
 
 def _bench_error(errors: dict, step: str, ex: Exception) -> None:
@@ -101,12 +120,20 @@ def _reread_probe(spark, sf_dir: str, errors: dict) -> list[float]:
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     from chinook_music_database_analysis_spark.cache import invalidate
+    from chinook_music_database_analysis_spark.engine import profile_query
     from chinook_music_database_analysis_spark.plans import QUERIES
     from chinook_music_database_analysis_spark.sources import get_spark
-    from chinook_music_database_analysis_spark.store import ROOT, STORE_EVENTS, store_dir
+    from chinook_music_database_analysis_spark.store import STORE_EVENTS, store_dir
 
     spark = get_spark("chinook-spark-bench")
     spark.sparkContext.setLogLevel("ERROR")
+    local = re.fullmatch(r"local\[(\d+)\]", spark.sparkContext.master)
+    config = {
+        "cpus": int(local.group(1)) if local else None,
+        "parallelism": spark.sparkContext.defaultParallelism,
+        "shuffle_partitions": int(spark.conf.get("spark.sql.shuffle.partitions")),
+        "action": "noop",
+    }
     # Queries that fail land here by name; failed harness steps under
     # ``_bench:<step>`` (see _bench_error).
     errors: dict[str, dict] = {}
@@ -151,16 +178,13 @@ def main() -> None:
         # are machine-readable; it doubles as the warm-up.
         cache_before_cold = _cache_state()
         cold: dict[str, float] = {}
-        t_cold = time.perf_counter()
         for name in names:
-            t0 = time.perf_counter()
             try:
-                QUERIES[name](spark, sf_dir).count()
-                cold[name] = round(time.perf_counter() - t0, 3)
+                cold[name] = _total_sec(profile_query(spark, sf_dir, name))
                 print(f"# cold {name}: {cold[name]:.3f}s", file=sys.stderr)
             except Exception as ex:
                 _bench_error(errors, f"cold:{name}", ex)
-        cold_total = round(time.perf_counter() - t_cold, 3)
+        cold_total = round(sum(cold.values()), 3)
         # A kind served from disk in the cold pass means the wipe did
         # not take: the cold total then hides that store's training.
         loaded = sorted(k for k, v in STORE_EVENTS.items() if v == "load")
@@ -173,27 +197,36 @@ def main() -> None:
 
         reps = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3")))
         samples: dict[str, list[float]] = {}
+        layers: dict[str, dict[str, list[float]]] = {}
+        # Serving provenance (r13, verdict item 3) rides on the timed
+        # runs: each query's operator counts and memo/store flags from
+        # its last warm run, read off the plan that run executed.
+        plan_stats: dict[str, dict] = {}
         for rep in range(reps):
             for name in names:
-                t0 = time.perf_counter()
                 try:
-                    n = QUERIES[name](spark, sf_dir).count()
-                    sec = round(time.perf_counter() - t0, 3)
-                    samples.setdefault(name, []).append(sec)
-                    # A query appears in exactly one of samples/errors:
-                    # any successful rep clears an earlier failure.
-                    errors.pop(name, None)
-                    if rep == reps - 1:
-                        print(f"# {name}: {sec:.3f}s rows={n}", file=sys.stderr)
+                    prof = profile_query(spark, sf_dir, name)
                 except Exception as ex:  # one broken query must not kill the bench
-                    elapsed = round(time.perf_counter() - t0, 3)
                     msg = f"{type(ex).__name__}: {ex}"[:200]
-                    errors[name] = {"error": msg, "sec": elapsed}
-                    # ...and a failure evicts any stale samples, so a
-                    # flaky query never counts toward "total" while also
-                    # being reported broken.
-                    samples.pop(name, None)
-                    print(f"# {name}: ERROR after {elapsed:.3f}s {msg}", file=sys.stderr)
+                    errors[name] = {"error": msg}
+                    # A query appears in exactly one of samples/errors:
+                    # a failure evicts any stale samples, so a flaky
+                    # query never counts toward "total" while also being
+                    # reported broken...
+                    for seen in (samples, layers, plan_stats):
+                        seen.pop(name, None)
+                    print(f"# {name}: ERROR {msg}", file=sys.stderr)
+                    continue
+                # ...and any successful rep clears an earlier failure.
+                errors.pop(name, None)
+                sec = _total_sec(prof)
+                samples.setdefault(name, []).append(sec)
+                split = layers.setdefault(name, {k: [] for k in _LAYERS})
+                for k in _LAYERS:
+                    split[k].append(prof[k])
+                plan_stats[name] = prof["plan_stats"]
+                if rep == reps - 1:
+                    print(f"# {name}: {sec:.3f}s", file=sys.stderr)
         # Headline warm number per query = the MEDIAN of its reps; the
         # raw samples and a relative spread ride along in the sidecar so
         # a host-noise window (r11: uniform ~1.45x on code-identical
@@ -213,29 +246,13 @@ def main() -> None:
         cache_after_warm = _cache_state()
         reread = _reread_probe(spark, sf_dir, errors)
 
-        # Machine-readable serving provenance (r13, verdict item 3):
-        # which warm medians time a memo-served relation (plan contains
-        # an InMemoryRelation — a persisted session-cache relation) and which
-        # read the on-disk index store (a scan over `.index/`), plus
-        # the per-kind store events (trained in THIS run vs pre-baked
-        # load).  Untimed: plans are rendered once per query after the
-        # warm pass.
-        plan_flags: dict[str, dict] = {}
-        for name in names:
-            if name in errors:
-                continue
-            try:
-                qe = QUERIES[name](spark, sf_dir)._jdf.queryExecution()
-                txt = qe.optimizedPlan().toString() + qe.executedPlan().toString()
-                plan_flags[name] = {
-                    "memo": "InMemoryRelation" in txt,
-                    "store": ROOT in txt,
-                }
-            except Exception as ex:
-                _bench_error(errors, f"plan_flags:{name}", ex)
+        # Which warm medians time a memo-served relation (a persisted
+        # session-cache relation) and which read the on-disk index
+        # store, plus the per-kind store events (trained in THIS run vs
+        # pre-baked load).
         store_events = dict(sorted(STORE_EVENTS.items()))
-        memo_served = sorted(n for n, f in plan_flags.items() if f["memo"])
-        store_read = sorted(n for n, f in plan_flags.items() if f["store"])
+        memo_served = sorted(n for n, f in plan_stats.items() if f["memo"])
+        store_read = sorted(n for n, f in plan_stats.items() if f["store"])
         store_trained = sorted(k for k, v in store_events.items() if v == "train")
         print(
             f"# store kinds trained this run: {len(store_trained)}; "
@@ -456,6 +473,7 @@ def main() -> None:
             "queries": timings,
             "estimator": f"median_of_{reps}",
             "queries_samples": samples,
+            "queries_layers": layers,
             "queries_rel_spread": spread,
             "cold_total": cold_total,
             "cold_queries": cold,
@@ -468,9 +486,10 @@ def main() -> None:
             },
             "index_wiped_before_cold": index_wiped,
             "store_events": store_events,
-            "plan_flags": plan_flags,
+            "plan_stats": plan_stats,
             "memo_served_queries": memo_served,
             "store_read_queries": store_read,
+            **config,
         }
         if streaming_sec is not None:
             detail["streaming_stateful_sec"] = streaming_sec
@@ -524,6 +543,7 @@ def main() -> None:
             },
             "memo_n": len(memo_served),
             "store_n": len(store_read),
+            **config,
         }
         if streaming_sec is not None:
             out["streaming_stateful_sec"] = streaming_sec
@@ -540,15 +560,14 @@ def main() -> None:
             ]
         if len(reread) == 2:
             out["reread_s"] = reread
-        budget = int(os.environ.get("SPARK_GRAFT_BENCH_LINE_BYTES", "1900"))
         for name in sorted(timings, key=lambda n: (-timings[n], n)):
             out["queries"][name] = timings[name]
-            if len(json.dumps(out, separators=(",", ":"))) > budget:
+            if len(json.dumps(out, separators=(",", ":"))) > LINE_BYTES:
                 del out["queries"][name]
                 break
         out["queries_omitted"] = len(timings) - len(out["queries"])
         line = json.dumps(out, separators=(",", ":"))
-        while len(line) > budget and out["queries"]:
+        while len(line) > LINE_BYTES and out["queries"]:
             # defensive: keys added after the over-budget check (e.g.
             # queries_omitted) could overflow — trim the fastest entry.
             fastest = min(out["queries"], key=lambda n: (out["queries"][n], n))

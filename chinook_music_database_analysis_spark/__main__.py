@@ -6,7 +6,10 @@ Commands:
     explain <query> [--sf-dir DIR] [--mode MODE]   show the plan
     oracle <query>               print the query's DuckDB oracle SQL
     validate <query> [--sf-dir DIR]   Spark vs DuckDB oracle compare
-    profile <query> [--sf-dir DIR]    wall time, rows, executed plan
+    profile <query>... [--sf-dir DIR] [--reps N]
+                                 one JSON line per run: build/plan/write
+                                 seconds, rows, executed plan and its
+                                 operator counts (Engine.profile)
 
 The same surface a spark-submit job would use on a cluster — the CLI
 only builds the session and delegates to the Engine facade.
@@ -26,13 +29,15 @@ def main(argv: list[str] | None = None) -> int:
 
     for cmd in ("run", "explain", "oracle", "validate", "profile"):
         p = sub.add_parser(cmd)
-        p.add_argument("query")
+        p.add_argument("query", nargs="+" if cmd == "profile" else None)
         if cmd in ("run", "explain", "validate", "profile"):
             p.add_argument("--sf-dir", default=None)
         if cmd == "run":
             p.add_argument("--limit", type=int, default=20)
         if cmd == "explain":
             p.add_argument("--mode", default="formatted")
+        if cmd == "profile":
+            p.add_argument("--reps", type=int, default=1)
 
     args = ap.parse_args(argv)
 
@@ -44,8 +49,10 @@ def main(argv: list[str] | None = None) -> int:
             print(f"{name}{marker}")
         return 0
 
-    if args.query not in QUERIES:
-        print(f"unknown query: {args.query!r} (see `list`)", file=sys.stderr)
+    names = args.query if args.cmd == "profile" else [args.query]
+    unknown = [n for n in names if n not in QUERIES]
+    if unknown:
+        print(f"unknown query: {unknown[0]!r} (see `list`)", file=sys.stderr)
         return 2
 
     if args.cmd == "oracle":
@@ -75,9 +82,11 @@ def main(argv: list[str] | None = None) -> int:
     elif args.cmd == "profile":
         import json
 
-        res = eng.profile(args.query)
-        res["plan"] = res["plan"][:2000]
-        print(json.dumps(res, default=str))
+        for name in names:
+            for _ in range(args.reps):
+                res = eng.profile(name)
+                res["plan"] = res["plan"][:2000]
+                print(json.dumps(res, default=str))
     else:
         eng.query(args.query).show(args.limit, truncate=False)
     return 0

@@ -11,6 +11,8 @@ table (and the derived view) registered, exposing
   §2.12 parity query + every extension),
 * ``engine.explain(name)``  — the EXPLAIN surface (formatted physical
   plan, SURVEY §3.1 step 6),
+* ``engine.profile(name)``  — one timed run with its executed plan
+  (:func:`profile_query`, the one place a registered query is timed),
 * ``engine.tables``         — the catalog.
 
 Usage::
@@ -23,11 +25,82 @@ Usage::
 
 from __future__ import annotations
 
+import re
+import time
+
 from pyspark.sql import DataFrame, SparkSession
 
+from . import store
 from .plans import ORACLES, QUERIES
 from .sources import get_spark, register_views
 from .sources.session import DEFAULT_SF_DIR
+
+#: ``plan_stats`` operator counters, matched on the final physical tree.
+_OPERATORS = {
+    "exchanges": r"\bExchange\b",
+    "smj": r"\bSortMergeJoin\b",
+    "bhj": r"\bBroadcastHashJoin\b",
+    "shj": r"\bShuffledHashJoin\b",
+    "bnlj": r"BroadcastNestedLoopJoin",
+    "cart": r"CartesianProduct",
+    "pyeval": r"BatchEvalPython|ArrowEvalPython|MapInArrow|MapInPandas|FlatMapGroupsInPandas",
+    "scans": r"Scan parquet|BatchScan",
+    "sorts": r"\bSort\b",
+    "window": r"\bWindow\b",
+    "aggs": r"HashAggregate|SortAggregate|ObjectHashAggregate",
+    "rowtojvm": r"RowToColumnar|ColumnarToRow",
+}
+
+
+def profile_query(spark: SparkSession, sf_dir: str, name: str) -> dict:
+    """Run registered query ``name`` once, timed in three layers, and
+    return the plan that run executed.
+
+    * ``build_sec``: the builder call (Python, py4j, Catalyst analysis).
+    * ``plan_sec``: forcing the DataFrame's own executed plan
+      (optimization and physical planning).  A memoized DataFrame
+      (see :mod:`cache`) keeps its plan, so it pays this once per
+      session and later calls read ~0.
+    * ``wall_sec``: a ``noop``-format write, which computes every
+      output column (a ``count()`` lets Catalyst prune the projections
+      it does not need).  The write plans again inside its own
+      QueryExecution, and that cost lands here, not in ``plan_sec``.
+
+    ``plan`` is the formatted physical plan of that write, read from
+    the SQL status store after the timer stops, so it works with the
+    UI disabled; an adaptive plan shows its final tree.  It is the
+    session's latest SQL execution, so no other thread may run SQL on
+    the session meanwhile.  ``plan_stats`` counts operators on the
+    final tree only (the description repeats the initial tree and the
+    node details) and flags a session-memo relation (``memo``) and a
+    scan of the index store (``store``) anywhere in the description,
+    because the store path shows only in the node details.
+    """
+    t0 = time.perf_counter()
+    df = QUERIES[name](spark, sf_dir)
+    t1 = time.perf_counter()
+    df._jdf.queryExecution().executedPlan()
+    t2 = time.perf_counter()
+    df.write.format("noop").mode("overwrite").save()
+    t3 = time.perf_counter()
+    # The status store is fed by the listener bus: drain it so the
+    # write's end and final-plan events have landed.
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    status = spark._jsparkSession.sharedState().statusStore()
+    last = status.executionsList(int(status.executionsCount()) - 1, 1).apply(0)
+    plan = last.physicalPlanDescription()
+    tree = plan.split("\n\n", 1)[0].split("== Initial Plan ==", 1)[0]
+    stats = {key: len(re.findall(pat, tree)) for key, pat in _OPERATORS.items()}
+    stats["memo"] = "InMemoryRelation" in plan
+    stats["store"] = store.ROOT in plan
+    return {
+        "query": name,
+        "build_sec": round(t1 - t0, 3),
+        "plan_sec": round(t2 - t1, 3),
+        "wall_sec": round(t3 - t2, 3),
+        "plan": plan,
+        "plan_stats": stats,
+    }
 
 
 class Engine:
@@ -75,30 +148,12 @@ class Engine:
         return buf.getvalue()
 
     def profile(self, name: str) -> dict:
-        """Execute a registered query and return observed runtime
-        metrics: wall seconds, output rows, and the executed (adaptive-
-        final) plan text — the observability surface an operator uses
-        to spot a bad plan in production without a UI.
-
-        The timed action is a ``noop``-format write, which computes
-        every output column (a ``count()`` lets Catalyst prune the
-        projections it does not need); ``n_rows`` comes from a separate,
-        untimed ``count()``.  Per-node SQL metrics stay in the Spark UI
-        — this returns what a CLI health check needs."""
-        import time
-
-        df = self.query(name)
-        t0 = time.perf_counter()
-        df.write.format("noop").mode("overwrite").save()
-        wall = time.perf_counter() - t0
-        return {
-            "query": name,
-            "wall_sec": round(wall, 3),
-            "n_rows": df.count(),
-            # one capture implementation: explain() owns the
-            # stdout-redirect quirks (Spark Connect etc.)
-            "plan": self.explain(name, "simple"),
-        }
+        """:func:`profile_query` on this engine's session and data
+        directory, plus ``n_rows`` from a separate, untimed
+        ``count()`` — what a CLI health check needs without a UI."""
+        prof = profile_query(self.spark, self.sf_dir, name)
+        prof["n_rows"] = self.query(name).count()
+        return prof
 
     def validate(self, name: str) -> dict:
         """Run a registered query AND its DuckDB oracle on this

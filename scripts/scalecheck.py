@@ -7,6 +7,8 @@ same vocabulary/length/cluster structure as the driver's documents +
 embeddings tables (plus ~5% injected near-duplicates so the dedup path
 does real work), then cold-times each query at both scales in the SAME
 session (fresh memo caches per sf_dir — session-cache keys include sf_dir).
+Each timing is ``engine.profile_query``: build + plan + a ``noop`` write
+that computes every output column.
 
 Expected exponents (time ~ N^e): ~1 for the hash/shuffle families
 (minhash, simhash, boilerplate, stats), ~1.5 for IVF (N*sqrt(N)
@@ -49,9 +51,9 @@ QUERIES = {
     # longer pays the 22.9x bucket self-join; linear + the
     # sort-within-bucket log factor
     "dd_embedding_cosine": 1.3,
-    # r9: guarded by the range_search stats router — on the clustered
-    # 10x corpus the probe answers with the exact broadcast scan
-    # (linear); benign corpora keep the pruned bucket probe
+    # the registered plan pins route="pruned" (r11): both scales time
+    # the banded bucket probe plus exact scoring of its candidates,
+    # never the stats router's broadcast dense scan
     "sim_lsh_topk": 1.3,
     "sim_ivf_topk": 1.7,
     "sim_ivf_stride_topk": 1.7,
@@ -71,10 +73,9 @@ QUERIES = {
     # r3 batch 2 — both are narrow-filter + one tiny/stratum shuffle
     "cur_temperature_mix": 1.3,
     "cur_stratified_eval": 1.3,
-    # r9: stats-first router — pruned LSH probe on benign corpora,
-    # broadcast dense scan (exact, |q| x N, zero shuffles) once the
-    # query buckets run hot; either path is linear for a fixed query
-    # set, and the clustered 10x corpus takes the dense one
+    # pinned to route="pruned" like sim_lsh_topk (r11): both scales
+    # time the broadcast query-bucket probe of the corpus signature
+    # relation, never the stats router's broadcast dense scan
     "sim_range_search": 1.3,
     # token/bigram explode + doc-keyed aggregates — linear
     "tx_repetition": 1.3,
@@ -459,11 +460,16 @@ def main() -> int:
         print(f"# generating {args.factor}x corpus under {out_dir}", file=sys.stderr)
         generate(out_dir, args.factor)
 
+    from chinook_music_database_analysis_spark.engine import profile_query
     from chinook_music_database_analysis_spark.plans import QUERIES as REG
     from chinook_music_database_analysis_spark.sources import get_spark
 
     spark = get_spark("scalecheck")
     spark.sparkContext.setLogLevel("ERROR")
+
+    def timed(sf_dir: str, name: str) -> float:
+        prof = profile_query(spark, sf_dir, name)
+        return prof["build_sec"] + prof["plan_sec"] + prof["wall_sec"]
 
     only = {n for n in args.only.split(",") if n}
     failures = []
@@ -472,14 +478,11 @@ def main() -> int:
         if only and name not in only:
             continue
         if name in WARM_FIRST:
-            REG[name](spark, BASE).count()
-            REG[name](spark, out_dir).count()
-        t0 = time.perf_counter()
-        REG[name](spark, BASE).count()
-        base = time.perf_counter() - t0
-        t0 = time.perf_counter()
+            timed(BASE, name)
+            timed(out_dir, name)
+        base = timed(BASE, name)
         try:
-            REG[name](spark, out_dir).count()
+            scaled = timed(out_dir, name)
         except ValueError as ex:
             # r8: dd_containment REFUSES on hot-shingle corpora instead
             # of silently serving the capped path — and this generator's
@@ -495,7 +498,6 @@ def main() -> int:
                 )
                 continue
             raise
-        scaled = time.perf_counter() - t0
         eff_base = max(base - OVERHEAD_SEC, 0.05)
         eff_scaled = max(scaled - OVERHEAD_SEC, 0.05)
         ratio = eff_scaled / eff_base

@@ -259,6 +259,30 @@ def test_engine_profile_metrics(spark):
     assert prof["n_rows"] == 25
     assert prof["wall_sec"] > 0
     assert "HashAggregate" in prof["plan"] or "Aggregate" in prof["plan"]
+    # The plan is the one the timed write executed (adaptive-final),
+    # not a re-plan of the DataFrame that never ran.
+    prof = eng.profile("q02_top_parts_nation0")
+    assert "isFinalPlan=true" in prof["plan"]
+    assert prof["plan_stats"]["bhj"] >= 1 and prof["plan_stats"]["aggs"] >= 1
+    assert min(prof["build_sec"], prof["plan_sec"], prof["wall_sec"]) >= 0
+    assert prof["n_rows"] > 0
+
+
+def test_cli_profile_and_explain(spark, capsys):
+    import json
+
+    from chinook_music_database_analysis_spark.__main__ import main
+
+    argv = ["profile", "q04_rev_by_geo", "q02_top_parts_nation0", "--sf-dir", SF_TEST_DIR]
+    assert main(argv) == 0
+    lines = capsys.readouterr().out.splitlines()
+    assert len(lines) == 2
+    for line, name in zip(lines, ("q04_rev_by_geo", "q02_top_parts_nation0")):
+        res = json.loads(line)
+        assert res["query"] == name
+        assert {"build_sec", "plan_sec", "wall_sec", "plan_stats"} <= set(res)
+    assert main(["explain", "q02_top_parts_nation0", "--sf-dir", SF_TEST_DIR]) == 0
+    assert "Scan parquet" in capsys.readouterr().out
 
 
 def test_shuffle_partitions_follow_core_count(spark):
