@@ -152,9 +152,9 @@ def cosine_topk(
     (a post-filter over an unfiltered top-k can starve).
 
     ``norms`` accepts a prebuilt (vec_id, embedding, norm) relation
-    (the persisted ANN store shape) so the dense router path reuses
-    norms the caller already paid for instead of recomputing the
-    corpus pass (r11); mutually exclusive with ``corpus``.
+    (the persisted ANN store shape) so a caller holding the stored
+    norm table reuses norms it already paid for instead of recomputing
+    the corpus pass; mutually exclusive with ``corpus``.
     """
     if norms is not None and corpus is not None:
         raise ValueError("cosine_topk: pass corpus OR norms, not both")
@@ -594,98 +594,13 @@ def knn_graph(
     )
 
 
-#: sparse-vs-dense cutover for :func:`range_search`: the LSH probe is
-#: taken only while its candidate upper bound (sum of corpus occupancy
-#: over the query vectors' buckets) stays under this fraction of the
-#: dense exact scan's |q| x N row count.  Past that point the "pruned"
-#: probe is touching a comparable share of the corpus anyway — paying
-#: bucket-join + distinct on top of the scoring — so the router takes
-#: the broadcast dense scan instead: exact (recall 1.0, a SUPERSET of
-#: the banded result), linear in N for a fixed query set, zero
-#: shuffles.  This is the containment router's stats-first pattern
-#: (dedup.containment_join_stats) with a cheaper escape hatch: where
-#: the capped containment path LOSES recall and must refuse loudly,
-#: the dense radius scan GAINS recall, so auto-routing is honest.
-RANGE_DENSE_CUTOVER = 0.5
-
-#: op name -> stats of the LAST routing decision that op made in this
-#: process ({"route", "cand_upper", "bound", "n_queries", "n_corpus"}).
-#: The routers change result SEMANTICS past the cutover (exact superset
-#: / exact top-k), so a registered-oracle hash mismatch after a corpus
-#: revision must be attributable to a route flip at a glance — tests
-#: and the bench read this, and the dense engagement also logs a
-#: warning (it should never happen on a registered corpus, whose
-#: oracles replicate only the pruned path).
-ROUTER_LOG: dict[str, dict] = {}
-
-
-def _resolve_route(op: str, route: str, n_queries: int) -> bool | None:
-    """Validate a caller-forced route and record it; returns the
-    ``dense`` flag for a forced route, or None when ``route='auto'``
-    (the caller must then run the stats pass and
-    :func:`_record_route` the measured decision).
-
-    Forcing exists for oracle attributability (r10 verdict): the
-    registered sim_lsh_topk / sim_range_search plans pin
-    ``route='pruned'`` so a driver-corpus revision can never flip the
-    registered result away from the pruned-path oracle; the dense
-    route is oracle-gated separately on a synthetic cutover-crossing
-    corpus (tests/test_ann_store.py dual-route gate).  A forced route
-    skips the stats collect entirely — there is no decision to make —
-    and is logged with ``forced=True`` and null stats.
-    """
-    if route not in ("auto", "pruned", "dense"):
-        raise ValueError(f"{op}: route must be auto|pruned|dense, got {route!r}")
-    if route == "auto":
-        return None
-    dense = route == "dense"
-    ROUTER_LOG[op] = {
-        "route": "dense_exact" if dense else "pruned_lsh",
-        "forced": True,
-        "cand_upper": None,
-        "bound": None,
-        "n_queries": n_queries,
-        "n_corpus": None,
-    }
-    return dense
-
-
-def _record_route(
-    op: str, dense: bool, cand_upper: int, n_queries: int, n_corpus: int
-) -> None:
-    bound = RANGE_DENSE_CUTOVER * n_queries * n_corpus
-    ROUTER_LOG[op] = {
-        "route": "dense_exact" if dense else "pruned_lsh",
-        "cand_upper": cand_upper,
-        "bound": bound,
-        "n_queries": n_queries,
-        "n_corpus": n_corpus,
-    }
-    if dense:
-        import logging
-
-        logging.getLogger(__name__).warning(
-            "%s: stats-first router took the DENSE EXACT path "
-            "(candidate upper bound %d >= %.0f = %.0f%% of |q|xN) — "
-            "results are exact (a superset of / identical-or-better than "
-            "the pruned contract), so any oracle hash mismatch on a "
-            "registered corpus is this route flip, not a scoring bug",
-            op,
-            cand_upper,
-            bound,
-            100 * RANGE_DENSE_CUTOVER,
-        )
-
-
 def _bucket_probe_candidates(buckets: DataFrame, n_queries: int) -> DataFrame:
     """Slim (query_id, neighbor_id) candidates from the signature
     store: broadcast the tiny query bucket slice against the corpus
     bucket relation, drop self-pairs, dedup multi-table collisions —
     the ONE probe both :func:`range_search` and :func:`lsh_topk` score
-    from (r11 review: stated once so a probe change — e.g. a
-    per-query candidate cap — cannot drift the two routers apart).
-    ``range_probe_stats``' cand_upper is this join's exact
-    pre-distinct row count."""
+    from, stated once so a probe change (e.g. a per-query candidate
+    cap) cannot drift the two operators apart."""
     qb = buckets.filter(F.col("vec_id") < n_queries).select(
         F.col("vec_id").alias("query_id"), "tbl", "bucket"
     )
@@ -697,46 +612,12 @@ def _bucket_probe_candidates(buckets: DataFrame, n_queries: int) -> DataFrame:
     )
 
 
-def range_probe_stats(buckets: DataFrame, n_queries: int) -> tuple[int, int]:
-    """(corpus_size, candidate_upper) for the radius-search router.
-
-    ``candidate_upper`` = sum over (tbl, bucket) cells of the cell's
-    corpus occupancy x the number of QUERY vectors in the cell — the
-    EXACT row count of the probe join before distinct (each query
-    member of a cell pairs with every corpus member of it), computable
-    from one two-level hash-agg over the (cached) signature relation,
-    no pair join.  ``corpus_size`` falls out of the same pass
-    (signature rows / N_TABLES).  This is the ANALYZE-style stats pass
-    a production run does before choosing the pruned vs dense radius
-    path — the same df-histogram trick dedup.containment_join_stats
-    uses for the inverted-file router.
-    """
-    row = (
-        buckets.groupBy("tbl", "bucket")
-        .agg(
-            F.count(F.lit(1)).alias("occ"),
-            F.sum(
-                F.when(F.col("vec_id") < n_queries, F.lit(1)).otherwise(F.lit(0))
-            ).alias("n_q_in"),
-        )
-        .agg(
-            F.sum("occ").alias("sig_rows"),
-            F.coalesce(F.sum(F.col("occ") * F.col("n_q_in")), F.lit(0)).alias(
-                "cand_upper"
-            ),
-        )
-        .collect()[0]
-    )
-    return int(row["sig_rows"] or 0) // N_TABLES, int(row["cand_upper"])
-
-
 def range_search(
     emb: DataFrame,
     tau: float = 0.2,
     n_queries: int = 10,
     buckets: DataFrame | None = None,
     norms: DataFrame | None = None,
-    route: str = "auto",
 ) -> DataFrame:
     """Radius (range) similarity search: for each query vector, EVERY
     corpus neighbor with cosine >= ``tau`` — the unbounded-k companion
@@ -754,54 +635,10 @@ def range_search(
     which the multi-table union makes improbable at the radius of
     interest (and the oracle replicates the banding, so the gate is
     exact).
-
-    r9 ROUTER: on a clustered corpus the query vectors land in HOT
-    buckets and the probe's candidate set approaches |q| x N — the
-    bucket machinery then only adds cost over scanning.  A stats pass
-    (:func:`range_probe_stats`, one hash-agg over the cached signature
-    relation) measures the probe's exact pre-distinct row count first;
-    when it exceeds :data:`RANGE_DENSE_CUTOVER` x |q| x N the router
-    takes the broadcast dense scan — same schema, EXACT semantics
-    (recall 1.0, a superset of the banded contract), linear cost, no
-    silent degradation in either direction.  Driver-shaped corpora
-    (near-orthogonal, corpus-scaled bits) stay on the pruned path,
-    which is what the registered oracle replicates.
-
-    r11: ``route`` pins the path explicitly ('pruned' | 'dense';
-    default 'auto' keeps the stats-first router).  The registered plan
-    pins 'pruned' so its oracle can never be flipped off by a corpus
-    revision; forced routes skip the stats collect (see
-    :func:`_resolve_route`).
     """
-    dense = _resolve_route("range_search", route, n_queries)
-    if buckets is None and dense is not True:
+    if buckets is None:
         buckets = lsh_buckets(emb, lsh_n_bits(emb.count()))
     wn = with_norms(emb) if norms is None else norms
-    if dense is None:
-        n_corpus, cand_upper = range_probe_stats(buckets, n_queries)
-        dense = cand_upper >= RANGE_DENSE_CUTOVER * n_queries * n_corpus
-        _record_route("range_search", dense, cand_upper, n_queries, n_corpus)
-    if dense:
-        q = wn.filter(F.col("vec_id") < n_queries).select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("q_emb"),
-            F.col("norm").alias("q_norm"),
-        )
-        return (
-            wn.select(
-                F.col("vec_id").alias("neighbor_id"),
-                F.col("embedding").alias("n_emb"),
-                F.col("norm").alias("n_norm"),
-            )
-            .crossJoin(F.broadcast(q))
-            .filter(F.col("neighbor_id") != F.col("query_id"))
-            .select(
-                "query_id",
-                "neighbor_id",
-                _cos("q_emb", "n_emb", "q_norm", "n_norm").alias("cos_sim"),
-            )
-            .filter(F.col("cos_sim") >= tau)
-        )
     cand = _bucket_probe_candidates(buckets, n_queries)
     return (
         cand.join(
@@ -1178,10 +1015,8 @@ def lsh_topk(
     emb: DataFrame,
     n_queries: int = 10,
     k: int = 5,
-    n_bits: int | None = None,
     buckets: DataFrame | None = None,
     norms: DataFrame | None = None,
-    route: str = "auto",
 ) -> DataFrame:
     """Approximate top-k: exact cosine restricted to candidates sharing
     an LSH bucket with the query in ANY of the N_TABLES tables (bucket
@@ -1191,40 +1026,10 @@ def lsh_topk(
 
     ``buckets``/``norms`` accept prebuilt (cached) relations shared
     with the near-dup path.
-
-    r9: same stats-first router as :func:`range_search` — when the
-    query vectors land in hot buckets (probe rows >=
-    :data:`RANGE_DENSE_CUTOVER` x |q| x N, measured exactly by
-    :func:`range_probe_stats` before any pair join), the bucket
-    machinery only adds cost over scanning, so the router answers
-    with the exact brute-force top-k instead (recall 1.0 — the
-    approximate contract's candidate set was about to be ~the whole
-    corpus anyway).  Driver-shaped corpora stay on the pruned path
-    the registered oracle replicates.
-
-    r11: ``route`` pins the path explicitly ('pruned' | 'dense';
-    default 'auto' keeps the stats-first router).  The registered plan
-    pins 'pruned' so its oracle can never be flipped off by a corpus
-    revision; forced routes skip the stats collect (see
-    :func:`_resolve_route`).
     """
-    dense = _resolve_route("lsh_topk", route, n_queries)
-    if dense is True:
-        return cosine_topk(emb, n_queries=n_queries, k=k, norms=norms)
     if buckets is None:
-        b = lsh_n_bits(emb.count()) if n_bits is None else n_bits
-        buckets = lsh_buckets(emb, b)
-    bk = buckets
-    if dense is None:
-        n_corpus, cand_upper = range_probe_stats(bk, n_queries)
-        dense = cand_upper >= RANGE_DENSE_CUTOVER * n_queries * n_corpus
-        _record_route("lsh_topk", dense, cand_upper, n_queries, n_corpus)
-    if dense:
-        # reuse the caller's prebuilt norm relation (the persisted
-        # {prefix}_norms table) instead of recomputing every corpus
-        # norm from scratch — r11 review
-        return cosine_topk(emb, n_queries=n_queries, k=k, norms=norms)
-    cand = _bucket_probe_candidates(bk, n_queries)
+        buckets = lsh_buckets(emb, lsh_n_bits(emb.count()))
+    cand = _bucket_probe_candidates(buckets, n_queries)
     wn = with_norms(emb) if norms is None else norms
     q_emb = wn.filter(F.col("vec_id") < n_queries).select(
         F.col("vec_id").alias("query_id"),
@@ -1750,11 +1555,10 @@ def contrastive_negatives(
     anchors = emb.filter(F.col("vec_id") < n_queries).select(
         F.col("vec_id").alias("query_id")
     )
-    # The mates exclusion set is UNHINTED on purpose (r11 review): on
-    # a hot-bucket corpus it approaches |q| x N rows, and a forced
-    # F.broadcast would ship that to every executor (the exact corpus
-    # shape the range_search router exists for).  AQE broadcasts the
-    # anti-join side when it measures small and falls back to a
+    # The mates exclusion set is UNHINTED on purpose: on a hot-bucket
+    # (clustered) corpus it approaches |q| x N rows, and a forced
+    # F.broadcast would ship that to every executor.  AQE broadcasts
+    # the anti-join side when it measures small and falls back to a
     # shuffled anti-join when it doesn't — the honest scale behavior.
     cand = (
         emb.select("vec_id")
@@ -1829,13 +1633,13 @@ PCA_QUANT = 1e6
 #: is the cross-engine oracle contract, and every oracle-paired PCA
 #: query runs at EMB_DIM (64) — but it is O(d^2) Python-interpreted
 #: work per matvec: measured 62 s at d=2048 vs ~4 s at 512 (r11).
-#: Above this cap :func:`pca_power_model` auto-routes to the numpy
-#: solver: the SAME power-iteration-with-deflation on the SAME
-#: 1e-6-quantized covariance, BLAS-accumulated — bit-divergent from
+#: Above this cap :func:`pca_power_model` runs the numpy solver: the
+#: SAME power-iteration-with-deflation on the SAME 1e-6-quantized
+#: covariance, BLAS-accumulated — bit-divergent from
 #: the fold contract only through summation association (absorbed by
 #: the quantization grid's ~1e5 headroom), at dims where no oracle
 #: exists to compare bits against.  LLM embedding corpora run d=1-4k;
-#: scalecheck's pca_dim_probe gates d=2048 through this route.
+#: scalecheck's pca_dim_probe gates d=2048 through the numpy solver.
 PCA_FOLD_MAX_DIM = 512
 
 
@@ -1899,7 +1703,6 @@ def pca_power_model(
     dim: int = EMB_DIM,
     iters: int = PCA_ITERS,
     components: int = PCA_COMPONENTS,
-    method: str = "auto",
 ) -> dict:
     """Combine the collected moment partials and extract the leading
     ``components`` eigenpairs by power iteration with deflation —
@@ -1915,18 +1718,13 @@ def pca_power_model(
     with ``mu_q``/``m_q`` snapped to the 1e-6 grid and lam/v raw
     doubles (bit-identical across engines by construction).
 
-    ``method``: 'fold' is the exact-fold contract path above; 'numpy'
-    runs the IDENTICAL algorithm (same sort, same quantization grid,
-    same iteration count and deflation) BLAS-accumulated for large
-    dims — see :data:`PCA_FOLD_MAX_DIM` for why and when the 'auto'
-    default switches (the fold contract covers every oracle dim; at
-    d=1-4k the interpreted folds cost minutes for no gate).
+    Above :data:`PCA_FOLD_MAX_DIM` the IDENTICAL algorithm (same sort,
+    same quantization grid, same iteration count and deflation) runs
+    BLAS-accumulated instead (:func:`_pca_power_model_np`): the fold
+    contract covers every oracle dim, and at d=1-4k the interpreted
+    folds cost minutes for no gate.
     """
-    if method not in ("auto", "fold", "numpy"):
-        raise ValueError(f"pca_power_model: unknown method {method!r}")
-    if method == "auto":
-        method = "fold" if dim <= PCA_FOLD_MAX_DIM else "numpy"
-    if method == "numpy":
+    if dim > PCA_FOLD_MAX_DIM:
         return _pca_power_model_np(partials, dim, iters, components)
     d = dim
     # deterministic combine order (partition/batch order is not part

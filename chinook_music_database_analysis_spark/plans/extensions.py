@@ -1755,22 +1755,13 @@ def sim_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus-scaled bucket bits + exact scoring over the candidate union
     (the scale path; recall < 1 by design).  Bucket and norm relations
     are the cached signature tables shared with dd_embedding_cosine.
-    r9: the range_search stats-first router guards this too — on a
-    hot-bucket corpus the probe would score ~the whole corpus through
-    a join, so it answers with the exact broadcast scan instead
-    (recall 1.0); driver corpora stay on the pruned path this oracle
-    replicates.  r11: the registered plan PINS route='pruned' — this
-    oracle replicates only that path, so auto-routing here would let
-    a corpus revision silently flip the registered result off its
-    gate; the dense route keeps its own oracle gate on a synthetic
-    cutover-crossing corpus (tests/test_ann_store.py dual-route
-    gate), and production callers get the auto router through the
-    operator API default."""
+    The bucket probe is the operator's only path, so this oracle
+    replicates it on any corpus; tests/test_ann_store.py also gates it
+    on a synthetic hot-bucket corpus the registry never sees."""
     return lsh_topk(
         load_tables(spark, sf_dir)["embeddings"],
         buckets=_emb_buckets(spark, sf_dir),
         norms=_emb_norms(spark, sf_dir),
-        route="pruned",
     )
 
 
@@ -1905,23 +1896,15 @@ def sim_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     query vector (vec_id < 10) — the unbounded-k companion of the
     top-k family, answered from the same cached LSH signature tables;
     the query-side bucket slice is broadcast, so the corpus signature
-    relation is probed in place.  r9: a stats-first router
-    (similarity.range_probe_stats) measures the probe's exact
-    pre-distinct candidate count and switches to the broadcast dense
-    scan (exact, linear, a SUPERSET of the banded contract) when the
-    query vectors land in hot buckets — driver-shaped corpora stay on
-    the pruned path this oracle replicates.  r11: the registered plan
-    PINS route='pruned' for oracle attributability (see sim_lsh_topk);
-    the dense route is oracle-gated separately on a synthetic
-    cutover-crossing corpus (tests/test_ann_store.py dual-route
-    gate)."""
+    relation is probed in place.  As with sim_lsh_topk, the bucket
+    probe is the operator's only path (also gated on a synthetic
+    hot-bucket corpus in tests/test_ann_store.py)."""
     from ..operators.similarity import range_search
 
     return range_search(
         load_tables(spark, sf_dir)["embeddings"],
         buckets=_emb_buckets(spark, sf_dir),
         norms=_emb_norms(spark, sf_dir),
-        route="pruned",
     )
 
 
@@ -3259,10 +3242,7 @@ def ev_gapfill_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # Round-3 late additions: span-level dedup, semantic dedup, unigram-LM
-# quality scoring.  Registered AFTER the driver-window rotation list on
-# purpose — they get the local sf0.001/sf0.01 oracle gate this round and
-# rotate into the driver's first-50 window next round (see the r4 note
-# in plans/__init__.py).
+# quality scoring.
 # ---------------------------------------------------------------------------
 
 

@@ -33,6 +33,8 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..streaming.sinks import start_batch_sink
+
 _POINTER = "_LATEST"
 
 
@@ -306,9 +308,4 @@ def start_snapshot_sink(stream: DataFrame, table_dir: str, checkpoint_dir: str):
                 batch_marker=int(batch_id),
             )
 
-    return (
-        stream.writeStream.foreachBatch(_deliver)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_batch_sink(stream, _deliver, checkpoint_dir)

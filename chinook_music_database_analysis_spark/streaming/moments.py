@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.similarity import embedding_moment_partials
-from .sinks import write_batch
+from .sinks import start_batch_sink, write_batch
 
 
 def apply_moments_batch(batch: DataFrame, batch_id: int, log_dir: str) -> None:
@@ -54,11 +54,8 @@ def start_moments_sink(
     """Maintain the moment log from an embedding stream (foreachBatch +
     checkpoint + idempotent per-batch dirs = effective exactly-once —
     the same wiring as start_scd2_sink)."""
-    return (
-        stream.writeStream.foreachBatch(
-            lambda df, batch_id: apply_moments_batch(df, batch_id, log_dir)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return start_batch_sink(
+        stream,
+        lambda df, batch_id: apply_moments_batch(df, batch_id, log_dir),
+        checkpoint_dir,
     )

@@ -32,7 +32,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.text import tokens_expr
-from .sinks import write_batch
+from .sinks import start_batch_sink, write_batch
 
 
 def read_documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -74,13 +74,10 @@ def start_postings_log_sink(
     """Maintain the postings log from a document stream: each
     micro-batch writes its own delta under ``batch_id=N``
     (idempotent overwrite; replay converges)."""
-    return (
-        stream.writeStream.foreachBatch(
-            lambda df, batch_id: write_batch(batch_postings_delta(df), batch_id, path)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return start_batch_sink(
+        stream,
+        lambda df, batch_id: write_batch(batch_postings_delta(df), batch_id, path),
+        checkpoint_dir,
     )
 
 

@@ -55,7 +55,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.temporal import scd2_history
-from .sinks import write_batch
+from .sinks import start_batch_sink, write_batch
 
 #: history log schema (src_event_id = the change event's id, kept so
 #: rows can replay as pseudo events at their original sort position).
@@ -251,13 +251,10 @@ def start_scd2_sink(
 ) -> StreamingQuery:
     """Maintain the SCD2 log from an event stream (foreachBatch +
     checkpoint + idempotent per-batch dirs = effective exactly-once)."""
-    return (
-        stream.writeStream.foreachBatch(
-            lambda df, batch_id: apply_scd2_batch(df, batch_id, path)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return start_batch_sink(
+        stream,
+        lambda df, batch_id: apply_scd2_batch(df, batch_id, path),
+        checkpoint_dir,
     )
 
 

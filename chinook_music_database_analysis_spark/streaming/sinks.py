@@ -18,6 +18,8 @@ driver's checkpoint commit after the batch completes.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StreamingQuery
 
@@ -29,19 +31,32 @@ def write_batch(df: DataFrame, batch_id: int, path: str) -> None:
     df.write.mode("overwrite").parquet(f"{path}/batch_id={batch_id}")
 
 
+def start_batch_sink(
+    stream: DataFrame,
+    per_batch: Callable[[DataFrame, int], None],
+    checkpoint_dir: str,
+) -> StreamingQuery:
+    """Start a foreachBatch query running ``per_batch(df, batch_id)``
+    on every micro-batch of ``stream`` — the one starter every
+    ``start_*`` sink uses.  The checkpoint makes delivery at-least-once;
+    ``per_batch`` must be replay-idempotent (e.g. :func:`write_batch`)
+    to make it effectively exactly-once.  ``availableNow`` drains the
+    source and stops — restarting with the same checkpoint processes
+    nothing already committed."""
+    return (
+        stream.writeStream.foreachBatch(per_batch)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
 def start_exactly_once_sink(
     stream: DataFrame, path: str, checkpoint_dir: str
 ) -> StreamingQuery:
     """Start a foreachBatch query delivering ``stream`` to ``path``
     with effective exactly-once semantics (checkpoint offsets +
-    idempotent per-batch overwrite).  ``availableNow`` drains the
-    source and stops — restarting with the same checkpoint processes
-    nothing already committed."""
-    return (
-        stream.writeStream.foreachBatch(
-            lambda df, batch_id: write_batch(df, batch_id, path)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    idempotent per-batch overwrite)."""
+    return start_batch_sink(
+        stream, lambda df, batch_id: write_batch(df, batch_id, path), checkpoint_dir
     )

@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from .sinks import write_batch
+from .sinks import start_batch_sink, write_batch
 
 
 def day_sketches(events: DataFrame) -> DataFrame:
@@ -48,13 +48,10 @@ def start_sketch_log_sink(
     """Maintain the sketch log from an event stream: each micro-batch
     writes its day sketches under its own ``batch_id=N`` directory
     (idempotent overwrite; replay converges)."""
-    return (
-        stream.writeStream.foreachBatch(
-            lambda df, batch_id: write_batch(day_sketches(df), batch_id, path)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return start_batch_sink(
+        stream,
+        lambda df, batch_id: write_batch(day_sketches(df), batch_id, path),
+        checkpoint_dir,
     )
 
 
@@ -130,13 +127,10 @@ def start_cms_log_sink(
     exactly-once requirement every additive streaming aggregate
     carries on at-least-once delivery, made concrete on the smallest
     possible state (4096 counters)."""
-    return (
-        stream.writeStream.foreachBatch(
-            lambda df, batch_id: write_batch(batch_cms(df, key), batch_id, path)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return start_batch_sink(
+        stream,
+        lambda df, batch_id: write_batch(batch_cms(df, key), batch_id, path),
+        checkpoint_dir,
     )
 
 
@@ -180,13 +174,10 @@ def start_bloom_log_sink(
     bit — so Bloom logs inherit HLL's replay immunity rather than
     CMS's strict exactly-once requirement, and the same
     ``batch_id=N`` sink discipline is belt-and-braces here."""
-    return (
-        stream.writeStream.foreachBatch(
-            lambda df, batch_id: write_batch(batch_bloom(df, key), batch_id, path)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return start_batch_sink(
+        stream,
+        lambda df, batch_id: write_batch(batch_bloom(df, key), batch_id, path),
+        checkpoint_dir,
     )
 
 

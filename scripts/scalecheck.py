@@ -51,9 +51,7 @@ QUERIES = {
     # longer pays the 22.9x bucket self-join; linear + the
     # sort-within-bucket log factor
     "dd_embedding_cosine": 1.3,
-    # the registered plan pins route="pruned" (r11): both scales time
-    # the banded bucket probe plus exact scoring of its candidates,
-    # never the stats router's broadcast dense scan
+    # the banded bucket probe plus exact scoring of its candidates
     "sim_lsh_topk": 1.3,
     "sim_ivf_topk": 1.7,
     "sim_ivf_stride_topk": 1.7,
@@ -73,9 +71,7 @@ QUERIES = {
     # r3 batch 2 — both are narrow-filter + one tiny/stratum shuffle
     "cur_temperature_mix": 1.3,
     "cur_stratified_eval": 1.3,
-    # pinned to route="pruned" like sim_lsh_topk (r11): both scales
-    # time the broadcast query-bucket probe of the corpus signature
-    # relation, never the stats router's broadcast dense scan
+    # the broadcast query-bucket probe of the corpus signature relation
     "sim_range_search": 1.3,
     # token/bigram explode + doc-keyed aggregates — linear
     "tx_repetition": 1.3,
@@ -669,9 +665,9 @@ def pca_dim_probe(spark, out_dir: str, dims=(64, 512, 2048), n_vec: int = 8000) 
     shape and the d^2 time ratio between consecutive dims.
 
     r11: d=2048 added (LLM embedding dims run 1-4k).  Above
-    PCA_FOLD_MAX_DIM the model auto-routes to the BLAS eigensolve
-    (same algorithm/grid; the exact-fold contract only matters at
-    oracle dims), so this probe ALSO verifies that routing: d<=512
+    PCA_FOLD_MAX_DIM the model runs the BLAS eigensolve (same
+    algorithm/grid; the exact-fold contract only matters at oracle
+    dims), so this probe ALSO verifies that cutover: d<=512
     exercises the fold path, d=2048 the numpy path.  Collect volume
     (#partials x (d + d^2) doubles) and the moment-pass vs eigensolve
     split are reported per dim, per the r10 verdict ask."""

@@ -1,6 +1,6 @@
 """The on-disk index store (``store.persisted``): fingerprint guard,
 staging-dir GC, concurrent-writer fallback — plus the ANN operators'
-recall, routing and PCA-drift checks."""
+recall, hot-corpus and PCA-drift checks."""
 
 from __future__ import annotations
 
@@ -400,74 +400,6 @@ def test_pair_window_cap_complete_on_benign_buckets(spark):
     assert n_cand < n * (n - 1) // 2  # strictly below the self-join
 
 
-def test_range_search_router_sparse_on_driver_dense_on_hot(spark):
-    """The r9 stats-first radius router: driver-shaped corpora stay on
-    the pruned LSH path (what the registered oracle replicates); a
-    one-cluster corpus whose query buckets run hot takes the broadcast
-    dense scan, whose result is EXACTLY the brute-force radius answer
-    (recall 1.0 — a superset of the banded contract, never less)."""
-    from chinook_music_database_analysis_spark.operators.similarity import (
-        RANGE_DENSE_CUTOVER,
-        lsh_buckets,
-        range_probe_stats,
-        range_search,
-        with_norms,
-    )
-
-    emb = spark.read.parquet(f"{SF_TEST_DIR}/embeddings.parquet")
-    n_q = 10
-    buckets = lsh_buckets(emb, lsh_n_bits(emb.count()))
-    n_corpus, cand_upper = range_probe_stats(buckets, n_q)
-    assert n_corpus == emb.count()
-    assert cand_upper < RANGE_DENSE_CUTOVER * n_q * n_corpus
-    plan = range_search(emb)._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastNestedLoopJoin" not in plan  # pruned path
-
-    # one tight cluster -> every query bucket holds the whole corpus
-    n = 120
-    hot = spark.range(n).select(
-        F.col("id").alias("vec_id"),
-        F.expr(
-            "transform(sequence(1, 8),"
-            " i -> CAST(1.0 + id * 0.0001 AS FLOAT))"
-        ).alias("embedding"),
-    )
-    hb = lsh_buckets(hot, 4)
-    hn, hc = range_probe_stats(hb, n_q)
-    assert hc >= RANGE_DENSE_CUTOVER * n_q * hn
-    dense = range_search(hot, tau=0.5, n_queries=n_q)
-    plan = dense._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastNestedLoopJoin" in plan  # dense route engaged
-
-    # dense == exact brute-force radius answer
-    wn = with_norms(hot)
-    q = wn.filter(F.col("vec_id") < n_q).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("norm").alias("q_norm"),
-    )
-    from chinook_music_database_analysis_spark.operators.similarity import _cos
-
-    exact = (
-        wn.select(
-            F.col("vec_id").alias("neighbor_id"),
-            F.col("embedding").alias("n_emb"),
-            F.col("norm").alias("n_norm"),
-        )
-        .crossJoin(q)
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            _cos("q_emb", "n_emb", "q_norm", "n_norm").alias("cos_sim"),
-        )
-        .filter(F.col("cos_sim") >= 0.5)
-    )
-    got = {(r.query_id, r.neighbor_id, r.cos_sim) for r in dense.collect()}
-    want = {(r.query_id, r.neighbor_id, r.cos_sim) for r in exact.collect()}
-    assert got == want
-
-
 def test_pca_power_model_matches_numpy(spark):
     """The quantize-then-power-iterate eigensolve must agree with
     numpy's exact eigendecomposition OF THE SAME quantized matrix:
@@ -581,146 +513,22 @@ def test_pca_drift_stable_on_anisotropic_append(spark):
     assert shift < 0.5  # centroid essentially unmoved vs 10x-var axis
 
 
-def test_range_probe_stats_count_is_exact(spark):
-    """range_probe_stats' candidate_upper is documented as the EXACT
-    pre-distinct row count of the query-bucket x corpus-bucket probe
-    join — verify by building that join and counting, on both a
-    driver-shaped corpus and a one-cluster hot corpus (where the
-    router decision hinges on this number being right)."""
-    from chinook_music_database_analysis_spark.operators.similarity import (
-        lsh_buckets,
-        range_probe_stats,
-    )
-
-    def check(emb, n_bits, n_q):
-        buckets = lsh_buckets(emb, n_bits)
-        n_corpus, cand_upper = range_probe_stats(buckets, n_q)
-        qb = buckets.filter(F.col("vec_id") < n_q).select(
-            F.col("vec_id").alias("query_id"), "tbl", "bucket"
-        )
-        joined = qb.join(buckets, ["tbl", "bucket"]).count()
-        assert cand_upper == joined, (cand_upper, joined)
-        assert n_corpus == emb.count()
-
-    emb = spark.read.parquet(f"{SF_TEST_DIR}/embeddings.parquet")
-    check(emb, lsh_n_bits(emb.count()), 10)
-
-    hot = spark.range(150).select(
-        F.col("id").alias("vec_id"),
-        F.expr(
-            "transform(sequence(1, 8), i -> CAST(1.0 + id * 0.0001 AS FLOAT))"
-        ).alias("embedding"),
-    )
-    check(hot, 4, 10)
-
-
-def test_lsh_topk_hot_route_is_exact_bruteforce(spark):
-    """lsh_topk's r9 hot-corpus route: when the stats pass measures the
-    probe at >= cutover x |q| x N, the router must answer with the
-    EXACT brute-force top-k (recall 1.0), not a degraded bucket probe —
-    verify row-for-row equality against cosine_topk on a one-cluster
-    corpus, and that the driver corpus stays on the pruned path."""
-    from chinook_music_database_analysis_spark.operators.similarity import (
-        RANGE_DENSE_CUTOVER,
-        cosine_topk,
-        lsh_buckets,
-        lsh_topk,
-        range_probe_stats,
-    )
-
-    n, n_q = 120, 10
-    hot = spark.range(n).select(
-        F.col("id").alias("vec_id"),
-        F.expr(
-            "transform(sequence(1, 8), i -> CAST(1.0 + id * 0.0001 AS FLOAT))"
-        ).alias("embedding"),
-    )
-    hb = lsh_buckets(hot, 4)
-    hn, hc = range_probe_stats(hb, n_q)
-    assert hc >= RANGE_DENSE_CUTOVER * n_q * hn  # dense route engages
-    got = {
-        (r.query_id, r.neighbor_id, r.rnk)
-        for r in lsh_topk(hot, n_queries=n_q, n_bits=4).collect()
-    }
-    want = {
-        (r.query_id, r.neighbor_id, r.rnk)
-        for r in cosine_topk(hot, n_queries=n_q).collect()
-    }
-    assert got == want and len(want) == n_q * 5
-
-    emb = spark.read.parquet(f"{SF_TEST_DIR}/embeddings.parquet")
-    bk = lsh_buckets(emb, lsh_n_bits(emb.count()))
-    cn, cc = range_probe_stats(bk, n_q)
-    assert cc < RANGE_DENSE_CUTOVER * n_q * cn  # pruned path kept
-
-
-def test_router_log_records_route_and_warns_on_dense(spark, caplog):
-    """The routers change result SEMANTICS past the cutover (exact
-    superset / exact top-k), so the decision must be observable:
-    ROUTER_LOG records every routing decision with the stats behind
-    it, and the dense engagement logs a WARNING — a registered-corpus
-    oracle mismatch after a corpus revision is then attributable to
-    the route flip at a glance (r9 advice)."""
-    import logging
-
-    from chinook_music_database_analysis_spark.operators.similarity import (
-        ROUTER_LOG,
-        lsh_buckets,
-        lsh_topk,
-        range_search,
-    )
-
-    emb = spark.read.parquet(f"{SF_TEST_DIR}/embeddings.parquet")
-    range_search(emb)
-    lsh_topk(emb)
-    for op in ("range_search", "lsh_topk"):
-        rec = ROUTER_LOG[op]
-        assert rec["route"] == "pruned_lsh"  # driver corpus: pruned path
-        assert rec["cand_upper"] < rec["bound"]
-        assert rec["n_corpus"] == emb.count()
-
-    # hot corpus: dense route recorded + warned
-    hot = spark.range(120).select(
-        F.col("id").alias("vec_id"),
-        F.expr(
-            "transform(sequence(1, 8),"
-            " i -> CAST(1.0 + id * 0.0001 AS FLOAT))"
-        ).alias("embedding"),
-    )
-    with caplog.at_level(
-        logging.WARNING,
-        logger="chinook_music_database_analysis_spark.operators.similarity",
-    ):
-        range_search(hot, tau=0.5, n_queries=10)
-    assert ROUTER_LOG["range_search"]["route"] == "dense_exact"
-    assert any("DENSE EXACT" in r.message for r in caplog.records)
-    # lsh_topk on the same hot corpus flips too (shared stats pass)
-    lsh_topk(hot, n_queries=10, buckets=lsh_buckets(hot, 4))
-    assert ROUTER_LOG["lsh_topk"]["route"] == "dense_exact"
-
-
 def test_router_dual_route_oracle_gate(spark, tmp_path):
-    """r10 verdict item 3 — dual-route oracle attributability.  The
-    routers change result SEMANTICS past the cutover, so BOTH routes
-    must pass the full DuckDB hash gate on a corpus that actually
-    CROSSES RANGE_DENSE_CUTOVER: the registered plans pin
-    route='pruned' (their oracles replicate only that path, so a
-    driver-corpus revision can never flip them off their gate), and
-    this test covers what the registry then can't — on a synthetic
-    one-cluster corpus, the forced pruned result matches the
-    REGISTERED oracle SQL verbatim and the forced dense result matches
-    a brute-force oracle, row/schema/value-exact through the same
-    compare the driver runs."""
+    """The banded LSH probe is the only path of lsh_topk and
+    range_search, and the registry's embeddings are near-orthogonal,
+    so its oracle gate never sees a clustered corpus.  This covers
+    that input: on a synthetic one-cluster corpus whose query buckets
+    hold most of the corpus, both operators must match the REGISTERED
+    oracle SQL verbatim, row/schema/value-exact through the same
+    compare the oracle-parity test runs."""
     import duckdb
 
     from chinook_music_database_analysis_spark.operators.similarity import (
-        RANGE_DENSE_CUTOVER,
+        _bucket_probe_candidates,
         lsh_buckets,
-        range_probe_stats,
         range_search,
     )
     from chinook_music_database_analysis_spark.plans import ORACLES
-    from chinook_music_database_analysis_spark.plans.extensions import _sql_cos
 
     from conftest import assert_frames_match
 
@@ -734,52 +542,21 @@ def test_router_dual_route_oracle_gate(spark, tmp_path):
     path = str(tmp_path / "embeddings.parquet")
     hot.coalesce(1).write.mode("overwrite").parquet(path)
     emb = spark.read.parquet(path)
-    # the corpus must actually cross the cutover, or this gate proves
-    # nothing about the route the registry can't reach
-    n_corpus, cand_upper = range_probe_stats(
+    # the corpus must actually be hot (the probe reaches at least half
+    # of |q| x N), or this gate proves nothing the registry doesn't
+    n_cand = _bucket_probe_candidates(
         lsh_buckets(emb, lsh_n_bits(n)), n_q
-    )
-    assert cand_upper >= RANGE_DENSE_CUTOVER * n_q * n_corpus, (
-        cand_upper,
-        n_corpus,
-    )
+    ).count()
+    assert n_cand >= 0.5 * n_q * n, n_cand
 
-    dense_topk_sql = f"""
-    WITH p AS (
-      SELECT q.vec_id AS query_id, e.vec_id AS neighbor_id,
-             {_sql_cos('q.embedding', 'e.embedding')} AS cos_sim
-      FROM embeddings q JOIN embeddings e ON e.vec_id <> q.vec_id
-      WHERE q.vec_id < {n_q}
-    )
-    SELECT query_id, neighbor_id, cos_sim,
-           CAST(ROW_NUMBER() OVER (
-             PARTITION BY query_id ORDER BY cos_sim DESC, neighbor_id
-           ) AS INTEGER) AS rnk
-    FROM p QUALIFY rnk <= 5
-    """
-    dense_range_sql = f"""
-    WITH p AS (
-      SELECT q.vec_id AS query_id, e.vec_id AS neighbor_id,
-             {_sql_cos('q.embedding', 'e.embedding')} AS cos_sim
-      FROM embeddings q JOIN embeddings e ON e.vec_id <> q.vec_id
-      WHERE q.vec_id < {n_q}
-    )
-    SELECT * FROM p WHERE cos_sim >= 0.2
-    """
     con = duckdb.connect()
     try:
         con.execute(
             f"CREATE VIEW embeddings AS SELECT * FROM '{path}/*.parquet'"
         )
         cases = [
-            ("lsh_topk_pruned", lsh_topk(emb, route="pruned"), ORACLES["sim_lsh_topk"]),
-            ("lsh_topk_dense", lsh_topk(emb, route="dense"), dense_topk_sql),
-            (
-                "range_search_pruned",
-                range_search(emb, route="pruned"),
-                ORACLES["sim_range_search"],
-            ),
-            ("range_search_dense", range_search(emb, route="dense"), dense_range_sql),
+            ("lsh_topk", lsh_topk(emb), ORACLES["sim_lsh_topk"]),
+            ("range_search", range_search(emb), ORACLES["sim_range_search"]),
         ]
         for name, df, sql in cases:
             assert_frames_match(df.toPandas(), con.sql(sql).df(), name)
@@ -788,17 +565,19 @@ def test_router_dual_route_oracle_gate(spark, tmp_path):
 
 
 def test_pca_power_model_method_routing():
-    """r11: dims above PCA_FOLD_MAX_DIM auto-route to the BLAS
-    eigensolve (the exact-fold contract path costs minutes of
-    interpreted Python at d=2048 and no oracle exists there); at
-    oracle dims the two paths must agree on the quantized covariance
-    BIT-FOR-BIT and on eigenvalues to float precision, so the routing
-    can never move a registered query's result."""
+    """Dims above PCA_FOLD_MAX_DIM run the BLAS eigensolve (the
+    exact-fold contract path costs minutes of interpreted Python at
+    d=2048 and no oracle exists there); at oracle dims the two paths
+    must agree on the quantized covariance BIT-FOR-BIT and on
+    eigenvalues to float precision, so the dim cutover can never move
+    a registered query's result."""
     import numpy as np
-    import pytest as _pytest
 
     from chinook_music_database_analysis_spark.operators.similarity import (
+        PCA_COMPONENTS,
         PCA_FOLD_MAX_DIM,
+        PCA_ITERS,
+        _pca_power_model_np,
         pca_power_model,
     )
 
@@ -806,25 +585,20 @@ def test_pca_power_model_method_routing():
     d = 64
     # 12 partials, not 3: numpy pairwise summation degenerates to the
     # sequential fold below ~8 addends, so a small partial count can't
-    # catch an association mismatch in the BLAS twin's s/ss accumulate
-    # (r12, closing the r11 advice).
+    # catch an association mismatch in the BLAS twin's s/ss accumulate.
     parts = []
     for _ in range(12):
         X = rng.normal(size=(200, d))
         X[:, 0] *= 4.0
         parts.append((200, X.sum(axis=0).tolist(), (X.T @ X).ravel().tolist()))
-    fold = pca_power_model(parts, dim=d, method="fold")
-    blas = pca_power_model(parts, dim=d, method="numpy")
-    auto = pca_power_model(parts, dim=d)  # d=64 <= cap -> fold path
-    assert fold["m_q"] == blas["m_q"] == auto["m_q"]
-    assert fold["mu_q"] == blas["mu_q"] == auto["mu_q"]
-    assert fold["trace_q"] == blas["trace_q"] == auto["trace_q"]
-    assert fold["comps"][0][0] == auto["comps"][0][0]
+    fold = pca_power_model(parts, dim=d)  # d=64 <= cap -> fold path
+    blas = _pca_power_model_np(parts, d, PCA_ITERS, PCA_COMPONENTS)
+    assert fold["m_q"] == blas["m_q"]
+    assert fold["mu_q"] == blas["mu_q"]
+    assert fold["trace_q"] == blas["trace_q"]
     for (lf, _), (lb, _) in zip(fold["comps"], blas["comps"]):
         assert abs(lf - lb) <= 1e-12 * abs(lf)
     assert PCA_FOLD_MAX_DIM == 512  # doc'd cap; probe covers 2048 via numpy
-    with _pytest.raises(ValueError, match="unknown method"):
-        pca_power_model(parts, dim=d, method="exact")
 
 
 def test_index_store_concurrent_writer_fallback(spark, tmp_path, monkeypatch):

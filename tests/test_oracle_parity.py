@@ -38,7 +38,7 @@ _CORE_EXTENSION_REPS = {
     "sim_ivf_topk",           # k-means IVF + index store
     "sim_pq_topk",            # PQ codebooks
     "sim_mrl_topk",           # matryoshka two-stage
-    "sim_range_search",       # stats-first router
+    "sim_range_search",       # broadcast LSH bucket probe, radius filter
     "sim_pca_spectrum",       # distributed moment pass + eigensolve
     "tx_stats",               # text profiling
     "tx_langid",              # n-gram language id

@@ -310,25 +310,6 @@ def test_s15_salted_join_spreads_hot_key(spark):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
 
 
-def test_driver_window_rotation_invariants():
-    """The correctness driver oracle-checks the FIRST 50 registry
-    entries; the rotation list must (a) actually lead the iteration
-    order, (b) fit inside that window with its explicit names, and
-    (c) contain no duplicates or stale names — so every query that has
-    not yet earned a driver row sits inside the checked window."""
-    from chinook_music_database_analysis_spark.plans import (
-        QUERIES,
-        _WINDOW_FIRST,
-    )
-
-    assert len(_WINDOW_FIRST) == len(set(_WINDOW_FIRST)), "duplicate rotation names"
-    assert len(_WINDOW_FIRST) <= 50, "rotation list overflows the driver window"
-    missing = [n for n in _WINDOW_FIRST if n not in QUERIES]
-    assert not missing, f"rotation names not registered: {missing}"
-    head = list(QUERIES)[: len(_WINDOW_FIRST)]
-    assert head == _WINDOW_FIRST, "rotation list does not lead iteration order"
-
-
 def test_join_strategy_hints_are_respected(spark):
     """The three physical join strategies are selectable per join via
     hints — the control surface for overriding Catalyst's size

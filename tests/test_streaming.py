@@ -454,141 +454,6 @@ def test_incremental_sketch_log_maintenance(spark, tmp_path):
     } == approx
 
 
-def test_stateful_running_totals_v2_matches_v1_and_batch(spark):
-    """transformWithStateInPandas (Spark 4 API) must emit the same
-    final per-user totals as the applyInPandasWithState form and the
-    batch aggregate — the migration-safety contract between the two
-    stateful surfaces.  The new API's state server speaks protobuf to
-    the Python driver worker, so the test is gated on the protobuf
-    package (absent in this container; the processor itself is
-    exercised unit-style below either way)."""
-    import pytest
-
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError:
-        pytest.skip("transformWithStateInPandas needs google.protobuf at runtime")
-    from pyspark.sql import functions as F
-
-    from chinook_music_database_analysis_spark.streaming.stateful_v2 import (
-        user_running_totals_stream_v2,
-    )
-
-    stream = user_running_totals_stream_v2(read_events_stream(spark, SF_TEST_DIR))
-    q = (
-        stream.writeStream.format("memory")
-        .queryName("t_state_v2")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = (
-        spark.table("t_state_v2")
-        .groupBy("user_id")
-        .agg(
-            F.max("n_events").alias("n_events"),
-            F.max("total_value").alias("total_value"),
-        )
-        .toPandas()
-        .set_index("user_id")
-        .sort_index()
-    )
-    want = (
-        spark.read.parquet(f"{SF_TEST_DIR}/events.parquet")
-        .groupBy("user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum("value"), 2).alias("total_value"),
-        )
-        .toPandas()
-        .set_index("user_id")
-        .sort_index()
-    )
-    assert (got.n_events == want.n_events).all()
-    # value sums agree to rounding noise (fp accumulation order differs
-    # between the per-batch Python accumulator and the batch SUM)
-    assert (got.total_value - want.total_value).abs().max() <= 0.05
-
-
-def test_running_totals_processor_unit():
-    """The StatefulProcessor accumulates across calls and emits the
-    running totals — exercised unit-style against a fake ValueState so
-    the processor logic runs even without the protobuf-backed state
-    server this container lacks."""
-    import pandas as pd
-
-    from chinook_music_database_analysis_spark.streaming.stateful_v2 import (
-        RunningTotalsProcessor,
-    )
-
-    class _FakeValueState:
-        def __init__(self):
-            self._v = None
-
-        def exists(self):
-            return self._v is not None
-
-        def get(self):
-            return self._v
-
-        def update(self, v):
-            self._v = v
-
-    class _FakeHandle:
-        def getValueState(self, name, schema):
-            return _FakeValueState()
-
-    proc = RunningTotalsProcessor()
-    proc.init(_FakeHandle())
-    out1 = list(
-        proc.handleInputRows((7,), iter([pd.DataFrame({"value": [1.0, 2.0]})]), None)
-    )[0]
-    assert out1.iloc[0].tolist() == [7, 2, 3.0]
-    out2 = list(
-        proc.handleInputRows((7,), iter([pd.DataFrame({"value": [4.0]})]), None)
-    )[0]
-    assert out2.iloc[0].tolist() == [7, 3, 7.0]
-    proc.close()
-
-
-def test_stateful_v2_builder_wiring(spark, monkeypatch):
-    """user_running_totals_stream_v2's wiring runs in CI even without
-    the protobuf runtime the real transformWithStateInPandas state
-    server needs: the GroupedData method is stubbed to capture its
-    arguments, proving the builder keys by user_id and passes the
-    RunningTotalsProcessor / output schema / Update / None-time
-    contract (the processor body itself is covered by
-    test_running_totals_processor_unit).  Together these leave no
-    always-skipped code path in streaming/stateful_v2."""
-    from pyspark.sql.group import GroupedData
-
-    from chinook_music_database_analysis_spark.streaming.stateful_v2 import (
-        OUTPUT_SCHEMA,
-        RunningTotalsProcessor,
-        user_running_totals_stream_v2,
-    )
-
-    captured = {}
-
-    def fake_tws(self, statefulProcessor, outputStructType, outputMode, timeMode, **kw):
-        captured.update(
-            processor=statefulProcessor,
-            schema=outputStructType,
-            mode=outputMode,
-            time=timeMode,
-        )
-        return spark.createDataFrame([], outputStructType)
-
-    monkeypatch.setattr(GroupedData, "transformWithStateInPandas", fake_tws)
-    out = user_running_totals_stream_v2(read_events_stream(spark, SF_TEST_DIR))
-    assert isinstance(captured["processor"], RunningTotalsProcessor)
-    assert captured["schema"] == OUTPUT_SCHEMA
-    assert captured["mode"] == "Update"
-    assert captured["time"] == "None"
-    assert out.schema == OUTPUT_SCHEMA
-
-
 def test_streaming_postings_log_matches_batch_index(spark, tmp_path):
     """Incremental BM25 index maintenance (streaming/postings.py): the
     postings + doc-length relations read back from the streamed
