@@ -9,9 +9,9 @@ corpus statistic and the derived view are all entries under one key::
   ``newSession()`` never shares entries with its parent and a recycled
   ``id()`` cannot serve a dead session's value;
 * **snapshot** — the stat signature (:func:`table_files`: size +
-  mtime_ns of every data file) of each corpus table under ``sf_dir``, or
-  the mounted table-set seq,
-  so a rewritten corpus or a re-mounted handle is a miss for every kind.
+  mtime_ns of every data file) of each corpus table under ``sf_dir``,
+  so a rewritten corpus (a re-mounted table set included) is a miss for
+  every kind.
 
 Entries built over the on-disk index store also record the stat of each
 store ``_FINGERPRINT`` they read (:func:`depends_on`); nested entries pass
@@ -88,14 +88,10 @@ def _path_sig(path: str) -> tuple | None:
 
 
 def _snapshot(sf_dir: str) -> tuple:
-    """Identity of the corpus version behind ``sf_dir``: the mounted
-    table-set seq for an override handle, else the stat signature of
-    every corpus table file.  No file contents are read."""
-    from .sources.session import TABLES, table_set_seq
+    """Identity of the corpus version behind ``sf_dir``: the stat
+    signature of every corpus table file.  No file contents are read."""
+    from .sources.session import TABLES
 
-    seq = table_set_seq(sf_dir)
-    if seq is not None:
-        return (seq,)
     return tuple(_path_sig(os.path.join(sf_dir, f"{t}.parquet")) for t in TABLES)
 
 

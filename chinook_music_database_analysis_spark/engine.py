@@ -168,34 +168,14 @@ class Engine:
         "spark_rows", "oracle_rows"}; queries without an oracle (none
         currently) report {"oracle": None}.
         """
-        import duckdb
+        from .testing import frames_mismatch, oracle_connection
 
-        from .sources import TABLES
-        from .sources.session import TABLE_OVERRIDES
-        from .testing import frames_mismatch
-
-        if self.sf_dir in TABLE_OVERRIDES:
-            # A mounted table set has no parquet directory for DuckDB
-            # to read — fail with the actual situation instead of a
-            # confusing file-not-found from inside the oracle query
-            # (r12 review).  validate_all records this per query under
-            # "errors": honest "unverifiable here", not a silent pass.
-            raise ValueError(
-                f"validate({name!r}): {self.sf_dir!r} is a mounted table"
-                " set (TABLE_OVERRIDES) — the DuckDB oracle needs a"
-                " parquet data directory"
-            )
         oracle = ORACLES.get(name)
         if oracle is None:
             return {"query": name, "oracle": None}
         spark_pdf = self.query(name).toPandas()
-        con = duckdb.connect()
+        con = oracle_connection(self.sf_dir)
         try:
-            for t in TABLES:
-                con.execute(
-                    f"CREATE OR REPLACE VIEW {t} AS"
-                    f" SELECT * FROM '{self.sf_dir}/{t}.parquet'"
-                )
             oracle_pdf = con.sql(oracle).df()
         finally:
             con.close()

@@ -17,6 +17,7 @@ md5-HLL sketch (r8), and the portable count-min sketch (late r8).
 
 from __future__ import annotations
 
+from ..operators.layout import _IN_MASK, _SPREAD_STEPS
 from .views import NATION0
 
 #: name -> Spark SQL text equivalent to the same-named registry query.
@@ -215,8 +216,8 @@ SPARK_SQL["ev_anomaly_hours"] = """
 
 
 def _zorder_spread_sql(expr: str) -> str:
-    out = f"({expr} & 65535)"
-    for shift, mask in ((8, 0x00FF00FF), (4, 0x0F0F0F0F), (2, 0x33333333), (1, 0x55555555)):
+    out = f"({expr} & {_IN_MASK})"
+    for shift, mask in _SPREAD_STEPS:
         out = f"((({out}) | shiftleft({out}, {shift})) & {mask})"
     return out
 

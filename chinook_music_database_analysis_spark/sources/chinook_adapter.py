@@ -142,37 +142,25 @@ def adapt_chinook_tables(
     }
 
 
-def register_chinook(spark: SparkSession, chinook: dict[str, DataFrame]) -> dict[str, DataFrame]:
-    """Adapt and register as temp views (the ``use chinook`` analog)."""
-    tables = adapt_chinook_tables(chinook)
-    for name, df in tables.items():
-        df.createOrReplaceTempView(name)
-    return tables
-
-
 def mount_chinook(
     spark: SparkSession,
     chinook: dict[str, DataFrame],
-    handle: str = "chinook://default",
+    path: str,
     brand_from: str = "artist",
 ) -> str:
-    """Mount adapted Chinook tables under a pseudo sf_dir handle so the
-    whole query registry runs on them::
+    """Write the adapted Chinook tables as ``{path}/{table}.parquet`` and
+    return ``path``: a table directory like any other, so the whole
+    query registry, the session cache and the DuckDB oracle
+    (``Engine.validate``) run on it unchanged::
 
-        handle = mount_chinook(spark, my_chinook_tables)
-        QUERIES["q02_top_parts_nation0"](spark, handle)
+        sf_dir = mount_chinook(spark, my_chinook_tables, "/data/chinook")
+        QUERIES["q02_top_parts_nation0"](spark, sf_dir)
 
-    Remember to set CHINOOK_SPARK_NATION0=USA (before import) so the
-    nation filter means USA.
+    Re-mounting over the same ``path`` rewrites the files, which moves
+    the session cache's snapshot.  Remember to set
+    CHINOOK_SPARK_NATION0=USA (before import) so the nation filter
+    means USA.
     """
-    from .session import TABLE_OVERRIDES
-
-    if handle in TABLE_OVERRIDES:
-        # Re-mount: release relations cached against the old table set
-        # (the session cache keys on table-set identity, so stale hits
-        # are impossible either way — this frees executor storage).
-        from ..cache import invalidate
-
-        invalidate(handle)
-    TABLE_OVERRIDES[handle] = adapt_chinook_tables(chinook, brand_from=brand_from)
-    return handle
+    for name, df in adapt_chinook_tables(chinook, brand_from=brand_from).items():
+        df.write.mode("overwrite").parquet(f"{path}/{name}.parquet")
+    return path

@@ -12,9 +12,10 @@ ref /root/reference/SQL_file.sql:1).  The engine's equivalents:
   typed); the columnar formats get vectorized scans with filter
   pushdown and column pruning.
 
-All readers return plain DataFrames, so adapted sources compose with
-the registry via ``sources.session.TABLE_OVERRIDES`` exactly like the
-Chinook adapter does.
+All readers return plain DataFrames; an adapted source joins the
+registry by being written as a table directory
+(``{sf_dir}/{table}.parquet``), exactly as the Chinook adapter's
+``mount_chinook`` does.
 """
 
 from __future__ import annotations

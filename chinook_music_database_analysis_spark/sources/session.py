@@ -151,53 +151,14 @@ class _Tables(dict):
         return df
 
 
-#: Mounted non-parquet table sets keyed by a pseudo sf_dir handle —
-#: how the Chinook adapter (sources.chinook_adapter) plugs the
-#: reference's own schema into every registered query.
-TABLE_OVERRIDES: dict[str, dict[str, DataFrame]] = {}
-
-#: handle -> (mounted table dict, monotonic seq).  Holding the dict
-#: STRONGLY makes the `is` check in :func:`table_set_seq` sound: a
-#: re-mounted dict can never reuse the old one's memory while the
-#: record still references it (r11 review — the previous scheme keyed
-#: caches on bare id(tables), which CPython can hand to a NEW dict
-#: after the old one is garbage-collected, silently serving a stale
-#: cached view for the re-mounted handle).
-_MOUNT_RECORDS: dict[str, tuple[dict, int]] = {}
-_MOUNT_COUNTER = __import__("itertools").count(1)
-
-
-def table_set_seq(handle: str) -> int | None:
-    """Stable identity of the table set mounted under ``handle`` —
-    changes iff the mounted dict OBJECT changes (raw re-assignment to
-    TABLE_OVERRIDES included), None for plain parquet dirs (the path
-    is the identity there).  The session cache keys on this."""
-    tables = TABLE_OVERRIDES.get(handle)
-    if tables is None:
-        # Unmounted handle: drop its record so the strongly-held table
-        # dict (DataFrames and all) can be collected — long sessions
-        # that mount/unmount many distinct handles must not accumulate
-        # dead table sets (r11 advice).
-        _MOUNT_RECORDS.pop(handle, None)
-        return None
-    rec = _MOUNT_RECORDS.get(handle)
-    if rec is None or rec[0] is not tables:
-        rec = (tables, next(_MOUNT_COUNTER))
-        _MOUNT_RECORDS[handle] = rec
-    return rec[1]
-
-
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     """Lazy map of every driver table, keyed by name.
 
     Reads are lazy in both senses: the footer is read on first access,
     and Catalyst prunes columns / pushes filters into the Parquet scan
-    per consuming query.  A mounted override handle (TABLE_OVERRIDES)
-    returns that table set instead.
+    per consuming query.
     """
     ensure_session_confs(spark)
-    if sf_dir in TABLE_OVERRIDES:
-        return TABLE_OVERRIDES[sf_dir]
     return _Tables(spark, sf_dir)
 
 
@@ -210,21 +171,16 @@ def register_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     queries can consume it like a catalog object.
     """
     dfs = load_tables(spark, sf_dir)
-    # Iterate TABLES (not dfs.items()) — the lazy map materializes a
-    # table only on access, so .items() would be empty here.  A mounted
-    # override set may be PARTIAL (the Chinook adapter maps 7 of the 10
-    # driver tables): register what it has rather than KeyError on the
-    # absent ones — queries over missing tables fail at their own call,
-    # with a clear missing-view message, not at mount time (r10 review).
-    for name in TABLES:
-        if sf_dir in TABLE_OVERRIDES and name not in TABLE_OVERRIDES[sf_dir]:
-            continue
+    # A table set may be PARTIAL (a mounted Chinook directory holds 7 of
+    # the 10 driver tables): register what exists — a query over an
+    # absent table fails at its own call with a missing-view message.
+    present = [t for t in TABLES if os.path.exists(f"{sf_dir}/{t}.parquet")]
+    for name in present:
         dfs[name].createOrReplaceTempView(name)
     # Deferred import: plans depends on functions only.
     from ..plans.views import nation0_type_sales
 
-    view_base = {"customer", "orders", "lineitem", "part", "nation"}
-    if sf_dir not in TABLE_OVERRIDES or view_base <= set(TABLE_OVERRIDES[sf_dir]):
+    if {"customer", "orders", "lineitem", "part", "nation"} <= set(present):
         nation0_type_sales(spark, sf_dir).createOrReplaceTempView(
             "nation0_type_sales"
         )

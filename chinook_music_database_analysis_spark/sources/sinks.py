@@ -76,45 +76,6 @@ def read_evolved(spark, path: str) -> DataFrame:
     return spark.read.option("mergeSchema", "true").parquet(path)
 
 
-def compact_parquet(
-    spark, path: str, target_file_bytes: int = 128 * 1024 * 1024
-) -> int:
-    """Small-files compaction: rewrite a Parquet directory into
-    ~``target_file_bytes`` files and return the new file count.
-
-    Long-lived ingest (streaming foreachBatch sinks, frequent small
-    appends) fragments a table into thousands of tiny files; scan cost
-    then goes per-file (footer reads, task scheduling), not per-byte.
-    Compaction = read → repartition to ceil(bytes/target) → swap via a
-    staging directory.  The repartition is round-robin (no key), so it
-    is one shuffle of the table with perfectly balanced output files;
-    run it per-partition-directory at 100 TB so each date partition
-    compacts independently (and concurrently).
-
-    Swap atomicity: the two-rename swap (path→.old, staging→path) has
-    a window where ``path`` does not exist; a crash inside it strands
-    the data under ``.old`` (recovery: rename ``.old`` back), and a
-    concurrent reader can see ENOENT.  Plain filesystems offer no
-    multi-path atomic rename — a table format (Delta/Iceberg) makes
-    compaction a metadata swap and is the production answer; this
-    helper is for bounded maintenance windows.
-    """
-    import glob
-    import os
-    import shutil
-
-    files = glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True)
-    total = sum(os.path.getsize(f) for f in files)
-    n_out = max(1, -(-total // target_file_bytes))
-    staging = path.rstrip("/") + ".compacting"
-    spark.read.parquet(path).repartition(n_out).write.mode("overwrite").parquet(staging)
-    old = path.rstrip("/") + ".old"
-    os.rename(path, old)
-    os.rename(staging, path)
-    shutil.rmtree(old)
-    return n_out
-
-
 def write_sorted_by(
     df: DataFrame, path: str, col: str, n_files: int = 8, mode: str = "overwrite"
 ) -> None:
@@ -136,77 +97,3 @@ def write_sorted_by(
         .write.mode(mode)
         .parquet(path)
     )
-
-
-def _swap_in(spark, df: DataFrame, path: str) -> None:
-    """Write ``df`` to a staging dir and swap it into ``path`` (same
-    two-rename window as compact_parquet — see its docstring for the
-    atomicity contract; a table format makes this a metadata commit)."""
-    import os
-    import shutil
-
-    staging = path.rstrip("/") + ".staging"
-    df.write.mode("overwrite").parquet(staging)
-    old = path.rstrip("/") + ".old"
-    os.rename(path, old)
-    os.rename(staging, path)
-    shutil.rmtree(old)
-
-
-def merge_upsert(
-    spark, path: str, updates: DataFrame, key: str, evolve_schema: bool = False
-) -> None:
-    """Copy-on-write MERGE (upsert) on a plain-Parquet table: rows of
-    ``updates`` replace same-``key`` target rows, new keys append —
-    ``WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *``
-    on a table format.
-
-    Plan: ONE left-anti join of target against the (typically small,
-    broadcastable) update set, then a union write — the target is
-    scanned once and never shuffled beyond the join.  At 100 TB run
-    per partition directory so only touched partitions rewrite
-    (copy-on-write amplification is the known cost; MoR/deletion
-    vectors are the table-format answer).
-
-    Updates carrying columns the table lacks are rejected unless
-    ``evolve_schema=True`` (then kept rows surface NULL for them —
-    mergeSchema-style additive evolution); silently dropping them, the
-    pre-r12 behavior, read as "stored" to the caller.
-    """
-    from pyspark.sql import functions as F
-
-    target = spark.read.parquet(path)
-    extra = [c for c in updates.columns if c not in target.columns]
-    if extra and not evolve_schema:
-        raise ValueError(
-            f"merge into {path}: updates carry new column(s) {extra};"
-            " pass evolve_schema=True to add them, or drop them first"
-        )
-    kept = target.join(F.broadcast(updates.select(key)), key, "left_anti")
-    if extra:
-        merged = kept.unionByName(updates, allowMissingColumns=True)
-    else:
-        merged = kept.unionByName(updates.select(*target.columns))
-    _swap_in(spark, merged, path)
-
-
-def delete_rows(spark, path: str, predicate) -> int:
-    """Copy-on-write DELETE on a plain-Parquet table: rewrite without
-    the rows matching ``predicate`` (a Column or SQL string) and
-    return how many were removed — the right-to-be-forgotten
-    primitive.  Derived stores (signature tables, caches) must be
-    re-derived or deleted alongside; ``cache.invalidate`` drops the
-    session-cached ones.
-    """
-    from pyspark.sql import functions as F
-
-    pred = F.expr(predicate) if isinstance(predicate, str) else predicate
-    # One scan instead of three: count only the MATCHING rows (the
-    # filter prunes at the scan), and let _swap_in's rewrite be the
-    # single full read.  The old shape paid count-before + count-after
-    # + rewrite = 3 full table scans per delete (r10 review).
-    target = spark.read.parquet(path)
-    n_removed = target.filter(pred).count()
-    if n_removed:
-        _swap_in(spark, target.filter(~pred | pred.isNull()), path)
-    return n_removed

@@ -1,10 +1,11 @@
 """Snapshot-versioned Parquet tables: atomic publishes + time travel.
 
-``compact_parquet`` (sinks.py) documents its honest weakness: a
-two-rename swap has a window where the table path does not exist.
-This module closes that window with the mechanism real table formats
-(Delta, Iceberg) use — **immutable version directories plus one
-atomically-swapped pointer**:
+Rewriting a plain Parquet directory in place (a two-rename swap) has a
+window where the table path does not exist.  This module is the
+engine's one compaction / MERGE / DELETE path and has no such window:
+it uses the mechanism real table formats (Delta, Iceberg) use —
+**immutable version directories plus one atomically-swapped
+pointer**:
 
 - every write lands in a fresh ``v=N/`` directory (never mutated),
 - readers resolve the current version through a ``_LATEST`` pointer
@@ -175,7 +176,7 @@ def compact_snapshot(
 ) -> int:
     """Compaction as a snapshot operation: rewrite the CURRENT version
     into ~target-size files as a NEW version and publish.  No reader
-    ever sees a missing or half-written table — the compact_parquet
+    ever sees a missing or half-written table — the in-place swap's
     atomicity window does not exist here; rows are byte-identical
     (verified in tests)."""
     import glob
@@ -228,9 +229,9 @@ def merge_snapshot(
     evolve_schema: bool = False,
 ) -> int:
     """MERGE (upsert) as a snapshot operation: same-key rows replaced,
-    new keys inserted, published as a NEW version — sinks.merge_upsert's
-    copy-on-write plan (one anti-join against the broadcast update set,
-    one union write) with the atomic-publish and time-travel guarantees
+    new keys inserted, published as a NEW version — a copy-on-write
+    plan (one anti-join against the broadcast update set, one union
+    write) with the atomic-publish and time-travel guarantees
     on top: readers switch whole-merge-or-nothing, and the pre-merge
     state stays readable until vacuumed.
 
@@ -270,8 +271,7 @@ def delete_snapshot_rows(
     target = read_snapshot(spark, table_dir)
     # SQL DELETE keeps rows where the predicate is NULL (only
     # predicate-TRUE rows go); plain ~cond drops NULL-predicate rows
-    # too — silent data loss on any nullable column (r10 review; the
-    # sibling sinks.delete_rows already had the guard).
+    # too — silent data loss on any nullable column (r10 review).
     return write_snapshot(target.filter(~cond | cond.isNull()), table_dir)
 
 

@@ -19,9 +19,7 @@ fingerprint.
 
 At 100 TB the analog is the index table a production ANN deployment
 versions beside the corpus (FAISS index files / a bucketed warehouse
-table); the fingerprint is the corpus snapshot id.  Mounted override
-table sets (TABLE_OVERRIDES) stay session-cached: they are ephemeral by
-construction.
+table); the fingerprint is the corpus snapshot id.
 """
 
 from __future__ import annotations
@@ -37,7 +35,6 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 
 from .cache import depends_on, memo, table_files
-from .sources.session import table_set_seq
 
 #: Root of every corpus's store directory (a deployment path).
 ROOT = os.environ.get(
@@ -45,13 +42,11 @@ ROOT = os.environ.get(
     os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".index"),
 )
 
-#: kind -> "load" | "train" | "session", recorded by :func:`persisted`
-#: for every store access in this process: the bench reads this to
-#: report which index relations were served pre-baked from disk
-#: ("load") vs trained inside the measured run ("train") vs
-#: session-cached without a store ("session", mounted override tables).
-#: "train" wins over "load" — a kind that trained at least once in the
-#: run was PAID in the run.
+#: kind -> "load" | "train", recorded by :func:`persisted` for every
+#: store access in this process: the bench reads this to report which
+#: index relations were served pre-baked from disk ("load") vs trained
+#: inside the measured run ("train").  "train" wins over "load" — a kind
+#: that trained at least once in the run was PAID in the run.
 STORE_EVENTS: dict[str, str] = {}
 
 
@@ -172,7 +167,7 @@ def persisted(
 ) -> DataFrame:
     """Session-memoized relation backed by the on-disk index store: load
     when the fingerprint matches, else train and swap in, then serve the
-    read-back.  Mounted override tables are session-cached only.
+    read-back.
 
     ``params`` names the GOVERNING CONSTANTS of the build (banding knobs,
     df caps, shingle k, damping...) and is mixed into the stored
@@ -199,10 +194,6 @@ def persisted(
     directory pruning — an InMemoryRelation would materialize the FULL
     relation and filter per cache batch instead.
     """
-    if table_set_seq(sf_dir) is not None:
-        _store_event(kind, "session")
-        return memo(kind, spark, sf_dir, build, persist=cache)
-
     def load_or_build() -> DataFrame:
         fp = corpus_fp(spark, sf_dir, table)
         if params:

@@ -1,4 +1,5 @@
-"""Driver-compare mirror, shared by the test suite and the fuzz gate.
+"""Driver-compare mirror and DuckDB oracle connection, shared by the
+test suite, the fuzz gate and ``Engine.validate``.
 
 The correctness driver compares Spark vs DuckDB results
 order-insensitively: row count + sorted column names + values after a
@@ -10,7 +11,31 @@ so the logic lives here once.
 
 from __future__ import annotations
 
+import os
+
 import pandas as pd
+
+
+def oracle_connection(sf_dir: str):
+    """A DuckDB connection with one view per table present under
+    ``sf_dir``: a plain ``{table}.parquet`` file is read directly, a
+    Spark-written ``{table}.parquet`` directory through
+    ``'<dir>/*.parquet'`` (DuckDB finds no files at a bare directory
+    path).  Absent tables are skipped, as ``register_views`` skips
+    them."""
+    import duckdb
+
+    from .sources import TABLES
+
+    con = duckdb.connect()
+    for t in TABLES:
+        path = f"{sf_dir}/{t}.parquet"
+        if os.path.isdir(path):
+            path += "/*.parquet"
+        elif not os.path.exists(path):
+            continue
+        con.execute(f"CREATE OR REPLACE VIEW {t} AS SELECT * FROM '{path}'")
+    return con
 
 
 def normalize(pdf: pd.DataFrame) -> pd.DataFrame:

@@ -353,11 +353,12 @@ def build_corpus(variant: str, rebuild: bool = False) -> str:
 # ---------------------------------------------------------------------------
 
 def run_variant(variant: str, only: set[str] | None, resume: bool) -> int:
-    import duckdb
-
     from chinook_music_database_analysis_spark.plans import ORACLES, QUERIES
-    from chinook_music_database_analysis_spark.sources import TABLES, get_spark
-    from chinook_music_database_analysis_spark.testing import frames_mismatch
+    from chinook_music_database_analysis_spark.sources import get_spark
+    from chinook_music_database_analysis_spark.testing import (
+        frames_mismatch,
+        oracle_connection,
+    )
 
     out_dir = build_corpus(variant)
     report_path = os.path.join(OUT_ROOT, f"report_{variant}.json")
@@ -367,12 +368,7 @@ def run_variant(variant: str, only: set[str] | None, resume: bool) -> int:
             results = json.load(fh)
 
     spark = get_spark(f"fuzzgate-{variant}")
-    con = duckdb.connect()
-    for tname in TABLES:
-        con.execute(
-            f"CREATE OR REPLACE VIEW {tname} AS "
-            f"SELECT * FROM '{out_dir}/{tname}.parquet'"
-        )
+    con = oracle_connection(out_dir)
 
     names = [n for n in sorted(QUERIES) if not only or n in only]
     bad = 0

@@ -7,11 +7,18 @@ from __future__ import annotations
 
 import os
 
-import duckdb
 import pandas as pd
 import pytest
 
-from chinook_music_database_analysis_spark.sources import TABLES, get_spark
+from chinook_music_database_analysis_spark.sources import get_spark
+
+# Oracle connection and compare logic live in the package so the fuzz
+# gate (scripts/fuzzgate.py) and Engine.validate apply the IDENTICAL
+# driver mirror.
+from chinook_music_database_analysis_spark.testing import (
+    frames_mismatch,
+    oracle_connection,
+)
 
 #: Tests default to the smallest SF for speed; CI can point elsewhere.
 SF_TEST_DIR = os.environ.get("SF_TEST_DIR", "/root/testdata/sf0.001")
@@ -25,22 +32,18 @@ def spark():
 
 @pytest.fixture(scope="session")
 def ddb():
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE OR REPLACE VIEW {t} AS SELECT * FROM '{SF_TEST_DIR}/{t}.parquet'"
-        )
+    con = oracle_connection(SF_TEST_DIR)
     yield con
     con.close()
 
 
-# Compare logic lives in the package so the fuzz gate
-# (scripts/fuzzgate.py) applies the IDENTICAL driver mirror; re-export
-# for the existing test imports.
-from chinook_music_database_analysis_spark.testing import (  # noqa: E402
-    frames_mismatch,
-    normalize,
-)
+def write_table_dir(path, tables: dict) -> str:
+    """Write ``tables`` ({name: DataFrame}) as a table directory of
+    ``{path}/{name}.parquet`` — the one table source every query reads —
+    and return ``path``."""
+    for name, df in tables.items():
+        df.write.mode("overwrite").parquet(f"{path}/{name}.parquet")
+    return str(path)
 
 
 def assert_frames_match(spark_pdf: pd.DataFrame, oracle_pdf: pd.DataFrame, name: str):

@@ -32,6 +32,7 @@ import pytest
 
 import chinook_music_database_analysis_spark.plans.parity as parity
 import chinook_music_database_analysis_spark.plans.views as views
+from chinook_music_database_analysis_spark import store
 from chinook_music_database_analysis_spark.cache import invalidate
 from chinook_music_database_analysis_spark.plans import QUERIES
 from chinook_music_database_analysis_spark.sources.chinook_adapter import mount_chinook
@@ -86,8 +87,11 @@ def chinook_real(spark):
 
 
 @pytest.fixture(scope="module")
-def real_handle(spark, chinook_real):
-    return mount_chinook(spark, chinook_real, handle="chinook://real")
+def real_handle(spark, chinook_real, tmp_path_factory):
+    tmp_path = tmp_path_factory.mktemp("chinook")
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(store, "ROOT", str(tmp_path))
+        yield mount_chinook(spark, chinook_real, str(tmp_path / "real"))
 
 
 @pytest.fixture(autouse=True)
@@ -120,9 +124,10 @@ def test_churn_country_anchors(spark, real_handle):
     assert rows["Germany"].churn_rate_pct == 50.0
 
 
-def test_top_usa_album_anchors(spark, chinook_real):
+def test_top_usa_album_anchors(spark, chinook_real, tmp_path, monkeypatch):
+    monkeypatch.setattr(store, "ROOT", str(tmp_path))
     handle = mount_chinook(
-        spark, chinook_real, handle="chinook://real-albums", brand_from="album"
+        spark, chinook_real, str(tmp_path / "real-albums"), brand_from="album"
     )
     got = {r.p_brand: r.revenue for r in QUERIES["q09b_top_brands_top_types"](spark, handle).collect()}
     assert got["From The Muddy Banks Of The Wishkah"] == 27.72

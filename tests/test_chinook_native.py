@@ -14,6 +14,7 @@ import pytest
 
 import chinook_music_database_analysis_spark.plans.parity as parity
 import chinook_music_database_analysis_spark.plans.views as views
+from chinook_music_database_analysis_spark import store
 from chinook_music_database_analysis_spark.cache import invalidate
 from chinook_music_database_analysis_spark.plans import QUERIES
 from chinook_music_database_analysis_spark.sources.chinook_adapter import mount_chinook
@@ -21,10 +22,10 @@ from chinook_music_database_analysis_spark.sources.chinook_adapter import mount_
 D = dt.datetime
 
 
-@pytest.fixture(scope="module")
-def chinook_handle(spark):
+def micro_chinook(spark):
+    """The micro-fixture's seven Chinook tables."""
     c = spark.createDataFrame
-    chinook = {
+    return {
         "genre": c(
             [(1, "Rock"), (2, "Jazz"), (3, "Metal"), (4, "Classical")],
             "genre_id int, name string",
@@ -74,8 +75,14 @@ def chinook_handle(spark):
             "invoice_line_id int, invoice_id int, track_id int, unit_price double, quantity int",
         ),
     }
-    handle = mount_chinook(spark, chinook, handle="chinook://micro")
-    return handle
+
+
+@pytest.fixture(scope="module")
+def chinook_handle(spark, tmp_path_factory):
+    tmp_path = tmp_path_factory.mktemp("chinook")
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(store, "ROOT", str(tmp_path))
+        yield mount_chinook(spark, micro_chinook(spark), str(tmp_path / "micro"))
 
 
 @pytest.fixture(autouse=True)
@@ -221,7 +228,7 @@ def test_q05_top_customers_golden(spark, chinook_handle):
     }
 
 
-def test_q09b_top_albums_revenue_tie_golden(spark):
+def test_q09b_top_albums_revenue_tie_golden(spark, tmp_path, monkeypatch):
     """Micro-fixture analogue of the docx top-USA-albums anchor
     (BASELINE.md: 'From The Muddy Banks Of The Wishkah' and 'Are You
     Experienced?' BOTH at $27.72): two albums in the same genre with
@@ -257,9 +264,8 @@ def test_q09b_top_albums_revenue_tie_golden(spark):
             "invoice_line_id int, invoice_id int, track_id int, unit_price double, quantity int",
         ),
     }
-    handle = mount_chinook(
-        spark, chinook, handle="chinook://tie", brand_from="album"
-    )
+    monkeypatch.setattr(store, "ROOT", str(tmp_path))
+    handle = mount_chinook(spark, chinook, str(tmp_path / "tie"), brand_from="album")
     got = (
         QUERIES["q09b_top_brands_top_types"](spark, handle)
         .orderBy("brand_rank")

@@ -16,7 +16,7 @@ from chinook_music_database_analysis_spark.operators.quality import (
 )
 from chinook_music_database_analysis_spark.sources.sinks import write_fact_by_date
 
-from conftest import SF_TEST_DIR
+from conftest import SF_TEST_DIR, write_table_dir
 
 
 def test_engine_sql_entry_over_view(spark):
@@ -199,26 +199,6 @@ def test_dynamic_partition_pruning_on_date_partitioned_fact(spark, tmp_path):
     joined.collect()  # sanity: executes
 
 
-def test_compact_parquet_reduces_files_preserves_rows(spark, tmp_path):
-    """Fragmented table (64 tiny files) compacts to the computed file
-    count with identical content."""
-    import glob
-
-    from chinook_music_database_analysis_spark.sources.sinks import compact_parquet
-
-    path = str(tmp_path / "frag")
-    orders = spark.read.parquet(f"{SF_TEST_DIR}/orders.parquet")
-    orders.repartition(64).write.parquet(path)
-    assert len(glob.glob(f"{path}/*.parquet")) == 64
-    before = orders.count()
-    n_out = compact_parquet(spark, path, target_file_bytes=1 << 30)
-    files_after = glob.glob(f"{path}/*.parquet")
-    assert len(files_after) == n_out == 1
-    after = spark.read.parquet(path)
-    assert after.count() == before
-    assert set(after.columns) == set(orders.columns)
-
-
 def test_python_datasource_synthetic_events(spark):
     """Custom Python Data Source (Spark 4 connector API): partitioned
     deterministic generation — correct row count, declared parallelism,
@@ -335,59 +315,6 @@ def test_sorted_write_layout_enables_rowgroup_skipping(spark, tmp_path):
     assert "PushedFilters" in plan and "o_custkey" in plan.split("PushedFilters")[1][:120]
 
 
-def test_merge_upsert_and_delete_rows(spark, tmp_path):
-    """Copy-on-write MERGE/DELETE on plain Parquet: updates replace
-    matched keys, new keys insert, untouched rows survive byte-for-
-    byte; delete removes exactly the predicate matches (NULL predicate
-    rows are kept, per SQL DELETE semantics) and reports the count."""
-    from chinook_music_database_analysis_spark.sources.sinks import (
-        delete_rows,
-        merge_upsert,
-        write_result,
-    )
-
-    path = str(tmp_path / "cow")
-    base = spark.createDataFrame(
-        [(1, "a", 10.0), (2, "b", 20.0), (3, "c", 30.0), (4, None, 40.0)],
-        "id long, tag string, v double",
-    )
-    write_result(base, path)
-
-    updates = spark.createDataFrame(
-        [(2, "B", 22.0), (5, "e", 50.0)], "id long, tag string, v double"
-    )
-    merge_upsert(spark, path, updates, "id")
-    rows = {r.id: (r.tag, r.v) for r in spark.read.parquet(path).collect()}
-    assert rows == {
-        1: ("a", 10.0),
-        2: ("B", 22.0),   # matched -> updated
-        3: ("c", 30.0),
-        4: (None, 40.0),
-        5: ("e", 50.0),   # not matched -> inserted
-    }
-
-    # Delete by predicate: tag = 'a' matches id 1; id 4's NULL tag
-    # makes the predicate NULL -> kept.
-    n = delete_rows(spark, path, "tag = 'a'")
-    assert n == 1
-    left = {r.id for r in spark.read.parquet(path).collect()}
-    assert left == {2, 3, 4, 5}
-
-    # r12 review: updates with a NOVEL column are rejected by default
-    # (the old select(*target.columns) dropped it silently) and stored
-    # additively under evolve_schema=True.
-    import pytest
-
-    wide = spark.createDataFrame(
-        [(6, "f", 60.0, "x")], "id long, tag string, v double, note string"
-    )
-    with pytest.raises(ValueError, match="note"):
-        merge_upsert(spark, path, wide, "id")
-    merge_upsert(spark, path, wide, "id", evolve_schema=True)
-    out = {r.id: r.asDict().get("note") for r in spark.read.parquet(path).collect()}
-    assert out[6] == "x" and out[2] is None
-
-
 def test_read_json_quarantine_splits_good_and_bad(spark, tmp_path):
     """PERMISSIVE ingest with quarantine: clean lines parse to the
     pinned schema, broken lines come back raw for a quarantine sink,
@@ -427,33 +354,25 @@ def test_engine_validate_matches_oracle(spark):
     assert r["spark_rows"] == r["oracle_rows"] > 0
 
 
-def test_engine_validate_rejects_mounted_table_set(spark):
-    """r12 review: validate on a mounted (non-parquet) table set must
-    fail with the actual situation — DuckDB has no parquet dir to read
-    — not a confusing file-not-found from inside the oracle query; and
-    validate_all must bucket it under errors (unverifiable), never as
-    a silent pass."""
-    import pytest
-
-    from chinook_music_database_analysis_spark.engine import Engine
+def test_engine_validate_on_mounted_chinook_dir(spark, tmp_path, monkeypatch):
+    """A mounted Chinook table set is a parquet directory like any
+    other, so the DuckDB oracle reads it too: validate checks a query
+    on the Chinook micro tables against its oracle (q04's oracle does
+    not embed NATION0, so the driver-data constant is no obstacle)."""
+    from chinook_music_database_analysis_spark import store
     from chinook_music_database_analysis_spark.sources import register_views
-    from chinook_music_database_analysis_spark.sources.session import (
-        TABLE_OVERRIDES,
+    from chinook_music_database_analysis_spark.sources.chinook_adapter import (
+        mount_chinook,
     )
+    from test_chinook_native import micro_chinook
 
-    h = "handle://validate-guard"
-    TABLE_OVERRIDES[h] = {
-        "customer": spark.range(1).selectExpr("id AS c_custkey")
-    }
+    monkeypatch.setattr(store, "ROOT", str(tmp_path))
     try:
-        e = Engine(sf_dir=h, spark=spark)
-        with pytest.raises(ValueError, match="mounted table"):
-            e.validate("q04_rev_by_geo")
-        res = e.validate_all(["q04_rev_by_geo"])
-        assert "q04_rev_by_geo" in res["errors"]
-        assert res["passed"] == 0 and not res["failed"]
+        sf_dir = mount_chinook(spark, micro_chinook(spark), str(tmp_path / "chinook"))
+        r = Engine(sf_dir=sf_dir, spark=spark).validate("q04_rev_by_geo")
+        assert r["rows_match"] and r["schema_match"] and r["values_match"]
+        assert r["spark_rows"] == r["oracle_rows"] > 0
     finally:
-        TABLE_OVERRIDES.pop(h, None)
         # restore the session-wide temp views the mounted Engine replaced
         register_views(spark, SF_TEST_DIR)
 
@@ -579,36 +498,33 @@ def test_runtime_bloom_filter_semi_join_reduction(spark):
                 spark.conf.set(k, v)
 
 
-def test_register_views_with_partial_override(spark):
-    """A mounted TABLE_OVERRIDES set may be partial (the Chinook
-    adapter maps 7 of the 10 driver tables): register_views must
-    register what exists instead of KeyError-ing at mount time, and
-    the session confs (UTC timezone) must apply on the override path
-    too (r10 review)."""
-    from chinook_music_database_analysis_spark.sources.session import (
-        TABLE_OVERRIDES,
-        register_views,
-    )
+def test_register_views_with_partial_override(spark, tmp_path):
+    """A table directory may be partial (a mounted Chinook directory
+    holds 7 of the 10 driver tables): register_views must register
+    what exists instead of failing on the absent tables, and the
+    session confs (UTC timezone) must apply there too (r10 review)."""
+    from chinook_music_database_analysis_spark.sources.session import register_views
 
-    handle = "mem://partial-override"
-    TABLE_OVERRIDES[handle] = {
-        "region": spark.createDataFrame(
-            [(0, "AMERICA", "")], "r_regionkey long, r_name string, r_comment string"
-        ),
-        "nation": spark.createDataFrame(
-            [(0, "US", 0, "")],
-            "n_nationkey long, n_name string, n_regionkey long, n_comment string",
-        ),
-    }
+    partial = write_table_dir(
+        tmp_path / "partial",
+        {
+            "region": spark.createDataFrame(
+                [(0, "AMERICA", "")],
+                "r_regionkey long, r_name string, r_comment string",
+            ),
+            "nation": spark.createDataFrame(
+                [(0, "US", 0, "")],
+                "n_nationkey long, n_name string, n_regionkey long, n_comment string",
+            ),
+        },
+    )
     try:
-        register_views(spark, handle)
+        register_views(spark, partial)
         assert spark.table("region").count() == 1
         assert spark.conf.get("spark.sql.session.timeZone") == "UTC"
     finally:
-        del TABLE_OVERRIDES[handle]
         spark.catalog.dropTempView("region")
         spark.catalog.dropTempView("nation")
-
 
 def test_read_jdbc_requires_bounds_with_partition_column(spark):
     """Forgotten lowerBound/upperBound must fail fast with a clear
@@ -622,48 +538,6 @@ def test_read_jdbc_requires_bounds_with_partition_column(spark):
         read_jdbc(
             spark, "jdbc:h2:mem:x", "t", partition_column="id", num_partitions=4
         )
-
-
-def test_table_set_seq_survives_dict_id_reuse():
-    """r11 review: plan/scalar caches keyed the mounted table set by
-    bare id(dict); CPython may hand a re-mounted dict the freed dict's
-    address, silently serving a STALE cached view.  table_set_seq
-    holds each mount strongly and issues a monotonic seq, so a remount
-    under the same handle is always a cache miss."""
-    import gc
-
-    from chinook_music_database_analysis_spark.sources.session import (
-        TABLE_OVERRIDES,
-        table_set_seq,
-    )
-
-    h = "handle://seqtest"
-    try:
-        TABLE_OVERRIDES[h] = {"customer": None}
-        s1 = table_set_seq(h)
-        assert table_set_seq(h) == s1  # stable across calls for one mount
-        TABLE_OVERRIDES[h] = {"customer": None}  # remount same handle
-        gc.collect()
-        s2 = table_set_seq(h)
-        assert s2 != s1
-        assert table_set_seq("not-mounted") is None
-        # r12 (r11 advice): unmounting must evict the strongly-held
-        # record — otherwise every distinct handle a long session ever
-        # mounts leaks its table set forever.
-        from chinook_music_database_analysis_spark.sources.session import (
-            _MOUNT_RECORDS,
-        )
-
-        assert h in _MOUNT_RECORDS
-        TABLE_OVERRIDES.pop(h)
-        assert table_set_seq(h) is None
-        assert h not in _MOUNT_RECORDS
-        # and a fresh remount after eviction gets a NEW seq
-        TABLE_OVERRIDES[h] = {"customer": None}
-        assert table_set_seq(h) not in (s1, s2, None)
-    finally:
-        TABLE_OVERRIDES.pop(h, None)
-        table_set_seq(h)  # evict the record for the final mount too
 
 
 def test_plan_memo_reuses_and_detects_rewrite(spark, tmp_path):

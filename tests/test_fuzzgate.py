@@ -30,7 +30,7 @@ import pytest
 sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "scripts"))
 
 from chinook_music_database_analysis_spark.plans import ORACLES, QUERIES
-from chinook_music_database_analysis_spark.sources import TABLES
+from chinook_music_database_analysis_spark.testing import oracle_connection
 
 from conftest import assert_frames_match
 
@@ -89,19 +89,10 @@ def fuzz_dirs():
         fuzzgate.OUT_ROOT = old_out
 
 
-def _oracle_con(sf_dir: str):
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE OR REPLACE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
-        )
-    return con
-
-
 @pytest.mark.parametrize("name", NULLS_REPS)
 def test_nulls_corpus_parity(spark, fuzz_dirs, name):
     sf_dir = fuzz_dirs["nulls"]
-    con = _oracle_con(sf_dir)
+    con = oracle_connection(sf_dir)
     spark_pdf = QUERIES[name](spark, sf_dir).toPandas()
     oracle_pdf = con.sql(ORACLES[name]).df()
     assert_frames_match(spark_pdf, oracle_pdf, f"nulls:{name}")
@@ -110,7 +101,7 @@ def test_nulls_corpus_parity(spark, fuzz_dirs, name):
 @pytest.mark.parametrize("name", SKEW_REPS)
 def test_skew_corpus_parity(spark, fuzz_dirs, name):
     sf_dir = fuzz_dirs["skew"]
-    con = _oracle_con(sf_dir)
+    con = oracle_connection(sf_dir)
     spark_pdf = QUERIES[name](spark, sf_dir).toPandas()
     oracle_pdf = con.sql(ORACLES[name]).df()
     assert_frames_match(spark_pdf, oracle_pdf, f"skew:{name}")
@@ -119,7 +110,7 @@ def test_skew_corpus_parity(spark, fuzz_dirs, name):
 @pytest.mark.parametrize("name", EDGE_REPS)
 def test_edge_corpus_parity(spark, fuzz_dirs, name):
     sf_dir = fuzz_dirs["edge"]
-    con = _oracle_con(sf_dir)
+    con = oracle_connection(sf_dir)
     spark_pdf = QUERIES[name](spark, sf_dir).toPandas()
     oracle_pdf = con.sql(ORACLES[name]).df()
     assert_frames_match(spark_pdf, oracle_pdf, f"edge:{name}")

@@ -12,7 +12,7 @@ import pytest
 from chinook_music_database_analysis_spark.cache import invalidate
 from chinook_music_database_analysis_spark.plans import QUERIES
 
-from conftest import SF_TEST_DIR
+from conftest import SF_TEST_DIR, write_table_dir
 
 
 @pytest.fixture(scope="module")
@@ -848,7 +848,7 @@ def test_containment_recall_measured_against_exact_truth(spark):
         df.unpersist()
 
 
-def test_hot_shingle_guard_and_containment_router(spark):
+def test_hot_shingle_guard_and_containment_router(spark, tmp_path, monkeypatch):
     """Hot-shingle guard (r8 semantics): (a) containment_pairs_exact
     with guard_factor raises HotShingleCorpusError on a corpus whose
     inverted-join blowup exceeds the bound, (b) the natural test
@@ -866,8 +866,8 @@ def test_hot_shingle_guard_and_containment_router(spark):
         containment_pairs_exact,
     )
     from chinook_music_database_analysis_spark.plans import QUERIES
+    from chinook_music_database_analysis_spark import store
     from chinook_music_database_analysis_spark.plans import extensions as ext
-    from chinook_music_database_analysis_spark.sources.session import TABLE_OVERRIDES
 
     hot = spark.createDataFrame(
         [
@@ -882,8 +882,8 @@ def test_hot_shingle_guard_and_containment_router(spark):
     docs = spark.read.parquet(f"{SF_TEST_DIR}/documents.parquet")
     containment_pairs_exact(docs, guard_factor=HOT_JOIN_FACTOR)  # no raise
 
-    handle = "hot-containment-handle"
-    TABLE_OVERRIDES[handle] = {"documents": hot}
+    monkeypatch.setattr(store, "ROOT", str(tmp_path))
+    handle = write_table_dir(tmp_path / "hot", {"documents": hot})
     try:
         invalidate(handle)
         with pytest.raises(ValueError, match="dd_containment_scale"):
@@ -891,7 +891,6 @@ def test_hot_shingle_guard_and_containment_router(spark):
         # the documented escape hatch still works on the hot corpus
         assert QUERIES["dd_containment_scale"](spark, handle).count() >= 0
     finally:
-        del TABLE_OVERRIDES[handle]
         invalidate(handle)
 
     exact = QUERIES["dd_containment"](spark, SF_TEST_DIR)

@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 from chinook_music_database_analysis_spark.functions import money_sum, month_diff
 from chinook_music_database_analysis_spark.operators.skew import salted_agg, salted_join
 
-from conftest import SF_TEST_DIR
+from conftest import SF_TEST_DIR, write_table_dir
 
 
 def test_salted_agg_equals_plain_agg(spark):
@@ -203,7 +203,7 @@ def test_not_in_anti_three_valued_semantics(spark, ddb):
         assert got == want, f"{label}: spark={got} duckdb={want}"
 
 
-def test_s04_rewrite_bounded_under_pathological_basket(spark):
+def test_s04_rewrite_bounded_under_pathological_basket(spark, tmp_path, monkeypatch):
     """Pathological-basket proof for the s04 scale rewrite (VERDICT r3
     #6): one 1000-line order (100 lines x 10 types) plus normal orders.
     The literal self-join expands the giant basket to ~450k joined rows
@@ -213,8 +213,8 @@ def test_s04_rewrite_bounded_under_pathological_basket(spark):
     fixture, (b) the analytic pair count of the giant basket, and
     (c) the per-basket state bound |xs| == |types|, independent of line
     count."""
+    from chinook_music_database_analysis_spark import store
     from chinook_music_database_analysis_spark.plans import QUERIES
-    from chinook_music_database_analysis_spark.sources.session import TABLE_OVERRIDES
 
     n_lines, n_types = 1000, 10
     giant = spark.range(n_lines).selectExpr(
@@ -231,35 +231,34 @@ def test_s04_rewrite_bounded_under_pathological_basket(spark):
     part = spark.range(50).selectExpr(
         "id AS p_partkey", "concat('type', id % 10) AS p_type"
     )
-    handle = "skew://s04-basket"
-    TABLE_OVERRIDES[handle] = {"lineitem": li, "part": part}
-    try:
-        lit = sorted(
-            map(tuple, QUERIES["s04_affinity_types"](spark, handle).collect())
-        )
-        scaled = sorted(
-            map(tuple, QUERIES["s04_affinity_types_scaled"](spark, handle).collect())
-        )
-        assert lit == scaled
-        # analytic cross-check on the giant basket alone: 1000 lines
-        # uniform over 10 types -> cnt=100 each; different-type line
-        # pairs = (1000^2 - 10*100^2) / 2 = 450_000.
-        TABLE_OVERRIDES[handle] = {"lineitem": giant, "part": part}
-        only_giant = QUERIES["s04_affinity_types_scaled"](spark, handle)
-        assert only_giant.agg(F.sum("n_pairs")).collect()[0][0] == 450_000
-        # per-basket compressed state is the TYPE vocabulary, not the
-        # line count: 10 entries for the 1000-line basket.
-        counts = (
-            giant.join(part, F.col("l_partkey") == F.col("p_partkey"))
-            .groupBy("l_orderkey", "p_type")
-            .count()
-        )
-        assert counts.count() == n_types
-    finally:
-        del TABLE_OVERRIDES[handle]
+    monkeypatch.setattr(store, "ROOT", str(tmp_path))
+    handle = write_table_dir(tmp_path / "s04-basket", {"lineitem": li, "part": part})
+    lit = sorted(
+        map(tuple, QUERIES["s04_affinity_types"](spark, handle).collect())
+    )
+    scaled = sorted(
+        map(tuple, QUERIES["s04_affinity_types_scaled"](spark, handle).collect())
+    )
+    assert lit == scaled
+    # analytic cross-check on the giant basket alone: 1000 lines
+    # uniform over 10 types -> cnt=100 each; different-type line
+    # pairs = (1000^2 - 10*100^2) / 2 = 450_000.
+    handle = write_table_dir(
+        tmp_path / "s04-giant", {"lineitem": giant, "part": part}
+    )
+    only_giant = QUERIES["s04_affinity_types_scaled"](spark, handle)
+    assert only_giant.agg(F.sum("n_pairs")).collect()[0][0] == 450_000
+    # per-basket compressed state is the TYPE vocabulary, not the
+    # line count: 10 entries for the 1000-line basket.
+    counts = (
+        giant.join(part, F.col("l_partkey") == F.col("p_partkey"))
+        .groupBy("l_orderkey", "p_type")
+        .count()
+    )
+    assert counts.count() == n_types
 
 
-def test_s04_literal_skew_mitigation_story(spark, tmp_path):
+def test_s04_literal_skew_mitigation_story(spark, tmp_path, monkeypatch):
     """r9 verdict item 6 resolved with the TRUE mechanics (measured,
     not assumed).  On the LITERAL s04 self-join AQE's skew split is
     STRUCTURALLY unavailable: the deterministic rid window sits
@@ -283,8 +282,8 @@ def test_s04_literal_skew_mitigation_story(spark, tmp_path):
     run compresses below the MEDIAN partition size, inverting the
     stats the detector reads — measured: 6000 identical-key rows
     compressed SMALLER than 130-row mixed partitions)."""
+    from chinook_music_database_analysis_spark import store
     from chinook_music_database_analysis_spark.plans import QUERIES
-    from chinook_music_database_analysis_spark.sources.session import TABLE_OVERRIDES
 
     confs = {
         "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes": "64KB",
@@ -312,12 +311,11 @@ def test_s04_literal_skew_mitigation_story(spark, tmp_path):
     part = spark.range(50).selectExpr(
         "id AS p_partkey", "concat('type', id % 10) AS p_type"
     )
-    handle = "skew://s04-aqe"
-    TABLE_OVERRIDES[handle] = {
-        "lineitem": hot.unionByName(spread),
-        "part": part,
-    }
+    monkeypatch.setattr(store, "ROOT", str(tmp_path))
     try:
+        handle = write_table_dir(
+            tmp_path / "s04-aqe", {"lineitem": hot.unionByName(spread), "part": part}
+        )
         # (1) literal registered path: correct under skew, equivalent
         # to the rewrite, but NO runtime skew split (window-pinned)
         lit_df = QUERIES["s04_affinity_types"](spark, handle)
@@ -369,7 +367,6 @@ def test_s04_literal_skew_mitigation_story(spark, tmp_path):
         assert "skew=true" in plan2, plan2[:3000]
         assert got == lit  # mitigation preserves the exact result
     finally:
-        del TABLE_OVERRIDES[handle]
         for k, v in old.items():
             if v is None:
                 spark.conf.unset(k)

@@ -129,17 +129,22 @@ def test_merge_and_delete_as_snapshots(spark, nation, tmp_path):
     updates = nation.filter(F.col("n_nationkey") < 2).withColumn(
         "n_name", F.lit("RENAMED")
     )
+    # one unmatched key: the merge inserts it
+    updates = updates.unionByName(
+        updates.filter(F.col("n_nationkey") == 0).withColumn("n_nationkey", F.lit(999))
+    )
     v2 = merge_snapshot(spark, t, updates, "n_nationkey")
     cur = read_snapshot(spark, t)
-    assert cur.count() == nation.count()
-    assert cur.filter(F.col("n_name") == "RENAMED").count() == 2
+    assert cur.count() == nation.count() + 1
+    assert cur.filter(F.col("n_name") == "RENAMED").count() == 3
+    assert cur.filter(F.col("n_nationkey") == 999).count() == 1
     # pre-merge state retained for audit/time travel
     assert read_snapshot(spark, t, version=v2 - 1).filter(
         F.col("n_name") == "RENAMED"
     ).count() == 0
     v3 = delete_snapshot_rows(spark, t, "n_nationkey >= 20")
     assert read_snapshot(spark, t).count() == 20
-    assert read_snapshot(spark, t, version=v3 - 1).count() == nation.count()
+    assert read_snapshot(spark, t, version=v3 - 1).count() == nation.count() + 1
 
 
 def test_streaming_snapshot_sink_appends_versions(spark, tmp_path):
