@@ -172,7 +172,7 @@ def register_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     """
     dfs = load_tables(spark, sf_dir)
     # A table set may be PARTIAL (a mounted Chinook directory holds 7 of
-    # the 10 driver tables): register what exists — a query over an
+    # the 10 corpus tables): register what exists — a query over an
     # absent table fails at its own call with a missing-view message.
     present = [t for t in TABLES if os.path.exists(f"{sf_dir}/{t}.parquet")]
     for name in present:

@@ -271,7 +271,7 @@ def delete_snapshot_rows(
     target = read_snapshot(spark, table_dir)
     # SQL DELETE keeps rows where the predicate is NULL (only
     # predicate-TRUE rows go); plain ~cond drops NULL-predicate rows
-    # too — silent data loss on any nullable column (r10 review).
+    # too — silent data loss on any nullable column.
     return write_snapshot(target.filter(~cond | cond.isNull()), table_dir)
 
 

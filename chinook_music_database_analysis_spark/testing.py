@@ -1,4 +1,4 @@
-"""Driver-compare mirror and DuckDB oracle connection, shared by the
+"""The oracle compare and the DuckDB oracle connection, shared by the
 test suite, the fuzz gate and ``Engine.validate``.
 
 The correctness driver compares Spark vs DuckDB results

@@ -14,7 +14,7 @@ from chinook_music_database_analysis_spark.sources import get_spark
 
 # Oracle connection and compare logic live in the package so the fuzz
 # gate (scripts/fuzzgate.py) and Engine.validate apply the IDENTICAL
-# driver mirror.
+# compare.
 from chinook_music_database_analysis_spark.testing import (
     frames_mismatch,
     oracle_connection,

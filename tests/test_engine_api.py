@@ -358,7 +358,7 @@ def test_engine_validate_on_mounted_chinook_dir(spark, tmp_path, monkeypatch):
     """A mounted Chinook table set is a parquet directory like any
     other, so the DuckDB oracle reads it too: validate checks a query
     on the Chinook micro tables against its oracle (q04's oracle does
-    not embed NATION0, so the driver-data constant is no obstacle)."""
+    not embed NATION0, so the generated data's NATION0 is no obstacle)."""
     from chinook_music_database_analysis_spark import store
     from chinook_music_database_analysis_spark.sources import register_views
     from chinook_music_database_analysis_spark.sources.chinook_adapter import (
@@ -500,9 +500,9 @@ def test_runtime_bloom_filter_semi_join_reduction(spark):
 
 def test_register_views_with_partial_override(spark, tmp_path):
     """A table directory may be partial (a mounted Chinook directory
-    holds 7 of the 10 driver tables): register_views must register
+    holds 7 of the 10 corpus tables): register_views must register
     what exists instead of failing on the absent tables, and the
-    session confs (UTC timezone) must apply there too (r10 review)."""
+    session confs (UTC timezone) must apply there too."""
     from chinook_music_database_analysis_spark.sources.session import register_views
 
     partial = write_table_dir(
