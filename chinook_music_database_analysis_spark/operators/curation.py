@@ -44,11 +44,6 @@ from .text import shingles_from_tokens, tokens_expr
 #: everything on a small vocabulary.
 DECONTAM_K = 8
 
-#: A shingle is "boilerplate" when it appears in at least this many
-#: distinct documents.
-BOILER_MIN_DF = 40
-
-
 def _hash_bucket(key: Column, salt: str) -> Column:
     """First 4 hex chars of md5(salt|key) — a uniform draw from
     0x0000..0xffff, compared lexicographically against hex thresholds
@@ -241,41 +236,27 @@ def boilerplate_set(shingles: DataFrame, min_df: int) -> DataFrame:
     )
 
 
-def boilerplate_score(
-    docs: DataFrame,
-    min_df: int = BOILER_MIN_DF,
-    shingles: DataFrame | None = None,
-    boiler_set: DataFrame | None = None,
-) -> DataFrame:
+def boilerplate_score(shingles: DataFrame, boiler_set: DataFrame) -> DataFrame:
     """Per-document boilerplate ratio: the fraction of a doc's distinct
-    n-grams that occur in >= min_df distinct documents (C4's
+    n-grams that are in the template dictionary ``boiler_set`` (C4's
     repeated-line filter, n-gram form).
 
-    Plan (two corpus-scale shuffles, no corpus-wide distinct): per-doc
-    shingle dedup happens inside the row (``array_distinct`` before the
-    explode — a narrow map), so the only full shuffles are the
-    document-frequency agg keyed by shingle and the final doc-keyed
-    agg.  The DF relation is filtered down to the boilerplate set
+    Plan (two corpus-scale shuffles, no corpus-wide distinct): the
+    (doc_id, s) ``shingles`` relation dedups per doc inside the row
+    (``array_distinct`` before the explode — a narrow map), so the only
+    full shuffles are the document-frequency agg keyed by shingle and
+    the final doc-keyed agg.  The DF relation is filtered down to the boilerplate set
     (template n-grams only — small by construction of min_df) and
     **broadcast** into a left join; the (doc, shingle) relation itself
-    is never join-shuffled.  ``boiler_set`` accepts the PERSISTED
-    template dictionary (it is a deterministic function of the corpus
-    — plans/curation_queries serves it from the on-disk index store,
-    paying the DF aggregation once per corpus version); should it
-    outgrow the broadcast threshold, drop the explicit broadcast and
-    let AQE pick the join side.
+    is never join-shuffled.  ``boiler_set`` is the template dictionary
+    :func:`boilerplate_set` over ``shingles`` (a deterministic function
+    of the corpus — plans/curation_queries serves it from the on-disk
+    index store, paying the DF aggregation once per corpus version);
+    should it outgrow the broadcast threshold, drop the explicit
+    broadcast and let AQE pick the join side.
     """
-    sh = (
-        shingles
-        if shingles is not None
-        else docs.select("doc_id", tokens_expr().alias("toks")).select(
-            "doc_id", F.explode(F.array_distinct(shingles_from_tokens())).alias("s")
-        )
-    )
-    if boiler_set is None:
-        boiler_set = boilerplate_set(sh, min_df)
     return (
-        sh.join(F.broadcast(boiler_set), "s", "left")
+        shingles.join(F.broadcast(boiler_set), "s", "left")
         .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).alias("n_shingles"),

@@ -70,9 +70,9 @@ def exact_dedup(docs: DataFrame) -> DataFrame:
     )
 
 
-def minhash_signatures(docs: DataFrame, shingles: DataFrame | None = None) -> DataFrame:
-    """Per-doc minhash signature: min over the shingle set of md5
-    salted per hash slot (columns h0..h{N_HASHES-1}).
+def minhash_signatures(shingles: DataFrame) -> DataFrame:
+    """Per-doc minhash signature: min over the :func:`doc_shingles` set
+    of md5 salted per hash slot (columns h0..h{N_HASHES-1}).
 
     The N_HASHES md5s are computed once per *distinct shingle string*
     (the vocabulary) and joined back to the (doc, shingle) relation —
@@ -81,8 +81,7 @@ def minhash_signatures(docs: DataFrame, shingles: DataFrame | None = None) -> Da
     corpus).  Same aggregation result, since min(md5) only depends on
     the shingle values.
     """
-    sh = shingles if shingles is not None else doc_shingles(docs)
-    vocab = sh.select("s").distinct().select(
+    vocab = shingles.select("s").distinct().select(
         "s",
         *[
             F.md5(F.concat(F.lit(f"{h}|"), F.col("s"))).alias(f"v{h}")
@@ -90,15 +89,15 @@ def minhash_signatures(docs: DataFrame, shingles: DataFrame | None = None) -> Da
         ],
     )
     return (
-        sh.join(vocab, "s")
+        shingles.join(vocab, "s")
         .groupBy("doc_id")
         .agg(*[F.min(f"v{h}").alias(f"h{h}") for h in range(N_HASHES)])
     )
 
 
-def minhash_bands(docs: DataFrame, shingles: DataFrame | None = None) -> DataFrame:
+def minhash_bands(shingles: DataFrame) -> DataFrame:
     """(doc_id, band_id, band_sig) — the LSH bucket keys."""
-    sig = minhash_signatures(docs, shingles)
+    sig = minhash_signatures(shingles)
     band_structs = [
         F.struct(
             F.lit(b).alias("band_id"),
@@ -113,10 +112,9 @@ def minhash_bands(docs: DataFrame, shingles: DataFrame | None = None) -> DataFra
     ).select("doc_id", "bd.band_id", "bd.band_sig")
 
 
-def minhash_candidate_pairs(
-    docs: DataFrame, bands: DataFrame | None = None
-) -> DataFrame:
-    """Candidate near-dup pairs: docs sharing any LSH band bucket.
+def minhash_candidate_pairs(bands: DataFrame) -> DataFrame:
+    """Candidate near-dup pairs: docs sharing any LSH band bucket of
+    :func:`minhash_bands`.
 
     The self-join is keyed on (band_id, band_sig) — only same-bucket
     docs ever meet, which is what bounds the blowup at scale.
@@ -125,8 +123,6 @@ def minhash_candidate_pairs(
     pipeline twice — Spark executes both sides of a self-join
     independently unless the input is persisted.
     """
-    if bands is None:
-        bands = minhash_bands(docs)
     a, b = bands.alias("a"), bands.alias("b")
     return (
         a.join(
@@ -158,10 +154,11 @@ def candidate_restricted_shingles(sh: DataFrame, cand: DataFrame) -> DataFrame:
 
 
 def _candidate_intersections(
-    sh: DataFrame, cand: DataFrame, sh_cand: DataFrame | None = None
+    cand: DataFrame, sh_cand: DataFrame
 ) -> tuple[DataFrame, DataFrame]:
-    """Shared candidate/verify scaffolding: semi-restrict the shingle
-    relation to candidate docs, then count per-pair shared shingles.
+    """Shared candidate/verify scaffolding: count per-pair shared
+    shingles over the shingle relation semi-restricted to candidate
+    docs (``sh_cand``, :func:`candidate_restricted_shingles`).
 
     Returns ``(inter, sizes)`` — per-pair ``n_inter`` counts and
     per-doc set sizes, both computed over the semi-filtered relation so
@@ -177,8 +174,6 @@ def _candidate_intersections(
     cache lifetime decision now belongs to the caller (plans/extensions
     memoizes it per session+corpus, released by ``cache.invalidate``).
     """
-    if sh_cand is None:
-        sh_cand = candidate_restricted_shingles(sh, cand)
     # only candidate docs reach the score join, so set sizes come from
     # the semi-filtered relation, not a full-corpus aggregate
     sizes = sh_cand.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
@@ -223,27 +218,17 @@ def _containment_scores(with_sizes: DataFrame, threshold: float) -> DataFrame:
 
 
 def ngram_jaccard_pairs(
-    docs: DataFrame,
-    threshold: float = 0.2,
-    shingles: DataFrame | None = None,
-    bands: DataFrame | None = None,
-    candidates: DataFrame | None = None,
-    sh_cand: DataFrame | None = None,
+    candidates: DataFrame, sh_cand: DataFrame, threshold: float = 0.2
 ) -> DataFrame:
-    """Exact shingle-set Jaccard, verified only on LSH candidates
-    (candidate/verify split — never all-pairs).
+    """Exact shingle-set Jaccard, verified only on the LSH
+    ``candidates`` (:func:`minhash_candidate_pairs` — candidate/verify
+    split, never all-pairs).
 
-    ``shingles``/``bands``/``sh_cand`` accept persisted relations; the
-    candidate-restricted shingle set is read three times (two
-    intersection sides + sizes) and the band relation twice, so callers
-    should cache them (plans/extensions does, keyed per session+sf)."""
-    sh = shingles if shingles is not None else doc_shingles(docs)
-    cand = (
-        candidates
-        if candidates is not None
-        else minhash_candidate_pairs(docs, bands=bands)
-    )
-    inter, sizes = _candidate_intersections(sh, cand, sh_cand=sh_cand)
+    ``sh_cand`` is :func:`candidate_restricted_shingles` over the same
+    candidates; it is read three times (two intersection sides +
+    sizes), so callers should cache it (plans/extensions does, keyed
+    per session+sf)."""
+    inter, sizes = _candidate_intersections(candidates, sh_cand)
     jac = F.round(
         F.col("n_inter").cast("double")
         / (F.col("n_a") + F.col("n_b") - F.col("n_inter")).cast("double"),
@@ -273,10 +258,7 @@ def _simhash_nibbles(sig: DataFrame) -> DataFrame:
 
 
 def simhash_cross_matches(
-    sig: DataFrame,
-    refs: DataFrame,
-    max_hamming: int = 3,
-    nibbles: DataFrame | None = None,
+    nibbles: DataFrame, refs: DataFrame, max_hamming: int = 3
 ) -> DataFrame:
     """Cross-corpus SimHash contamination: for each NON-reference doc,
     the number of reference docs within ``max_hamming`` of its 48-bit
@@ -292,18 +274,18 @@ def simhash_cross_matches(
     final per-doc agg).  Same pigeonhole bound as the self-join: a
     within-3 pair must agree on one of the four 12-bit blocks.
 
-    ``nibbles`` accepts a cached banded relation (plans/extensions
-    memoizes one per session) so the probe and membership branches
-    scan it instead of re-deriving the explode per branch.
+    ``nibbles`` is the banded signature relation
+    (:func:`_simhash_nibbles`; plans/extensions memoizes one per
+    session) so the probe and membership branches scan it instead of
+    re-deriving the explode per branch.
     """
-    nib = nibbles if nibbles is not None else _simhash_nibbles(sig)
-    ref_nib = nib.join(F.broadcast(refs), "doc_id").select(
+    ref_nib = nibbles.join(F.broadcast(refs), "doc_id").select(
         F.col("doc_id").alias("ref_id"),
         F.col("simhash").alias("ref_hash"),
         "band",
         "nib",
     )
-    corpus_nib = nib.join(F.broadcast(refs), "doc_id", "left_anti")
+    corpus_nib = nibbles.join(F.broadcast(refs), "doc_id", "left_anti")
     cand = (
         corpus_nib.join(F.broadcast(ref_nib), ["band", "nib"])
         .select(
@@ -323,12 +305,7 @@ def simhash_cross_matches(
     )
 
 
-def simhash_near_dup_pairs(
-    docs: DataFrame,
-    max_hamming: int = 3,
-    sig: DataFrame | None = None,
-    nibbles: DataFrame | None = None,
-) -> DataFrame:
+def simhash_near_dup_pairs(nibbles: DataFrame, max_hamming: int = 3) -> DataFrame:
     """SimHash near-dup pairs: hamming distance <= max_hamming on the
     48-bit signature.
 
@@ -338,12 +315,11 @@ def simhash_near_dup_pairs(
     (band, block) buckets — the same blowup bound as minhash LSH.
     The exact hamming filter (bit_count(a XOR b)) then verifies.
 
-    Pass a cached ``sig`` relation to avoid evaluating the signature
-    pipeline on both self-join sides (plans/extensions memoizes it);
-    ``nibbles`` additionally pre-bands it so neither side re-explodes.
+    ``nibbles`` is the pre-banded signature relation
+    (:func:`_simhash_nibbles` over :func:`simhash`; plans/extensions
+    memoizes it) so neither self-join side re-derives the signatures
+    or re-explodes them.
     """
-    if nibbles is None:
-        nibbles = _simhash_nibbles(sig if sig is not None else simhash(docs))
     a, b = nibbles.alias("a"), nibbles.alias("b")
     cand = (
         a.join(
@@ -512,7 +488,7 @@ def incremental_candidate_pairs(bands: DataFrame, new_min_id: int) -> DataFrame:
     )
 
 
-def dup_ngram_stats(docs: DataFrame, shingles: DataFrame | None = None) -> DataFrame:
+def dup_ngram_stats(shingles: DataFrame) -> DataFrame:
     """Per-document duplicate-n-gram statistics — the corpus-frequency
     substring-dedup signal of Lee et al., "Deduplicating Training Data
     Makes Language Models Better" (ACL 2022), at word-shingle
@@ -541,8 +517,7 @@ def dup_ngram_stats(docs: DataFrame, shingles: DataFrame | None = None) -> DataF
     probability is ~n^2/2^65 (~1e-8 at a million shingles), and the
     exact-string DuckDB oracle would catch it loudly.
     """
-    sh = shingles if shingles is not None else doc_shingles(docs)
-    hashed = sh.select("doc_id", F.xxhash64("s").alias("h"))
+    hashed = shingles.select("doc_id", F.xxhash64("s").alias("h"))
     df_counts = hashed.groupBy("h").agg(F.count(F.lit(1)).alias("n_docs_with"))
     return (
         hashed.join(df_counts, "h")
@@ -711,12 +686,7 @@ def containment_probe_candidates(
 
 
 def containment_pairs(
-    docs: DataFrame,
-    threshold: float = 0.5,
-    shingles: DataFrame | None = None,
-    bands: DataFrame | None = None,
-    candidates: DataFrame | None = None,
-    sh_cand: DataFrame | None = None,
+    shingles: DataFrame, candidates: DataFrame, threshold: float = 0.5
 ) -> DataFrame:
     """Asymmetric shingle containment over the LSH candidate pairs —
     the snippet/quote detector symmetric Jaccard misses: a short doc
@@ -731,8 +701,8 @@ def containment_pairs(
     discipline as :func:`ngram_jaccard_pairs` — never all-pairs, and
     the wide intersection join scales with the candidate set.
 
-    Candidate generation: callers should pass the UNION of the
-    Jaccard-banded LSH candidates and
+    Candidate generation: callers should pass as ``candidates`` the
+    UNION of the Jaccard-banded LSH candidates and
     :func:`containment_probe_candidates` (plans/extensions does) —
     banding alone under-proposes extreme-asymmetry pairs (a tiny
     snippet inside a huge doc has low Jaccard, so its bands rarely
@@ -742,13 +712,9 @@ def containment_pairs(
     ground truth in test_properties).  The scores are exact for every
     proposed pair either way.
     """
-    sh = shingles if shingles is not None else doc_shingles(docs)
-    cand = (
-        candidates
-        if candidates is not None
-        else minhash_candidate_pairs(docs, bands=bands)
+    inter, sizes = _candidate_intersections(
+        candidates, candidate_restricted_shingles(shingles, candidates)
     )
-    inter, sizes = _candidate_intersections(sh, cand, sh_cand=sh_cand)
     return _containment_scores(_pair_set_sizes(inter, sizes), threshold)
 
 
@@ -789,9 +755,8 @@ def containment_join_stats(shingles: DataFrame) -> tuple[int, int]:
 
 
 def containment_pairs_exact(
-    docs: DataFrame,
+    shingles: DataFrame,
     threshold: float = 0.5,
-    shingles: DataFrame | None = None,
     guard_factor: int | None = None,
 ) -> DataFrame:
     """Exact all-pairs shingle containment via the inverted-file
@@ -832,9 +797,8 @@ def containment_pairs_exact(
     stats scalar and AUTO-ROUTES to the capped path instead of
     raising.
     """
-    sh = shingles if shingles is not None else doc_shingles(docs)
     if guard_factor is not None:
-        n_rows, join_rows = containment_join_stats(sh)
+        n_rows, join_rows = containment_join_stats(shingles)
         if join_rows > guard_factor * n_rows:
             raise HotShingleCorpusError(
                 f"inverted containment join would expand to {join_rows} rows "
@@ -842,9 +806,9 @@ def containment_pairs_exact(
                 "hot shingles present — use containment_probe_candidates "
                 "with a df cap + containment_pairs instead"
             )
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    a = sh.select(F.col("doc_id").alias("doc_a"), "s")
-    b = sh.select(F.col("doc_id").alias("doc_b"), "s")
+    sizes = shingles.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
+    a = shingles.select(F.col("doc_id").alias("doc_a"), "s")
+    b = shingles.select(F.col("doc_id").alias("doc_b"), "s")
     inter = (
         a.join(b, "s")
         .filter(F.col("doc_a") < F.col("doc_b"))

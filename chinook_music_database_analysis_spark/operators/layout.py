@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..sources.sinks import _write_range_clustered
+
 #: Bit-spreading ladder for 16-bit inputs (classic magic-number
 #: interleave): after these steps the 16 input bits occupy the even
 #: bit positions of a 32-bit lane.
@@ -90,45 +92,37 @@ def scaled16(col_name: str, lo: int, hi: int) -> Column:
     )
 
 
-def write_zordered(
-    df: DataFrame, path: str, x: str, y: str, n_files: int = 8, mode: str = "overwrite"
-) -> None:
+def _minmax_morton(df: DataFrame, x: str, y: str) -> Column | None:
+    """Morton code of ``(x, y)`` min/max-scaled onto the 16-bit lanes
+    (:func:`scaled16`; the two tiny ANALYZE aggregates that fetch the
+    bounds are O(1) driver state) — or None when there is nothing to
+    cluster: an empty input or an all-NULL key would otherwise crash
+    on int(None)."""
+    bounds = df.agg(
+        F.min(x).alias("x_lo"), F.max(x).alias("x_hi"),
+        F.min(y).alias("y_lo"), F.max(y).alias("y_hi"),
+    ).collect()[0]
+    if bounds["x_lo"] is None or bounds["y_lo"] is None:
+        return None
+    return morton_code(
+        scaled16(x, int(bounds["x_lo"]), int(bounds["x_hi"])),
+        scaled16(y, int(bounds["y_lo"]), int(bounds["y_hi"])),
+    )
+
+
+def write_zordered(df: DataFrame, path: str, x: str, y: str, n_files: int = 8) -> None:
     """Write ``df`` as Parquet clustered on the Z-order curve of
     ``(x, y)``: range-partition on the Morton code (each output file
     covers a disjoint curve segment) and sort within partitions, so
     every row group's [min, max] is narrow on BOTH columns and a
     pushed 2-D box predicate skips at footer level.
 
-    Keys are min/max-scaled onto the full 16-bit lanes first (see
-    :func:`scaled16`); the two tiny ANALYZE aggregates that fetch the
-    bounds are O(1) driver state.  One range shuffle after that,
-    exactly like single-key ``write_sorted_by`` — z-ordering costs
-    nothing extra at write time.
+    Keys are min/max-scaled onto the full 16-bit lanes first
+    (:func:`_minmax_morton`).  One range shuffle after that, exactly
+    like single-key ``write_sorted_by`` — z-ordering costs nothing
+    extra at write time.
     """
-    bounds = df.agg(
-        F.min(x).alias("x_lo"), F.max(x).alias("x_hi"),
-        F.min(y).alias("y_lo"), F.max(y).alias("y_hi"),
-    ).collect()[0]
-    if bounds["x_lo"] is None or bounds["y_lo"] is None:
-        # Empty input (or an all-NULL key): there is nothing to
-        # cluster — write the empty/degenerate table instead of
-        # crashing on int(None), matching write_sorted_by (r10 review).
-        df.write.mode(mode).parquet(path)
-        return
-    zed = df.withColumn(
-        "_z",
-        morton_code(
-            scaled16(x, int(bounds["x_lo"]), int(bounds["x_hi"])),
-            scaled16(y, int(bounds["y_lo"]), int(bounds["y_hi"])),
-        ),
-    )
-    (
-        zed.repartitionByRange(n_files, "_z")
-        .sortWithinPartitions("_z")
-        .drop("_z")
-        .write.mode(mode)
-        .parquet(path)
-    )
+    _write_range_clustered(df, path, _minmax_morton(df, x, y), n_files)
 
 
 def write_zordered_partitioned(
@@ -138,7 +132,6 @@ def write_zordered_partitioned(
     x: str,
     y: str,
     n_tasks: int = 16,
-    mode: str = "overwrite",
 ) -> None:
     """The 100 TB composition: Hive-partition on ``part_col`` (the
     coarse pruning dimension — typically a date) and Z-order ``(x, y)``
@@ -152,30 +145,7 @@ def write_zordered_partitioned(
     first, then row groups.  Scaling bounds are global (one pair of
     tiny ANALYZE aggregates); per-partition bounds would buy little
     since z segments never span partition directories anyway."""
-    bounds = df.agg(
-        F.min(x).alias("x_lo"), F.max(x).alias("x_hi"),
-        F.min(y).alias("y_lo"), F.max(y).alias("y_hi"),
-    ).collect()[0]
-    if bounds["x_lo"] is None or bounds["y_lo"] is None:
-        # Empty input / all-NULL key: write without clustering rather
-        # than crash on int(None) (r10 review).
-        df.write.mode(mode).partitionBy(part_col).parquet(path)
-        return
-    zed = df.withColumn(
-        "_z",
-        morton_code(
-            scaled16(x, int(bounds["x_lo"]), int(bounds["x_hi"])),
-            scaled16(y, int(bounds["y_lo"]), int(bounds["y_hi"])),
-        ),
-    )
-    (
-        zed.repartitionByRange(n_tasks, F.col(part_col), F.col("_z"))
-        .sortWithinPartitions(part_col, "_z")
-        .drop("_z")
-        .write.mode(mode)
-        .partitionBy(part_col)
-        .parquet(path)
-    )
+    _write_range_clustered(df, path, _minmax_morton(df, x, y), n_tasks, part_col)
 
 
 def quantile_rank16(
@@ -226,22 +196,12 @@ def quantile_rank16(
 
 
 def write_zordered_ranked(
-    df: DataFrame, path: str, x: str, y: str, n_files: int = 8, mode: str = "overwrite"
+    df: DataFrame, path: str, x: str, y: str, n_files: int = 8
 ) -> None:
     """:func:`write_zordered` with quantile-rank lanes — the variant
     for skewed keys.  Same single range shuffle; the only extra cost
     is the two approxQuantile sample passes."""
-    zed = df.withColumn(
-        "_z",
-        morton_code(
-            quantile_rank16(df, x).cast("bigint"),
-            quantile_rank16(df, y).cast("bigint"),
-        ),
+    key = morton_code(
+        quantile_rank16(df, x).cast("bigint"), quantile_rank16(df, y).cast("bigint")
     )
-    (
-        zed.repartitionByRange(n_files, "_z")
-        .sortWithinPartitions("_z")
-        .drop("_z")
-        .write.mode(mode)
-        .parquet(path)
-    )
+    _write_range_clustered(df, path, key, n_files)

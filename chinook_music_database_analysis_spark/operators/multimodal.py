@@ -359,9 +359,7 @@ def media_phash(docs: DataFrame) -> DataFrame:
 
 
 def phash_near_dup_pairs(
-    docs: DataFrame,
-    max_hamming: int = PHASH_MAX_HAMMING,
-    sig: DataFrame | None = None,
+    sig: DataFrame, max_hamming: int = PHASH_MAX_HAMMING
 ) -> DataFrame:
     """Image near-dup pairs: hamming distance <= ``max_hamming`` on
     the 48-bit perceptual hash — the multimodal member of the dedup
@@ -371,8 +369,9 @@ def phash_near_dup_pairs(
     Same candidate discipline as SimHash: 12-bit block banding
     (pigeonhole recall 1.0 at distance 3), so the self-join meets only
     within equal (band, nib) buckets, then the exact
-    ``bit_count(a XOR b)`` verify.  Pass a cached/stored ``sig`` so
-    the kernel runs once, not once per join side.
+    ``bit_count(a XOR b)`` verify.  ``sig`` is the :func:`media_phash`
+    relation; pass it cached/stored so the kernel runs once, not once
+    per join side.
 
     The banding guarantee is a pigeonhole over PHASH_BANDS blocks: a
     pair at distance d shares an equal band only when d < PHASH_BANDS.
@@ -386,9 +385,8 @@ def phash_near_dup_pairs(
             f"{PHASH_BANDS}-band pigeonhole recall guarantee (distance must "
             f"be < {PHASH_BANDS}); raise PHASH_BANDS or use an exact scan"
         )
-    s = sig if sig is not None else media_phash(docs)
     mask = (1 << PHASH_BAND_BITS) - 1
-    bands = s.select(
+    bands = sig.select(
         "doc_id",
         "phash",
         F.explode(

@@ -149,7 +149,7 @@ def fk_violation_report(
 
 
 def write_with_metrics(
-    df: DataFrame, path: str, null_cols: tuple[str, ...] = (), mode: str = "overwrite"
+    df: DataFrame, path: str, null_cols: tuple[str, ...] = ()
 ) -> dict:
     """Write ``df`` as Parquet while collecting quality metrics (row
     count + per-column null counts) from the SAME pass via
@@ -168,5 +168,5 @@ def write_with_metrics(
     metrics = [F.count(F.lit(1)).alias("n_rows")] + [
         F.sum(F.col(c).isNull().cast("long")).alias(f"nulls_{c}") for c in null_cols
     ]
-    df.observe(obs, *metrics).write.mode(mode).parquet(path)
+    df.observe(obs, *metrics).write.mode("overwrite").parquet(path)
     return obs.get

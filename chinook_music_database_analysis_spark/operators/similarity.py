@@ -151,10 +151,10 @@ def cosine_topk(
     scoring, so recall over the allowed set is exact by construction
     (a post-filter over an unfiltered top-k can starve).
 
-    ``norms`` accepts a prebuilt (vec_id, embedding, norm) relation
-    (the persisted ANN store shape) so a caller holding the stored
-    norm table reuses norms it already paid for instead of recomputing
-    the corpus pass; mutually exclusive with ``corpus``.
+    ``norms``, when given, is the stored :func:`with_norms` relation
+    (vec_id, embedding, norm), so a caller holding it reuses norms it
+    already paid for instead of recomputing the corpus pass; mutually
+    exclusive with ``corpus``.
     """
     if norms is not None and corpus is not None:
         raise ValueError("cosine_topk: pass corpus OR norms, not both")
@@ -422,11 +422,9 @@ def _bucket_windowed_pairs(buckets: DataFrame, window: int) -> DataFrame:
 
 
 def embedding_near_dup_pairs(
-    emb: DataFrame,
+    buckets: DataFrame,
+    norms: DataFrame,
     threshold: float = 0.2,
-    n_bits: int | None = None,
-    buckets: DataFrame | None = None,
-    norms: DataFrame | None = None,
     window: int = PAIR_WINDOW,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs — the vector-space analog
@@ -453,18 +451,14 @@ def embedding_near_dup_pairs(
     are near-orthogonal, so 0.2 is 'suspiciously similar' there; a real
     near-dup sweep over model embeddings would run ~0.95).
 
-    ``buckets``/``norms`` accept prebuilt (cached) relations — the
-    stored-signature-table pattern shared with the MinHash path; when
-    omitted they are derived here.
+    ``buckets`` is :func:`lsh_buckets` and ``norms`` is
+    :func:`with_norms` over the same corpus — the stored-signature-table
+    pattern shared with the MinHash path.
     """
-    if buckets is None:
-        b = lsh_n_bits(emb.count()) if n_bits is None else n_bits
-        buckets = lsh_buckets(emb, b)
     cand = _bucket_windowed_pairs(buckets, window)
-    wn = with_norms(emb) if norms is None else norms
     return (
         cand.join(
-            wn.select(
+            norms.select(
                 F.col("vec_id").alias("vec_a"),
                 F.col("embedding").alias("emb_a"),
                 F.col("norm").alias("norm_a"),
@@ -472,7 +466,7 @@ def embedding_near_dup_pairs(
             "vec_a",
         )
         .join(
-            wn.select(
+            norms.select(
                 F.col("vec_id").alias("vec_b"),
                 F.col("embedding").alias("emb_b"),
                 F.col("norm").alias("norm_b"),
@@ -499,10 +493,9 @@ KNN_WINDOW = 16
 
 
 def knn_graph(
-    emb: DataFrame,
+    buckets: DataFrame,
+    norms: DataFrame,
     k: int = KNN_GRAPH_K,
-    buckets: DataFrame | None = None,
-    norms: DataFrame | None = None,
     window: int = KNN_WINDOW,
 ) -> DataFrame:
     """Corpus-wide approximate k-NN graph: every vector's top-``k``
@@ -536,8 +529,6 @@ def knn_graph(
     persisted index store — graph construction never rescans or
     re-projects the corpus.
     """
-    if buckets is None:
-        buckets = lsh_buckets(emb, lsh_n_bits(emb.count()))
     fwd = _bucket_windowed_directed(buckets, window).select(
         F.col("va").alias("src_id"), F.col("vb").alias("nbr_id")
     )
@@ -562,10 +553,9 @@ def knn_graph(
         .select("e.src_id", "e.nbr_id")
         .distinct()
     )
-    wn = with_norms(emb) if norms is None else norms
     scored = (
         cand.join(
-            wn.select(
+            norms.select(
                 F.col("vec_id").alias("src_id"),
                 F.col("embedding").alias("emb_a"),
                 F.col("norm").alias("norm_a"),
@@ -573,7 +563,7 @@ def knn_graph(
             "src_id",
         )
         .join(
-            wn.select(
+            norms.select(
                 F.col("vec_id").alias("nbr_id"),
                 F.col("embedding").alias("emb_b"),
                 F.col("norm").alias("norm_b"),
@@ -613,11 +603,10 @@ def _bucket_probe_candidates(buckets: DataFrame, n_queries: int) -> DataFrame:
 
 
 def range_search(
-    emb: DataFrame,
+    buckets: DataFrame,
+    norms: DataFrame,
     tau: float = 0.2,
     n_queries: int = 10,
-    buckets: DataFrame | None = None,
-    norms: DataFrame | None = None,
 ) -> DataFrame:
     """Radius (range) similarity search: for each query vector, EVERY
     corpus neighbor with cosine >= ``tau`` — the unbounded-k companion
@@ -636,13 +625,10 @@ def range_search(
     interest (and the oracle replicates the banding, so the gate is
     exact).
     """
-    if buckets is None:
-        buckets = lsh_buckets(emb, lsh_n_bits(emb.count()))
-    wn = with_norms(emb) if norms is None else norms
     cand = _bucket_probe_candidates(buckets, n_queries)
     return (
         cand.join(
-            wn.select(
+            norms.select(
                 F.col("vec_id").alias("query_id"),
                 F.col("embedding").alias("q_emb"),
                 F.col("norm").alias("q_norm"),
@@ -650,7 +636,7 @@ def range_search(
             "query_id",
         )
         .join(
-            wn.select(
+            norms.select(
                 F.col("vec_id").alias("neighbor_id"),
                 F.col("embedding").alias("n_emb"),
                 F.col("norm").alias("n_norm"),
@@ -684,6 +670,20 @@ def kmeans_sample_stride(n: int) -> int:
     on both engines."""
     k = ivf_cell_stride(n)  # == ceil(sqrt(N)) == centroid count target
     return max(1, n // (KMEANS_C * k))
+
+
+def ivf_stride_centroids(emb: DataFrame, n: int) -> DataFrame:
+    """Zero-training IVF centroids: every :func:`ivf_cell_stride`-th
+    vector of an ``n``-vector corpus (~sqrt(N) cells), as
+    (cell_id, c_emb, c_norm) — the relation shape
+    :func:`kmeans_centroids` returns, so :func:`ivf_topk` probes
+    either the same way."""
+    stride = ivf_cell_stride(n)
+    return emb.filter(F.col("vec_id") % stride == 0).select(
+        F.col("vec_id").alias("cell_id"),
+        F.col("embedding").alias("c_emb"),
+        _norm("embedding").alias("c_norm"),
+    )
 
 
 def kmeans_centroids(emb: DataFrame, n: int, iters: int = KMEANS_ITERS) -> DataFrame:
@@ -798,12 +798,7 @@ def ivf_assignments(emb: DataFrame, cents: DataFrame) -> DataFrame:
 CLUSTER_SAMPLE_M = 25
 
 
-def cluster_sample(
-    emb: DataFrame,
-    cents: DataFrame,
-    m: int = CLUSTER_SAMPLE_M,
-    assigned: DataFrame | None = None,
-) -> DataFrame:
+def cluster_sample(assigned: DataFrame, m: int = CLUSTER_SAMPLE_M) -> DataFrame:
     """Cluster-balanced diversity sample: at most ``m`` vectors per
     IVF cell, chosen by a content-addressed hash — the embedding-space
     curation step (SemDeDup's sibling: instead of dropping near-dups
@@ -816,20 +811,17 @@ def cluster_sample(
     identical rows.  ``n_cell`` (pre-cap cell population) rides along
     as the balance diagnostic.
 
-    Scale: the assignment is :func:`ivf_assignments` (broadcast
-    centroids, map-side argmax — no shuffle beyond the vec_id
-    repartition), or the PERSISTED inverted file via ``assigned``
-    (must correspond to the same ``cents``); the quota needs one
-    shuffle keyed by cell_id and a
-    per-cell sort of hash values.  Cells are ~sqrt(N) sized by
+    Scale: ``assigned`` is the :func:`ivf_assignments` inverted file
+    (broadcast centroids, map-side argmax — no shuffle beyond the
+    vec_id repartition; persisted beside the centroids); the quota
+    needs one shuffle keyed by cell_id and a per-cell sort of hash
+    values.  Cells are ~sqrt(N) sized by
     construction, so the sort is bounded per task; at extreme corpus
     sizes swap the exact quota for hash-threshold rate sampling
     (keep when h < m/n_cell quantile) to avoid the per-cell sort
     entirely — exactness of the quota is the only thing lost.
     """
-    a = (assigned if assigned is not None else ivf_assignments(emb, cents)).select(
-        "vec_id", "cell_id"
-    )
+    a = assigned.select("vec_id", "cell_id")
     h = F.md5(F.concat(F.lit("cls|"), F.col("vec_id").cast("string")))
     w = Window.partitionBy("cell_id").orderBy("h", "vec_id")
     wc = Window.partitionBy("cell_id")
@@ -844,33 +836,26 @@ def cluster_sample(
 
 def ivf_topk(
     emb: DataFrame,
+    centroids: DataFrame,
+    assigned: DataFrame,
     n_queries: int = 10,
     k: int = 5,
-    stride: int | None = None,
     n_probe: int = IVF_N_PROBE,
-    centroids: DataFrame | None = None,
-    assigned: DataFrame | None = None,
     allowed: DataFrame | None = None,
 ) -> DataFrame:
     """Approximate top-k via an IVF (inverted-file) index — the
     cell-probing alternative to sign-projection LSH.
 
-    * **Centroids**: either a prebuilt ``centroids`` relation
-      (:func:`kmeans_centroids` — the production path) or, when
-      omitted, every ``stride``-th vector with stride = ceil(sqrt(N))
-      (:func:`ivf_cell_stride`).  Both give ~√N cells — the balance
-      point where assign (N·cells) and probe (|q|·cells) stay
-      subquadratic at any corpus size — and the plan shape downstream
-      is identical, so the stride variant remains the zero-training
-      baseline the k-means variant is measured against
-      (scripts/scalecheck.py asserts the recall ordering).
-    * **Assign**: each corpus vector joins the broadcast centroid set
-      and keeps its single nearest cell (rounded cosine, cell_id
-      tie-break) via a ``max_by`` hash aggregation — map-side partial
-      combine shrinks the N x cells scored relation back to N rows
-      BEFORE the shuffle, and nothing is ever sorted (a window top-1
-      would shuffle and sort all N x cells rows).  The inverted file
-      never materializes on the driver.
+    * **Centroids**: :func:`kmeans_centroids` (the production path) or
+      :func:`ivf_stride_centroids` (every ceil(sqrt(N))-th vector).
+      Both give ~√N cells — the balance point where assign (N·cells)
+      and probe (|q|·cells) stay subquadratic at any corpus size — and
+      the plan shape downstream is identical, so the stride variant
+      remains the zero-training baseline the k-means variant is
+      measured against (scripts/scalecheck.py asserts the recall
+      ordering).
+    * **Assign**: ``assigned`` is :func:`ivf_assignments` over the same
+      ``centroids`` — the inverted file, persisted beside them.
     * **Probe**: each query scores the same centroid set and searches
       its ``n_probe`` nearest cells; candidates are only the vectors
       assigned to those cells (the |corpus| x |queries| cross product
@@ -880,20 +865,6 @@ def ivf_topk(
     is missed) — that is the IVF trade; raise ``n_probe`` toward the
     cell count to converge on the brute-force result.
     """
-    if centroids is not None:
-        cents = centroids
-    else:
-        if stride is None:
-            stride = ivf_cell_stride(emb.count())
-        cents = emb.filter(F.col("vec_id") % stride == 0).select(
-            F.col("vec_id").alias("cell_id"),
-            F.col("embedding").alias("c_emb"),
-            _norm("embedding").alias("c_norm"),
-        )
-    # `assigned` (the persisted inverted file) must correspond to the
-    # same centroid relation the probe stage scores
-    if assigned is None:
-        assigned = ivf_assignments(emb, cents)
     # Filtered search (pre-filter WITHIN the index): restrict the
     # inverted file to the allowed (vec_id) set BEFORE the candidate
     # join, so only allowed members of probed cells are ever scored.
@@ -913,7 +884,7 @@ def ivf_topk(
             F.col("embedding").alias("q_emb"),
             _norm("embedding").alias("q_norm"),
         )
-        .crossJoin(F.broadcast(cents))
+        .crossJoin(F.broadcast(centroids))
         .select(
             "query_id",
             "q_emb",
@@ -937,12 +908,7 @@ def ivf_topk(
     return scored.withColumn("rnk", F.row_number().over(w)).filter(F.col("rnk") <= k)
 
 
-def semantic_dedup(
-    emb: DataFrame,
-    cents: DataFrame,
-    threshold: float = 0.2,
-    assigned: DataFrame | None = None,
-) -> DataFrame:
+def semantic_dedup(assigned: DataFrame, threshold: float = 0.2) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, arXiv:2303.09540): semantic
     deduplication over an embedding corpus with k-means-cell-bounded
     pair enumeration — keep one representative per group of
@@ -966,14 +932,13 @@ def semantic_dedup(
     are near-orthogonal, so 0.2 is "suspiciously similar" there; a
     real SemDeDup sweep over model embeddings runs ~0.95+.
 
-    ``assigned`` accepts a prebuilt (cached) :func:`ivf_assignments`
-    relation — it is referenced four times here (the slim projection
-    feeds both candidate self-join sides plus the decision spine, and
-    the norm projection feeds both embedding re-joins), so callers
-    should persist it.
+    ``assigned`` is the :func:`ivf_assignments` inverted file over the
+    k-means cells — it is referenced four times here (the slim
+    projection feeds both candidate self-join sides plus the decision
+    spine, and the norm projection feeds both embedding re-joins), so
+    callers should persist it.
     """
-    a = ivf_assignments(emb, cents) if assigned is None else assigned
-    slim = a.select("vec_id", "cell_id")
+    slim = assigned.select("vec_id", "cell_id")
     cand = (
         slim.alias("x")
         .join(slim.alias("y"), "cell_id")
@@ -984,7 +949,7 @@ def semantic_dedup(
             F.col("y.vec_id").alias("vec_b"),
         )
     )
-    wn = a.select("vec_id", "embedding", "norm")
+    wn = assigned.select("vec_id", "embedding", "norm")
     dropped = (
         cand.join(
             wn.select(
@@ -1012,11 +977,10 @@ def semantic_dedup(
 
 
 def lsh_topk(
-    emb: DataFrame,
+    buckets: DataFrame,
+    norms: DataFrame,
     n_queries: int = 10,
     k: int = 5,
-    buckets: DataFrame | None = None,
-    norms: DataFrame | None = None,
 ) -> DataFrame:
     """Approximate top-k: exact cosine restricted to candidates sharing
     an LSH bucket with the query in ANY of the N_TABLES tables (bucket
@@ -1024,21 +988,18 @@ def lsh_topk(
     per query (fewer when the buckets are sparse — that's the ANN
     recall trade; the table union multiplies the collision chance).
 
-    ``buckets``/``norms`` accept prebuilt (cached) relations shared
-    with the near-dup path.
+    ``buckets``/``norms`` are the signature relations shared with the
+    near-dup path (:func:`lsh_buckets`, :func:`with_norms`).
     """
-    if buckets is None:
-        buckets = lsh_buckets(emb, lsh_n_bits(emb.count()))
     cand = _bucket_probe_candidates(buckets, n_queries)
-    wn = with_norms(emb) if norms is None else norms
-    q_emb = wn.filter(F.col("vec_id") < n_queries).select(
+    q_emb = norms.filter(F.col("vec_id") < n_queries).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("q_emb"),
         F.col("norm").alias("q_norm"),
     )
     scored = (
         cand.join(
-            wn.select(
+            norms.select(
                 F.col("vec_id").alias("neighbor_id"),
                 F.col("embedding").alias("n_emb"),
                 F.col("norm").alias("n_norm"),
@@ -1280,34 +1241,27 @@ def pq_reconstruct(codes: DataFrame, books: DataFrame) -> DataFrame:
 
 def pq_topk(
     emb: DataFrame,
+    recon: DataFrame,
     n_queries: int = 10,
     k: int = 5,
-    books: DataFrame | None = None,
-    recon: DataFrame | None = None,
-    rerank: int | None = PQ_RERANK,
 ) -> DataFrame:
     """Approximate top-k via the ADC + exact-rerank pipeline: score
     every corpus vector against the query on its PQ RECONSTRUCTION
     (64x-compressed: PQ_M 1-byte codes vs 256 float32 bytes), keep the
-    top ``rerank`` candidates per query, then rescore exactly those
-    with the full-precision vectors and emit the top ``k``.
+    top :data:`PQ_RERANK` candidates per query, then rescore exactly
+    those with the full-precision vectors and emit the top ``k``.
 
     This is the standard memory-bounded serving shape (compressed
     corpus resident, full vectors touched only for the candidate
     slice): the ADC pass is the same plan as :func:`cosine_topk` with
     the corpus side decoded from codes + broadcast codebook; the
-    rerank stage joins full embeddings for |q| * rerank rows only.
-    Recall = P(true top-k survives the ADC top-``rerank``) — set
-    ``rerank=None`` to rank purely on reconstructions (the no-rerank
-    mode that shows raw quantization quality).
+    rerank stage joins full embeddings for |q| * PQ_RERANK rows only.
+    Recall = P(true top-k survives the ADC top-PQ_RERANK).
 
-    ``books``/``recon`` accept prebuilt (cached) relations — in
-    production both persist beside the corpus as the PQ index.
+    ``recon`` is :func:`pq_reconstruct` of :func:`pq_encode` under the
+    :func:`pq_codebooks` — in production both persist beside the
+    corpus as the PQ index.
     """
-    if recon is None:
-        if books is None:
-            books = pq_codebooks(emb, emb.count())
-        recon = pq_reconstruct(pq_encode(emb, books), books)
     q = emb.filter(F.col("vec_id") < n_queries).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("q_emb"),
@@ -1328,16 +1282,9 @@ def pq_topk(
     w_adc = Window.partitionBy("query_id").orderBy(
         F.col("adc_sim").desc(), F.col("neighbor_id")
     )
-    if rerank is None:
-        out = scored.withColumn("rnk", F.row_number().over(w_adc)).filter(
-            F.col("rnk") <= k
-        )
-        return out.select(
-            "query_id", "neighbor_id", F.col("adc_sim").alias("cos_sim"), "rnk"
-        )
     cand = (
         scored.withColumn("rn", F.row_number().over(w_adc))
-        .filter(F.col("rn") <= rerank)
+        .filter(F.col("rn") <= PQ_RERANK)
         .select("query_id", "neighbor_id", "q_emb", "q_norm")
     )
     exact = cand.join(
@@ -1392,13 +1339,34 @@ def ivfpq_residuals(emb: DataFrame, cents: DataFrame) -> DataFrame:
     )
 
 
+def ivfpq_reconstruct(emb: DataFrame, cents: DataFrame, n: int) -> DataFrame:
+    """The IVF-PQ compressed corpus, decoded: (vec_id, cell_id, recon)
+    with recon = coarse centroid + PQ-decoded residual.  Residuals
+    against the k-means ``cents`` (:func:`ivfpq_residuals`), per-subspace
+    residual codebooks trained on the ``n``-vector corpus + encode
+    (:func:`pq_codebooks`/:func:`pq_encode` — the residual relation
+    exposes the same column shape), decode, centroid added back —
+    KEYED BY CELL so :func:`ivfpq_topk` probes by cell_id."""
+    resid = ivfpq_residuals(emb, cents)
+    books = pq_codebooks(resid, n)
+    rrec = pq_reconstruct(pq_encode(resid, books), books)
+    return (
+        rrec.join(resid.select("vec_id", "cell_id"), "vec_id")
+        .join(F.broadcast(cents.select("cell_id", "c_emb")), "cell_id")
+        .select(
+            "vec_id",
+            "cell_id",
+            F.expr("zip_with(c_emb, recon, (c, r) -> c + r)").alias("recon"),
+        )
+    )
+
+
 def ivfpq_topk(
     emb: DataFrame,
+    cents: DataFrame,
+    recon: DataFrame,
     n_queries: int = 10,
     k: int = 5,
-    cents: DataFrame | None = None,
-    recon: DataFrame | None = None,
-    rerank: int | None = PQ_RERANK,
     n_probe: int = IVF_N_PROBE,
 ) -> DataFrame:
     """IVF-PQ: product quantization of the RESIDUAL after coarse
@@ -1410,12 +1378,9 @@ def ivfpq_topk(
     their entire budget on the informative residual
     (reconstruction = centroid + residual decode).
 
-    Pipeline: coarse cells (:func:`kmeans_centroids`, ~sqrt(N)) →
-    residuals (:func:`ivfpq_residuals`) → per-subspace residual
-    codebooks + encode (:func:`pq_codebooks`/:func:`pq_encode`
-    unchanged — the residual relation exposes the same column shape)
-    → reconstruction = centroid + decoded residual, KEYED BY CELL →
-    probe-limited search: each query scores the broadcast centroid set,
+    Pipeline: coarse cells ``cents`` (:func:`kmeans_centroids`,
+    ~sqrt(N)) → ``recon`` (:func:`ivfpq_reconstruct` over those cells)
+    → probe-limited search: each query scores the broadcast centroid set,
     keeps its ``n_probe`` nearest cells, and ADC-scores ONLY the
     reconstructions assigned to those cells (an equi-join on cell_id —
     query cost is the probed cells' population, never |q|·N, unlike
@@ -1425,23 +1390,6 @@ def ivfpq_topk(
     scripts/scalecheck.py measures the recall ladder
     (plain-PQ ≤ IVF-PQ) on its clustered corpus.
     """
-    if cents is None or recon is None:
-        n = emb.count()
-    if cents is None:
-        cents = kmeans_centroids(emb, n)
-    if recon is None:
-        resid = ivfpq_residuals(emb, cents)
-        books = pq_codebooks(resid, n)
-        rrec = pq_reconstruct(pq_encode(resid, books), books)
-        recon = (
-            rrec.join(resid.select("vec_id", "cell_id"), "vec_id")
-            .join(F.broadcast(cents.select("cell_id", "c_emb")), "cell_id")
-            .select(
-                "vec_id",
-                "cell_id",
-                F.expr("zip_with(c_emb, recon, (c, r) -> c + r)").alias("recon"),
-            )
-        )
     w_probe = Window.partitionBy("query_id").orderBy(
         F.col("c_sim").desc(), F.col("cell_id")
     )
@@ -1478,21 +1426,9 @@ def ivfpq_topk(
     w_adc = Window.partitionBy("query_id").orderBy(
         F.col("adc_sim").desc(), F.col("neighbor_id")
     )
-    if rerank is None:
-        # mirror pq_topk's rerank=None contract exactly (r11 review:
-        # this path used to exact-rescore the ADC top-k, so the two
-        # ops' "raw quantization quality" modes weren't comparable):
-        # rank purely on reconstructions, report adc_sim as cos_sim
-        return (
-            adc.withColumn("rnk", F.row_number().over(w_adc))
-            .filter(F.col("rnk") <= k)
-            .select(
-                "query_id", "neighbor_id", F.col("adc_sim").alias("cos_sim"), "rnk"
-            )
-        )
     cand = (
         adc.withColumn("rn", F.row_number().over(w_adc))
-        .filter(F.col("rn") <= rerank)
+        .filter(F.col("rn") <= PQ_RERANK)
         .select("query_id", "neighbor_id", "q_emb", "q_norm")
     )
     exact = cand.join(
@@ -1513,9 +1449,9 @@ def ivfpq_topk(
 
 def contrastive_negatives(
     emb: DataFrame,
+    buckets: DataFrame,
     n_queries: int = 10,
     k: int = 5,
-    buckets: DataFrame | None = None,
 ) -> DataFrame:
     """Deterministic negative sampling for contrastive training: for
     each anchor (vec_id < ``n_queries``), ``k`` corpus vectors that
@@ -1542,8 +1478,6 @@ def contrastive_negatives(
     WindowGroupLimit, so the shuffle carries at most
     k x anchors x input-partitions rows — never the fan-out itself.
     """
-    if buckets is None:
-        buckets = lsh_buckets(emb, lsh_n_bits(emb.count()))
     q_sig = buckets.filter(F.col("vec_id") < n_queries).select(
         F.col("vec_id").alias("query_id"), "tbl", "bucket"
     )

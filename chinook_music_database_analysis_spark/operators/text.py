@@ -319,12 +319,11 @@ def fingerprint(docs: DataFrame) -> DataFrame:
 
 
 def tfidf_top_terms(
-    docs: DataFrame,
+    postings: DataFrame,
     n_docs: int,
     top_k: int = 3,
     idf_scale: int = 1_000_000,
     max_tf: int | None = None,
-    postings: DataFrame | None = None,
 ) -> DataFrame:
     """Top ``top_k`` characteristic terms per document by TF-IDF — the
     keyword-extraction pass feeding corpus exploration and topic
@@ -338,8 +337,13 @@ def tfidf_top_terms(
     libm builds.  ``n_docs`` is the corpus count, derived once by the
     caller (same stats-pass pattern as the ANN parameter derivation).
 
-    Plan (all linear, no corpus-wide sort): explode tokens → hash-agg
-    term frequency keyed by (doc, term) → hash-agg document frequency
+    ``postings`` is the (doc_id, term, tf) inverted relation
+    (:func:`bm25_corpus_relations` — tokenize, explode and the (doc,
+    term) count, typically store-served, so consumers sharing the BM25
+    store never re-tokenize the corpus per execution).
+
+    Plan (all linear, no corpus-wide sort): term frequency per (doc,
+    term) from ``postings`` → hash-agg document frequency
     keyed by term (one row per vocab term) → join idf back keyed by
     term → per-doc top-k window keyed by doc.  The vocab relation is
     data-sized, so the idf join is a plain shuffled hash join (AQE
@@ -367,28 +371,14 @@ def tfidf_top_terms(
             f"* n_docs={n_docs} > (2^63-1)/{idf_scale} — lower idf_scale "
             "or pre-filter the hot terms"
         )
-    # ``postings`` accepts the persisted (doc_id, term, tf) inverted
-    # relation (:func:`bm25_corpus_relations` — row-identical to the
-    # derivation below by construction: same tokens_expr, same
-    # (doc, term) count), so consumers sharing the BM25 store never
-    # re-tokenize the corpus per execution (r13, guide §2.4).
-    tf = (
-        postings
-        if postings is not None
-        else (
-            docs.select("doc_id", F.explode(tokens_expr()).alias("term"))
-            .groupBy("doc_id", "term")
-            .agg(F.count(F.lit(1)).alias("tf"))
-        )
-    )
-    idf = tf.groupBy("term").agg(
+    idf = postings.groupBy("term").agg(
         F.expr(f"CAST({n_docs} AS BIGINT) * {idf_scale} div count(1)").alias("idf_q")
     )
     w = Window.partitionBy("doc_id").orderBy(
         F.col("score").desc(), F.col("term")
     )
     return (
-        tf.join(idf, "term")
+        postings.join(idf, "term")
         .select("doc_id", "term", "tf", (F.col("tf") * F.col("idf_q")).alias("score"))
         .withColumn("rnk", F.row_number().over(w))
         .filter(F.col("rnk") <= top_k)
@@ -396,9 +386,7 @@ def tfidf_top_terms(
     )
 
 
-def unigram_surprisal(
-    docs: DataFrame, scale: int = 1000, postings: DataFrame | None = None
-) -> DataFrame:
+def unigram_surprisal(postings: DataFrame, scale: int = 1000) -> DataFrame:
     """Per-document unigram-LM cross-entropy (bits/token) — the cheap
     stand-in for the CCNet/Wikipedia-LM perplexity filter used in
     training-data pipelines: documents whose tokens are "too
@@ -419,24 +407,14 @@ def unigram_surprisal(
     where Spark's BigDecimal-on-shortest-repr HALF_UP and DuckDB's
     scale-then-round-the-double disagree (observed at sf0.01).
 
-    Plan — the tfidf shape, all linear: explode tokens -> (doc, term)
-    tf hash-agg -> vocab hash-agg (one row per term, with the corpus
-    total as a broadcast 1-row aggregate: no driver-side count) ->
+    Plan — the tfidf shape, all linear: the (doc, term, tf)
+    ``postings`` (:func:`bm25_corpus_relations`) -> vocab hash-agg
+    (one row per term, with the corpus total as a broadcast 1-row
+    aggregate: no driver-side count) ->
     idf-style join keyed by term -> per-doc hash-agg.  Universal-term
     join skew is AQE-split like tfidf's.
     """
-    # ``postings`` — same persisted-inverted-relation reuse as
-    # tfidf_top_terms (row-identical to the inline derivation).
-    tf = (
-        postings
-        if postings is not None
-        else (
-            docs.select("doc_id", F.explode(tokens_expr()).alias("term"))
-            .groupBy("doc_id", "term")
-            .agg(F.count(F.lit(1)).alias("tf"))
-        )
-    )
-    vocab = tf.groupBy("term").agg(F.sum("tf").alias("cnt"))
+    vocab = postings.groupBy("term").agg(F.sum("tf").alias("cnt"))
     total = vocab.agg(F.sum("cnt").alias("total"))
     term_s = vocab.crossJoin(F.broadcast(total)).select(
         "term",
@@ -446,7 +424,7 @@ def unigram_surprisal(
         ).alias("s_q"),
     )
     return (
-        tf.join(term_s, "term")
+        postings.join(term_s, "term")
         .groupBy("doc_id")
         .agg(
             F.sum("tf").alias("n_tokens"),
@@ -541,11 +519,11 @@ def bm25_corpus_relations(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
     beside the corpus: the full ``(doc_id, term, tf)`` inverted
     postings relation and the ``(doc_id, dl)`` document-length
     relation.  Both are linear in corpus token count and built with
-    one scan + one hash-agg; :func:`bm25_topk` consumes them via its
-    ``postings``/``doclens`` parameters so repeated retrieval batches
-    never re-tokenize the corpus (the RAG-serving shape at 100 TB —
-    plans/curation_queries serves both from the fingerprint-guarded
-    index store).
+    one scan + one hash-agg; :func:`bm25_topk`, :func:`bm25_batch_topk`,
+    :func:`tfidf_top_terms` and :func:`unigram_surprisal` consume them,
+    so repeated retrieval batches never re-tokenize the corpus (the
+    RAG-serving shape at 100 TB — plans/curation_queries serves both
+    from the fingerprint-guarded index store).
 
     The postings relation is clustered by term (hash repartition +
     sort-within-partitions) so a parquet store of it carries term
@@ -565,14 +543,13 @@ def bm25_corpus_relations(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
 
 
 def bm25_topk(
-    docs: DataFrame,
+    postings: DataFrame,
+    doclens: DataFrame,
     query_terms: tuple[str, ...],
     n_docs: int,
     total_tokens: int,
     top_k: int = 20,
     idf_scale: int = 1_000_000,
-    postings: DataFrame | None = None,
-    doclens: DataFrame | None = None,
     max_dl: int | None = None,
 ) -> DataFrame:
     """BM25 keyword retrieval: top ``top_k`` documents for a bag of
@@ -607,16 +584,14 @@ def bm25_topk(
       assert the bound at plan-build time instead of silently
       wrapping: OverflowError if max_dl*avgdl_q exceeds it.
 
-    ``postings``/``doclens`` (from :func:`bm25_corpus_relations`,
-    typically store-served) replace the tokenize+explode of ``docs``:
-    the query-bag filter is then a pushed-down parquet predicate over
-    the postings table rather than a full-corpus token explode.
+    ``postings``/``doclens`` come from :func:`bm25_corpus_relations`
+    (typically store-served): the query-bag filter is a pushed-down
+    parquet predicate over the term-clustered postings table rather
+    than a full-corpus token explode.
 
-    Plan shape (all linear): one token explode filtered to the query
-    bag BEFORE any shuffle (the filter prunes ~the whole token
-    stream), tf hash-agg keyed (doc, term), df hash-agg over the tf
-    relation (|query| rows -> broadcast), doc-length join keyed by
-    doc, per-doc sum, then a global top-k that compiles to
+    Plan shape (all linear): the postings filtered to the query bag,
+    df hash-agg over the tf relation (|query| rows -> broadcast),
+    doc-length join keyed by doc, per-doc sum, then a global top-k that compiles to
     TakeOrderedAndProject — no corpus-wide sort.  n_docs /
     total_tokens are caller-provided stats-pass scalars.
     """
@@ -630,20 +605,8 @@ def bm25_topk(
             f"* avgdl_q={avgdl_q} > (2^63-1)/(22*{BM25_SCALE}); reduce "
             "BM25_SCALE or truncate pathological documents"
         )
-    if postings is not None:
-        if doclens is None:
-            raise ValueError("postings requires doclens (both store-served)")
-        tf = postings.filter(F.col("term").isin(qt)).select("doc_id", "term", "tf")
-        dl = doclens.select("doc_id", "dl")
-    else:
-        toks = docs.select("doc_id", tokens_expr().alias("toks"))
-        dl = toks.select("doc_id", F.size("toks").alias("dl"))
-        tf = (
-            toks.select("doc_id", F.explode("toks").alias("term"))
-            .filter(F.col("term").isin(qt))
-            .groupBy("doc_id", "term")
-            .agg(F.count(F.lit(1)).alias("tf"))
-        )
+    tf = postings.filter(F.col("term").isin(qt)).select("doc_id", "term", "tf")
+    dl = doclens.select("doc_id", "dl")
     idf = tf.groupBy("term").agg(
         F.expr(f"CAST({n_docs} AS BIGINT) * {idf_scale} div count(1)").alias("idf_q")
     )

@@ -360,13 +360,8 @@ def cur_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:
     dictionary (_boiler_set) and runs one broadcast join + one agg."""
 
     def _build() -> DataFrame:
-        docs = load_tables(spark, sf_dir)["documents"]
-        n = _doc_count(spark, sf_dir)
         return boilerplate_score(
-            docs,
-            min_df=(n * BOILER_PCT_NUM + 99) // 100,
-            shingles=_doc_bigrams(spark, sf_dir),
-            boiler_set=_boiler_set(spark, sf_dir),
+            _doc_bigrams(spark, sf_dir), _boiler_set(spark, sf_dir)
         )
 
     return persisted(
@@ -645,12 +640,8 @@ def tx_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
     window, never a corpus re-tokenization."""
     from ..operators.text import tfidf_top_terms
 
-    docs = load_tables(spark, sf_dir)["documents"]
     return tfidf_top_terms(
-        docs,
-        n_docs=_doc_count(spark, sf_dir),
-        top_k=3,
-        postings=_bm25_postings(spark, sf_dir),
+        _bm25_postings(spark, sf_dir), n_docs=_doc_count(spark, sf_dir), top_k=3
     )
 
 
@@ -885,7 +876,6 @@ def dd_minhash_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from .extensions import _shingles
 
-    docs = load_tables(spark, sf_dir)["documents"]
     # The signature table is the persisted artifact of a production
     # dedup store — served from the on-disk index store like the band/
     # shingle relations (N_HASHES min-aggregations over the corpus
@@ -895,7 +885,7 @@ def dd_minhash_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
         "minhash_sig",
         spark,
         sf_dir,
-        lambda: minhash_signatures(docs, shingles=_shingles(spark, sf_dir)),
+        lambda: minhash_signatures(_shingles(spark, sf_dir)),
         table="documents",
         params=f"k={SHINGLE_K},h={N_HASHES}",
     )
@@ -1185,16 +1175,14 @@ def tx_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     feeds bm25_topk's int64 fixed-point overflow guard."""
     from ..operators.text import bm25_topk
 
-    docs = load_tables(spark, sf_dir)["documents"]
     total_tokens, max_dl = _doclen_stats(spark, sf_dir)
     return bm25_topk(
-        docs,
+        _bm25_postings(spark, sf_dir),
+        _bm25_doclens(spark, sf_dir),
         BM25_QUERY,
         n_docs=_doc_count(spark, sf_dir),
         total_tokens=total_tokens,
         top_k=BM25_TOP_K,
-        postings=_bm25_postings(spark, sf_dir),
-        doclens=_bm25_doclens(spark, sf_dir),
         max_dl=max_dl,
     )
 
@@ -1421,16 +1409,14 @@ def tx_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.similarity import cosine_topk
     from ..operators.text import bm25_topk, rrf_fuse
 
-    docs = load_tables(spark, sf_dir)["documents"]
     total_tokens, max_dl = _doclen_stats(spark, sf_dir)
     sparse = bm25_topk(
-        docs,
+        _bm25_postings(spark, sf_dir),
+        _bm25_doclens(spark, sf_dir),
         BM25_QUERY,
         n_docs=_doc_count(spark, sf_dir),
         total_tokens=total_tokens,
         top_k=HYBRID_DEPTH,
-        postings=_bm25_postings(spark, sf_dir),
-        doclens=_bm25_doclens(spark, sf_dir),
         max_dl=max_dl,
     ).select("doc_id", "rank")
     from .extensions import _emb_norms

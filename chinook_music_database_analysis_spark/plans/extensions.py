@@ -111,9 +111,7 @@ def _bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     cost of the MinHash family's cold path)."""
     return persisted(
         "minhash_bands", spark, sf_dir,
-        lambda: minhash_bands(
-            load_tables(spark, sf_dir)["documents"], shingles=_shingles(spark, sf_dir)
-        ),
+        lambda: minhash_bands(_shingles(spark, sf_dir)),
         table="documents",
         params=f"k={SHINGLE_K},h={N_HASHES},b={BANDS}",
     )
@@ -138,9 +136,7 @@ def _cand_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     times by the verify/cluster stages, so cached like the bands."""
     return memo(
         "cand_pairs", spark, sf_dir,
-        lambda: minhash_candidate_pairs(
-            load_tables(spark, sf_dir)["documents"], bands=_bands(spark, sf_dir)
-        ),
+        lambda: minhash_candidate_pairs(_bands(spark, sf_dir)),
         persist=True,
     )
 
@@ -626,7 +622,6 @@ def dd_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     unchanged."""
     from ..operators.dedup import HOT_JOIN_FACTOR, containment_pairs_exact
 
-    docs = load_tables(spark, sf_dir)["documents"]
     sh = _shingles(spark, sf_dir)
     n_rows, join_rows = _containment_join_stats(spark, sf_dir)
     if join_rows > HOT_JOIN_FACTOR * n_rows:
@@ -640,7 +635,7 @@ def dd_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     def build() -> DataFrame:
-        return containment_pairs_exact(docs, shingles=sh)
+        return containment_pairs_exact(sh)
 
     # The pair table is a deterministic corpus artifact — exactly what
     # a production dedup deployment versions beside the corpus (the
@@ -744,16 +739,13 @@ def dd_containment_scale(spark: SparkSession, sf_dir: str) -> DataFrame:
         containment_pairs,
     )
 
-    docs = load_tables(spark, sf_dir)["documents"]
     # Store-served like dd_containment: the capped-path pair table is
     # the same corpus-versioned dedup artifact, built from the
     # persisted candidate spine.
     return persisted(
         "containment_pairs_capped", spark, sf_dir,
         lambda: containment_pairs(
-            docs,
-            shingles=_shingles(spark, sf_dir),
-            candidates=_containment_cand(spark, sf_dir),
+            _shingles(spark, sf_dir), _containment_cand(spark, sf_dir)
         ),
         table="documents",
         params=(
@@ -822,10 +814,7 @@ def _containment_cand(spark: SparkSession, sf_dir: str) -> DataFrame:
 def dd_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact n-gram Jaccard verification over the LSH candidate pairs."""
     return ngram_jaccard_pairs(
-        load_tables(spark, sf_dir)["documents"],
-        shingles=_shingles(spark, sf_dir),
-        candidates=_cand_pairs(spark, sf_dir),
-        sh_cand=_ngram_sh_cand(spark, sf_dir),
+        _cand_pairs(spark, sf_dir), _ngram_sh_cand(spark, sf_dir)
     )
 
 
@@ -902,11 +891,7 @@ def dd_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 def dd_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash near-dup pairs (hamming <= 3) with block-band candidate
     bounding (pigeonhole over the four 12-bit blocks)."""
-    return simhash_near_dup_pairs(
-        load_tables(spark, sf_dir)["documents"],
-        sig=_simhash_sig(spark, sf_dir),
-        nibbles=_simhash_nib(spark, sf_dir),
-    )
+    return simhash_near_dup_pairs(_simhash_nib(spark, sf_dir))
 
 
 def _register_dd_cross_simhash() -> None:
@@ -956,10 +941,7 @@ def _register_dd_cross_simhash() -> None:
         refs = docs.filter(
             _hash_bucket(F.col("doc_id"), "bench") < F.lit(thr)
         ).select("doc_id")
-        return simhash_cross_matches(
-            _simhash_sig(spark, sf_dir), refs,
-            nibbles=_simhash_nib(spark, sf_dir),
-        )
+        return simhash_cross_matches(_simhash_nib(spark, sf_dir), refs)
 
 
 _register_dd_cross_simhash()
@@ -1215,8 +1197,8 @@ def sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     persists it as the index table."""
     return ivf_topk(
         load_tables(spark, sf_dir)["embeddings"],
-        centroids=_ivf_cents(spark, sf_dir),
-        assigned=_ivf_assign(spark, sf_dir),
+        _ivf_cents(spark, sf_dir),
+        _ivf_assign(spark, sf_dir),
     )
 
 
@@ -1277,8 +1259,8 @@ def sim_filtered_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return ivf_topk(
         t["embeddings"],
-        centroids=_ivf_cents(spark, sf_dir),
-        assigned=_ivf_assign(spark, sf_dir),
+        _ivf_cents(spark, sf_dir),
+        _ivf_assign(spark, sf_dir),
         allowed=allowed,
     )
 
@@ -1321,11 +1303,7 @@ def cur_cluster_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     inverted file (_ivf_assign)."""
     from ..operators.similarity import cluster_sample
 
-    return cluster_sample(
-        load_tables(spark, sf_dir)["embeddings"],
-        _ivf_cents(spark, sf_dir),
-        assigned=_ivf_assign(spark, sf_dir),
-    )
+    return cluster_sample(_ivf_assign(spark, sf_dir))
 
 
 @register(
@@ -1376,26 +1354,18 @@ def sim_ivf_stride_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     as "the inverted file a production IVF index persists"."""
     return ivf_topk(
         load_tables(spark, sf_dir)["embeddings"],
-        centroids=_ivf_stride_cents(spark, sf_dir),
-        assigned=_ivf_stride_assign(spark, sf_dir),
+        _ivf_stride_cents(spark, sf_dir),
+        _ivf_stride_assign(spark, sf_dir),
     )
 
 
 def _ivf_stride_cents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stride-sampled centroid relation — every ceil(sqrt(N))-th
-    vector, exactly the relation ivf_topk builds inline when given
-    ``stride`` (same projection, same norms)."""
-    from ..operators.similarity import _norm, ivf_cell_stride
+    """Stride-sampled centroid relation (operators.similarity
+    .ivf_stride_centroids) — a filter of the corpus, not stored."""
+    from ..operators.similarity import ivf_stride_centroids
 
-    stride = ivf_cell_stride(_emb_count(spark, sf_dir))
-    return (
-        load_tables(spark, sf_dir)["embeddings"]
-        .filter(F.col("vec_id") % stride == 0)
-        .select(
-            F.col("vec_id").alias("cell_id"),
-            F.col("embedding").alias("c_emb"),
-            _norm("embedding").alias("c_norm"),
-        )
+    return ivf_stride_centroids(
+        load_tables(spark, sf_dir)["embeddings"], _emb_count(spark, sf_dir)
     )
 
 
@@ -1561,9 +1531,7 @@ def _register_sim_pq() -> None:
         and the reconstructed corpus are built once per session and
         cached (the persisted PQ index shape)."""
         return pq_topk(
-            load_tables(spark, sf_dir)["embeddings"],
-            books=_pq_books(spark, sf_dir),
-            recon=_pq_recon(spark, sf_dir),
+            load_tables(spark, sf_dir)["embeddings"], _pq_recon(spark, sf_dir)
         )
 
 
@@ -1571,43 +1539,24 @@ _register_sim_pq()
 
 
 def _ivfpq_recon(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Shared IVF-PQ reconstruction relation: coarse cells from the
-    cached k-means centroids, residual codebooks + encode, decode,
-    centroid added back.  Built once per session (the compressed-
-    corpus table of an IVF-PQ index)."""
-    from ..operators.similarity import (
-        ivfpq_residuals,
-        pq_codebooks,
-        pq_encode,
-        pq_reconstruct,
-    )
-
-    def build():
-        emb = load_tables(spark, sf_dir)["embeddings"]
-        cents = _ivf_cents(spark, sf_dir)
-        resid = ivfpq_residuals(emb, cents)
-        books = pq_codebooks(resid, _emb_count(spark, sf_dir))
-        rrec = pq_reconstruct(pq_encode(resid, books), books)
-        return (
-            rrec.join(resid.select("vec_id", "cell_id"), "vec_id")
-            .join(F.broadcast(cents.select("cell_id", "c_emb")), "cell_id")
-            .select(
-                "vec_id",
-                "cell_id",
-                F.expr("zip_with(c_emb, recon, (c, r) -> c + r)").alias("recon"),
-            )
-        )
-
-    from ..operators.similarity import KMEANS_C, PQ_C, PQ_K, PQ_M
+    """Shared IVF-PQ reconstruction relation over the stored k-means
+    centroids (operators.similarity.ivfpq_reconstruct) — on-disk index
+    store entry (the compressed-corpus table of an IVF-PQ index)."""
+    from ..operators.similarity import KMEANS_C, PQ_C, PQ_K, PQ_M, ivfpq_reconstruct
 
     return persisted(
-        "ivfpq_recon", spark, sf_dir, build,
+        "ivfpq_recon", spark, sf_dir,
+        lambda: ivfpq_reconstruct(
+            load_tables(spark, sf_dir)["embeddings"],
+            _ivf_cents(spark, sf_dir),
+            _emb_count(spark, sf_dir),
+        ),
         params=f"m={PQ_M},k={PQ_K},iters={KMEANS_ITERS},c={PQ_C},kc={KMEANS_C}",
     )
 
 
 def _register_sim_ivfpq() -> None:
-    from ..operators.similarity import EMB_DIM, KMEANS_ITERS, PQ_DSUB, PQ_RERANK, pq_topk
+    from ..operators.similarity import EMB_DIM, KMEANS_ITERS, PQ_DSUB, PQ_RERANK
 
     oracle = f"""
     WITH {_sql_kmeans_cents()}, ivfc AS (
@@ -1675,12 +1624,12 @@ def _register_sim_ivfpq() -> None:
         detail plain PQ collapses (operators.similarity.ivfpq_topk).
         Coarse centroids, residual codebooks, and the cell-keyed
         reconstructed corpus are all session-cached index relations."""
-        from ..operators.similarity import ivfpq_topk as _ivfpq_topk
+        from ..operators.similarity import ivfpq_topk
 
-        return _ivfpq_topk(
+        return ivfpq_topk(
             load_tables(spark, sf_dir)["embeddings"],
-            cents=_ivf_cents(spark, sf_dir),
-            recon=_ivfpq_recon(spark, sf_dir),
+            _ivf_cents(spark, sf_dir),
+            _ivfpq_recon(spark, sf_dir),
         )
 
 
@@ -1758,11 +1707,7 @@ def sim_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     The bucket probe is the operator's only path, so this oracle
     replicates it on any corpus; tests/test_ann_store.py also gates it
     on a synthetic hot-bucket corpus the registry never sees."""
-    return lsh_topk(
-        load_tables(spark, sf_dir)["embeddings"],
-        buckets=_emb_buckets(spark, sf_dir),
-        norms=_emb_norms(spark, sf_dir),
-    )
+    return lsh_topk(_emb_buckets(spark, sf_dir), _emb_norms(spark, sf_dir))
 
 
 def _register_knn_graph() -> None:
@@ -1811,11 +1756,7 @@ def _register_knn_graph() -> None:
         (operators.similarity.knn_graph)."""
         from ..operators.similarity import knn_graph
 
-        return knn_graph(
-            load_tables(spark, sf_dir)["embeddings"],
-            buckets=_emb_buckets(spark, sf_dir),
-            norms=_emb_norms(spark, sf_dir),
-        )
+        return knn_graph(_emb_buckets(spark, sf_dir), _emb_norms(spark, sf_dir))
 
 
 _register_knn_graph()
@@ -1863,9 +1804,7 @@ def _register_embedding_cosine() -> None:
         norm relations are the cached signature tables shared with
         sim_lsh_topk."""
         return embedding_near_dup_pairs(
-            load_tables(spark, sf_dir)["embeddings"],
-            buckets=_emb_buckets(spark, sf_dir),
-            norms=_emb_norms(spark, sf_dir),
+            _emb_buckets(spark, sf_dir), _emb_norms(spark, sf_dir)
         )
 
 
@@ -1901,11 +1840,7 @@ def sim_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     hot-bucket corpus in tests/test_ann_store.py)."""
     from ..operators.similarity import range_search
 
-    return range_search(
-        load_tables(spark, sf_dir)["embeddings"],
-        buckets=_emb_buckets(spark, sf_dir),
-        norms=_emb_norms(spark, sf_dir),
-    )
+    return range_search(_emb_buckets(spark, sf_dir), _emb_norms(spark, sf_dir))
 
 
 # ---------------------------------------------------------------------------
@@ -2074,7 +2009,7 @@ def mm_phash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         persist=True,
     )
     sig = _phash_sig(spark, sf_dir).union(inj)
-    return phash_near_dup_pairs(docs, sig=sig)
+    return phash_near_dup_pairs(sig)
 
 
 def _sql_phash_clusters() -> str:
@@ -3269,9 +3204,7 @@ def dd_dup_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     no pair join anywhere (operators.dedup.dup_ngram_stats)."""
     from ..operators.dedup import dup_ngram_stats
 
-    return dup_ngram_stats(
-        load_tables(spark, sf_dir)["documents"], shingles=_shingles(spark, sf_dir)
-    )
+    return dup_ngram_stats(_shingles(spark, sf_dir))
 
 
 def _ivf_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3321,12 +3254,7 @@ def dd_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     ivf_assignments + kmeans_centroids relations)."""
     from ..operators.similarity import semantic_dedup
 
-    return semantic_dedup(
-        load_tables(spark, sf_dir)["embeddings"],
-        _ivf_cents(spark, sf_dir),
-        threshold=0.2,
-        assigned=_ivf_assign(spark, sf_dir),
-    )
+    return semantic_dedup(_ivf_assign(spark, sf_dir), threshold=0.2)
 
 
 #: Per-semantic-cell quota for cur_diverse_sample.
@@ -3427,10 +3355,7 @@ def tx_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.text import unigram_surprisal
     from .curation_queries import _bm25_postings
 
-    return unigram_surprisal(
-        load_tables(spark, sf_dir)["documents"],
-        postings=_bm25_postings(spark, sf_dir),
-    )
+    return unigram_surprisal(_bm25_postings(spark, sf_dir))
 
 
 @register(
@@ -3506,8 +3431,7 @@ def _register_contrastive_negatives() -> None:
         from ..operators.similarity import contrastive_negatives
 
         return contrastive_negatives(
-            load_tables(spark, sf_dir)["embeddings"],
-            buckets=_emb_buckets(spark, sf_dir),
+            load_tables(spark, sf_dir)["embeddings"], _emb_buckets(spark, sf_dir)
         )
 
 

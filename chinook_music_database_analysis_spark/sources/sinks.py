@@ -8,18 +8,16 @@ partitioned joins kick in; these helpers encode that layout policy.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def write_result(df: DataFrame, path: str, mode: str = "overwrite") -> None:
+def write_result(df: DataFrame, path: str) -> None:
     """Plain Parquet result sink."""
-    df.write.mode(mode).parquet(path)
+    df.write.mode("overwrite").parquet(path)
 
 
-def write_fact_by_date(
-    df: DataFrame, path: str, ts_col: str, mode: str = "overwrite"
-) -> None:
+def write_fact_by_date(df: DataFrame, path: str, ts_col: str) -> None:
     """Date-partitioned fact layout: one directory per day.
 
     Downstream scans filtered on the date (e.g. the churn anchor
@@ -28,7 +26,7 @@ def write_fact_by_date(
     """
     (
         df.withColumn("_date", F.to_date(F.col(ts_col)))
-        .write.mode(mode)
+        .write.mode("overwrite")
         .partitionBy("_date")
         .parquet(path)
     )
@@ -39,7 +37,6 @@ def write_bucketed(
     table_name: str,
     bucket_col: "str | list[str]",
     n_buckets: int = 32,
-    mode: str = "overwrite",
 ) -> None:
     """Bucketed managed table: co-locates both sides of a recurring
     equi-join (e.g. lineitem/orders on the order key) so the join
@@ -50,7 +47,7 @@ def write_bucketed(
     """
     cols = [bucket_col] if isinstance(bucket_col, str) else list(bucket_col)
     (
-        df.write.mode(mode)
+        df.write.mode("overwrite")
         .bucketBy(n_buckets, cols[0], *cols[1:])
         .sortBy(cols[0], *cols[1:])
         .saveAsTable(table_name)
@@ -76,9 +73,36 @@ def read_evolved(spark, path: str) -> DataFrame:
     return spark.read.option("mergeSchema", "true").parquet(path)
 
 
-def write_sorted_by(
-    df: DataFrame, path: str, col: str, n_files: int = 8, mode: str = "overwrite"
+def _write_range_clustered(
+    df: DataFrame,
+    path: str,
+    key: Column | None,
+    n_tasks: int,
+    part_col: str | None = None,
 ) -> None:
+    """The one range-clustered Parquet write behind
+    :func:`write_sorted_by` and the z-order writers (operators/layout):
+    add the clustering ``key`` as a column, range-partition ``n_tasks``
+    ways on (``part_col``, key), sort within partitions, drop the key,
+    write (Hive-partitioned on ``part_col`` when given).  Each task
+    then holds a disjoint key range, so every row group's [min, max]
+    is narrow.  ``key=None`` — nothing to cluster on (empty input, an
+    all-NULL key) — writes ``df`` unclustered."""
+    lead = [part_col] if part_col else []
+    if key is not None:
+        df = (
+            df.withColumn("_k", key)
+            .repartitionByRange(n_tasks, *lead, "_k")
+            .sortWithinPartitions(*lead, "_k")
+            .drop("_k")
+        )
+    writer = df.write.mode("overwrite")
+    if part_col:
+        writer = writer.partitionBy(part_col)
+    writer.parquet(path)
+
+
+def write_sorted_by(df: DataFrame, path: str, col: str, n_files: int = 8) -> None:
     """Range-partitioned, per-file-sorted layout on ``col`` — the
     clustering policy that makes Parquet min/max row-group statistics
     selective (z-order-lite for a single key).
@@ -91,9 +115,4 @@ def write_sorted_by(
     the difference between scanning one file and scanning all of them
     for a point lookup; layout is verified structurally in
     test_engine_api (footer stats, engine-independent)."""
-    (
-        df.repartitionByRange(n_files, col)
-        .sortWithinPartitions(col)
-        .write.mode(mode)
-        .parquet(path)
-    )
+    _write_range_clustered(df, path, F.col(col), n_files)

@@ -126,6 +126,19 @@ class _Part(InputPartition):
         self.count = count
 
 
+def _read_partition(reader, partition: _Part) -> Iterator:
+    """``read`` of both the batch and the stream reader.  The GLOBAL
+    row id seeds the hash (partition 0 in the hash), so a row's content
+    is a function of (seed, event_id) alone: batch reads are identical
+    whatever n_partitions says, stream rows are independent of batch
+    boundaries, and batch-vs-stream parity holds for the same seed
+    (per-partition hashing made the same event_id carry different
+    payloads across layouts and modes)."""
+    yield from _gen_record_batches(
+        reader.seed, reader.n_users, partition.start, partition.count
+    )
+
+
 class SyntheticEventsReader(DataSourceReader):
     def __init__(self, options: dict):
         self.n_rows = int(options.get("n_rows", 1000))
@@ -142,16 +155,7 @@ class SyntheticEventsReader(DataSourceReader):
             start += cnt
         return parts
 
-    def read(self, partition: _Part) -> Iterator:
-        # Hash the GLOBAL row id (partition 0 in the hash), exactly
-        # like the stream reader: a row's content is then a function of
-        # (seed, event_id) alone, so batch reads are identical whatever
-        # n_partitions says, and batch-vs-stream parity holds for the
-        # same seed (r10 review: per-partition hashing made the same
-        # event_id carry different payloads across layouts and modes).
-        yield from _gen_record_batches(
-            self.seed, self.n_users, partition.start, partition.count
-        )
+    read = _read_partition
 
 
 def generate_rows(
@@ -226,12 +230,7 @@ class SyntheticEventsStreamReader(DataSourceStreamReader):
             s += cnt
         return parts or [_Part(0, lo, 0)]
 
-    def read(self, partition: _Part) -> Iterator:
-        # Global row ids seed the hash, so a row's content is
-        # independent of batch boundaries and partition layout.
-        yield from _gen_record_batches(
-            self.seed, self.n_users, partition.start, partition.count
-        )
+    read = _read_partition
 
     def commit(self, end: dict) -> None:
         self._ratchet(end["row"])  # counters need no cleanup beyond this

@@ -26,11 +26,14 @@ OUTPUT_SCHEMA = "user_id bigint, n_events bigint, total_value double"
 STATE_SCHEMA = "n bigint, v double"
 
 
-def _update_user_totals(
+def _accumulate_totals(
     key: tuple[Any, ...],
     pdfs: "Iterator[pd.DataFrame]",
     state: GroupState,
-) -> "Iterator[pd.DataFrame]":
+    **extra: Any,
+) -> "pd.DataFrame":
+    """Fold one key's micro-batch frames into its (n, v) state, store
+    it, and return the updated totals row (plus the ``extra`` columns)."""
     import pandas as pd
 
     n, v = state.get if state.exists else (0, 0.0)
@@ -38,9 +41,22 @@ def _update_user_totals(
         n += len(pdf)
         v += float(pdf["value"].sum())
     state.update((n, v))
-    yield pd.DataFrame(
-        {"user_id": [key[0]], "n_events": [n], "total_value": [round(v, 2)]}
+    return pd.DataFrame(
+        {
+            "user_id": [key[0]],
+            "n_events": [n],
+            "total_value": [round(v, 2)],
+            **{c: [x] for c, x in extra.items()},
+        }
     )
+
+
+def _update_user_totals(
+    key: tuple[Any, ...],
+    pdfs: "Iterator[pd.DataFrame]",
+    state: GroupState,
+) -> "Iterator[pd.DataFrame]":
+    yield _accumulate_totals(key, pdfs, state)
 
 
 def user_running_totals_stream(events: DataFrame) -> DataFrame:
@@ -197,20 +213,9 @@ def make_evicting_update(idle_timeout_ms: int = DEFAULT_IDLE_TIMEOUT_MS):
                 }
             )
             return
-        n, v = state.get if state.exists else (0, 0.0)
-        for pdf in pdfs:
-            n += len(pdf)
-            v += float(pdf["value"].sum())
-        state.update((n, v))
+        out = _accumulate_totals(key, pdfs, state, final=False)
         state.setTimeoutDuration(idle_timeout_ms)
-        yield pd.DataFrame(
-            {
-                "user_id": [key[0]],
-                "n_events": [n],
-                "total_value": [round(v, 2)],
-                "final": [False],
-            }
-        )
+        yield out
 
     return update
 

@@ -375,13 +375,15 @@ def test_pair_window_cap_complete_on_benign_buckets(spark):
         N_TABLES,
         _bucket_windowed_pairs,
         lsh_buckets,
+        with_norms,
     )
 
     emb = spark.read.parquet(f"{SF_TEST_DIR}/embeddings.parquet")
     n_bits = lsh_n_bits(emb.count())
-    capped = embedding_near_dup_pairs(emb, n_bits=n_bits)
+    bk, wn = lsh_buckets(emb, n_bits), with_norms(emb)
+    capped = embedding_near_dup_pairs(bk, wn)
     # window >= corpus size == the uncapped full self-join
-    full = embedding_near_dup_pairs(emb, n_bits=n_bits, window=10**6)
+    full = embedding_near_dup_pairs(bk, wn, window=10**6)
     assert _pairs_set(capped) == _pairs_set(full)
 
     # pathological: every vector in ONE bucket per table (identical
@@ -527,6 +529,7 @@ def test_router_dual_route_oracle_gate(spark, tmp_path):
         _bucket_probe_candidates,
         lsh_buckets,
         range_search,
+        with_norms,
     )
     from chinook_music_database_analysis_spark.plans import ORACLES
 
@@ -542,11 +545,10 @@ def test_router_dual_route_oracle_gate(spark, tmp_path):
     path = str(tmp_path / "embeddings.parquet")
     hot.coalesce(1).write.mode("overwrite").parquet(path)
     emb = spark.read.parquet(path)
+    bk, wn = lsh_buckets(emb, lsh_n_bits(emb.count())), with_norms(emb)
     # the corpus must actually be hot (the probe reaches at least half
     # of |q| x N), or this gate proves nothing the registry doesn't
-    n_cand = _bucket_probe_candidates(
-        lsh_buckets(emb, lsh_n_bits(n)), n_q
-    ).count()
+    n_cand = _bucket_probe_candidates(bk, n_q).count()
     assert n_cand >= 0.5 * n_q * n, n_cand
 
     con = duckdb.connect()
@@ -555,8 +557,8 @@ def test_router_dual_route_oracle_gate(spark, tmp_path):
             f"CREATE VIEW embeddings AS SELECT * FROM '{path}/*.parquet'"
         )
         cases = [
-            ("lsh_topk", lsh_topk(emb), ORACLES["sim_lsh_topk"]),
-            ("range_search", range_search(emb), ORACLES["sim_range_search"]),
+            ("lsh_topk", lsh_topk(bk, wn), ORACLES["sim_lsh_topk"]),
+            ("range_search", range_search(bk, wn), ORACLES["sim_range_search"]),
         ]
         for name, df, sql in cases:
             assert_frames_match(df.toPandas(), con.sql(sql).df(), name)

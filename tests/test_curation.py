@@ -241,10 +241,14 @@ def test_pack_sequences_windows_are_partitioned_not_global(docs):
 
 
 def test_tfidf_rank_properties(spark, docs):
-    from chinook_music_database_analysis_spark.operators.text import tfidf_top_terms
+    from chinook_music_database_analysis_spark.operators.text import (
+        bm25_corpus_relations,
+        tfidf_top_terms,
+    )
 
     n = docs.count()
-    out = tfidf_top_terms(docs, n_docs=n, top_k=3).collect()
+    postings, _ = bm25_corpus_relations(docs)
+    out = tfidf_top_terms(postings, n_docs=n, top_k=3).collect()
     by_doc: dict[int, list] = {}
     for r in out:
         by_doc.setdefault(r.doc_id, []).append(r)
@@ -449,11 +453,12 @@ def test_stratified_take_prefilter_preserves_result(spark, docs):
     assert pre == base and len(base) > 0
 
 
-def test_bm25_store_relations_match_direct_and_guards(spark, docs):
+def test_bm25_store_relations_match_direct_and_guards(spark, docs, tmp_path):
     """The store-served BM25 path (postings + doclens from
-    bm25_corpus_relations) must rank identically to the direct
-    tokenize path; the int64 fixed-point overflow guard raises on a
-    pathological max_dl; postings without doclens is a usage error."""
+    bm25_corpus_relations, written to parquet and read back) must rank
+    identically to the same relations scored directly; the int64
+    fixed-point overflow guard raises on a pathological max_dl;
+    postings without doclens is a usage error."""
     import pytest
     from pyspark.sql import functions as F
 
@@ -466,18 +471,21 @@ def test_bm25_store_relations_match_direct_and_guards(spark, docs):
     postings, doclens = bm25_corpus_relations(docs)
     total = int(doclens.agg(F.sum("dl")).collect()[0][0])
     q = ("vector", "merge", "filter")
-    direct = bm25_topk(docs, q, n_docs=n_docs, total_tokens=total)
+    direct = bm25_topk(postings, doclens, q, n_docs=n_docs, total_tokens=total)
+    postings.write.parquet(str(tmp_path / "postings"))
+    doclens.write.parquet(str(tmp_path / "doclens"))
     stored = bm25_topk(
-        docs, q, n_docs=n_docs, total_tokens=total,
-        postings=postings, doclens=doclens,
+        spark.read.parquet(str(tmp_path / "postings")),
+        spark.read.parquet(str(tmp_path / "doclens")),
+        q, n_docs=n_docs, total_tokens=total,
         max_dl=int(doclens.agg(F.max("dl")).collect()[0][0]),
     )
     assert [tuple(r) for r in direct.collect()] == [tuple(r) for r in stored.collect()]
 
     with pytest.raises(OverflowError):
-        bm25_topk(docs, q, n_docs=n_docs, total_tokens=total, max_dl=2**62)
-    with pytest.raises(ValueError):
-        bm25_topk(docs, q, n_docs=n_docs, total_tokens=total, postings=postings)
+        bm25_topk(postings, doclens, q, n_docs=n_docs, total_tokens=total, max_dl=2**62)
+    with pytest.raises(TypeError):
+        bm25_topk(postings, query_terms=q, n_docs=n_docs, total_tokens=total)
 
 
 def test_rrf_fuse_integer_math_and_overlap_rank(spark):

@@ -274,12 +274,13 @@ def test_layout_rebuild_prunes(spark, tmp_path, monkeypatch):
 def test_zorder_writers_handle_empty_input(spark, tmp_path):
     """An upstream filter matching zero rows must yield an empty table,
     not an int(None) TypeError from the bounds aggregate (r10 review);
-    same for the partitioned variant."""
+    same for the partitioned, quantile-ranked and single-key writers."""
     from pyspark.sql import functions as F
 
     from chinook_music_database_analysis_spark.operators.layout import (
         write_zordered,
         write_zordered_partitioned,
+        write_zordered_ranked,
     )
 
     empty = spark.range(0).selectExpr(
@@ -292,6 +293,12 @@ def test_zorder_writers_handle_empty_input(spark, tmp_path):
     p2 = str(tmp_path / "zp_empty")
     write_zordered_partitioned(empty, p2, "p", "x", "y")
     assert spark.read.schema(empty.schema).parquet(p2).count() == 0
+    p3 = str(tmp_path / "zr_empty")
+    write_zordered_ranked(empty, p3, "x", "y")
+    assert spark.read.schema(empty.schema).parquet(p3).count() == 0
+    p4 = str(tmp_path / "s_empty")
+    write_sorted_by(empty, p4, "x")
+    assert spark.read.schema(empty.schema).parquet(p4).count() == 0
 
 
 def test_quantile_rank_tolerates_nan_column(spark):

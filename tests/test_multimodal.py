@@ -139,7 +139,10 @@ def test_media_phash_kernel_and_pair_detection(spark):
     got = {r.doc_id: r.phash for r in media_phash(docs).collect()}
     assert got == {1: ref(a), 2: ref(a), 3: ref(b)}
 
-    pairs = {(r.doc_a, r.doc_b): r.hamming for r in phash_near_dup_pairs(docs).collect()}
+    pairs = {
+        (r.doc_a, r.doc_b): r.hamming
+        for r in phash_near_dup_pairs(media_phash(docs)).collect()
+    }
     assert pairs.get((1, 2)) == 0, "identical payloads must pair at hamming 0"
     assert (1, 3) not in pairs and (2, 3) not in pairs
 
@@ -177,9 +180,10 @@ def test_phash_pairs_refuse_out_of_guarantee_radius(spark):
 
     from chinook_music_database_analysis_spark.operators.multimodal import (
         PHASH_BANDS,
+        media_phash,
         phash_near_dup_pairs,
     )
 
     docs = spark.createDataFrame([(1, "abc")], "doc_id long, text string")
     with pytest.raises(ValueError, match="pigeonhole"):
-        phash_near_dup_pairs(docs, max_hamming=PHASH_BANDS)
+        phash_near_dup_pairs(media_phash(docs), max_hamming=PHASH_BANDS)

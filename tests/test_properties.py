@@ -177,6 +177,7 @@ def test_incremental_pairs_equal_full_pairs_increment(spark):
     """incremental_candidate_pairs(bands, t) must equal the full
     candidate pair set restricted to pairs whose newer doc is >= t."""
     from chinook_music_database_analysis_spark.operators.dedup import (
+        doc_shingles,
         incremental_candidate_pairs,
         minhash_bands,
         minhash_candidate_pairs,
@@ -186,13 +187,13 @@ def test_incremental_pairs_equal_full_pairs_increment(spark):
     from conftest import SF_TEST_DIR
 
     docs = load_tables(spark, SF_TEST_DIR)["documents"]
-    bands = minhash_bands(docs).cache()
+    bands = minhash_bands(doc_shingles(docs)).cache()
     try:
         n = docs.count()
         t = (n * 8) // 10
         full = {
             (r.doc_a, r.doc_b)
-            for r in minhash_candidate_pairs(docs, bands=bands).collect()
+            for r in minhash_candidate_pairs(bands).collect()
         }
         inc = {
             (r.doc_a, r.doc_b)
@@ -354,7 +355,10 @@ def test_pagerank_oracle_lockstep_on_digraph(spark):
 def test_dup_ngram_stats_extremes(spark):
     """Duplicated docs have dup_frac == 1.0; a doc sharing no k-gram
     with anyone has dup_frac == 0.0; counts are consistent."""
-    from chinook_music_database_analysis_spark.operators.dedup import dup_ngram_stats
+    from chinook_music_database_analysis_spark.operators.dedup import (
+        doc_shingles,
+        dup_ngram_stats,
+    )
 
     docs = spark.createDataFrame(
         [
@@ -364,7 +368,7 @@ def test_dup_ngram_stats_extremes(spark):
         ],
         "doc_id long, text string",
     )
-    r = {row["doc_id"]: row for row in dup_ngram_stats(docs).collect()}
+    r = {row["doc_id"]: row for row in dup_ngram_stats(doc_shingles(docs)).collect()}
     assert r[1]["dup_frac"] == 1.0 and r[2]["dup_frac"] == 1.0
     assert r[3]["dup_frac"] == 0.0 and r[3]["n_dup_shingles"] == 0
     for row in r.values():
@@ -379,6 +383,7 @@ def test_semantic_dedup_min_id_kept_and_drops_justified(spark):
     import numpy as np
 
     from chinook_music_database_analysis_spark.operators.similarity import (
+        ivf_assignments,
         semantic_dedup,
     )
 
@@ -397,7 +402,8 @@ def test_semantic_dedup_min_id_kept_and_drops_justified(spark):
         [(0, [1.0, 0.0, 0.0, 0.0], 1.0), (1, [0.0, 1.0, 0.0, 0.0], 1.0)],
         "cell_id long, c_emb array<double>, c_norm double",
     )
-    out = {r["vec_id"]: r for r in semantic_dedup(emb, cents, threshold=0.95).collect()}
+    assigned = ivf_assignments(emb, cents)
+    out = {r["vec_id"]: r for r in semantic_dedup(assigned, threshold=0.95).collect()}
     assert len(out) == len(vecs)
     by_cell: dict = {}
     for r in out.values():
@@ -425,18 +431,21 @@ def test_semantic_dedup_min_id_kept_and_drops_justified(spark):
 def test_unigram_surprisal_closed_forms(spark):
     """Constant corpus => 0 bits everywhere; a 50/50 two-token vocab
     => every token costs exactly round(log2(2)*1000) = 1000 millibits."""
-    from chinook_music_database_analysis_spark.operators.text import unigram_surprisal
+    from chinook_music_database_analysis_spark.operators.text import (
+        bm25_corpus_relations,
+        unigram_surprisal,
+    )
 
     const = spark.createDataFrame(
         [(1, "x x x x"), (2, "x x")], "doc_id long, text string"
     )
-    for r in unigram_surprisal(const).collect():
+    for r in unigram_surprisal(bm25_corpus_relations(const)[0]).collect():
         assert r["q_millibits"] == 0 and r["mb_per_token"] == 0
 
     even = spark.createDataFrame(
         [(1, "a b a b"), (2, "b a b a")], "doc_id long, text string"
     )
-    for r in unigram_surprisal(even).collect():
+    for r in unigram_surprisal(bm25_corpus_relations(even)[0]).collect():
         assert r["mb_per_token"] == 1000
         assert r["q_millibits"] == 1000 * r["n_tokens"]
 
@@ -599,13 +608,14 @@ def test_cluster_sample_quota_and_determinism(spark):
     content-addressed coin)."""
     from chinook_music_database_analysis_spark.operators.similarity import (
         CLUSTER_SAMPLE_M,
-        kmeans_centroids,
         cluster_sample,
+        ivf_assignments,
+        kmeans_centroids,
     )
 
     emb = spark.read.parquet(f"{SF_TEST_DIR}/embeddings.parquet")
     cents = kmeans_centroids(emb, emb.count())
-    r = cluster_sample(emb, cents).toPandas()
+    r = cluster_sample(ivf_assignments(emb, cents)).toPandas()
     assert r.vec_id.is_unique
     assert (r.rnk >= 1).all() and (r.rnk <= CLUSTER_SAMPLE_M).all()
     per_cell = r.groupby("cell_id").agg(taken=("rnk", "size"), n=("n_cell", "first"))
@@ -614,7 +624,7 @@ def test_cluster_sample_quota_and_determinism(spark):
     # skew (the whole point of balancing)
     if (per_cell.n > CLUSTER_SAMPLE_M).any():
         assert (per_cell.taken.max() == CLUSTER_SAMPLE_M)
-    r2 = cluster_sample(emb, cents).toPandas()
+    r2 = cluster_sample(ivf_assignments(emb, cents)).toPandas()
     a = r.sort_values(["cell_id", "rnk"]).reset_index(drop=True)
     b = r2.sort_values(["cell_id", "rnk"]).reset_index(drop=True)
     assert a.equals(b)
@@ -697,13 +707,23 @@ def test_containment_dominates_jaccard(spark):
     import pandas as pd
 
     from chinook_music_database_analysis_spark.operators.dedup import (
+        candidate_restricted_shingles,
         containment_pairs,
+        doc_shingles,
+        minhash_bands,
+        minhash_candidate_pairs,
         ngram_jaccard_pairs,
     )
 
+    def verify_inputs(d):
+        sh = doc_shingles(d)
+        cand = minhash_candidate_pairs(minhash_bands(sh))
+        return sh, cand, candidate_restricted_shingles(sh, cand)
+
     docs = spark.read.parquet(f"{SF_TEST_DIR}/documents.parquet")
-    cont = containment_pairs(docs, threshold=0.0).toPandas()
-    jac = ngram_jaccard_pairs(docs, threshold=0.0).toPandas()
+    sh, cand, sh_cand = verify_inputs(docs)
+    cont = containment_pairs(sh, cand, threshold=0.0).toPandas()
+    jac = ngram_jaccard_pairs(cand, sh_cand, threshold=0.0).toPandas()
     m = cont.merge(jac, on=["doc_a", "doc_b"])
     assert len(m) == len(cont) == len(jac)
     assert (m.containment >= m.jaccard - 1e-9).all()
@@ -726,10 +746,11 @@ def test_containment_dominates_jaccard(spark):
         F.concat(F.col("text"), F.lit(" " + tail)).alias("text"),
     )
     two = a.unionAll(b)
-    pair = containment_pairs(two).toPandas()
+    sh, cand, sh_cand = verify_inputs(two)
+    pair = containment_pairs(sh, cand).toPandas()
     hit = pair[(pair.doc_a == 900001) & (pair.doc_b == 900002)]
     assert len(hit) == 1 and hit.c_a_in_b.iloc[0] >= 0.95
-    jpair = ngram_jaccard_pairs(two, threshold=0.0).toPandas()
+    jpair = ngram_jaccard_pairs(cand, sh_cand, threshold=0.0).toPandas()
     jhit = jpair[(jpair.doc_a == 900001) & (jpair.doc_b == 900002)]
     assert hit.containment.iloc[0] > jhit.jaccard.iloc[0]
 
@@ -744,6 +765,7 @@ def test_containment_probe_recovers_extreme_asymmetry(spark):
     from chinook_music_database_analysis_spark.operators.dedup import (
         containment_probe_candidates,
         doc_shingles,
+        minhash_bands,
         minhash_candidate_pairs,
     )
 
@@ -754,7 +776,9 @@ def test_containment_probe_recovers_extreme_asymmetry(spark):
         [(1, " ".join(host_words)), (2, snippet)], "doc_id long, text string"
     )
     sh = doc_shingles(docs).cache()
-    banded = {(r.doc_a, r.doc_b) for r in minhash_candidate_pairs(docs).collect()}
+    banded = {
+        (r.doc_a, r.doc_b) for r in minhash_candidate_pairs(minhash_bands(sh)).collect()
+    }
     probed = {(r.doc_a, r.doc_b) for r in containment_probe_candidates(sh).collect()}
     assert (1, 2) not in banded  # Jaccard ~ 10/398: bands cannot collide
     assert (1, 2) in probed
@@ -782,6 +806,7 @@ def test_containment_recall_measured_against_exact_truth(spark):
         containment_pairs,
         containment_probe_candidates,
         doc_shingles,
+        minhash_bands,
         minhash_candidate_pairs,
     )
 
@@ -818,14 +843,14 @@ def test_containment_recall_measured_against_exact_truth(spark):
     # ground truth — equality, not a recall floor
     got_exact = {
         (r.doc_a, r.doc_b)
-        for r in containment_pairs_exact(docs, shingles=sh).collect()
+        for r in containment_pairs_exact(sh).collect()
     }
     assert got_exact == truth
 
     # the capped two-stage path (registered dd_containment_scale) at
     # its production default cap: bounded candidates, floored recall
     cap = probe_df_cap(docs.count())
-    banded_cand = minhash_candidate_pairs(docs).cache()
+    banded_cand = minhash_candidate_pairs(minhash_bands(sh)).cache()
     union_cand = (
         banded_cand.union(containment_probe_candidates(sh, max_df=cap))
         .distinct()
@@ -833,11 +858,11 @@ def test_containment_recall_measured_against_exact_truth(spark):
     )
     got_banded = {
         (r.doc_a, r.doc_b)
-        for r in containment_pairs(docs, shingles=sh, candidates=banded_cand).collect()
+        for r in containment_pairs(sh, banded_cand).collect()
     }
     got_union = {
         (r.doc_a, r.doc_b)
-        for r in containment_pairs(docs, shingles=sh, candidates=union_cand).collect()
+        for r in containment_pairs(sh, union_cand).collect()
     }
     assert got_banded <= truth and got_union <= truth  # exact scores: no FPs
     recall_banded = len(got_banded & truth) / len(truth)
@@ -864,6 +889,7 @@ def test_hot_shingle_guard_and_containment_router(spark, tmp_path, monkeypatch):
         HOT_JOIN_FACTOR,
         HotShingleCorpusError,
         containment_pairs_exact,
+        doc_shingles,
     )
     from chinook_music_database_analysis_spark.plans import QUERIES
     from chinook_music_database_analysis_spark import store
@@ -877,10 +903,10 @@ def test_hot_shingle_guard_and_containment_router(spark, tmp_path, monkeypatch):
         "doc_id long, text string",
     )
     with pytest.raises(HotShingleCorpusError):
-        containment_pairs_exact(hot, guard_factor=HOT_JOIN_FACTOR)
+        containment_pairs_exact(doc_shingles(hot), guard_factor=HOT_JOIN_FACTOR)
 
     docs = spark.read.parquet(f"{SF_TEST_DIR}/documents.parquet")
-    containment_pairs_exact(docs, guard_factor=HOT_JOIN_FACTOR)  # no raise
+    containment_pairs_exact(doc_shingles(docs), guard_factor=HOT_JOIN_FACTOR)  # no raise
 
     monkeypatch.setattr(store, "ROOT", str(tmp_path))
     handle = write_table_dir(tmp_path / "hot", {"documents": hot})
@@ -1010,7 +1036,7 @@ def test_knn_graph_cap_is_transparent_on_small_buckets(spark):
     )
     capped = {
         (r.src_id, r.nbr_id, r.rnk)
-        for r in knn_graph(emb, buckets=bk).collect()
+        for r in knn_graph(bk, with_norms(emb)).collect()
     }
     # uncapped reference: the full bucket self-join the r8 cap replaced
     cand = (

@@ -28,12 +28,28 @@ def test_lsh_bits_scale_with_corpus():
     assert lsh_n_bits(1) == 4  # floor
 
 
-def test_ivf_stride_is_ceil_sqrt():
+def test_ivf_stride_is_ceil_sqrt(spark):
     # cells ~ sqrt(N): assign cost N*sqrt(N), never N^2/const.
     assert ivf_cell_stride(500) == 23  # ceil(sqrt(500)) = 23
     assert ivf_cell_stride(2000) == 45
     assert ivf_cell_stride(1444) == 38  # perfect square boundary
     assert ivf_cell_stride(1) == 1
+
+    # the stride centroids over a 0..n-1 vec_id corpus: every stride-th
+    # vector, so ceil(n / stride) cells, each id a stride multiple
+    from chinook_music_database_analysis_spark.operators.similarity import (
+        ivf_stride_centroids,
+    )
+
+    from conftest import SF_TEST_DIR
+
+    emb = spark.read.parquet(f"{SF_TEST_DIR}/embeddings.parquet")
+    n = emb.count()
+    stride = ivf_cell_stride(n)
+    assert emb.agg(F.min("vec_id"), F.max("vec_id")).first() == (0, n - 1)
+    ids = [r.cell_id for r in ivf_stride_centroids(emb, n).collect()]
+    assert len(ids) == -(-n // stride)
+    assert all(c % stride == 0 for c in ids)
 
 
 def _n_candidates(spark, sf_dir: str) -> tuple[int, int]:
@@ -124,6 +140,9 @@ def test_pq_structure_and_rerank_recall(spark):
         PQ_DSUB,
         PQ_M,
         cosine_topk,
+        ivfpq_reconstruct,
+        ivfpq_topk,
+        kmeans_centroids,
         pq_codebooks,
         pq_encode,
         pq_reconstruct,
@@ -146,17 +165,20 @@ def test_pq_structure_and_rerank_recall(spark):
     assert recon.select(F.size("recon")).distinct().collect()[0][0] == PQ_M * PQ_DSUB
 
     exact = {(r.query_id, r.neighbor_id) for r in cosine_topk(emb, 10, 5).collect()}
-    rr = {(r.query_id, r.neighbor_id) for r in pq_topk(emb, 10, 5, books=books).collect()}
+    rr = {(r.query_id, r.neighbor_id) for r in pq_topk(emb, recon, 10, 5).collect()}
     assert len(exact & rr) / len(exact) >= 0.6, len(exact & rr) / len(exact)
-
-    from chinook_music_database_analysis_spark.operators.similarity import ivfpq_topk
 
     # IVF-PQ is PROBE-LIMITED (n_probe of ~sqrt(N) cells): on this
     # structureless random corpus true neighbors spread uniformly
     # across cells, so probing caps recall well below plain PQ's full
     # ADC sweep — the clustered-corpus ladder (where probing is the
     # right trade) is asserted in scripts/scalecheck.py instead.
-    iv = {(r.query_id, r.neighbor_id) for r in ivfpq_topk(emb, 10, 5).collect()}
+    cents = kmeans_centroids(emb, n)
+    iv_recon = ivfpq_reconstruct(emb, cents, n)
+    iv = {
+        (r.query_id, r.neighbor_id)
+        for r in ivfpq_topk(emb, cents, iv_recon, 10, 5).collect()
+    }
     assert len(exact & iv) / len(exact) >= 0.3, len(exact & iv) / len(exact)
 
 

@@ -493,11 +493,8 @@ def test_streaming_postings_log_matches_batch_index(spark, tmp_path):
     n_docs = docs.count()
     total = int(want_dl.agg(F.sum("dl")).collect()[0][0])
     bag = ("vector", "merge", "filter")
-    want_top = bm25_topk(docs, bag, n_docs=n_docs, total_tokens=total)
-    got_top = bm25_topk(
-        docs, bag, n_docs=n_docs, total_tokens=total,
-        postings=got_p, doclens=got_dl,
-    )
+    want_top = bm25_topk(want_p, want_dl, bag, n_docs=n_docs, total_tokens=total)
+    got_top = bm25_topk(got_p, got_dl, bag, n_docs=n_docs, total_tokens=total)
     assert [tuple(r) for r in got_top.collect()] == [tuple(r) for r in want_top.collect()]
 
     # replay/restart: the drained checkpoint admits no new batches
