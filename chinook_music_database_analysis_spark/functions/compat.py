@@ -54,13 +54,13 @@ def round2(c: Column) -> Column:
     return F.round(c, 2).cast("double")
 
 
-def ratio2(num: Column, den: Column, scale: int = 2) -> Column:
-    """round(num/den, scale) computed in IEEE double on both engines.
+def ratio2(num: Column, den: Column) -> Column:
+    """round(num/den, 2) computed in IEEE double on both engines.
 
     Inputs should be exact (decimal sums or integer counts) so the
     doubles being divided are bit-identical across engines.
     """
-    return F.round(num.cast("double") / den.cast("double"), scale)
+    return F.round(num.cast("double") / den.cast("double"), 2)
 
 
 def revenue_expr() -> Column:

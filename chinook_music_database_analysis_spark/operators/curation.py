@@ -104,12 +104,11 @@ def domain_cap(
     domain_col: str,
     key: str,
     cap: int,
-    salt: str = "domaincap",
 ) -> DataFrame:
     """Per-domain document quota (RefinedWeb-style source balancing).
 
     Keeps at most ``cap`` rows per ``domain_col`` value, chosen by a
-    deterministic content-addressed priority — ``md5(salt|key)`` — so
+    deterministic content-addressed priority — ``md5('domaincap|' || key)`` — so
     which documents survive is a pure function of their keys: stable
     under re-runs, appends, and repartitioning, exactly like
     :func:`hash_sample`.  The ``key`` tie-break makes the full order
@@ -123,7 +122,7 @@ def domain_cap(
     bounds its shuffle contribution at ``cap`` per upstream partition
     instead of flooding one reducer.
     """
-    pri = F.md5(F.concat(F.lit(salt + "|"), F.col(key).cast("string")))
+    pri = F.md5(F.concat(F.lit("domaincap|"), F.col(key).cast("string")))
     w = Window.partitionBy(domain_col).orderBy(pri.asc(), F.col(key).asc())
     return (
         df.withColumn("cap_rank", F.row_number().over(w))
@@ -131,19 +130,13 @@ def domain_cap(
     )
 
 
-def line_dedup(
-    docs: DataFrame,
-    seg_k: int,
-    min_df: int,
-    text_col: str = "text",
-    key: str = "doc_id",
-) -> DataFrame:
+def line_dedup(docs: DataFrame, seg_k: int, min_df: int) -> DataFrame:
     """C4-style cross-document line dedup, REMEDIATION included: split
     each document into consecutive non-overlapping ``seg_k``-token
     segments (the corpus has no newlines, so fixed-width segments stand
     in for C4's lines), drop every segment that appears in at least
     ``min_df`` distinct documents, and REBUILD the cleaned text in
-    original segment order.  Returns (key, n_segments, n_dropped,
+    original segment order.  Returns (doc_id, n_segments, n_dropped,
     clean_text).
 
     Scale shape (100 TB): one segment-keyed shuffle computes document
@@ -161,19 +154,19 @@ def line_dedup(
     ``collect_list`` over (pos, seg) structs + ``array_sort`` makes the
     rebuild order-deterministic whatever the shuffle served.
     """
-    toks = tokens_expr(text_col)
+    toks = tokens_expr()
     segs = F.expr(
         f"transform(sequence(0, (size(toks)-1) div {seg_k}), "
         f"i -> struct(i AS pos, array_join(slice(toks, i*{seg_k}+1, {seg_k}), ' ') AS s))"
     )
     seg = (
-        docs.select(key, toks.alias("toks"))
-        .select(key, F.explode(segs).alias("u"))
-        .select(key, F.col("u.pos").alias("pos"), F.col("u.s").alias("s"))
+        docs.select("doc_id", toks.alias("toks"))
+        .select("doc_id", F.explode(segs).alias("u"))
+        .select("doc_id", F.col("u.pos").alias("pos"), F.col("u.s").alias("s"))
     )
     dup = (
         seg.groupBy("s")
-        .agg(F.countDistinct(key).alias("df"))
+        .agg(F.countDistinct("doc_id").alias("df"))
         .filter(F.col("df") >= min_df)
         .select("s", F.lit(True).alias("is_dup"))
     )
@@ -181,7 +174,7 @@ def line_dedup(
         "is_dup", F.coalesce(F.col("is_dup"), F.lit(False))
     )
     kept = F.when(~F.col("is_dup"), F.struct("pos", "s"))
-    return flagged.groupBy(key).agg(
+    return flagged.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_segments"),
         F.sum(F.col("is_dup").cast("int")).cast("bigint").alias("n_dropped"),
         F.array_join(
@@ -201,8 +194,8 @@ PII_RULES: tuple[tuple[str, str], ...] = (
 )
 
 
-def redact_pii(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Redact emails / phone numbers / IPv4s from ``text_col``.
+def redact_pii(df: DataFrame) -> DataFrame:
+    """Redact emails / phone numbers / IPv4s from ``text``.
 
     Adds ``clean_text`` (redacted) and ``n_redacted`` (replacements
     actually performed).  Pure narrow map — a chain of JVM-side
@@ -216,7 +209,7 @@ def redact_pii(df: DataFrame, text_col: str = "text") -> DataFrame:
     count).  The DuckDB oracle stages its counts identically.
     """
     n = F.lit(0)
-    clean = F.col(text_col)
+    clean = F.col("text")
     for pat, rep in PII_RULES:
         n = n + F.size(F.regexp_extract_all(clean, F.lit(pat), 0))
         clean = F.regexp_replace(clean, pat, rep)
@@ -273,13 +266,8 @@ def boilerplate_score(shingles: DataFrame, boiler_set: DataFrame) -> DataFrame:
     )
 
 
-def benchmark_contamination(
-    docs: DataFrame,
-    bench_pct: float = 5.0,
-    k: int = DECONTAM_K,
-    key: str = "doc_id",
-) -> DataFrame:
-    """Flag training docs sharing a wide k-gram with the held-out
+def benchmark_contamination(docs: DataFrame, bench_pct: float = 5.0) -> DataFrame:
+    """Flag training docs sharing a wide DECONTAM_K-gram with the held-out
     benchmark subset (the decontamination pass run before training).
 
     The benchmark here is the deterministic ``bench_pct``% hash-sample
@@ -294,34 +282,32 @@ def benchmark_contamination(
     k-grams, and its dedup shuffle holds only the broadcast-join
     survivors (contaminated rows — orders of magnitude smaller).
     """
-    is_bench = _hash_bucket(F.col(key), "bench") < F.lit(pct_threshold(bench_pct))
+    is_bench = _hash_bucket(F.col("doc_id"), "bench") < F.lit(pct_threshold(bench_pct))
     bench_sh = (
         docs.filter(is_bench)  # filter BEFORE the explode: the bench
         .select(tokens_expr().alias("toks"))  # subtree only ever
-        .select(F.explode(shingles_from_tokens(k=k)).alias("s"))  # expands
+        .select(F.explode(shingles_from_tokens(k=DECONTAM_K)).alias("s"))  # expands
         .distinct()  # the benchmark slice
     )
     probe = docs.filter(~is_bench).select(
-        F.col(key), tokens_expr().alias("toks")
-    ).select(key, F.explode(shingles_from_tokens(k=k)).alias("s"))
+        F.col("doc_id"), tokens_expr().alias("toks")
+    ).select("doc_id", F.explode(shingles_from_tokens(k=DECONTAM_K)).alias("s"))
     return (
         probe.join(F.broadcast(bench_sh), "s")
-        .groupBy(key)
+        .groupBy("doc_id")
         .agg(F.count_distinct(F.col("s")).alias("n_overlap"))
     )
 
 
-def contamination_report(
-    docs: DataFrame,
-    bench_pct: float = 5.0,
-    k: int = DECONTAM_K,
-    min_ratio: float = 0.05,
-    key: str = "doc_id",
-) -> DataFrame:
+#: overlap ratio at which :func:`contamination_report` flags a document.
+CONTAM_MIN_RATIO = 0.05
+
+
+def contamination_report(docs: DataFrame, bench_pct: float = 5.0) -> DataFrame:
     """Per-document contamination REPORT over every training doc — the
     audit companion of :func:`benchmark_contamination` (which emits
     only the contaminated survivors): total distinct k-grams, benchmark
-    overlap count, overlap ratio, and the >= ``min_ratio`` verdict —
+    overlap count, overlap ratio, and the >= CONTAM_MIN_RATIO verdict —
     the GPT-3-style n-gram-overlap audit table a training run logs
     before dropping documents.
 
@@ -331,26 +317,28 @@ def contamination_report(
     corpus-scale data is the final doc-keyed agg.  Nothing here is
     quadratic in the corpus.
     """
-    is_bench = _hash_bucket(F.col(key), "bench") < F.lit(pct_threshold(bench_pct))
+    is_bench = _hash_bucket(F.col("doc_id"), "bench") < F.lit(pct_threshold(bench_pct))
     bench_sh = (
         docs.filter(is_bench)
         .select(tokens_expr().alias("toks"))
-        .select(F.explode(shingles_from_tokens(k=k)).alias("s"))
+        .select(F.explode(shingles_from_tokens(k=DECONTAM_K)).alias("s"))
         .distinct()
         .select("s", F.lit(True).alias("hit"))
     )
     probe = docs.filter(~is_bench).select(
-        F.col(key), tokens_expr().alias("toks")
-    ).select(key, F.explode(F.array_distinct(shingles_from_tokens(k=k))).alias("s"))
+        F.col("doc_id"), tokens_expr().alias("toks")
+    ).select(
+        "doc_id", F.explode(F.array_distinct(shingles_from_tokens(k=DECONTAM_K))).alias("s")
+    )
     return (
         probe.join(F.broadcast(bench_sh), "s", "left")
-        .groupBy(key)
+        .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).alias("n_shingles"),
             F.count("hit").alias("n_overlap"),
         )
         .select(
-            key,
+            "doc_id",
             "n_shingles",
             "n_overlap",
             F.round(
@@ -360,7 +348,7 @@ def contamination_report(
             (
                 F.col("n_overlap").cast("double")
                 / F.col("n_shingles").cast("double")
-                >= F.lit(min_ratio)
+                >= F.lit(CONTAM_MIN_RATIO)
             ).alias("is_contaminated"),
         )
     )
@@ -369,10 +357,7 @@ def contamination_report(
 def domain_mix(
     df: DataFrame,
     rates: dict[str, float],
-    key: str = "doc_id",
-    source_col: str = "source",
     default_rate: float = 1.0,
-    salt: str = "mix",
 ) -> DataFrame:
     """Re-weight a corpus to per-domain target rates — the data-mixing
     stage that turns raw domain proportions into a training mixture.
@@ -386,7 +371,7 @@ def domain_mix(
     ``epoch`` index (0-based) so downstream shuffles can spread copies.
 
     Determinism: membership and copy counts are functions of
-    (salt, key) only — append-stable and repartition-stable, and the
+    ("mix", doc_id) only — append-stable and repartition-stable, and the
     DuckDB oracle reproduces them bit-for-bit.  Scale: a narrow map +
     per-row explode of at most ``ceil(rate)`` elements; no shuffle, no
     driver state.  The rates dict compiles to a CASE ladder (domains
@@ -395,7 +380,7 @@ def domain_mix(
     frac_case = None
     for src, rate in rates.items():
         base, frac = int(rate), round((rate - int(rate)) * 100, 6)
-        cond = F.col(source_col) == src
+        cond = F.col("source") == src
         base_case = (base_case.when(cond, base) if base_case is not None
                      else F.when(cond, base))
         frac_case = (frac_case.when(cond, F.lit(pct_threshold(frac))) if frac_case is not None
@@ -404,7 +389,7 @@ def domain_mix(
     n_base = base_case.otherwise(d_base) if base_case is not None else F.lit(d_base)
     frac_thresh = (frac_case.otherwise(F.lit(pct_threshold(d_frac)))
                    if frac_case is not None else F.lit(pct_threshold(d_frac)))
-    extra = (_hash_bucket(F.col(key), salt) < frac_thresh).cast("int")
+    extra = (_hash_bucket(F.col("doc_id"), "mix") < frac_thresh).cast("int")
     return (
         df.withColumn("n_copies", n_base + extra)
         .filter(F.col("n_copies") > 0)
@@ -431,12 +416,10 @@ PACK_BLOCK = 4096
 def pack_sequences(
     docs: DataFrame,
     ctx_len: int = 2048,
-    text_col: str = "text",
-    key: str = "doc_id",
     block: int = PACK_BLOCK,
 ) -> DataFrame:
     """Concat-and-chunk sequence packing: lay all docs end-to-end in
-    deterministic ``key`` order and cut the token stream into fixed
+    deterministic ``doc_id`` order and cut the token stream into fixed
     ``ctx_len`` context windows.  Returns one row per doc with its
     token count, the pack (chunk) its first token lands in, and the
     offset inside that pack — the map a tokenizer shard uses to build
@@ -448,7 +431,7 @@ def pack_sequences(
     distributed prefix sum instead:
 
     1. per-doc token counts (narrow map);
-    2. group docs into ``key // block`` ranges and aggregate per-group
+    2. group docs into ``doc_id // block`` ranges and aggregate per-group
        token sums — a corpus-wide shuffle of ONE row per group;
     3. running offsets over that tiny per-group relation (single
        partition, N/block rows — see :data:`PACK_BLOCK`);
@@ -459,9 +442,9 @@ def pack_sequences(
     within-group window; both are keyed by the block id, so partition
     counts stay balanced regardless of doc length skew."""
     counted = docs.select(
-        F.col(key),
-        F.expr(f"{key} div {block}").alias("grp"),
-        F.size(tokens_expr(text_col)).cast("bigint").alias("n_tokens"),
+        F.col("doc_id"),
+        F.expr(f"doc_id div {block}").alias("grp"),
+        F.size(tokens_expr()).cast("bigint").alias("n_tokens"),
     )
     grp_offsets = (
         counted.groupBy("grp")
@@ -478,7 +461,7 @@ def pack_sequences(
         .select("grp", "grp_offset")
     )
     w_in = (
-        Window.partitionBy("grp").orderBy(key).rowsBetween(Window.unboundedPreceding, -1)
+        Window.partitionBy("grp").orderBy("doc_id").rowsBetween(Window.unboundedPreceding, -1)
     )
     return (
         counted.join(F.broadcast(grp_offsets), "grp")
@@ -487,7 +470,7 @@ def pack_sequences(
             F.col("grp_offset") + F.coalesce(F.sum("n_tokens").over(w_in), F.lit(0)),
         )
         .select(
-            key,
+            "doc_id",
             "n_tokens",
             F.expr(f"cum_before div {ctx_len}").alias("pack_id"),
             (F.col("cum_before") % ctx_len).alias("pack_offset"),
@@ -552,9 +535,6 @@ def temperature_sample(
     df: DataFrame,
     source_counts: dict[str, int],
     target_pct_num: int = 30,
-    key: str = "doc_id",
-    source_col: str = "source",
-    salt: str = "temp",
 ) -> DataFrame:
     """Filter ``df`` to the temperature-resampled subset.
 
@@ -567,11 +547,11 @@ def temperature_sample(
     thr = temperature_thresholds(source_counts, target_pct_num)
     ladder = None
     for s, t in thr.items():
-        cond = F.col(source_col) == s
+        cond = F.col("source") == s
         lit = F.lit(format(t, "04x"))
         ladder = ladder.when(cond, lit) if ladder is not None else F.when(cond, lit)
     ladder = ladder.otherwise(F.lit("0000")) if ladder is not None else F.lit("0000")
-    return df.filter(_hash_bucket(F.col(key), salt) < ladder)
+    return df.filter(_hash_bucket(F.col("doc_id"), "temp") < ladder)
 
 
 def stratified_take(
@@ -579,7 +559,6 @@ def stratified_take(
     strat_col: str,
     key: str,
     n: int,
-    salt: str = "strat",
     prefilter_pct: float | None = None,
 ) -> DataFrame:
     """EXACTLY ``n`` rows per stratum (not ~n%): rank rows inside each
@@ -590,13 +569,13 @@ def stratified_take(
 
     One shuffle on ``strat_col``.  At 100 TB with a skewed stratum, set
     ``prefilter_pct`` so the window never sorts a whole domain: because
-    the prefilter membership test uses the SAME salted hash the rank
+    the prefilter membership test uses the SAME hash the rank
     orders by, the rows it drops are exactly the rows that could never
     rank <= n — the result is UNCHANGED (pinned in tests) as long as
     every stratum keeps >= n survivors (expected survivors =
     pct/100 x stratum size; size the pct from the smallest stratum).
     """
-    h = F.md5(F.concat(F.lit(salt + "|"), F.col(key).cast("string")))
+    h = F.md5(F.concat(F.lit("strat|"), F.col(key).cast("string")))
     if prefilter_pct is not None:
         df = df.filter(
             F.substring(h, 1, 4) < F.lit(pct_threshold(prefilter_pct))
@@ -620,7 +599,6 @@ def chunk_documents(
     docs: DataFrame,
     window: int = CHUNK_WINDOW,
     stride: int = CHUNK_STRIDE,
-    text_col: str = "text",
 ) -> DataFrame:
     """Overlapping fixed-token-window chunking — the context-window
     splitter every RAG indexer and long-document training pipeline
@@ -644,7 +622,7 @@ def chunk_documents(
             "silently drop the tokens between consecutive chunks — the "
             "'every token is covered' contract needs stride <= window"
         )
-    toks = docs.select("doc_id", tokens_expr(text_col).alias("toks")).select(
+    toks = docs.select("doc_id", tokens_expr().alias("toks")).select(
         "doc_id", "toks", F.size("toks").alias("n")
     )
     n_chunks = F.expr(f"1 + CAST(ceil(greatest(n - {window}, 0) / {stride}) AS INT)")
@@ -680,12 +658,10 @@ def chunk_documents(
 EPOCH_BUCKET_CHARS = 3
 
 
-def epoch_batches(
-    docs: DataFrame, epoch: int, batch_size: int, key: str = "doc_id"
-) -> DataFrame:
+def epoch_batches(docs: DataFrame, epoch: int, batch_size: int) -> DataFrame:
     """Deterministic epoch shuffle with EXACT fixed-size batch
     assignment: every row gets a global position in the md5-permuted
-    order ``md5('epoch<e>|' || key)`` and ``batch_id = position DIV
+    order ``md5('epoch<e>|' || doc_id)`` and ``batch_id = position DIV
     batch_size`` — a different permutation each epoch, stable under
     re-runs, appends-then-reshuffles, and any physical partitioning
     (the training-loader contract ``df.sample``/``rand()`` cannot
@@ -713,7 +689,7 @@ def epoch_batches(
     manifest needs BEFORE calling (carrying raw text through would
     double the corpus shuffle bytes for nothing).
     """
-    sk = F.md5(F.concat(F.lit(f"epoch{epoch}|"), F.col(key).cast("string")))
+    sk = F.md5(F.concat(F.lit(f"epoch{epoch}|"), F.col("doc_id").cast("string")))
     d = docs.withColumn("sk", sk).withColumn(
         "bucket", F.substring("sk", 1, EPOCH_BUCKET_CHARS)
     )
@@ -727,7 +703,7 @@ def epoch_batches(
     offsets = counts.select(
         "bucket", (F.sum("n").over(woff) - F.col("n")).alias("off")
     )
-    wrank = Window.partitionBy("bucket").orderBy("sk", key)
+    wrank = Window.partitionBy("bucket").orderBy("sk", "doc_id")
     return (
         d.join(F.broadcast(offsets), "bucket")
         .withColumn(

@@ -42,6 +42,17 @@ ROWS_PER_BAND = N_HASHES // BANDS
 #: staying clear of the int64 sign bit on both engines.
 SIMHASH_BITS = 48
 
+#: SimHash near-dup radius: pairs within this hamming distance count as
+#: near duplicates (4 blocks of 12 bits, so a pair within 3 bits must
+#: agree on one block — the pigeonhole banding below relies on it).
+SIMHASH_MAX_HAMMING = 3
+
+#: verified n-gram Jaccard at or above which a candidate pair is kept.
+JACCARD_THRESHOLD = 0.2
+
+#: max directional containment at or above which a pair is kept.
+CONTAINMENT_THRESHOLD = 0.5
+
 
 def doc_shingles(docs: DataFrame) -> DataFrame:
     """Distinct (doc_id, shingle) pairs — the set representation used
@@ -218,7 +229,7 @@ def _containment_scores(with_sizes: DataFrame, threshold: float) -> DataFrame:
 
 
 def ngram_jaccard_pairs(
-    candidates: DataFrame, sh_cand: DataFrame, threshold: float = 0.2
+    candidates: DataFrame, sh_cand: DataFrame, threshold: float = JACCARD_THRESHOLD
 ) -> DataFrame:
     """Exact shingle-set Jaccard, verified only on the LSH
     ``candidates`` (:func:`minhash_candidate_pairs` — candidate/verify
@@ -257,11 +268,9 @@ def _simhash_nibbles(sig: DataFrame) -> DataFrame:
     ).select("doc_id", "simhash", "bn.band", "bn.nib")
 
 
-def simhash_cross_matches(
-    nibbles: DataFrame, refs: DataFrame, max_hamming: int = 3
-) -> DataFrame:
+def simhash_cross_matches(nibbles: DataFrame, refs: DataFrame) -> DataFrame:
     """Cross-corpus SimHash contamination: for each NON-reference doc,
-    the number of reference docs within ``max_hamming`` of its 48-bit
+    the number of reference docs within SIMHASH_MAX_HAMMING of its 48-bit
     signature, plus the closest distance — near-duplicate benchmark
     decontamination (exact-overlap decontam misses paraphrased leaks;
     a hamming-3 SimHash collision catches lightly-edited copies).
@@ -296,7 +305,7 @@ def simhash_cross_matches(
         # filter before the distinct (r8): the radius is a pure
         # function of the pair, so the dedup exchange carries only
         # within-radius survivors.
-        .filter(F.col("hamming") <= max_hamming)
+        .filter(F.col("hamming") <= SIMHASH_MAX_HAMMING)
         .distinct()
     )
     return cand.groupBy("doc_id").agg(
@@ -305,9 +314,9 @@ def simhash_cross_matches(
     )
 
 
-def simhash_near_dup_pairs(nibbles: DataFrame, max_hamming: int = 3) -> DataFrame:
-    """SimHash near-dup pairs: hamming distance <= max_hamming on the
-    48-bit signature.
+def simhash_near_dup_pairs(nibbles: DataFrame) -> DataFrame:
+    """SimHash near-dup pairs: hamming distance <= SIMHASH_MAX_HAMMING
+    on the 48-bit signature.
 
     Candidate generation uses block banding (pigeonhole: two 48-bit
     hashes within distance 3 must agree on at least one of the four
@@ -338,13 +347,18 @@ def simhash_near_dup_pairs(nibbles: DataFrame, max_hamming: int = 3) -> DataFram
         # now carries only the within-radius survivors instead of
         # every banded collision (r8; the map-side partial aggregate
         # shrinks further for the same reason).
-        .filter(F.col("hamming") <= max_hamming)
+        .filter(F.col("hamming") <= SIMHASH_MAX_HAMMING)
         .distinct()
     )
     return cand
 
 
-def duplicate_clusters(pairs: DataFrame, max_iter: int = 10) -> DataFrame:
+#: pointer-jumping rounds :func:`duplicate_clusters` runs before it
+#: warns: each round halves component diameter, so 10 covers ~2^10.
+CLUSTER_MAX_ITER = 10
+
+
+def duplicate_clusters(pairs: DataFrame) -> DataFrame:
     """Connected components over the near-dup pair graph — dedup
     *clustering*: every doc in a transitively-connected group gets the
     group's minimum doc_id as cluster id.
@@ -386,7 +400,7 @@ def duplicate_clusters(pairs: DataFrame, max_iter: int = 10) -> DataFrame:
     )
     prev_sum = object()  # sentinel: never equal on round 1
     converged = False
-    for _ in range(max_iter):
+    for _ in range(CLUSTER_MAX_ITER):
         hop = (
             edges.join(labels, edges["dst"] == labels["doc_id"])
             .groupBy("src")
@@ -411,14 +425,13 @@ def duplicate_clusters(pairs: DataFrame, max_iter: int = 10) -> DataFrame:
             break
         prev_sum = cur_sum
     if not converged:
-        # Pointer jumping halves component diameter per round, so
-        # max_iter=10 covers diameters up to ~2^10; a graph that deep
-        # would silently return split clusters without this signal.
+        # A graph deeper than CLUSTER_MAX_ITER rounds cover would
+        # silently return split clusters without this signal.
         import warnings
 
         warnings.warn(
-            f"duplicate_clusters: no fixpoint after {max_iter} rounds — "
-            "labels may still be split; raise max_iter",
+            f"duplicate_clusters: no fixpoint after {CLUSTER_MAX_ITER} rounds — "
+            "labels may still be split; raise CLUSTER_MAX_ITER",
             RuntimeWarning,
             stacklevel=2,
         )
@@ -634,9 +647,9 @@ def probe_df_cap(n_docs: int) -> int:
 
 
 def containment_probe_candidates(
-    shingles: DataFrame, k: int = PROBE_K, max_df: int | None = None
+    shingles: DataFrame, max_df: int | None = None
 ) -> DataFrame:
-    """Containment-tuned candidate pairs: each document probes its k
+    """Containment-tuned candidate pairs: each document probes its PROBE_K
     smallest-by-md5 shingles (a bottom-k sketch of the set) against the
     full (shingle -> doc) inverted relation.  This is the candidate
     pass Jaccard-tuned MinHash banding cannot provide: a tiny snippet
@@ -645,7 +658,7 @@ def containment_probe_candidates(
     host, so probing the snippet's sketch finds the host directly —
     recall depends only on the containment score, not the size ratio.
 
-    Scale shape: the probe side is N*k rows (linear); the join is
+    Scale shape: the probe side is N*PROBE_K rows (linear); the join is
     keyed by shingle, so fan-out is bounded by the probed shingles'
     document frequencies.  ``max_df`` is the prefix-filtering analog
     for adversarial corpora: host postings for shingles with df >
@@ -664,7 +677,7 @@ def containment_probe_candidates(
             .over(Window.partitionBy("doc_id").orderBy(F.md5("s")))
             .alias("rn"),
         )
-        .filter(F.col("rn") <= k)
+        .filter(F.col("rn") <= PROBE_K)
         .select("doc_id", "s")
     )
     host = shingles
@@ -686,7 +699,7 @@ def containment_probe_candidates(
 
 
 def containment_pairs(
-    shingles: DataFrame, candidates: DataFrame, threshold: float = 0.5
+    shingles: DataFrame, candidates: DataFrame, threshold: float = CONTAINMENT_THRESHOLD
 ) -> DataFrame:
     """Asymmetric shingle containment over the LSH candidate pairs —
     the snippet/quote detector symmetric Jaccard misses: a short doc
@@ -707,7 +720,7 @@ def containment_pairs(
     banding alone under-proposes extreme-asymmetry pairs (a tiny
     snippet inside a huge doc has low Jaccard, so its bands rarely
     collide), which are exactly the pairs a snippet detector exists
-    for; the bottom-k probe recovers them with recall ~1-(1-c)^k
+    for; the bottom-k probe recovers them with recall ~1-(1-c)^PROBE_K
     regardless of size ratio (floor-asserted against exact all-pairs
     ground truth in test_properties).  The scores are exact for every
     proposed pair either way.
@@ -718,21 +731,37 @@ def containment_pairs(
     return _containment_scores(_pair_set_sizes(inter, sizes), threshold)
 
 
-#: routing bound for the exact inverted-file containment join: when the
-#: join-row count sum(df*(df-1)/2) exceeds HOT_JOIN_FACTOR x the
-#: shingle-row count, the corpus has unremoved hot shingles and the
-#: exact self-join is super-linear — callers should take the df-capped
-#: two-stage path instead.  Driver corpora measure 0.5-4.9x (sf0.001-
-#: sf0.1); a single df-millions boilerplate shingle pushes the ratio
-#: into the thousands, so 32 separates the regimes with wide margin.
+#: bound for the exact inverted-file containment join
+#: (:func:`check_hot_shingles`): when the join-row count
+#: sum(df*(df-1)/2) exceeds HOT_JOIN_FACTOR x the shingle-row count,
+#: the corpus has unremoved hot shingles and the exact self-join is
+#: super-linear — callers should take the df-capped two-stage path
+#: instead.  Driver corpora measure 0.5-4.9x (sf0.001-sf0.1); a single
+#: df-millions boilerplate shingle pushes the ratio into the thousands,
+#: so 32 separates the regimes with wide margin.
 HOT_JOIN_FACTOR = 32
 
 
-class HotShingleCorpusError(RuntimeError):
-    """Raised by :func:`containment_pairs_exact` when ``guard_factor``
-    is set and the corpus' inverted-join blowup exceeds it — the
-    signal to route to :func:`containment_probe_candidates` +
-    :func:`containment_pairs` (bounded candidates, exact scores)."""
+class HotShingleCorpusError(ValueError):
+    """Raised by :func:`check_hot_shingles` when the corpus'
+    inverted-join blowup exceeds HOT_JOIN_FACTOR — the signal to route
+    to the df-capped path (bounded candidates, exact scores)."""
+
+
+def check_hot_shingles(n_rows: int, join_rows: int) -> None:
+    """The hot-shingle guard of the exact containment join: raise
+    :class:`HotShingleCorpusError` when ``join_rows`` (from
+    :func:`containment_join_stats`) exceeds HOT_JOIN_FACTOR x the
+    ``n_rows`` shingle rows, so the exact path never silently goes
+    quadratic on an un-curated corpus."""
+    if join_rows > HOT_JOIN_FACTOR * n_rows:
+        raise HotShingleCorpusError(
+            f"exact inverted containment join would expand to {join_rows} rows "
+            f"(> {HOT_JOIN_FACTOR}x the {n_rows}-row shingle relation): this "
+            "corpus has unremoved ultra-hot shingles — use "
+            "containment_probe_candidates with a df cap + containment_pairs, "
+            "or the registered dd_containment_scale, whose oracle models the cap"
+        )
 
 
 def containment_join_stats(shingles: DataFrame) -> tuple[int, int]:
@@ -754,16 +783,12 @@ def containment_join_stats(shingles: DataFrame) -> tuple[int, int]:
     return int(row["n"] or 0), int(row["jr"] or 0)
 
 
-def containment_pairs_exact(
-    shingles: DataFrame,
-    threshold: float = 0.5,
-    guard_factor: int | None = None,
-) -> DataFrame:
+def containment_pairs_exact(shingles: DataFrame) -> DataFrame:
     """Exact all-pairs shingle containment via the inverted-file
     self-join — no candidate stage, recall 1.0 by construction.
 
     Same output contract as :func:`containment_pairs` (doc_a < doc_b,
-    both directional scores, max filtered at ``threshold``).
+    both directional scores, max filtered at CONTAINMENT_THRESHOLD).
 
     Scale shape: the self-join on the shingle key expands to
     sum(df(s)^2) rows — the classic inverted-index join bound.  That
@@ -788,24 +813,12 @@ def containment_pairs_exact(
     register the exact form (dd_containment) and the capped probe form
     (dd_containment_scale) side by side.
 
-    ``guard_factor`` (e.g. :data:`HOT_JOIN_FACTOR`) arms the
-    hot-shingle guard: the df-histogram stats pass runs first and a
-    :class:`HotShingleCorpusError` is raised when join_rows >
-    guard_factor * shingle_rows, so the exact path can never silently
-    go quadratic on an un-curated corpus (r6 review).  The registered
-    dd_containment plan performs the equivalent check with a memoized
-    stats scalar and AUTO-ROUTES to the capped path instead of
-    raising.
+    This function does not check the blowup itself: run
+    :func:`check_hot_shingles` on :func:`containment_join_stats` first.
+    The registered dd_containment does, with memoized stats, and
+    REFUSES a hot corpus (the error names dd_containment_scale) rather
+    than serving the lower-recall capped path under its exact oracle.
     """
-    if guard_factor is not None:
-        n_rows, join_rows = containment_join_stats(shingles)
-        if join_rows > guard_factor * n_rows:
-            raise HotShingleCorpusError(
-                f"inverted containment join would expand to {join_rows} rows "
-                f"(> {guard_factor}x the {n_rows}-row shingle relation): "
-                "hot shingles present — use containment_probe_candidates "
-                "with a df cap + containment_pairs instead"
-            )
     sizes = shingles.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     a = shingles.select(F.col("doc_id").alias("doc_a"), "s")
     b = shingles.select(F.col("doc_id").alias("doc_b"), "s")
@@ -815,7 +828,7 @@ def containment_pairs_exact(
         .groupBy("doc_a", "doc_b")
         .agg(F.count(F.lit(1)).alias("n_inter"))
     )
-    return _containment_scores(_pair_set_sizes(inter, sizes), threshold)
+    return _containment_scores(_pair_set_sizes(inter, sizes), CONTAINMENT_THRESHOLD)
 
 
 # ---------------------------------------------------------------------------
@@ -831,7 +844,7 @@ def containment_pairs_exact(
 CDC_MOD = 16
 
 
-def cdc_chunk_stats(docs: DataFrame, mod: int = CDC_MOD) -> DataFrame:
+def cdc_chunk_stats(docs: DataFrame) -> DataFrame:
     """Per-source storage-dedup report over content-defined chunks:
     (source, n_chunks, n_distinct_chunks, dedup_ratio_q, n_dup_tokens)
     with dedup_ratio_q = distinct/total in 1e4 fixed point and
@@ -848,7 +861,7 @@ def cdc_chunk_stats(docs: DataFrame, mod: int = CDC_MOD) -> DataFrame:
     the chunk relation is ~1/CDC_MOD of the token count — the same
     reduction every downstream stage inherits.
     """
-    per = cdc_chunks(docs, mod).groupBy("source", "chunk_hash").agg(
+    per = cdc_chunks(docs).groupBy("source", "chunk_hash").agg(
         F.count(F.lit(1)).alias("cnt"), F.min("n_tok").alias("n_tok")
     )
     return per.groupBy("source").agg(
@@ -859,7 +872,7 @@ def cdc_chunk_stats(docs: DataFrame, mod: int = CDC_MOD) -> DataFrame:
     )
 
 
-def cdc_chunks(docs: DataFrame, mod: int = CDC_MOD) -> DataFrame:
+def cdc_chunks(docs: DataFrame) -> DataFrame:
     """The per-chunk relation of :func:`cdc_chunk_stats`:
     (doc_id, source, chunk_idx, n_tok, chunk_hash) — exposed because
     the chunk table IS the content-addressed store's ingest unit:
@@ -880,7 +893,7 @@ def cdc_chunks(docs: DataFrame, mod: int = CDC_MOD) -> DataFrame:
                 16,
                 10,
             ).cast("bigint"),
-            F.lit(mod),
+            F.lit(CDC_MOD),
         )
         == 0
     ).cast("int")
@@ -899,7 +912,7 @@ def cdc_chunks(docs: DataFrame, mod: int = CDC_MOD) -> DataFrame:
     )
 
 
-def cdc_reuse_stats(v1: DataFrame, v2: DataFrame, mod: int = CDC_MOD) -> DataFrame:
+def cdc_reuse_stats(v1: DataFrame, v2: DataFrame) -> DataFrame:
     """Version-over-version chunk-store ingest report: of corpus v2's
     chunks, how many are REUSED from v1's content-addressed chunk
     store vs genuinely new — one row
@@ -910,11 +923,11 @@ def cdc_reuse_stats(v1: DataFrame, v2: DataFrame, mod: int = CDC_MOD) -> DataFra
     Plan: both sides collapse to chunk relations first (the one
     corpus-scale exchange each, shared with their chunk-id windows);
     v1's DISTINCT chunk-hash set then left-semi-classifies v2's
-    chunks on the hash — a join between two ~1/mod-sized relations,
+    chunks on the hash — a join between two ~1/CDC_MOD-sized relations,
     never between corpora.  At 100 TB the v1 side is the store's
     existing hash index, read not recomputed."""
-    v1h = cdc_chunks(v1, mod).select("chunk_hash").distinct()
-    c2 = cdc_chunks(v2, mod).join(
+    v1h = cdc_chunks(v1).select("chunk_hash").distinct()
+    c2 = cdc_chunks(v2).join(
         v1h.withColumn("_seen", F.lit(True)), "chunk_hash", "left"
     )
     return c2.agg(

@@ -131,7 +131,6 @@ def write_zordered_partitioned(
     part_col: str,
     x: str,
     y: str,
-    n_tasks: int = 16,
 ) -> None:
     """The 100 TB composition: Hive-partition on ``part_col`` (the
     coarse pruning dimension — typically a date) and Z-order ``(x, y)``
@@ -145,12 +144,14 @@ def write_zordered_partitioned(
     first, then row groups.  Scaling bounds are global (one pair of
     tiny ANALYZE aggregates); per-partition bounds would buy little
     since z segments never span partition directories anyway."""
-    _write_range_clustered(df, path, _minmax_morton(df, x, y), n_tasks, part_col)
+    _write_range_clustered(df, path, _minmax_morton(df, x, y), 16, part_col)
 
 
-def quantile_rank16(
-    df: DataFrame, col_name: str, n_buckets: int = 256, rel_err: float = 0.001
-) -> Column:
+#: rank buckets per key for :func:`quantile_rank16` (8 meaningful bits).
+RANK16_BUCKETS = 256
+
+
+def quantile_rank16(df: DataFrame, col_name: str) -> Column:
     """Quantile-rank scaling onto the 16-bit Morton lane — the
     skewed-key upgrade :func:`scaled16`'s docstring promises.  Affine
     min/max scaling collapses under skew: with values spanning orders
@@ -161,10 +162,10 @@ def quantile_rank16(
     ids, not raw values.
 
     Implementation: one approxQuantile sample pass (Greenwald-Khanna,
-    driver gets <= n_buckets boundary literals — O(config) state, same
+    driver gets <= RANK16_BUCKETS boundary literals — O(config) state, same
     ANALYZE budget as the min/max pair), then a codegen'd fold over
     the boundary array counts how many boundaries each value passes.
-    n_buckets=256 gives 8 meaningful bits per key — multi-file
+    RANK16_BUCKETS=256 gives 8 meaningful bits per key — multi-file
     locality needs file counts, not bit depth, so 256 ranks per
     dimension is far finder than any realistic layout granularity.
     """
@@ -182,7 +183,7 @@ def quantile_rank16(
         & F.col(col_name).isNotNull()
     )
     cuts = finite.approxQuantile(
-        col_name, [i / n_buckets for i in range(1, n_buckets)], rel_err
+        col_name, [i / RANK16_BUCKETS for i in range(1, RANK16_BUCKETS)], 0.001
     )
     bounds = sorted({c for c in cuts if _math.isfinite(c)})
     if not bounds:

@@ -262,15 +262,16 @@ FRAME_SCHEMA = StructType(
 #: Fixed fake frame size (bytes) for the frame-sampling stub.
 FRAME_BYTES = 256
 
+#: the frame-sampling stub keeps every FRAME_EVERY_N-th frame.
+FRAME_EVERY_N = 4
 
-def sample_frames(
-    docs: DataFrame, frame_bytes: int = FRAME_BYTES, every_n: int = 4
-) -> DataFrame:
-    """Sample every ``every_n``-th frame of each "video" payload via
+
+def sample_frames(docs: DataFrame) -> DataFrame:
+    """Sample every FRAME_EVERY_N-th frame of each "video" payload via
     mapInPandas — the 1->N batch-output shape (one input row fans out
     to one row per sampled frame; empty payloads produce none).
 
-    The STUB treats the payload as ``ceil(len/frame_bytes)`` fixed-size
+    The STUB treats the payload as ``ceil(len/FRAME_BYTES)`` fixed-size
     frames (a real implementation would run a container demuxer and
     return decoded keyframes); sampling arithmetic, schema, and the
     exploding batch iterator are the production shape.
@@ -283,11 +284,11 @@ def sample_frames(
             out_doc, out_idx, out_len = [], [], []
             for doc_id, payload in zip(pdf["doc_id"], pdf["media_bytes"]):
                 n = len(payload)
-                n_frames = (n + frame_bytes - 1) // frame_bytes
-                for i in range(0, n_frames, every_n):
+                n_frames = (n + FRAME_BYTES - 1) // FRAME_BYTES
+                for i in range(0, n_frames, FRAME_EVERY_N):
                     out_doc.append(doc_id)
                     out_idx.append(i)
-                    out_len.append(min(frame_bytes, n - i * frame_bytes))
+                    out_len.append(min(FRAME_BYTES, n - i * FRAME_BYTES))
             yield pd.DataFrame(
                 {"doc_id": out_doc, "frame_idx": out_idx, "frame_len": out_len}
             )

@@ -40,17 +40,13 @@ MIN_TOKENS = 20
 MIN_QUALITY = 0.3
 
 
-def clean_corpus(
-    docs: DataFrame,
-    min_tokens: int = MIN_TOKENS,
-    min_quality: float = MIN_QUALITY,
-) -> DataFrame:
+def clean_corpus(docs: DataFrame) -> DataFrame:
     """Exact-dedup -> quality-filter -> language-tag, single-pass.
 
     Output: one row per kept document — (doc_id, pred_lang, n_tokens,
     quality_score) — where "kept" means: the minimum doc_id of its
-    exact-content group, with ``n_tokens >= min_tokens`` and
-    ``quality_score >= min_quality``.
+    exact-content group, with ``n_tokens >= MIN_TOKENS`` and
+    ``quality_score >= MIN_QUALITY``.
     """
     norm = F.regexp_replace(F.trim(F.col("text")), r"\s+", " ")
     base = docs.select(
@@ -84,8 +80,8 @@ def clean_corpus(
         scored.withColumn("rep_doc_id", F.min("doc_id").over(w))
         .filter(
             (F.col("doc_id") == F.col("rep_doc_id"))
-            & (F.col("n_tokens") >= min_tokens)
-            & (F.col("quality_score") >= min_quality)
+            & (F.col("n_tokens") >= MIN_TOKENS)
+            & (F.col("quality_score") >= MIN_QUALITY)
         )
         .select("doc_id", pred.alias("pred_lang"), "n_tokens", "quality_score")
     )
@@ -171,32 +167,32 @@ def filter_funnel(docs: DataFrame, bench_pct: float = 5.0) -> DataFrame:
 # Corpus version diff (dataset-versioning audit)
 # ---------------------------------------------------------------------------
 
-def corpus_diff(v1: DataFrame, v2: DataFrame, key: str = "doc_id") -> DataFrame:
+def corpus_diff(v1: DataFrame, v2: DataFrame) -> DataFrame:
     """Snapshot-to-snapshot corpus diff: classify every document as
     ``added`` / ``removed`` / ``changed`` / ``unchanged`` between two
     corpus versions and report per-(source, change_type) counts — the
     audit a dataset-versioning deployment runs before promoting a new
     training snapshot ("what did this refresh actually do?").
 
-    Plan: each side reduces to its (key, source, content md5) spine in
+    Plan: each side reduces to its (doc_id, source, content md5) spine in
     a narrow projection — the TEXT never crosses the wire — then ONE
     co-partitioned full-outer join on the key classifies every doc,
     and a tiny (sources x 4)-row aggregate summarizes.  Linear, one
     shuffle pair on the join key; at 100 TB with both snapshots
-    bucketed by ``key`` the join is exchange-free (the
+    bucketed by ``doc_id`` the join is exchange-free (the
     sinks.write_bucketed layout this engine already ships).
     """
     a = v1.select(
-        F.col(key),
+        F.col("doc_id"),
         F.col("source").alias("src_a"),
         F.md5(F.col("text")).alias("h_a"),
     )
     b = v2.select(
-        F.col(key),
+        F.col("doc_id"),
         F.col("source").alias("src_b"),
         F.md5(F.col("text")).alias("h_b"),
     )
-    classified = a.join(b, key, "full_outer").select(
+    classified = a.join(b, "doc_id", "full_outer").select(
         F.coalesce("src_a", "src_b").alias("source"),
         F.when(F.col("h_a").isNull(), F.lit("added"))
         .when(F.col("h_b").isNull(), F.lit("removed"))

@@ -26,16 +26,16 @@ def drop_duplicate_keys(df: DataFrame, key: str) -> DataFrame:
     return df.dropDuplicates([key])
 
 
-def fill_missing(df: DataFrame, numeric_default: float = 0, string_default: str = "Unknown") -> DataFrame:
+def fill_missing(df: DataFrame) -> DataFrame:
     """Fill nulls per the reference's remediation policy (D2):
     numerics -> 0, strings -> 'Unknown'."""
     numeric_cols = [f.name for f in df.schema.fields if isinstance(f.dataType, NumericType)]
     string_cols = [f.name for f in df.schema.fields if isinstance(f.dataType, StringType)]
     out = df
     if numeric_cols:
-        out = out.na.fill(numeric_default, subset=numeric_cols)
+        out = out.na.fill(0, subset=numeric_cols)
     if string_cols:
-        out = out.na.fill(string_default, subset=string_cols)
+        out = out.na.fill("Unknown", subset=string_cols)
     return out
 
 

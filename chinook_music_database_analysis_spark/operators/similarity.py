@@ -56,6 +56,19 @@ IVF_N_PROBE = 5
 #: by zip_with producing nulls on mismatch).
 EMB_DIM = 64
 
+#: the query set of every top-k / range operator is ``vec_id < N_QUERIES``.
+N_QUERIES = 10
+
+#: neighbors kept per query by the top-k operators.
+TOP_K = 5
+
+#: cosine at or above which two driver-corpus embeddings count as near
+#: duplicates: the synthetic embeddings are near-orthogonal, so 0.2 is
+#: "suspiciously similar" there (a sweep over real model embeddings
+#: would run ~0.95).  The near-dup pairs, the SemDeDup drop rule and the
+#: range-search radius all use it.
+NEAR_DUP_COS = 0.2
+
 
 def lsh_n_bits(n: int) -> int:
     """Active hyperplanes (bucket bits) per table for a corpus of n
@@ -81,7 +94,7 @@ def ivf_cell_stride(n: int) -> int:
 
 
 @lru_cache(maxsize=None)
-def plane_signs(p: int, dim: int = EMB_DIM) -> tuple[float, ...]:
+def plane_signs(p: int) -> tuple[float, ...]:
     """Deterministic +/-1 hyperplane components, derived from md5 of
     'p|i' — the same derivation the DuckDB oracle used to do inline.
     Folding it to a literal at plan-build time removes dim*N_PLANES
@@ -89,7 +102,7 @@ def plane_signs(p: int, dim: int = EMB_DIM) -> tuple[float, ...]:
     output bit."""
     return tuple(
         1.0 if int(hashlib.md5(f"{p}|{i}".encode()).hexdigest()[0], 16) % 2 == 0 else -1.0
-        for i in range(dim)
+        for i in range(EMB_DIM)
     )
 
 
@@ -135,8 +148,8 @@ def _cos(dot_a: str, dot_b: str, norm_a: str, norm_b: str) -> F.Column:
 
 def cosine_topk(
     emb: DataFrame,
-    n_queries: int = 10,
-    k: int = 5,
+    n_queries: int = N_QUERIES,
+    k: int = TOP_K,
     corpus: DataFrame | None = None,
     norms: DataFrame | None = None,
 ) -> DataFrame:
@@ -219,21 +232,14 @@ MRL_SHORTLIST = 100
 MRL_SHORTLIST_SQRT_MULT = 2
 
 
-def mrl_topk(
-    emb: DataFrame,
-    n_queries: int = 10,
-    k: int = 5,
-    prefix_dim: int = MRL_DIM,
-    shortlist: int | None = None,
-    n_corpus: int | None = None,
-) -> DataFrame:
+def mrl_topk(emb: DataFrame, n_corpus: int, k: int = TOP_K) -> DataFrame:
     """Two-stage matryoshka retrieval: coarse cosine over the first
-    ``prefix_dim`` dimensions keeps a ``shortlist`` per query, then the
+    MRL_DIM dimensions keeps a shortlist per query, then the
     FULL vector re-ranks only those candidates — top-k emitted with
     the deterministic (rounded-score, neighbor_id) tie-break of
     :func:`cosine_topk`.
 
-    The 100 TB shape: the corpus-wide pass touches prefix_dim/EMB_DIM
+    The 100 TB shape: the corpus-wide pass touches MRL_DIM/EMB_DIM
     of the vector bytes (store the prefix as its own parquet column
     and the coarse scan reads ONLY it — columnar pruning does the
     byte-level truncation for free; here the slice happens in the
@@ -249,21 +255,18 @@ def mrl_topk(
     rounds): the rounded prefix cosine plus neighbor_id tie-break
     makes both stages exactly reproducible in the DuckDB oracle.
 
-    ``shortlist=None`` (the default) takes the corpus-scaled depth
-    max(MRL_SHORTLIST, MRL_SHORTLIST_SQRT_MULT * ceil(sqrt(N))) — the
-    count is the one ANALYZE-pattern scalar of the operator (at 100 TB
-    it is a catalog statistic).  Callers that already know N (the
-    registry memoizes it per session/corpus) pass ``n_corpus`` so the
-    default does not re-scan the corpus on every invocation.
+    The shortlist is the corpus-scaled depth
+    max(MRL_SHORTLIST, MRL_SHORTLIST_SQRT_MULT * ceil(sqrt(N))) for
+    ``n_corpus`` = N, the one ANALYZE-pattern scalar of the operator
+    (at 100 TB a catalog statistic; the registry memoizes it per
+    session/corpus), so the operator never re-scans the corpus to
+    count it.
     """
-    if shortlist is None:
-        n = emb.count() if n_corpus is None else n_corpus
-        shortlist = max(
-            MRL_SHORTLIST,
-            MRL_SHORTLIST_SQRT_MULT * math.ceil(math.sqrt(n)),
-        )
-    pre = f"slice(embedding, 1, {prefix_dim})"
-    q = emb.filter(F.col("vec_id") < n_queries).select(
+    shortlist = max(
+        MRL_SHORTLIST, MRL_SHORTLIST_SQRT_MULT * math.ceil(math.sqrt(n_corpus))
+    )
+    pre = f"slice(embedding, 1, {MRL_DIM})"
+    q = emb.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("q_emb"),
         F.expr(pre).alias("q_pre"),
@@ -424,12 +427,12 @@ def _bucket_windowed_pairs(buckets: DataFrame, window: int) -> DataFrame:
 def embedding_near_dup_pairs(
     buckets: DataFrame,
     norms: DataFrame,
-    threshold: float = 0.2,
     window: int = PAIR_WINDOW,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs — the vector-space analog
     of minhash dedup: candidates meet only inside an LSH bucket (any of
-    the N_TABLES tables), then exact cosine filters by threshold.
+    the N_TABLES tables), then exact cosine keeps the pairs at or above
+    :data:`NEAR_DUP_COS`.
 
     Bucket bits scale with the corpus (:func:`lsh_n_bits`, derived from
     a count at plan-build time — the same one-scan parameter derivation
@@ -446,10 +449,6 @@ def embedding_near_dup_pairs(
     window+1) still emit their complete pair set, so at driver scales
     the capped sweep IS the uncapped sweep.  The oracle mirrors the
     cap bit-for-bit.
-
-    The threshold is corpus-relative (the driver's synthetic embeddings
-    are near-orthogonal, so 0.2 is 'suspiciously similar' there; a real
-    near-dup sweep over model embeddings would run ~0.95).
 
     ``buckets`` is :func:`lsh_buckets` and ``norms`` is
     :func:`with_norms` over the same corpus — the stored-signature-table
@@ -478,7 +477,7 @@ def embedding_near_dup_pairs(
             "vec_b",
             _cos("emb_a", "emb_b", "norm_a", "norm_b").alias("cos_sim"),
         )
-        .filter(F.col("cos_sim") >= threshold)
+        .filter(F.col("cos_sim") >= NEAR_DUP_COS)
     )
 
 
@@ -492,13 +491,8 @@ KNN_GRAPH_K = 3
 KNN_WINDOW = 16
 
 
-def knn_graph(
-    buckets: DataFrame,
-    norms: DataFrame,
-    k: int = KNN_GRAPH_K,
-    window: int = KNN_WINDOW,
-) -> DataFrame:
-    """Corpus-wide approximate k-NN graph: every vector's top-``k``
+def knn_graph(buckets: DataFrame, norms: DataFrame) -> DataFrame:
+    """Corpus-wide approximate k-NN graph: every vector's top-KNN_GRAPH_K
     most-similar LSH bucket-mates as directed edges (src_id, nbr_id,
     cos_sim, rnk) — the neighbor graph semantic-dedup, graph
     clustering, and label-propagation pipelines consume.
@@ -509,27 +503,27 @@ def knn_graph(
     deterministic pseudo-random order (md5 of ``tbl:vec_id`` — a
     different shuffle per table, so a pair missed by one table's
     window is independently retried by every other table it
-    co-buckets in) and each member pairs only with its ``window``
+    co-buckets in) and each member pairs only with its KNN_WINDOW
     successors.  A bucket of occupancy m therefore contributes
-    m*window pairs instead of m^2: total candidates are <=
-    N*window*N_TABLES whatever the occupancy distribution, so a hot
+    m*KNN_WINDOW pairs instead of m^2: total candidates are <=
+    N*KNN_WINDOW*N_TABLES whatever the occupancy distribution, so a hot
     bucket — the thing that made the uncapped build go quadratic on
     clustered corpora — degrades recall smoothly instead of blowing
-    up the join.  Buckets with occupancy <= window+1 (the common case
-    under corpus-scaled bits) still yield their COMPLETE pair set, so
-    at driver scales the capped graph is the uncapped graph.
+    up the join.  Buckets with occupancy <= KNN_WINDOW+1 (the common
+    case under corpus-scaled bits) still yield their COMPLETE pair
+    set, so at driver scales the capped graph is the uncapped graph.
 
     The window expansion is an explode of a bounded integer sequence
     joined back equi- on (tbl, bucket, pos) — no non-equi join, no
     skew: Spark plans it as a plain shuffled hash/sort-merge join on
     uniformly-hashed keys.  The rank window engages Spark's
-    WindowGroupLimit: each src group keeps only k rows through the
-    sort, so the post-shuffle state is k·N edges, not the candidate
-    multiset.  At 100 TB both signature relations come from the
+    WindowGroupLimit: each src group keeps only KNN_GRAPH_K rows
+    through the sort, so the post-shuffle state is KNN_GRAPH_K·N
+    edges, not the candidate multiset.  At 100 TB both signature relations come from the
     persisted index store — graph construction never rescans or
     re-projects the corpus.
     """
-    fwd = _bucket_windowed_directed(buckets, window).select(
+    fwd = _bucket_windowed_directed(buckets, KNN_WINDOW).select(
         F.col("va").alias("src_id"), F.col("vb").alias("nbr_id")
     )
     # Both edge directions from ONE execution of the windowed-expansion
@@ -579,7 +573,7 @@ def knn_graph(
     w = Window.partitionBy("src_id").orderBy(F.col("cos_sim").desc(), F.col("nbr_id"))
     return (
         scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
+        .filter(F.col("rnk") <= KNN_GRAPH_K)
         .select("src_id", "nbr_id", "cos_sim", "rnk")
     )
 
@@ -602,21 +596,16 @@ def _bucket_probe_candidates(buckets: DataFrame, n_queries: int) -> DataFrame:
     )
 
 
-def range_search(
-    buckets: DataFrame,
-    norms: DataFrame,
-    tau: float = 0.2,
-    n_queries: int = 10,
-) -> DataFrame:
+def range_search(buckets: DataFrame, norms: DataFrame) -> DataFrame:
     """Radius (range) similarity search: for each query vector, EVERY
-    corpus neighbor with cosine >= ``tau`` — the unbounded-k companion
+    corpus neighbor with cosine >= :data:`NEAR_DUP_COS` — the unbounded-k companion
     of top-k search ("all docs suspiciously close to this one"), the
     shape retrieval-dedup sweeps and contamination checks use.
 
     Candidates come from the same multi-table LSH signature relation
     the near-dup and top-k paths share (corpus-scaled bits, so the
     expected candidate count is linear in N); the exact cosine then
-    applies the radius.  The query-side bucket relation is ``n_queries
+    applies the radius.  The query-side bucket relation is ``N_QUERIES
     x N_TABLES`` rows — broadcast — so the corpus-side signature table
     is probed in place and the corpus itself is touched only to fetch
     candidate embeddings.  Same recall contract as the bucketed
@@ -625,7 +614,7 @@ def range_search(
     interest (and the oracle replicates the banding, so the gate is
     exact).
     """
-    cand = _bucket_probe_candidates(buckets, n_queries)
+    cand = _bucket_probe_candidates(buckets, N_QUERIES)
     return (
         cand.join(
             norms.select(
@@ -648,7 +637,7 @@ def range_search(
             "neighbor_id",
             _cos("q_emb", "n_emb", "q_norm", "n_norm").alias("cos_sim"),
         )
-        .filter(F.col("cos_sim") >= tau)
+        .filter(F.col("cos_sim") >= NEAR_DUP_COS)
     )
 
 
@@ -686,7 +675,7 @@ def ivf_stride_centroids(emb: DataFrame, n: int) -> DataFrame:
     )
 
 
-def kmeans_centroids(emb: DataFrame, n: int, iters: int = KMEANS_ITERS) -> DataFrame:
+def kmeans_centroids(emb: DataFrame, n: int) -> DataFrame:
     """K-means-trained IVF centroids at the same ~sqrt(N) cardinality
     as the stride sample — the quality upgrade over stride-sampled
     centroids for clustered real-world corpora (stride sampling lands
@@ -700,7 +689,7 @@ def kmeans_centroids(emb: DataFrame, n: int, iters: int = KMEANS_ITERS) -> DataF
     * **init**: every C-th sample vector seeds a cell (~sqrt(N) seeds,
       cell_id = seed vec_id) — the stride sample IS the init, so the
       stride variant is exactly "0 iterations" of this operator.
-    * **iterate** (fixed ``iters`` Lloyd steps): assign each sample
+    * **iterate** (fixed KMEANS_ITERS Lloyd steps): assign each sample
       vector to its nearest centroid (ROUNDed cosine, cell_id
       tie-break — deterministic), then recompute each cell's
       element-wise mean.  The mean accumulates in DECIMAL(28,12) after
@@ -725,7 +714,7 @@ def kmeans_centroids(emb: DataFrame, n: int, iters: int = KMEANS_ITERS) -> DataF
     cents = sample.filter(F.col("vec_id") % (ss * KMEANS_C) == 0).select(
         F.col("vec_id").alias("cell_id"), F.col("s_emb").alias("c_emb")
     )
-    for _ in range(iters):
+    for _ in range(KMEANS_ITERS):
         cn = cents.withColumn("c_norm", _norm("c_emb"))
         w = Window.partitionBy("vec_id").orderBy(F.col("c_sim").desc(), F.col("cell_id"))
         assigned = (
@@ -798,8 +787,8 @@ def ivf_assignments(emb: DataFrame, cents: DataFrame) -> DataFrame:
 CLUSTER_SAMPLE_M = 25
 
 
-def cluster_sample(assigned: DataFrame, m: int = CLUSTER_SAMPLE_M) -> DataFrame:
-    """Cluster-balanced diversity sample: at most ``m`` vectors per
+def cluster_sample(assigned: DataFrame) -> DataFrame:
+    """Cluster-balanced diversity sample: at most CLUSTER_SAMPLE_M vectors per
     IVF cell, chosen by a content-addressed hash — the embedding-space
     curation step (SemDeDup's sibling: instead of dropping near-dups
     within a cell, cap each cell's contribution so dense regions of
@@ -818,7 +807,7 @@ def cluster_sample(assigned: DataFrame, m: int = CLUSTER_SAMPLE_M) -> DataFrame:
     values.  Cells are ~sqrt(N) sized by
     construction, so the sort is bounded per task; at extreme corpus
     sizes swap the exact quota for hash-threshold rate sampling
-    (keep when h < m/n_cell quantile) to avoid the per-cell sort
+    (keep when h < CLUSTER_SAMPLE_M/n_cell quantile) to avoid the per-cell sort
     entirely — exactness of the quota is the only thing lost.
     """
     a = assigned.select("vec_id", "cell_id")
@@ -829,7 +818,7 @@ def cluster_sample(assigned: DataFrame, m: int = CLUSTER_SAMPLE_M) -> DataFrame:
         a.withColumn("h", h)
         .withColumn("n_cell", F.count(F.lit(1)).over(wc))
         .withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= m)
+        .filter(F.col("rnk") <= CLUSTER_SAMPLE_M)
         .select("vec_id", "cell_id", "n_cell", "rnk")
     )
 
@@ -838,9 +827,6 @@ def ivf_topk(
     emb: DataFrame,
     centroids: DataFrame,
     assigned: DataFrame,
-    n_queries: int = 10,
-    k: int = 5,
-    n_probe: int = IVF_N_PROBE,
     allowed: DataFrame | None = None,
 ) -> DataFrame:
     """Approximate top-k via an IVF (inverted-file) index — the
@@ -857,12 +843,12 @@ def ivf_topk(
     * **Assign**: ``assigned`` is :func:`ivf_assignments` over the same
       ``centroids`` — the inverted file, persisted beside them.
     * **Probe**: each query scores the same centroid set and searches
-      its ``n_probe`` nearest cells; candidates are only the vectors
+      its IVF_N_PROBE nearest cells; candidates are only the vectors
       assigned to those cells (the |corpus| x |queries| cross product
       never forms).
 
     Recall < 1 by design (a true neighbor assigned to an unprobed cell
-    is missed) — that is the IVF trade; raise ``n_probe`` toward the
+    is missed) — that is the IVF trade; raise IVF_N_PROBE toward the
     cell count to converge on the brute-force result.
     """
     # Filtered search (pre-filter WITHIN the index): restrict the
@@ -878,7 +864,7 @@ def ivf_topk(
         F.col("c_sim").desc(), F.col("cell_id")
     )
     probed = (
-        emb.filter(F.col("vec_id") < n_queries)
+        emb.filter(F.col("vec_id") < N_QUERIES)
         .select(
             F.col("vec_id").alias("query_id"),
             F.col("embedding").alias("q_emb"),
@@ -893,7 +879,7 @@ def ivf_topk(
             _cos("q_emb", "c_emb", "q_norm", "c_norm").alias("c_sim"),
         )
         .withColumn("rn", F.row_number().over(w_probe))
-        .filter(F.col("rn") <= n_probe)
+        .filter(F.col("rn") <= IVF_N_PROBE)
         .select("query_id", "q_emb", "q_norm", "cell_id")
     )
     cand = assigned.join(F.broadcast(probed), "cell_id").filter(
@@ -905,10 +891,10 @@ def ivf_topk(
         _cos("q_emb", "embedding", "q_norm", "norm").alias("cos_sim"),
     )
     w = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("neighbor_id"))
-    return scored.withColumn("rnk", F.row_number().over(w)).filter(F.col("rnk") <= k)
+    return scored.withColumn("rnk", F.row_number().over(w)).filter(F.col("rnk") <= TOP_K)
 
 
-def semantic_dedup(assigned: DataFrame, threshold: float = 0.2) -> DataFrame:
+def semantic_dedup(assigned: DataFrame, threshold: float = NEAR_DUP_COS) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, arXiv:2303.09540): semantic
     deduplication over an embedding corpus with k-means-cell-bounded
     pair enumeration — keep one representative per group of
@@ -928,9 +914,9 @@ def semantic_dedup(assigned: DataFrame, threshold: float = 0.2) -> DataFrame:
     never across the corpus; the candidate join runs on the slim
     (vec_id, cell_id) relation and embeddings re-join by vec_id for
     the surviving candidates only (the candidate/verify split shared
-    with embedding_near_dup_pairs).  The driver's synthetic embeddings
-    are near-orthogonal, so 0.2 is "suspiciously similar" there; a
-    real SemDeDup sweep over model embeddings runs ~0.95+.
+    with embedding_near_dup_pairs).  The default threshold is
+    :data:`NEAR_DUP_COS`; a real SemDeDup sweep over model embeddings
+    runs ~0.95+.
 
     ``assigned`` is the :func:`ivf_assignments` inverted file over the
     k-means cells — it is referenced four times here (the slim
@@ -976,23 +962,18 @@ def semantic_dedup(assigned: DataFrame, threshold: float = 0.2) -> DataFrame:
     ).select("vec_id", "cell_id", F.col("is_dup").isNull().alias("keep"))
 
 
-def lsh_topk(
-    buckets: DataFrame,
-    norms: DataFrame,
-    n_queries: int = 10,
-    k: int = 5,
-) -> DataFrame:
+def lsh_topk(buckets: DataFrame, norms: DataFrame) -> DataFrame:
     """Approximate top-k: exact cosine restricted to candidates sharing
     an LSH bucket with the query in ANY of the N_TABLES tables (bucket
-    bits corpus-scaled via :func:`lsh_n_bits`).  Returns <= k neighbors
-    per query (fewer when the buckets are sparse — that's the ANN
+    bits corpus-scaled via :func:`lsh_n_bits`).  Returns <= TOP_K
+    neighbors per query (fewer when the buckets are sparse — that's the ANN
     recall trade; the table union multiplies the collision chance).
 
     ``buckets``/``norms`` are the signature relations shared with the
     near-dup path (:func:`lsh_buckets`, :func:`with_norms`).
     """
-    cand = _bucket_probe_candidates(buckets, n_queries)
-    q_emb = norms.filter(F.col("vec_id") < n_queries).select(
+    cand = _bucket_probe_candidates(buckets, N_QUERIES)
+    q_emb = norms.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("q_emb"),
         F.col("norm").alias("q_norm"),
@@ -1014,7 +995,7 @@ def lsh_topk(
         )
     )
     w = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("neighbor_id"))
-    return scored.withColumn("rnk", F.row_number().over(w)).filter(F.col("rnk") <= k)
+    return scored.withColumn("rnk", F.row_number().over(w)).filter(F.col("rnk") <= TOP_K)
 
 
 def sq8_dequantized(emb: DataFrame) -> DataFrame:
@@ -1055,7 +1036,7 @@ def sq8_dequantized(emb: DataFrame) -> DataFrame:
     )
 
 
-def sq8_topk(emb: DataFrame, n_queries: int = 10, k: int = 5) -> DataFrame:
+def sq8_topk(emb: DataFrame, n_queries: int = N_QUERIES, k: int = TOP_K) -> DataFrame:
     """Top-k cosine neighbors scored against the SQ8-dequantized
     corpus (full-precision queries, compressed corpus) — the memory-
     bounded rescoring mode.  Same plan shape as :func:`cosine_topk`:
@@ -1138,7 +1119,7 @@ def pq_sample_stride(n: int) -> int:
     return max(1, n // (PQ_K * PQ_C))
 
 
-def pq_codebooks(emb: DataFrame, n: int, iters: int = KMEANS_ITERS) -> DataFrame:
+def pq_codebooks(emb: DataFrame, n: int) -> DataFrame:
     """Per-subspace PQ codebooks — k-means in each of the PQ_M
     16-dim slices, with the same determinism contract as
     :func:`kmeans_centroids`: modulo sample (~PQ_K*PQ_C vectors),
@@ -1166,7 +1147,7 @@ def pq_codebooks(emb: DataFrame, n: int, iters: int = KMEANS_ITERS) -> DataFrame
         cents = sub.filter(F.col("vec_id") % seed_s == 0).select(
             F.col("vec_id").alias("cell_id"), F.col("s_emb").alias("c_emb")
         )
-        for _ in range(iters):
+        for _ in range(KMEANS_ITERS):
             w = Window.partitionBy("vec_id").orderBy(F.col("d2").asc(), F.col("cell_id"))
             assigned = (
                 sub.crossJoin(F.broadcast(cents))
@@ -1242,8 +1223,8 @@ def pq_reconstruct(codes: DataFrame, books: DataFrame) -> DataFrame:
 def pq_topk(
     emb: DataFrame,
     recon: DataFrame,
-    n_queries: int = 10,
-    k: int = 5,
+    n_queries: int = N_QUERIES,
+    k: int = TOP_K,
 ) -> DataFrame:
     """Approximate top-k via the ADC + exact-rerank pipeline: score
     every corpus vector against the query on its PQ RECONSTRUCTION
@@ -1365,9 +1346,8 @@ def ivfpq_topk(
     emb: DataFrame,
     cents: DataFrame,
     recon: DataFrame,
-    n_queries: int = 10,
-    k: int = 5,
-    n_probe: int = IVF_N_PROBE,
+    n_queries: int = N_QUERIES,
+    k: int = TOP_K,
 ) -> DataFrame:
     """IVF-PQ: product quantization of the RESIDUAL after coarse
     k-means assignment — the composition real ANN services deploy
@@ -1381,7 +1361,7 @@ def ivfpq_topk(
     Pipeline: coarse cells ``cents`` (:func:`kmeans_centroids`,
     ~sqrt(N)) → ``recon`` (:func:`ivfpq_reconstruct` over those cells)
     → probe-limited search: each query scores the broadcast centroid set,
-    keeps its ``n_probe`` nearest cells, and ADC-scores ONLY the
+    keeps its IVF_N_PROBE nearest cells, and ADC-scores ONLY the
     reconstructions assigned to those cells (an equi-join on cell_id —
     query cost is the probed cells' population, never |q|·N, unlike
     plain PQ's full ADC sweep) → exact rerank of the top-PQ_RERANK
@@ -1403,7 +1383,7 @@ def ivfpq_topk(
         .crossJoin(F.broadcast(cents))
         .withColumn("c_sim", _cos("q_emb", "c_emb", "q_norm", "c_norm"))
         .withColumn("rn", F.row_number().over(w_probe))
-        .filter(F.col("rn") <= n_probe)
+        .filter(F.col("rn") <= IVF_N_PROBE)
         .select("query_id", "q_emb", "q_norm", "cell_id")
     )
     adc = (
@@ -1447,14 +1427,9 @@ def ivfpq_topk(
     return exact.withColumn("rnk", F.row_number().over(w)).filter(F.col("rnk") <= k)
 
 
-def contrastive_negatives(
-    emb: DataFrame,
-    buckets: DataFrame,
-    n_queries: int = 10,
-    k: int = 5,
-) -> DataFrame:
+def contrastive_negatives(emb: DataFrame, buckets: DataFrame) -> DataFrame:
     """Deterministic negative sampling for contrastive training: for
-    each anchor (vec_id < ``n_queries``), ``k`` corpus vectors that
+    each anchor (vec_id < N_QUERIES), TOP_K corpus vectors that
     share NO LSH bucket with the anchor in ANY table (the "provably
     not-near under the banding" complement of the near-dup candidate
     set), chosen by a content-addressed md5 coin — the
@@ -1469,16 +1444,16 @@ def contrastive_negatives(
     Selection is ``md5('neg|' || anchor || '|' || vec_id)`` rank —
     data-independent, append-stable, identical on both engines.
 
-    Scale shape: anchors' bucket signatures (``n_queries x N_TABLES``
+    Scale shape: anchors' bucket signatures (``N_QUERIES x N_TABLES``
     rows) broadcast against the stored corpus signature relation to
     form the mate (exclusion) set — bounded by the anchors' bucket
     occupancies.  The eligible relation is anchors x corpus (the same
     deliberate broadcast fan-out as brute-force scoring, |q| rows
     broadcast); the per-anchor rank filter engages the Partial
     WindowGroupLimit, so the shuffle carries at most
-    k x anchors x input-partitions rows — never the fan-out itself.
+    TOP_K x anchors x input-partitions rows — never the fan-out itself.
     """
-    q_sig = buckets.filter(F.col("vec_id") < n_queries).select(
+    q_sig = buckets.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"), "tbl", "bucket"
     )
     mates = (
@@ -1486,7 +1461,7 @@ def contrastive_negatives(
         .select("query_id", "vec_id")
         .distinct()
     )
-    anchors = emb.filter(F.col("vec_id") < n_queries).select(
+    anchors = emb.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id")
     )
     # The mates exclusion set is UNHINTED on purpose: on a hot-bucket
@@ -1511,7 +1486,7 @@ def contrastive_negatives(
     w = Window.partitionBy("query_id").orderBy(coin, F.col("vec_id"))
     return (
         cand.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
+        .filter(F.col("rnk") <= TOP_K)
         .select("query_id", F.col("vec_id").alias("neg_id"), "rnk")
     )
 
@@ -1632,14 +1607,9 @@ def _matvec(m: list[float], v: list[float], d: int) -> list[float]:
     return [_fold([m[i * d + j] * v[j] for j in range(d)]) for i in range(d)]
 
 
-def pca_power_model(
-    partials: list,
-    dim: int = EMB_DIM,
-    iters: int = PCA_ITERS,
-    components: int = PCA_COMPONENTS,
-) -> dict:
+def pca_power_model(partials: list, dim: int = EMB_DIM) -> dict:
     """Combine the collected moment partials and extract the leading
-    ``components`` eigenpairs by power iteration with deflation —
+    PCA_COMPONENTS eigenpairs by power iteration with deflation —
     driver-side math on the d x d matrix (the ANALYZE-pattern scalar
     stage; at d=64 this is 4096 doubles, not data).
 
@@ -1659,7 +1629,7 @@ def pca_power_model(
     folds cost minutes for no gate.
     """
     if dim > PCA_FOLD_MAX_DIM:
-        return _pca_power_model_np(partials, dim, iters, components)
+        return _pca_power_model_np(partials, dim, PCA_ITERS, PCA_COMPONENTS)
     d = dim
     # deterministic combine order (partition/batch order is not part
     # of the contract): sort by FULL content — (n, s) alone could tie
@@ -1689,9 +1659,9 @@ def pca_power_model(
 
     comps: list[tuple[float, list[float]]] = []
     m = list(m_q)
-    for _ in range(components):
+    for _ in range(PCA_COMPONENTS):
         v = [1.0] * d
-        for _ in range(iters):
+        for _ in range(PCA_ITERS):
             w = _matvec(m, v, d)
             nrm = math.sqrt(_fold([x * x for x in w]))
             v = [x / nrm for x in w]

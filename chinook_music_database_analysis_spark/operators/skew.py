@@ -21,27 +21,26 @@ from pyspark.sql import functions as F
 DEFAULT_SALTS = 8
 
 
-def _row_salt(n_salts: int) -> Column:
-    """Deterministic-enough per-row salt in [0, n_salts).
+def _row_salt() -> Column:
+    """Deterministic-enough per-row salt in [0, DEFAULT_SALTS).
 
     monotonically_increasing_id varies within every partition, which is
     exactly what's needed: rows of the same hot key spread across
     salts.  (Any assignment is correct; this one avoids a rand() seed.)
     """
-    return F.pmod(F.monotonically_increasing_id(), F.lit(n_salts)).cast("int")
+    return F.pmod(F.monotonically_increasing_id(), F.lit(DEFAULT_SALTS)).cast("int")
 
 
 def salted_agg(
     df: DataFrame,
     keys: list[str],
     aggs: dict[str, Column],
-    n_salts: int = DEFAULT_SALTS,
 ) -> DataFrame:
     """Two-phase aggregation through a salted key.
 
     Phase 1 aggregates on (keys + salt) — a hot key's rows land in
-    n_salts different reducers; phase 2 re-aggregates the per-salt
-    partials on the true keys (n_salts rows per key, trivially cheap).
+    DEFAULT_SALTS different reducers; phase 2 re-aggregates the per-salt
+    partials on the true keys (DEFAULT_SALTS rows per key, trivially cheap).
 
     ``aggs`` maps output column name -> phase-1 aggregate expression;
     phase 2 re-combines with SUM, so pass decomposable aggregates
@@ -49,7 +48,7 @@ def salted_agg(
     """
     if "__salt" in df.columns:  # internal name must not clobber caller data
         raise ValueError("salted_agg: df already has a __salt column")
-    salted = df.withColumn("__salt", _row_salt(n_salts))
+    salted = df.withColumn("__salt", _row_salt())
     p1 = salted.groupBy(*keys, "__salt").agg(
         *[expr.alias(name) for name, expr in aggs.items()]
     )
@@ -58,40 +57,23 @@ def salted_agg(
     )
 
 
-def salted_join(
-    big: DataFrame,
-    small: DataFrame,
-    key: str,
-    n_salts: int = DEFAULT_SALTS,
-    how: str = "inner",
-) -> DataFrame:
-    """Skew-safe equi-join: salt the big side per row, replicate the
-    small side across all salts, join on (key, salt).
+def salted_join(big: DataFrame, small: DataFrame, key: str) -> DataFrame:
+    """Skew-safe inner equi-join: salt the big side per row, replicate
+    the small side across all salts, join on (key, salt).
 
-    The hot key's rows split across n_salts tasks at the cost of
-    n_salts x |small| replication — the standard trade when the small
-    side is modest but above the broadcast threshold.
-
-    Only inner/left/semi/anti are supported: the small side is
-    replicated across all salts, so right/full outer would emit
-    n_salts rows for every unmatched small-side key.
+    The hot key's rows split across DEFAULT_SALTS tasks at the cost of
+    DEFAULT_SALTS x |small| replication — the standard trade when the
+    small side is modest but above the broadcast threshold.
     """
-    safe = {"inner", "left", "leftouter", "left_outer", "semi", "leftsemi",
-            "left_semi", "anti", "leftanti", "left_anti"}
-    if how.lower() not in safe:
-        raise ValueError(
-            f"salted_join: how={how!r} unsupported — small-side replication "
-            "duplicates unmatched small-side rows under right/full outer joins"
-        )
     if "__salt" in big.columns or "__salt" in small.columns:
         raise ValueError("salted_join: inputs already have a __salt column")
-    big_s = big.withColumn("__salt", _row_salt(n_salts))
+    big_s = big.withColumn("__salt", _row_salt())
     small_r = small.crossJoin(
         F.broadcast(
-            big.sparkSession.range(n_salts).select(
+            big.sparkSession.range(DEFAULT_SALTS).select(
                 F.col("id").cast("int").alias("__salt")
             )
         )
     )
-    out = big_s.join(small_r, on=[key, "__salt"], how=how)
+    out = big_s.join(small_r, on=[key, "__salt"])
     return out.drop("__salt")

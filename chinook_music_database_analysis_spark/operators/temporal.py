@@ -36,13 +36,12 @@ def asof_join(
     right: DataFrame,
     key: str,
     ts: str = "ts",
-    right_prefix: str = "r_",
     tolerance_us: int | None = None,
 ) -> DataFrame:
     """Left as-of join: every ``left`` row picks the most recent
     ``right`` row with ``right.ts <= left.ts`` for the same ``key``
     (inclusive, like DuckDB ``ASOF JOIN ... ON r.ts <= l.ts``); no
-    match yields NULLs.  Right columns come back ``right_prefix``-ed;
+    match yields NULLs.  Right columns come back prefixed ``r_``;
     ``tolerance_us`` (microseconds) optionally voids matches older
     than ``left.ts - tolerance_us`` (pandas ``merge_asof`` tolerance).
 
@@ -75,7 +74,7 @@ def asof_join(
         F.col(ts).alias("__asof_ts"),
         F.lit(0).alias("__asof_side"),
         F.struct(
-            *[F.col(c).alias(right_prefix + c) for c in rcols]
+            *[F.col(c).alias("r_" + c) for c in rcols]
         ).alias("__asof_r"),
     )
     l_ = left.select(
@@ -91,22 +90,15 @@ def asof_join(
     out = u.select(*left.columns, "__asof_side", "__asof_ts", carried).filter(
         F.col("__asof_side") == 1
     )
-    fields = [
-        F.col(f"__asof_r.{right_prefix}{c}").alias(right_prefix + c) for c in rcols
-    ]
+    fields = [F.col(f"__asof_r.r_{c}").alias("r_" + c) for c in rcols]
     if tolerance_us is not None:
         fresh = (
             F.unix_micros(F.col("__asof_ts"))
-            - F.unix_micros(F.col(f"__asof_r.{right_prefix}{ts}"))
+            - F.unix_micros(F.col(f"__asof_r.r_{ts}"))
         ) <= F.lit(tolerance_us)
         return out.select(
             *left.columns,
-            *[
-                F.when(fresh, F.col(f"__asof_r.{right_prefix}{c}")).alias(
-                    right_prefix + c
-                )
-                for c in rcols
-            ],
+            *[F.when(fresh, F.col(f"__asof_r.r_{c}")).alias("r_" + c) for c in rcols],
         )
     return out.select(*left.columns, *fields)
 
@@ -120,8 +112,6 @@ def range_join(
     right: DataFrame,
     key: str,
     width_us: int,
-    left_ts: str = "ts",
-    right_ts: str = "ts",
 ) -> DataFrame:
     """Banded join: pairs of (left row, right row) with the same
     ``key`` and ``right.ts`` in the half-open band
@@ -138,14 +128,14 @@ def range_join(
     lb = left.withColumn(
         "__rj_b",
         F.explode(
-            F.array(_bucket(left_ts, width_us), _bucket(left_ts, width_us) + 1)
+            F.array(_bucket("ts", width_us), _bucket("ts", width_us) + 1)
         ),
     )
     rb = right.select(
         key, *[F.col(c).alias(c + "_r") for c in right.columns if c != key]
-    ).withColumn("__rj_b", _bucket(right_ts + "_r", width_us))
-    l_us = F.unix_micros(F.col(left_ts))
-    r_us = F.unix_micros(F.col(right_ts + "_r"))
+    ).withColumn("__rj_b", _bucket("ts_r", width_us))
+    l_us = F.unix_micros(F.col("ts"))
+    r_us = F.unix_micros(F.col("ts_r"))
     return (
         lb.join(rb, [key, "__rj_b"])
         .filter((r_us > l_us) & (r_us <= l_us + F.lit(width_us)))
@@ -153,16 +143,11 @@ def range_join(
     )
 
 
-def resample_ffill(
-    events: DataFrame,
-    key: str = "user_id",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    step: str = "1 hour",
-) -> DataFrame:
-    """Time-series resampling with forward fill: bucket each key's
-    events into fixed ``step`` windows, materialize the FULL bucket
-    grid between the key's first and last bucket (gaps included), and
+def resample_ffill(events: DataFrame, step: str = "1 hour") -> DataFrame:
+    """Time-series resampling with forward fill: bucket each user's
+    ``value`` events into fixed ``step`` windows on ``ts``, materialize
+    the FULL bucket grid between the user's first and last bucket (gaps
+    included), and
     carry the last observed value forward across gaps — the
     regular-grid densification every downstream window/feature
     pipeline assumes (and which SQL engines ship as ``time_bucket`` +
@@ -194,29 +179,30 @@ def resample_ffill(
             f"{sorted(valid_units)}; got {step!r} — for N-unit grids use an "
             f"arithmetic bucket (floor((ts - origin) / step))"
         )
-    bucket = F.date_trunc(unit, F.col(ts_col))
+    bucket = F.date_trunc(unit, F.col("ts"))
     b = (
-        events.select(F.col(key), bucket.alias("bucket"), F.col(value_col))
-        .groupBy(key, "bucket")
+        events.select(F.col("user_id"), bucket.alias("bucket"), F.col("value"))
+        .groupBy("user_id", "bucket")
         .agg(
-            F.round(F.sum(F.col(value_col).cast("decimal(18,4)")), 2)
+            F.round(F.sum(F.col("value").cast("decimal(18,4)")), 2)
             .cast("double")
             .alias("v")
         )
     )
-    span = b.groupBy(key).agg(F.min("bucket").alias("mn"), F.max("bucket").alias("mx"))
+    span = b.groupBy("user_id").agg(F.min("bucket").alias("mn"), F.max("bucket").alias("mx"))
     grid = span.select(
-        key, F.explode(F.sequence("mn", "mx", F.expr(f"interval {step}"))).alias("bucket")
+        "user_id",
+        F.explode(F.sequence("mn", "mx", F.expr(f"interval {step}"))).alias("bucket"),
     )
     w = (
-        Window.partitionBy(key)
+        Window.partitionBy("user_id")
         .orderBy("bucket")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     return (
-        grid.join(b, [key, "bucket"], "left")
+        grid.join(b, ["user_id", "bucket"], "left")
         .select(
-            key,
+            "user_id",
             "bucket",
             F.last("v", ignorenulls=True).over(w).alias("v_ffill"),
             F.col("v").isNull().alias("is_gap"),
@@ -301,32 +287,25 @@ def event_lateness(
     )
 
 
-def scd2_history(
-    events: DataFrame,
-    key: str = "user_id",
-    state_col: str = "event_type",
-    ts_col: str = "ts",
-    tiebreak: str = "event_id",
-    keep_tiebreak: bool = False,
-) -> DataFrame:
+def scd2_history(events: DataFrame, keep_tiebreak: bool = False) -> DataFrame:
     """Build a type-2 slowly-changing-dimension history from a
-    changelog: per ``key``, compress consecutive rows with the same
-    ``state_col`` into one versioned interval and stamp each with
+    changelog: per ``user_id``, compress consecutive rows with the same
+    ``event_type`` into one versioned interval and stamp each with
     ``valid_from`` / ``valid_to`` (NULL = open) / ``is_current`` /
     ``version`` — the standard dimension-history build a warehouse runs
     over a CDC feed before point-in-time joins.
 
     Plan shape: change detection (``lag != state``) and interval
     stamping (``lead`` + ``row_number``) both use the SAME window
-    partitioning (``key``) and sort ((``ts``, ``tiebreak``)), and the
+    partitioning (``user_id``) and sort ((``ts``, ``event_id``)), and the
     intervening filter preserves both, so Catalyst plans exactly ONE
     Exchange and ONE Sort for the whole build — at 100 TB the cost is a
     single shuffle of the changelog, not one per window function.  The
-    ``tiebreak`` column makes the sort total, so version numbering is
+    ``event_id`` tie-break makes the sort total, so version numbering is
     deterministic under equal timestamps.
 
-    ``keep_tiebreak=True`` appends the change row's ``tiebreak`` value
-    as ``src_<tiebreak>`` — the incremental maintainer
+    ``keep_tiebreak=True`` appends the change row's ``event_id`` as
+    ``src_event_id`` — the incremental maintainer
     (streaming/scd2.py) needs it to replay history rows as pseudo
     change events with their ORIGINAL sort position.
 
@@ -340,24 +319,24 @@ def scd2_history(
     NULL-state evidence is discarded at compression (fuzz gate NULL
     corpus, r12).
     """
-    w = Window.partitionBy(key).orderBy(ts_col, tiebreak)
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     changes = (
-        events.filter(F.col(state_col).isNotNull())
-        .select(key, state_col, ts_col, tiebreak)
-        .withColumn("_prev_state", F.lag(state_col).over(w))
+        events.filter(F.col("event_type").isNotNull())
+        .select("user_id", "event_type", "ts", "event_id")
+        .withColumn("_prev_state", F.lag("event_type").over(w))
         .filter(
             F.col("_prev_state").isNull()
-            | (F.col("_prev_state") != F.col(state_col))
+            | (F.col("_prev_state") != F.col("event_type"))
         )
         .drop("_prev_state")
     )
-    extra = (F.col(tiebreak).alias(f"src_{tiebreak}"),) if keep_tiebreak else ()
+    extra = (F.col("event_id").alias("src_event_id"),) if keep_tiebreak else ()
     return changes.select(
-        key,
-        F.col(state_col).alias("state"),
-        F.col(ts_col).alias("valid_from"),
-        F.lead(ts_col).over(w).alias("valid_to"),
-        F.lead(ts_col).over(w).isNull().alias("is_current"),
+        "user_id",
+        F.col("event_type").alias("state"),
+        F.col("ts").alias("valid_from"),
+        F.lead("ts").over(w).alias("valid_to"),
+        F.lead("ts").over(w).isNull().alias("is_current"),
         F.row_number().over(w).alias("version"),
         *extra,
     )

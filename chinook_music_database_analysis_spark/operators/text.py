@@ -18,6 +18,13 @@ from pyspark.sql import functions as F
 #: word-shingle width shared by dedup/fingerprint operators.
 SHINGLE_K = 3
 
+#: fixed-point scale of the integer IDF ``n_docs * IDF_SCALE div df``
+#: shared by TF-IDF and both BM25 operators (and their oracles).
+IDF_SCALE = 1_000_000
+
+#: fixed-point scale of the per-term surprisal (integer millibits).
+SURPRISAL_SCALE = 1000
+
 #: Tiny function-word lists for the language-ID heuristic.  The point
 #: is the operator shape (token-set overlap scoring), not lexicography.
 LANG_STOPWORDS: dict[str, tuple[str, ...]] = {
@@ -29,11 +36,11 @@ LANG_STOPWORDS: dict[str, tuple[str, ...]] = {
 }
 
 
-def tokens_expr(col: str = "text") -> Column:
-    """Whitespace tokenization (word-level; the shingle/stopword unit).
+def tokens_expr() -> Column:
+    """Whitespace tokenization of ``text`` (word-level; the shingle/stopword unit).
     The BPE-ish subword count lives in ``text_stats``'s n_subtokens
     (letter/digit/punctuation regex pieces)."""
-    return F.split(F.trim(F.col(col)), r"\s+")
+    return F.split(F.trim(F.col("text")), r"\s+")
 
 
 def shingles_from_tokens(toks_col: str = "toks", k: int = SHINGLE_K) -> Column:
@@ -64,8 +71,8 @@ def shingles_from_tokens(toks_col: str = "toks", k: int = SHINGLE_K) -> Column:
     )
 
 
-def shingles_expr(col: str = "text", k: int = SHINGLE_K) -> Column:
-    """Word k-gram shingles of a raw text column (one-shot form).
+def shingles_expr() -> Column:
+    """Word SHINGLE_K-gram shingles of the raw ``text`` column (one-shot form).
 
     Word shingles (vs character shingles) cut the per-doc shingle count
     ~6x at equal near-dup sensitivity for natural text — a factor that
@@ -74,11 +81,11 @@ def shingles_expr(col: str = "text", k: int = SHINGLE_K) -> Column:
     :func:`shingles_from_tokens` instead — this convenience form pays
     the per-lambda-element re-split documented there.
     """
-    toks = f"split(trim({col}), '\\\\s+')"
+    toks = "split(trim(text), '\\\\s+')"
     return F.expr(
-        f"CASE WHEN {col} IS NULL THEN array() ELSE "
-        f"transform(sequence(1, greatest(size({toks}) - {k - 1}, 1)),"
-        f" i -> concat_ws(' ', slice({toks}, i, {k}))) END"
+        "CASE WHEN text IS NULL THEN array() ELSE "
+        f"transform(sequence(1, greatest(size({toks}) - {SHINGLE_K - 1}, 1)),"
+        f" i -> concat_ws(' ', slice({toks}, i, {SHINGLE_K}))) END"
     )
 
 
@@ -322,14 +329,13 @@ def tfidf_top_terms(
     postings: DataFrame,
     n_docs: int,
     top_k: int = 3,
-    idf_scale: int = 1_000_000,
     max_tf: int | None = None,
 ) -> DataFrame:
     """Top ``top_k`` characteristic terms per document by TF-IDF — the
     keyword-extraction pass feeding corpus exploration and topic
     labeling.
 
-    IDF is **integer-quantized**: ``idf_q = (n_docs * idf_scale) div
+    IDF is **integer-quantized**: ``idf_q = (n_docs * IDF_SCALE) div
     document_frequency`` (monotone in N/df, a fixed-point inverse
     document frequency).  All scoring stays in exact int64 arithmetic,
     so the ranking — and the DuckDB oracle — is bit-deterministic; a
@@ -355,24 +361,24 @@ def tfidf_top_terms(
     the ranking doesn't need them.
 
     Int64 bound (the bm25_topk ``max_dl`` pattern, r11): the score is
-    ``tf * idf_q`` with ``idf_q <= n_docs * idf_scale`` (df >= 1), so
-    a df=1 term wraps once ``tf > (2^63-1)/(n_docs*idf_scale)`` —
-    at the default scale that is tf ~ 9.2e18/n_docs, e.g. tf > 92 on
-    a 10^11-doc corpus.  Pass ``max_tf`` (the corpus' max per-doc
-    term frequency, one ANALYZE scalar) to arm the guard: wrapping
+    ``tf * idf_q`` with ``idf_q <= n_docs * IDF_SCALE`` (df >= 1), so
+    a df=1 term wraps once ``tf > (2^63-1)/(n_docs*IDF_SCALE)``, about
+    9.2e12/n_docs — e.g. tf > 92 on a 10^11-doc corpus.  Pass
+    ``max_tf`` (the corpus' max per-doc term frequency, one ANALYZE
+    scalar) to arm the guard: wrapping
     under non-ANSI mode would otherwise rank by a silently negative
     score.
     """
     from pyspark.sql import Window
 
-    if max_tf is not None and max_tf * n_docs > (2**63 - 1) // idf_scale:
+    if max_tf is not None and max_tf * n_docs > (2**63 - 1) // IDF_SCALE:
         raise OverflowError(
             f"TF-IDF fixed-point score would exceed int64: max_tf={max_tf} "
-            f"* n_docs={n_docs} > (2^63-1)/{idf_scale} — lower idf_scale "
+            f"* n_docs={n_docs} > (2^63-1)/{IDF_SCALE} — lower IDF_SCALE "
             "or pre-filter the hot terms"
         )
     idf = postings.groupBy("term").agg(
-        F.expr(f"CAST({n_docs} AS BIGINT) * {idf_scale} div count(1)").alias("idf_q")
+        F.expr(f"CAST({n_docs} AS BIGINT) * {IDF_SCALE} div count(1)").alias("idf_q")
     )
     w = Window.partitionBy("doc_id").orderBy(
         F.col("score").desc(), F.col("term")
@@ -386,7 +392,7 @@ def tfidf_top_terms(
     )
 
 
-def unigram_surprisal(postings: DataFrame, scale: int = 1000) -> DataFrame:
+def unigram_surprisal(postings: DataFrame) -> DataFrame:
     """Per-document unigram-LM cross-entropy (bits/token) — the cheap
     stand-in for the CCNet/Wikipedia-LM perplexity filter used in
     training-data pipelines: documents whose tokens are "too
@@ -396,7 +402,7 @@ def unigram_surprisal(postings: DataFrame, scale: int = 1000) -> DataFrame:
 
     Determinism: per-token surprisal ``log2(total/count)`` is
     **fixed-point quantized once per distinct vocabulary term**
-    (``s_q = ROUND(log2(total/cnt) * scale)`` as int64), then all
+    (``s_q = ROUND(log2(total/cnt) * SURPRISAL_SCALE)`` as int64), then all
     per-document accumulation is exact integer math — the same
     integer-quantization trick as tfidf_top_terms' IDF, so the DuckDB
     oracle reproduces sums bit-exactly regardless of float summation
@@ -420,7 +426,7 @@ def unigram_surprisal(postings: DataFrame, scale: int = 1000) -> DataFrame:
         "term",
         F.expr(
             f"CAST(ROUND(log2(CAST(total AS DOUBLE) / CAST(cnt AS DOUBLE))"
-            f" * {scale}) AS BIGINT)"
+            f" * {SURPRISAL_SCALE}) AS BIGINT)"
         ).alias("s_q"),
     )
     return (
@@ -549,7 +555,6 @@ def bm25_topk(
     n_docs: int,
     total_tokens: int,
     top_k: int = 20,
-    idf_scale: int = 1_000_000,
     max_dl: int | None = None,
 ) -> DataFrame:
     """BM25 keyword retrieval: top ``top_k`` documents for a bag of
@@ -566,14 +571,14 @@ def bm25_topk(
 
     quantized as ratio_q = (num * SCALE) div den  (bounded by
     2.2*SCALE regardless of corpus size), and IDF is the same
-    integer-quantized surrogate as TF-IDF: idf_q = n_docs*idf_scale
+    integer-quantized surrogate as TF-IDF: idf_q = n_docs*IDF_SCALE
     div df (monotone in the Robertson idf).  score = sum over query
     terms of idf_q * ratio_q — all int64, bit-identical on Spark and
     DuckDB.  Magnitude bounds (both sides of the product):
 
-    - idf side: idf_q <= n_docs*idf_scale, so the per-term product
+    - idf side: idf_q <= n_docs*IDF_SCALE, so the per-term product
       idf_q * ratio_q stays inside int64 for corpora up to ~4e9
-      documents at the default idf_scale.
+      documents at IDF_SCALE.
     - ratio side: the un-divided numerator 22*tf*avgdl_q*SCALE must
       itself fit int64 BEFORE the div, which requires tf*avgdl_q <=
       (2^63-1)/(22*SCALE) ~= 4.2e14 — with avgdl_q = SCALE*avgdl
@@ -608,7 +613,7 @@ def bm25_topk(
     tf = postings.filter(F.col("term").isin(qt)).select("doc_id", "term", "tf")
     dl = doclens.select("doc_id", "dl")
     idf = tf.groupBy("term").agg(
-        F.expr(f"CAST({n_docs} AS BIGINT) * {idf_scale} div count(1)").alias("idf_q")
+        F.expr(f"CAST({n_docs} AS BIGINT) * {IDF_SCALE} div count(1)").alias("idf_q")
     )
     scored = (
         tf.join(F.broadcast(idf), "term")
@@ -644,7 +649,6 @@ def bm25_batch_topk(
     n_docs: int,
     total_tokens: int,
     top_k: int = 5,
-    idf_scale: int = 1_000_000,
     max_dl: int | None = None,
 ) -> DataFrame:
     """Batch BM25 retrieval: per-query top-k over the persisted
@@ -682,7 +686,7 @@ def bm25_batch_topk(
     terms = sorted({t for ts in queries.values() for t in ts})
     tf = postings.filter(F.col("term").isin(terms)).select("doc_id", "term", "tf")
     idf = tf.groupBy("term").agg(
-        F.expr(f"CAST({n_docs} AS BIGINT) * {idf_scale} div count(1)").alias("idf_q")
+        F.expr(f"CAST({n_docs} AS BIGINT) * {IDF_SCALE} div count(1)").alias("idf_q")
     )
     scored = (
         tf.join(F.broadcast(idf), "term")
@@ -722,18 +726,15 @@ RRF_SCALE = 1_000_000_000
 
 def rrf_fuse(
     rankings: "list[DataFrame]",
-    id_col: str = "doc_id",
-    k: int = RRF_K,
-    scale: int = RRF_SCALE,
     top_k: int = 10,
     group_col: str | None = None,
 ) -> DataFrame:
     """Reciprocal-rank fusion of ranked retrieval lists — the standard
     combiner for a hybrid sparse (BM25) + dense (ANN) retrieval stack.
 
-    Each input DataFrame carries ``(id_col, rank)`` with a 1-based
+    Each input DataFrame carries ``(doc_id, rank)`` with a 1-based
     deterministic rank.  A list's contribution to a document is the
-    exact integer ``scale div (k + rank)`` (absent -> contributes
+    exact integer ``RRF_SCALE div (RRF_K + rank)`` (absent -> contributes
     nothing), so the fused score — the sum over lists — is pure int64
     and bit-identical across engines; ties break on id.
 
@@ -745,7 +746,7 @@ def rrf_fuse(
     independent of corpus size.
 
     ``group_col`` fuses a BATCH of queries in one pass: each input
-    then carries (group_col, id_col, rank) and fusion/top_k run per
+    then carries (group_col, doc_id, rank) and fusion/top_k run per
     group — the per-group rank filter compiles to WindowGroupLimit,
     so a thousand-query batch still makes one plan.
     """
@@ -753,11 +754,11 @@ def rrf_fuse(
 
     from pyspark.sql import Window
 
-    keys = ([group_col] if group_col else []) + [id_col]
+    keys = ([group_col] if group_col else []) + ["doc_id"]
     contribs = [
         r.select(
             *keys,
-            F.expr(f"CAST({scale} AS BIGINT) div ({k} + rank)").alias("c"),
+            F.expr(f"CAST({RRF_SCALE} AS BIGINT) div ({RRF_K} + rank)").alias("c"),
         )
         for r in rankings
     ]
@@ -767,17 +768,17 @@ def rrf_fuse(
         .agg(F.sum("c").alias("rrf_score"), F.count(F.lit(1)).alias("n_lists"))
     )
     if group_col is None:
-        fused = fused.orderBy(F.col("rrf_score").desc(), id_col).limit(top_k)
-        w = Window.orderBy(F.col("rrf_score").desc(), id_col)
+        fused = fused.orderBy(F.col("rrf_score").desc(), "doc_id").limit(top_k)
+        w = Window.orderBy(F.col("rrf_score").desc(), "doc_id")
         return fused.select(
-            id_col, "rrf_score", "n_lists",
+            "doc_id", "rrf_score", "n_lists",
             F.row_number().over(w).cast("int").alias("rank"),
         )
-    w = Window.partitionBy(group_col).orderBy(F.col("rrf_score").desc(), id_col)
+    w = Window.partitionBy(group_col).orderBy(F.col("rrf_score").desc(), "doc_id")
     return (
         fused.withColumn("rank", F.row_number().over(w).cast("int"))
         .filter(F.col("rank") <= top_k)
-        .select(group_col, id_col, "rrf_score", "n_lists", "rank")
+        .select(group_col, "doc_id", "rrf_score", "n_lists", "rank")
     )
 
 

@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 
 from ..cache import memo
 from ..operators.curation import (
+    CONTAM_MIN_RATIO,
     DECONTAM_K,
     PII_RULES,
     benchmark_contamination,
@@ -26,7 +27,7 @@ from ..operators.curation import (
     redact_pii,
     train_val_test_split,
 )
-from ..operators.text import shingles_from_tokens, tokens_expr
+from ..operators.text import IDF_SCALE, shingles_from_tokens, tokens_expr
 from ..sources import load_tables
 from ..store import persisted
 from .extensions import (
@@ -429,7 +430,7 @@ def cur_decontam(spark: SparkSession, sf_dir: str) -> DataFrame:
         "ROUND(CAST(SUM(CASE WHEN bs.s IS NOT NULL THEN 1 ELSE 0 END) AS DOUBLE) "
         "/ CAST(COUNT(*) AS DOUBLE), 4) AS contamination, "
         "CAST(SUM(CASE WHEN bs.s IS NOT NULL THEN 1 ELSE 0 END) AS DOUBLE) "
-        "/ CAST(COUNT(*) AS DOUBLE) >= 0.05 AS is_contaminated "
+        f"/ CAST(COUNT(*) AS DOUBLE) >= {CONTAM_MIN_RATIO} AS is_contaminated "
         "FROM wsh w JOIN b USING (doc_id) LEFT JOIN bs ON bs.s = w.s "
         "WHERE NOT b.is_bench GROUP BY w.doc_id"
     ),
@@ -623,7 +624,7 @@ def cur_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
         "WITH t AS (SELECT doc_id, unnest(string_split_regex(trim(text), '\\s+')) "
         "AS term FROM documents), "
         "tf AS (SELECT doc_id, term, COUNT(*) AS tf FROM t GROUP BY doc_id, term), "
-        "idf AS (SELECT term, (SELECT COUNT(*) FROM documents) * 1000000 // COUNT(*) "
+        f"idf AS (SELECT term, (SELECT COUNT(*) FROM documents) * {IDF_SCALE} // COUNT(*) "
         "AS idf_q FROM tf GROUP BY term), "
         "s AS (SELECT doc_id, term, tf, tf * idf_q AS score FROM tf JOIN idf USING (term)) "
         "SELECT doc_id, term, tf, score, rnk FROM (SELECT *, "
@@ -1133,7 +1134,7 @@ def _sql_bm25(limit: int = BM25_TOP_K) -> str:
       GROUP BY doc_id, term
     ),
     idf AS (
-      SELECT term, (SELECT n_docs FROM stats) * 1000000 // COUNT(*) AS idf_q
+      SELECT term, (SELECT n_docs FROM stats) * {IDF_SCALE} // COUNT(*) AS idf_q
       FROM tf GROUP BY term
     ),
     scored AS (
@@ -1228,7 +1229,7 @@ def _sql_bm25_batch(k: int = BM25_BATCH_K) -> str:
       GROUP BY doc_id, term
     ),
     idf AS (
-      SELECT term, (SELECT n_docs FROM stats) * 1000000 // COUNT(*) AS idf_q
+      SELECT term, (SELECT n_docs FROM stats) * {IDF_SCALE} // COUNT(*) AS idf_q
       FROM tf GROUP BY term
     ),
     scored AS (

@@ -19,12 +19,15 @@ from pyspark.sql import functions as F
 
 from ..operators.dedup import (
     BANDS,
+    CONTAINMENT_THRESHOLD,
+    JACCARD_THRESHOLD,
     N_HASHES,
     PROBE_DF_CAP_FRAC,
     PROBE_DF_CAP_MIN,
     PROBE_K,
     ROWS_PER_BAND,
     SIMHASH_BITS,
+    SIMHASH_MAX_HAMMING,
     doc_shingles,
     duplicate_clusters,
     exact_dedup,
@@ -34,19 +37,35 @@ from ..operators.dedup import (
     simhash,
     simhash_near_dup_pairs,
 )
-from ..operators.multimodal import media_features, resize_media, sample_frames
+from ..operators.multimodal import (
+    FRAME_BYTES,
+    FRAME_EVERY_N,
+    media_features,
+    resize_media,
+    sample_frames,
+)
 from ..operators.similarity import (
     IVF_N_PROBE,
     KMEANS_ITERS,
     MAX_PLANES,
+    N_QUERIES,
     N_TABLES,
+    NEAR_DUP_COS,
+    TOP_K,
     cosine_topk,
     embedding_near_dup_pairs,
     ivf_topk,
     lsh_topk,
 )
 from ..operators.pipeline import MIN_QUALITY, MIN_TOKENS, clean_corpus
-from ..operators.text import LANG_STOPWORDS, SHINGLE_K, fingerprint, lang_id, text_stats
+from ..operators.text import (
+    LANG_STOPWORDS,
+    SHINGLE_K,
+    SURPRISAL_SCALE,
+    fingerprint,
+    lang_id,
+    text_stats,
+)
 from ..functions import money_sum, round2
 from ..cache import memo
 from ..sources import load_tables
@@ -593,7 +612,7 @@ def dd_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
       JOIN sizes na ON na.doc_id = i.doc_a
       JOIN sizes nb ON nb.doc_id = i.doc_b
     )
-    WHERE GREATEST(c_a_in_b, c_b_in_a) >= 0.5
+    WHERE GREATEST(c_a_in_b, c_b_in_a) >= {CONTAINMENT_THRESHOLD}
     """,
 )
 def dd_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -613,26 +632,22 @@ def dd_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     pass (operators.dedup.containment_join_stats — the exact join-row
     count, two hash-aggs) runs first, and when join_rows exceeds
     HOT_JOIN_FACTOR x shingle_rows the builder REFUSES loudly
-    (ValueError directing callers to dd_containment_scale) instead of
+    (operators.dedup.check_hot_shingles raises HotShingleCorpusError,
+    a ValueError directing callers to dd_containment_scale) instead of
     silently swapping in the lower-recall df-capped path — this entry's
     contract is recall 1.0, and a hot corpus must not quietly change
     the query's semantics (the capped result would fail this oracle
     anyway).  Driver corpora (ratio 0.5-4.9 measured) never trip the
     guard, so the registered form stays exact and the oracle is
     unchanged."""
-    from ..operators.dedup import HOT_JOIN_FACTOR, containment_pairs_exact
+    from ..operators.dedup import (
+        HOT_JOIN_FACTOR,
+        check_hot_shingles,
+        containment_pairs_exact,
+    )
 
     sh = _shingles(spark, sf_dir)
-    n_rows, join_rows = _containment_join_stats(spark, sf_dir)
-    if join_rows > HOT_JOIN_FACTOR * n_rows:
-        raise ValueError(
-            "dd_containment: exact inverted-file join would expand to "
-            f"{join_rows} rows (> {HOT_JOIN_FACTOR}x the {n_rows} shingle "
-            "rows) — this corpus has unremoved ultra-hot shingles; use "
-            "dd_containment_scale (df-capped candidates, exact scoring) "
-            "whose oracle models the cap, instead of silently returning "
-            "lower-recall results under this entry's exact oracle"
-        )
+    check_hot_shingles(*_containment_join_stats(spark, sf_dir))
 
     def build() -> DataFrame:
         return containment_pairs_exact(sh)
@@ -644,7 +659,7 @@ def dd_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     # stale or wrong store would fail the hash gate, not hide.
     return persisted(
         "containment_pairs", spark, sf_dir, build, table="documents",
-        params=f"k={SHINGLE_K},thr=0.5,factor={HOT_JOIN_FACTOR}",
+        params=f"k={SHINGLE_K},thr={CONTAINMENT_THRESHOLD},factor={HOT_JOIN_FACTOR}",
     )
 
 
@@ -720,7 +735,7 @@ def _containment_join_stats(spark: SparkSession, sf_dir: str) -> tuple[int, int]
       JOIN sizes na ON na.doc_id = i.doc_a
       JOIN sizes nb ON nb.doc_id = i.doc_b
     )
-    WHERE GREATEST(c_a_in_b, c_b_in_a) >= 0.5
+    WHERE GREATEST(c_a_in_b, c_b_in_a) >= {CONTAINMENT_THRESHOLD}
     """,
 )
 def dd_containment_scale(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -749,7 +764,7 @@ def dd_containment_scale(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         table="documents",
         params=(
-            f"k={SHINGLE_K},thr=0.5,probe_k={PROBE_K},"
+            f"k={SHINGLE_K},thr={CONTAINMENT_THRESHOLD},probe_k={PROBE_K},"
             f"cap_min={PROBE_DF_CAP_MIN},cap_frac={PROBE_DF_CAP_FRAC},"
             f"h={N_HASHES},b={BANDS}"
         ),
@@ -808,7 +823,7 @@ def _containment_cand(spark: SparkSession, sf_dir: str) -> DataFrame:
     JOIN sizes na ON na.doc_id = i.doc_a
     JOIN sizes nb ON nb.doc_id = i.doc_b
     WHERE ROUND(CAST(n_inter AS DOUBLE)
-                / CAST(na.n + nb.n - n_inter AS DOUBLE), 4) >= 0.2
+                / CAST(na.n + nb.n - n_inter AS DOUBLE), 4) >= {JACCARD_THRESHOLD}
     """,
 )
 def dd_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -885,7 +900,7 @@ def dd_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM nib a
       JOIN nib b ON a.band = b.band AND a.nib = b.nib AND a.doc_id < b.doc_id
     )
-    SELECT * FROM cand WHERE hamming <= 3
+    SELECT * FROM cand WHERE hamming <= {SIMHASH_MAX_HAMMING}
     """,
 )
 def dd_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -921,7 +936,7 @@ def _register_dd_cross_simhash() -> None:
       WHERE NOT ba.is_bench AND br.is_bench
     )
     SELECT doc_id, COUNT(*) AS n_ref_dups, MIN(hamming) AS min_hamming
-    FROM cand WHERE hamming <= 3 GROUP BY doc_id
+    FROM cand WHERE hamming <= {SIMHASH_MAX_HAMMING} GROUP BY doc_id
     """
 
     @register("dd_cross_simhash", oracle=oracle)
@@ -971,7 +986,7 @@ _SQL_COS = _sql_cos("q.qe", "e.embedding")
     "sim_bruteforce_topk",
     oracle=f"""
     WITH q AS (
-      SELECT vec_id AS query_id, embedding AS qe FROM embeddings WHERE vec_id < 10
+      SELECT vec_id AS query_id, embedding AS qe FROM embeddings WHERE vec_id < {N_QUERIES}
     ), p AS (
       SELECT q.query_id, e.vec_id AS neighbor_id, {_SQL_COS} AS cos_sim
       FROM embeddings e, q
@@ -980,7 +995,7 @@ _SQL_COS = _sql_cos("q.qe", "e.embedding")
     SELECT query_id, neighbor_id, cos_sim,
            CAST(ROW_NUMBER() OVER (
              PARTITION BY query_id ORDER BY cos_sim DESC, neighbor_id) AS INTEGER) AS rnk
-    FROM p QUALIFY rnk <= 5
+    FROM p QUALIFY rnk <= {TOP_K}
     """,
 )
 def sim_bruteforce_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1003,7 +1018,7 @@ def sim_bruteforce_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM embeddings e JOIN documents d ON e.vec_id = d.doc_id
       WHERE d.lang = 'en'
     ), q AS (
-      SELECT vec_id AS query_id, embedding AS qe FROM embeddings WHERE vec_id < 10
+      SELECT vec_id AS query_id, embedding AS qe FROM embeddings WHERE vec_id < {N_QUERIES}
     ), p AS (
       SELECT q.query_id, e.vec_id AS neighbor_id, {_SQL_COS} AS cos_sim
       FROM allowed e, q
@@ -1012,7 +1027,7 @@ def sim_bruteforce_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT query_id, neighbor_id, cos_sim,
            CAST(ROW_NUMBER() OVER (
              PARTITION BY query_id ORDER BY cos_sim DESC, neighbor_id) AS INTEGER) AS rnk
-    FROM p QUALIFY rnk <= 5
+    FROM p QUALIFY rnk <= {TOP_K}
     """,
 )
 def sim_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1046,7 +1061,7 @@ def _register_sim_mrl_topk() -> None:
     oracle = f"""
     WITH q AS (
       SELECT vec_id AS query_id, embedding AS qe, embedding[1:{MRL_DIM}] AS qp
-      FROM embeddings WHERE vec_id < 10
+      FROM embeddings WHERE vec_id < {N_QUERIES}
     ), c AS (
       SELECT q.query_id, e.vec_id AS neighbor_id,
              {_sql_cos("q.qp", "e.ep")} AS pre_sim
@@ -1067,7 +1082,7 @@ def _register_sim_mrl_topk() -> None:
     SELECT query_id, neighbor_id, cos_sim,
            CAST(ROW_NUMBER() OVER (
              PARTITION BY query_id ORDER BY cos_sim DESC, neighbor_id) AS INTEGER) AS rnk
-    FROM p QUALIFY rnk <= 5
+    FROM p QUALIFY rnk <= {TOP_K}
     """
 
     @register("sim_mrl_topk", oracle=oracle)
@@ -1174,7 +1189,7 @@ def _ivf_cents(spark: SparkSession, sf_dir: str) -> DataFrame:
                PARTITION BY e.vec_id
                ORDER BY {_sql_cos('e.embedding', 'c.ce')} DESC, c.cell_id) AS rn
       FROM embeddings e, c
-      WHERE e.vec_id < 10
+      WHERE e.vec_id < {N_QUERIES}
       QUALIFY rn <= {IVF_N_PROBE}
     ), p AS (
       SELECT q.query_id, e.vec_id AS neighbor_id, {_SQL_COS} AS cos_sim
@@ -1184,7 +1199,7 @@ def _ivf_cents(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT query_id, neighbor_id, cos_sim,
            CAST(ROW_NUMBER() OVER (
              PARTITION BY query_id ORDER BY cos_sim DESC, neighbor_id) AS INTEGER) AS rnk
-    FROM p QUALIFY rnk <= 5
+    FROM p QUALIFY rnk <= {TOP_K}
     """,
 )
 def sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1223,7 +1238,7 @@ def sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                PARTITION BY e.vec_id
                ORDER BY {_sql_cos('e.embedding', 'c.ce')} DESC, c.cell_id) AS rn
       FROM embeddings e, c
-      WHERE e.vec_id < 10
+      WHERE e.vec_id < {N_QUERIES}
       QUALIFY rn <= {IVF_N_PROBE}
     ), p AS (
       SELECT q.query_id, e.vec_id AS neighbor_id, {_SQL_COS} AS cos_sim
@@ -1233,7 +1248,7 @@ def sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT query_id, neighbor_id, cos_sim,
            CAST(ROW_NUMBER() OVER (
              PARTITION BY query_id ORDER BY cos_sim DESC, neighbor_id) AS INTEGER) AS rnk
-    FROM p QUALIFY rnk <= 5
+    FROM p QUALIFY rnk <= {TOP_K}
     """,
 )
 def sim_filtered_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1328,7 +1343,7 @@ def cur_cluster_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
                PARTITION BY e.vec_id
                ORDER BY {_sql_cos('e.embedding', 'c.ce')} DESC, c.cell_id) AS rn
       FROM embeddings e, c
-      WHERE e.vec_id < 10
+      WHERE e.vec_id < {N_QUERIES}
       QUALIFY rn <= {IVF_N_PROBE}
     ), p AS (
       SELECT q.query_id, e.vec_id AS neighbor_id, {_SQL_COS} AS cos_sim
@@ -1338,7 +1353,7 @@ def cur_cluster_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT query_id, neighbor_id, cos_sim,
            CAST(ROW_NUMBER() OVER (
              PARTITION BY query_id ORDER BY cos_sim DESC, neighbor_id) AS INTEGER) AS rnk
-    FROM p QUALIFY rnk <= 5
+    FROM p QUALIFY rnk <= {TOP_K}
     """,
 )
 def sim_ivf_stride_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1499,7 +1514,7 @@ def _register_sim_pq() -> None:
       FROM pqcode c JOIN pqbooks b ON b.m = c.m AND b.cell_id = c.cell_id
       GROUP BY c.vec_id
     ), q AS (
-      SELECT vec_id AS query_id, embedding AS qe FROM embeddings WHERE vec_id < 10
+      SELECT vec_id AS query_id, embedding AS qe FROM embeddings WHERE vec_id < {N_QUERIES}
     ), adc AS (
       SELECT q.query_id, r.vec_id AS neighbor_id, q.qe,
              ROW_NUMBER() OVER (PARTITION BY q.query_id
@@ -1515,7 +1530,7 @@ def _register_sim_pq() -> None:
     SELECT query_id, neighbor_id, cos_sim,
            CAST(ROW_NUMBER() OVER (
              PARTITION BY query_id ORDER BY cos_sim DESC, neighbor_id) AS INTEGER) AS rnk
-    FROM p QUALIFY rnk <= 5
+    FROM p QUALIFY rnk <= {TOP_K}
     """
 
     @register("sim_pq_topk", oracle=oracle)
@@ -1593,7 +1608,7 @@ def _register_sim_ivfpq() -> None:
              ROW_NUMBER() OVER (PARTITION BY e.vec_id
                ORDER BY {_sql_cos("e.embedding", "c.ce")} DESC, c.cell_id) AS rn
       FROM embeddings e, ivfc c
-      WHERE e.vec_id < 10
+      WHERE e.vec_id < {N_QUERIES}
       QUALIFY rn <= {IVF_N_PROBE}
     ), adc AS (
       SELECT p.query_id, r.vec_id AS neighbor_id, p.qe,
@@ -1610,7 +1625,7 @@ def _register_sim_ivfpq() -> None:
     SELECT query_id, neighbor_id, cos_sim,
            CAST(ROW_NUMBER() OVER (
              PARTITION BY query_id ORDER BY cos_sim DESC, neighbor_id) AS INTEGER) AS rnk
-    FROM p QUALIFY rnk <= 5
+    FROM p QUALIFY rnk <= {TOP_K}
     """
 
     @register("sim_ivfpq_topk", oracle=oracle)
@@ -1685,7 +1700,7 @@ _SQL_LSH_BUCKETS = f"""
       SELECT DISTINCT q.vec_id AS query_id, e.vec_id AS neighbor_id
       FROM bkts q
       JOIN bkts e ON e.tbl = q.tbl AND e.bucket = q.bucket AND e.vec_id <> q.vec_id
-      WHERE q.vec_id < 10
+      WHERE q.vec_id < {N_QUERIES}
     ), p AS (
       SELECT c.query_id, c.neighbor_id,
              {_sql_cos('qe.embedding', 'ne.embedding')} AS cos_sim
@@ -1696,7 +1711,7 @@ _SQL_LSH_BUCKETS = f"""
     SELECT query_id, neighbor_id, cos_sim,
            CAST(ROW_NUMBER() OVER (
              PARTITION BY query_id ORDER BY cos_sim DESC, neighbor_id) AS INTEGER) AS rnk
-    FROM p QUALIFY rnk <= 5
+    FROM p QUALIFY rnk <= {TOP_K}
     """,
 )
 def sim_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1791,7 +1806,7 @@ def _register_embedding_cosine() -> None:
           JOIN embeddings ea ON ea.vec_id = c.vec_a
           JOIN embeddings eb ON eb.vec_id = c.vec_b
         )
-        SELECT * FROM p WHERE cos_sim >= 0.2
+        SELECT * FROM p WHERE cos_sim >= {NEAR_DUP_COS}
         """,
     )
     def dd_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1819,7 +1834,7 @@ _register_embedding_cosine()
       SELECT DISTINCT a.vec_id AS query_id, b.vec_id AS neighbor_id
       FROM bkts a
       JOIN bkts b ON b.tbl = a.tbl AND b.bucket = a.bucket
-      WHERE a.vec_id < 10 AND b.vec_id <> a.vec_id
+      WHERE a.vec_id < {N_QUERIES} AND b.vec_id <> a.vec_id
     ), p AS (
       SELECT c.query_id, c.neighbor_id,
              {_sql_cos('ea.embedding', 'eb.embedding')} AS cos_sim
@@ -1827,7 +1842,7 @@ _register_embedding_cosine()
       JOIN embeddings ea ON ea.vec_id = c.query_id
       JOIN embeddings eb ON eb.vec_id = c.neighbor_id
     )
-    SELECT * FROM p WHERE cos_sim >= 0.2
+    SELECT * FROM p WHERE cos_sim >= {NEAR_DUP_COS}
     """,
 )
 def sim_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1933,6 +1948,7 @@ def mm_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _sql_phash_pairs() -> str:
     from ..operators.curation import pct_threshold
+    from ..operators.multimodal import PHASH_MAX_HAMMING
 
     th = pct_threshold(PHASH_INJECT_PCT)
     return f"""
@@ -1962,7 +1978,7 @@ def _sql_phash_pairs() -> str:
       JOIN pbands b ON a.band = b.band AND a.nib = b.nib
                     AND a.doc_id < b.doc_id
     )
-    SELECT doc_a, doc_b, hamming FROM cand WHERE hamming <= 3
+    SELECT doc_a, doc_b, hamming FROM cand WHERE hamming <= {PHASH_MAX_HAMMING}
     """
 
 
@@ -2013,6 +2029,8 @@ def mm_phash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_phash_clusters() -> str:
+    from ..operators.multimodal import PHASH_MAX_HAMMING
+
     body = _sql_phash_pairs().strip()
     assert body.startswith("WITH ")
     # keep the CTE chain (aug/psig/pbands/cand), drop the final SELECT
@@ -2020,7 +2038,7 @@ def _sql_phash_clusters() -> str:
     return f"""
     WITH RECURSIVE {ctes},
     pp AS (
-      SELECT doc_a, doc_b FROM cand WHERE hamming <= 3
+      SELECT doc_a, doc_b FROM cand WHERE hamming <= {PHASH_MAX_HAMMING}
     ),
     e AS (
       SELECT doc_a AS src, doc_b AS dst FROM pp
@@ -2051,7 +2069,7 @@ def mm_phash_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     the pointer-jumping rounds are a multi-job iterative build that
     should run once per corpus version, not once per session."""
     from ..operators.dedup import duplicate_clusters
-    from ..operators.multimodal import PHASH_BITS
+    from ..operators.multimodal import PHASH_BITS, PHASH_MAX_HAMMING
 
     return persisted(
         "phash_clusters", spark, sf_dir,
@@ -2064,7 +2082,7 @@ def mm_phash_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         # clusters computed from the old bit-width (r11)
         params=(
             f"pct={PHASH_INJECT_PCT},co={PHASH_COPY_OFFSET},"
-            f"eo={PHASH_EDIT_OFFSET},h=3,bits={PHASH_BITS}"
+            f"eo={PHASH_EDIT_OFFSET},h={PHASH_MAX_HAMMING},bits={PHASH_BITS}"
         ),
     )
 
@@ -2095,14 +2113,14 @@ def mm_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "mm_frame_sample",
-    oracle="""
+    oracle=f"""
     SELECT doc_id,
            CAST(f AS INTEGER) AS frame_idx,
-           CAST(LEAST(256, n - f * 256) AS INTEGER) AS frame_len
+           CAST(LEAST({FRAME_BYTES}, n - f * {FRAME_BYTES}) AS INTEGER) AS frame_len
     FROM (
       SELECT doc_id,
              octet_length(encode(text)) AS n,
-             UNNEST(generate_series(0, (octet_length(encode(text)) - 1) // 256, 4)) AS f
+             UNNEST(generate_series(0, (octet_length(encode(text)) - 1) // {FRAME_BYTES}, {FRAME_EVERY_N})) AS f
       FROM documents
       WHERE octet_length(encode(text)) > 0
     )
@@ -2980,7 +2998,7 @@ def ev_range_clicks_after_error(spark: SparkSession, sf_dir: str) -> DataFrame:
              list_transform(embedding, x -> round(x::DOUBLE * s, 0) / s) AS de
       FROM z
     ), q AS (
-      SELECT vec_id AS query_id, embedding AS qe FROM embeddings WHERE vec_id < 10
+      SELECT vec_id AS query_id, embedding AS qe FROM embeddings WHERE vec_id < {N_QUERIES}
     ), p AS (
       SELECT q.query_id, e.vec_id AS neighbor_id, {_sql_cos('q.qe', 'e.de')} AS cos_sim
       FROM e, q
@@ -2989,7 +3007,7 @@ def ev_range_clicks_after_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT query_id, neighbor_id, cos_sim,
            CAST(ROW_NUMBER() OVER (
              PARTITION BY query_id ORDER BY cos_sim DESC, neighbor_id) AS INTEGER) AS rnk
-    FROM p QUALIFY rnk <= 5
+    FROM p QUALIFY rnk <= {TOP_K}
     """,
 )
 def sim_sq8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3240,7 +3258,7 @@ def _ivf_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     ), d AS (
       SELECT DISTINCT y.vec_id
       FROM a x JOIN a y ON x.cell_id = y.cell_id AND x.vec_id < y.vec_id
-      WHERE {_sql_cos('x.embedding', 'y.embedding')} >= 0.2
+      WHERE {_sql_cos('x.embedding', 'y.embedding')} >= {NEAR_DUP_COS}
     )
     SELECT a.vec_id, a.cell_id, d.vec_id IS NULL AS keep
     FROM a LEFT JOIN d ON d.vec_id = a.vec_id
@@ -3254,7 +3272,7 @@ def dd_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     ivf_assignments + kmeans_centroids relations)."""
     from ..operators.similarity import semantic_dedup
 
-    return semantic_dedup(_ivf_assign(spark, sf_dir), threshold=0.2)
+    return semantic_dedup(_ivf_assign(spark, sf_dir))
 
 
 #: Per-semantic-cell quota for cur_diverse_sample.
@@ -3320,7 +3338,7 @@ _register_diverse_sample()
 
 @register(
     "tx_surprisal",
-    oracle="""
+    oracle=f"""
     WITH tok AS (
       SELECT doc_id, unnest(string_split_regex(trim(text), '\\s+')) AS term
       FROM documents
@@ -3333,7 +3351,7 @@ _register_diverse_sample()
     ), ts AS (
       SELECT term,
              CAST(ROUND(log2(CAST(total AS DOUBLE) / CAST(cnt AS DOUBLE))
-                        * 1000) AS BIGINT) AS s_q
+                        * {SURPRISAL_SCALE}) AS BIGINT) AS s_q
       FROM vocab, tot
     )
     SELECT tf.doc_id,
@@ -3398,10 +3416,10 @@ def _register_contrastive_negatives() -> None:
           SELECT DISTINCT a.vec_id AS query_id, b.vec_id
           FROM bkts a
           JOIN bkts b ON b.tbl = a.tbl AND b.bucket = a.bucket
-          WHERE a.vec_id < 10
+          WHERE a.vec_id < {N_QUERIES}
         ), cand AS (
           SELECT q.query_id, e.vec_id
-          FROM (SELECT vec_id AS query_id FROM embeddings WHERE vec_id < 10) q
+          FROM (SELECT vec_id AS query_id FROM embeddings WHERE vec_id < {N_QUERIES}) q
           CROSS JOIN (SELECT vec_id FROM embeddings) e
           WHERE e.vec_id <> q.query_id
             AND NOT EXISTS (
@@ -3414,7 +3432,7 @@ def _register_contrastive_negatives() -> None:
                  ORDER BY md5('neg' || '|' || CAST(query_id AS VARCHAR)
                               || '|' || CAST(vec_id AS VARCHAR)), vec_id)
                  AS INTEGER) AS rnk
-        FROM cand QUALIFY rnk <= 5
+        FROM cand QUALIFY rnk <= {TOP_K}
         """,
     )
     def pipe_contrastive_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -496,11 +496,11 @@ def s14_brand_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return pagerank_integer(edges)
 
-    from ..operators.graph import PAGERANK_D_NUM, PAGERANK_SCALE
+    from ..operators.graph import PAGERANK_D_NUM, PAGERANK_ITERS, PAGERANK_SCALE
 
     return persisted(
         "brand_pagerank", spark, sf_dir, build, table=("lineitem", "part"),
-        params=f"iters=3,d={PAGERANK_D_NUM},scale={PAGERANK_SCALE}",
+        params=f"iters={PAGERANK_ITERS},d={PAGERANK_D_NUM},scale={PAGERANK_SCALE}",
     )
 
 

@@ -171,11 +171,9 @@ def read_snapshot(
     return spark.read.parquet(_version_dir(table_dir, v))
 
 
-def compact_snapshot(
-    spark: SparkSession, table_dir: str, target_file_bytes: int = 128 * 1024 * 1024
-) -> int:
+def compact_snapshot(spark: SparkSession, table_dir: str) -> int:
     """Compaction as a snapshot operation: rewrite the CURRENT version
-    into ~target-size files as a NEW version and publish.  No reader
+    into ~128 MiB files as a NEW version and publish.  No reader
     ever sees a missing or half-written table — the in-place swap's
     atomicity window does not exist here; rows are byte-identical
     (verified in tests)."""
@@ -187,7 +185,7 @@ def compact_snapshot(
     src = _version_dir(table_dir, v)
     files = glob.glob(os.path.join(src, "*.parquet"))
     total = sum(os.path.getsize(f) for f in files)
-    n_out = max(1, -(-total // target_file_bytes))
+    n_out = max(1, -(-total // (128 * 1024 * 1024)))
     compacted = spark.read.parquet(src).repartition(n_out)
     # Propagate the batch marker: compaction is content-identical, so
     # the compacted version still "is" the batch that produced its

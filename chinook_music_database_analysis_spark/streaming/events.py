@@ -88,7 +88,7 @@ def dedup_within_watermark_stream(events: DataFrame) -> DataFrame:
 STATE_ROWS_PER_PARTITION = 12_500
 
 
-def state_partitions_for(n_state_rows: int, lo: int = 4, hi: int = 200) -> int:
+def state_partitions_for(n_state_rows: int, hi: int = 200) -> int:
     """Right-size the streaming state partition count to expected
     state volume.
 
@@ -99,13 +99,13 @@ def state_partitions_for(n_state_rows: int, lo: int = 4, hi: int = 200) -> int:
     micro-batch for no parallelism win, while the same default on a
     10^9-row state under-partitions it.  Size it like a shuffle:
     ~:data:`STATE_ROWS_PER_PARTITION` rows per store, clamped to
-    [lo, hi].  At 100 TB the ceiling governs (hundreds of
+    [4, hi].  At 100 TB the ceiling governs (hundreds of
     partitions); at bench scale the floor does.  The watermark/band
     semantics are untouched — this only changes how state is sharded.
     """
     import math
 
-    return max(lo, min(hi, math.ceil(max(n_state_rows, 1) / STATE_ROWS_PER_PARTITION)))
+    return max(4, min(hi, math.ceil(max(n_state_rows, 1) / STATE_ROWS_PER_PARTITION)))
 
 
 class scoped_streaming_conf:

@@ -150,11 +150,9 @@ def _update_bucket_totals(
     )
 
 
-def user_running_totals_bucketed_stream(
-    events: DataFrame, n_buckets: int = DEFAULT_TOTALS_BUCKETS
-) -> DataFrame:
+def user_running_totals_bucketed_stream(events: DataFrame) -> DataFrame:
     """Vectorized form of :func:`user_running_totals_stream`: state is
-    keyed by ``hash(user_id) % n_buckets`` instead of by user, and each
+    keyed by ``hash(user_id) % DEFAULT_TOTALS_BUCKETS`` instead of by user, and each
     bucket keeps (users, ns, vs) ARRAYS merged with one pandas groupby
     per batch — identical emitted rows (equivalence-tested), but the
     per-key Python costs (one output-frame ctor + one state round-trip
@@ -169,7 +167,7 @@ def user_running_totals_bucketed_stream(
     keyspace.  Keyed state remains the general form; this is the
     drain-shaped optimization."""
     bucketed = events.withColumn(
-        "__bucket", F.pmod(F.hash("user_id"), F.lit(n_buckets))
+        "__bucket", F.pmod(F.hash("user_id"), F.lit(DEFAULT_TOTALS_BUCKETS))
     )
     return bucketed.groupBy("__bucket").applyInPandasWithState(
         _update_bucket_totals,

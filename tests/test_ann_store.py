@@ -327,7 +327,7 @@ def test_mrl_recall_floor_and_shortlist_bound(spark):
     for r in cosine_topk(emb).collect():
         exact.setdefault(r.query_id, set()).add(r.neighbor_id)
     approx: dict[int, set[int]] = {}
-    for r in mrl_topk(emb).collect():
+    for r in mrl_topk(emb, n_corpus=emb.count()).collect():
         approx.setdefault(r.query_id, set()).add(r.neighbor_id)
     per_q = [
         len(approx.get(q, set()) & exact[q]) / len(exact[q]) for q in exact
@@ -336,7 +336,7 @@ def test_mrl_recall_floor_and_shortlist_bound(spark):
     # rerank cost bound: every query's shortlist is capped, and with
     # n_corpus > shortlist it is exactly MRL_SHORTLIST candidates
     n = emb.count()
-    wide = mrl_topk(emb, k=MRL_SHORTLIST)
+    wide = mrl_topk(emb, n_corpus=emb.count(), k=MRL_SHORTLIST)
     sizes = wide.groupBy("query_id").count().collect()
     cap = min(MRL_SHORTLIST, n - 1)
     assert all(r["count"] <= cap for r in sizes)

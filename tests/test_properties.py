@@ -874,9 +874,9 @@ def test_containment_recall_measured_against_exact_truth(spark):
 
 
 def test_hot_shingle_guard_and_containment_router(spark, tmp_path, monkeypatch):
-    """Hot-shingle guard (r8 semantics): (a) containment_pairs_exact
-    with guard_factor raises HotShingleCorpusError on a corpus whose
-    inverted-join blowup exceeds the bound, (b) the natural test
+    """Hot-shingle guard (r8 semantics): (a) check_hot_shingles over
+    containment_join_stats raises HotShingleCorpusError on a corpus
+    whose inverted-join blowup exceeds the bound, (b) the natural test
     corpus passes the same guard, and (c) the registered
     dd_containment builder REFUSES LOUDLY on the hot corpus
     (ValueError naming dd_containment_scale — its exact-recall oracle
@@ -886,9 +886,9 @@ def test_hot_shingle_guard_and_containment_router(spark, tmp_path, monkeypatch):
     import pytest
 
     from chinook_music_database_analysis_spark.operators.dedup import (
-        HOT_JOIN_FACTOR,
         HotShingleCorpusError,
-        containment_pairs_exact,
+        check_hot_shingles,
+        containment_join_stats,
         doc_shingles,
     )
     from chinook_music_database_analysis_spark.plans import QUERIES
@@ -903,10 +903,10 @@ def test_hot_shingle_guard_and_containment_router(spark, tmp_path, monkeypatch):
         "doc_id long, text string",
     )
     with pytest.raises(HotShingleCorpusError):
-        containment_pairs_exact(doc_shingles(hot), guard_factor=HOT_JOIN_FACTOR)
+        check_hot_shingles(*containment_join_stats(doc_shingles(hot)))
 
     docs = spark.read.parquet(f"{SF_TEST_DIR}/documents.parquet")
-    containment_pairs_exact(doc_shingles(docs), guard_factor=HOT_JOIN_FACTOR)  # no raise
+    check_hot_shingles(*containment_join_stats(doc_shingles(docs)))  # no raise
 
     monkeypatch.setattr(store, "ROOT", str(tmp_path))
     handle = write_table_dir(tmp_path / "hot", {"documents": hot})
