@@ -851,14 +851,11 @@ def cdc_chunk_stats(docs: DataFrame) -> DataFrame:
     n_dup_tokens the tokens sitting in REDUNDANT chunk instances —
     what cross-document storage dedup would reclaim.
 
-    Plan: posexplode to (doc, pos, tok); the boundary flag is a narrow
-    md5 test; chunk ids are a running sum over the doc-keyed window,
-    and the chunk-content aggregate that follows groups by
-    (doc_id, chunk_idx) — hash-partitioning by doc_id satisfies both,
-    so the corpus shuffles ONCE for the whole chunking stage.  The
-    chunk relation (one md5 + token count per chunk) then carries the
-    dedup aggregates; text itself never shuffles again.  At 100 TB
-    the chunk relation is ~1/CDC_MOD of the token count — the same
+    Plan: :func:`cdc_chunks` cuts every document inside its own row
+    (a narrow map, no exchange), so the first shuffle is the
+    (source, chunk_hash) aggregate over the chunk relation — one md5 +
+    token count per chunk; text itself never shuffles.  At 100 TB the
+    chunk relation is ~1/CDC_MOD of the token count — the same
     reduction every downstream stage inherits.
     """
     per = cdc_chunks(docs).groupBy("source", "chunk_hash").agg(
@@ -877,37 +874,37 @@ def cdc_chunks(docs: DataFrame) -> DataFrame:
     (doc_id, source, chunk_idx, n_tok, chunk_hash) — exposed because
     the chunk table IS the content-addressed store's ingest unit:
     version-over-version ingest (cdc_reuse_stats) stores only chunk
-    hashes it has not seen.  One doc-keyed exchange shared by the
-    running chunk-id window and the chunk-content aggregate."""
-    from pyspark.sql import Window
+    hashes it has not seen.
 
-    toks = docs.select(
-        "doc_id",
-        "source",
-        F.posexplode(tokens_expr()).alias("pos", "tok"),
+    Chunking is local to a document, so it runs inside the document's
+    row: the token array, one boundary flag per token, the chunk start
+    and end offsets, then one ``slice`` + md5 per chunk exploded to a
+    row.  chunk_idx is the running boundary count at the chunk's first
+    token (the k-th chunk is k, plus one when token 0 is a boundary).
+    Each array is its own projected column so the lambdas reference
+    it instead of recomputing it per element (operators/text.py
+    shingles_from_tokens).  A NULL text has no tokens and no chunks.
+    """
+    toks = docs.where("text IS NOT NULL").select(
+        "doc_id", "source", tokens_expr().alias("toks")
     )
-    flag = (
-        F.pmod(
-            F.conv(
-                F.substring(F.md5(F.concat(F.lit("cdc|"), F.col("tok"))), 1, 15),
-                16,
-                10,
-            ).cast("bigint"),
-            F.lit(CDC_MOD),
-        )
-        == 0
-    ).cast("int")
-    w = Window.partitionBy("doc_id").orderBy("pos")
+    gear = "pmod(CAST(conv(substring(md5(concat('cdc|', t)), 1, 15), 16, 10) AS BIGINT)"
     return (
-        toks.withColumn("b", flag)
-        .withColumn("chunk_idx", F.sum("b").over(w))
-        .groupBy("doc_id", "source", "chunk_idx")
-        .agg(
-            F.count(F.lit(1)).alias("n_tok"),
-            F.expr(
-                "md5(array_join(transform(array_sort("
-                "collect_list(struct(pos, tok))), s -> s.tok), ' '))"
-            ).alias("chunk_hash"),
+        toks.selectExpr("*", f"transform(toks, t -> {gear}, {CDC_MOD}) = 0) AS b")
+        .selectExpr(
+            "doc_id",
+            "source",
+            "toks",
+            "CAST(b[0] AS BIGINT) AS b0",
+            "filter(sequence(0, size(toks) - 1), i -> i = 0 OR b[i]) AS starts",
+            "filter(sequence(1, size(toks)), i -> i = size(toks) OR b[i]) AS ends",
+        )
+        .selectExpr(
+            "doc_id",
+            "source",
+            "inline(transform(starts, (s, k) -> named_struct('chunk_idx', k + b0,"
+            " 'n_tok', CAST(ends[k] - s AS BIGINT),"
+            " 'chunk_hash', md5(array_join(slice(toks, s + 1, ends[k] - s), ' ')))))",
         )
     )
 
@@ -920,24 +917,29 @@ def cdc_reuse_stats(v1: DataFrame, v2: DataFrame) -> DataFrame:
     n_new_tokens the only content a de-duplicating store writes for
     the new version.
 
-    Plan: both sides collapse to chunk relations first (the one
-    corpus-scale exchange each, shared with their chunk-id windows);
-    v1's DISTINCT chunk-hash set then left-semi-classifies v2's
-    chunks on the hash — a join between two ~1/CDC_MOD-sized relations,
-    never between corpora.  At 100 TB the v1 side is the store's
-    existing hash index, read not recomputed."""
-    v1h = cdc_chunks(v1).select("chunk_hash").distinct()
-    c2 = cdc_chunks(v2).join(
-        v1h.withColumn("_seen", F.lit(True)), "chunk_hash", "left"
+    Plan: both versions' chunk rows (cut in-row, no exchange) meet in
+    ONE aggregation keyed on chunk_hash that records per hash whether
+    v1 holds it, how many v2 instances it has and their tokens; one
+    global aggregation then sums the v2-present hashes.  The single
+    corpus-scale exchange carries ~1/CDC_MOD-sized chunk rows, never
+    text.  At 100 TB the v1 side is the store's existing hash index,
+    read not recomputed."""
+    rows = (
+        cdc_chunks(v1)
+        .selectExpr("chunk_hash", "true AS in_v1", "n_tok")
+        .unionByName(cdc_chunks(v2).selectExpr("chunk_hash", "false AS in_v1", "n_tok"))
     )
-    return c2.agg(
-        F.count(F.lit(1)).alias("n_v2_chunks"),
-        F.sum(F.col("_seen").isNotNull().cast("bigint")).alias("n_reused"),
-        F.sum(F.col("_seen").isNull().cast("bigint")).alias("n_new"),
-        F.expr(
-            "(sum(CAST(_seen IS NOT NULL AS BIGINT)) * 10000) DIV count(1)"
-        ).alias("reuse_ratio_q"),
-        F.sum(
-            F.when(F.col("_seen").isNull(), F.col("n_tok")).otherwise(F.lit(0))
-        ).alias("n_new_tokens"),
+    per = rows.groupBy("chunk_hash").agg(
+        F.expr("bool_or(in_v1)").alias("seen"),
+        F.expr("count_if(NOT in_v1)").alias("n2"),
+        F.expr("sum(IF(in_v1, 0, n_tok))").alias("tok2"),
+    )
+    # Only v2-present hashes count; an empty v2 still reports 0 chunks
+    # (COUNT semantics) with NULL sums.
+    return per.where("n2 > 0").agg(
+        F.coalesce(F.sum("n2"), F.lit(0)).alias("n_v2_chunks"),
+        F.expr("sum(IF(seen, n2, 0))").alias("n_reused"),
+        F.expr("sum(IF(seen, 0, n2))").alias("n_new"),
+        F.expr("(sum(IF(seen, n2, 0)) * 10000) DIV sum(n2)").alias("reuse_ratio_q"),
+        F.expr("sum(IF(seen, 0, tok2))").alias("n_new_tokens"),
     )

@@ -383,34 +383,23 @@ def _bucket_windowed_directed(buckets: DataFrame, window: int) -> DataFrame:
     per-bucket positional window — the ONE expansion both
     :func:`_bucket_windowed_pairs` (canonicalized least/greatest) and
     :func:`knn_graph` (symmetrized both directions) build on, stated
-    once so the order key / sequence bounds cannot drift between them
-    (r11 review: the two bodies had diverged into copies).  Plan
-    shape: one row_number window per (tbl, bucket), an explode of a
-    bounded integer sequence, and an EQUI-join back on (tbl, bucket,
-    pos) — no non-equi join, no occupancy^2 blowup."""
+    once so the order key and frame bounds cannot drift between them.
+    Plan shape: one sliding window per (tbl, bucket) in md5 order whose
+    ``ROWS BETWEEN 1 FOLLOWING AND window FOLLOWING`` frame collects
+    each member's successors, then an explode — one exchange, no join,
+    no occupancy^2 blowup.  A NULL vec_id holds its position but is
+    never collected as a successor; the norms join drops it anyway."""
     order_key = F.md5(
         F.concat_ws(":", F.col("tbl").cast("string"), F.col("vec_id").cast("string"))
     )
-    posed = buckets.select(
-        "tbl",
-        "bucket",
-        "vec_id",
-        F.row_number()
-        .over(Window.partitionBy("tbl", "bucket").orderBy(order_key, F.col("vec_id")))
-        .alias("pos"),
+    succ = (
+        Window.partitionBy("tbl", "bucket")
+        .orderBy(order_key, F.col("vec_id"))
+        .rowsBetween(1, window)
     )
-    lhs = posed.select(
-        "tbl",
-        "bucket",
-        F.col("vec_id").alias("va"),
-        F.explode(F.sequence(F.col("pos") + 1, F.col("pos") + F.lit(window))).alias(
-            "pos"
-        ),
-    )
-    return lhs.join(
-        posed.select("tbl", "bucket", "pos", F.col("vec_id").alias("vb")),
-        ["tbl", "bucket", "pos"],
-    ).select("va", "vb")
+    return buckets.select(
+        F.col("vec_id").alias("va"), F.collect_list("vec_id").over(succ).alias("vbs")
+    ).select("va", F.explode("vbs").alias("vb"))
 
 
 def _bucket_windowed_pairs(buckets: DataFrame, window: int) -> DataFrame:
@@ -513,23 +502,22 @@ def knn_graph(buckets: DataFrame, norms: DataFrame) -> DataFrame:
     case under corpus-scaled bits) still yield their COMPLETE pair
     set, so at driver scales the capped graph is the uncapped graph.
 
-    The window expansion is an explode of a bounded integer sequence
-    joined back equi- on (tbl, bucket, pos) — no non-equi join, no
-    skew: Spark plans it as a plain shuffled hash/sort-merge join on
-    uniformly-hashed keys.  The rank window engages Spark's
-    WindowGroupLimit: each src group keeps only KNN_GRAPH_K rows
-    through the sort, so the post-shuffle state is KNN_GRAPH_K·N
-    edges, not the candidate multiset.  At 100 TB both signature relations come from the
-    persisted index store — graph construction never rescans or
-    re-projects the corpus.
+    The window expansion is one sliding frame per (tbl, bucket) that
+    collects each member's KNN_WINDOW successors, exploded to edges —
+    no join at all, so the bucket relation shuffles once.  The rank
+    window engages Spark's WindowGroupLimit: each src group keeps only
+    KNN_GRAPH_K rows through the sort, so the post-shuffle state is
+    KNN_GRAPH_K·N edges, not the candidate multiset.  At 100 TB both
+    signature relations come from the persisted index store — graph
+    construction never rescans or re-projects the corpus.
     """
     fwd = _bucket_windowed_directed(buckets, KNN_WINDOW).select(
         F.col("va").alias("src_id"), F.col("vb").alias("nbr_id")
     )
     # Both edge directions from ONE execution of the windowed-expansion
     # subtree (r12): a self-union evaluates `fwd` twice per run (each
-    # union branch is an independent subtree — the bucket join and
-    # position window re-ran for the reversed copy); exploding a 2-array
+    # union branch is an independent subtree — the successor window
+    # re-ran for the reversed copy); exploding a 2-array
     # of (fwd, reversed) structs emits the identical row multiset in a
     # single pass.
     cand = (
@@ -578,14 +566,14 @@ def knn_graph(buckets: DataFrame, norms: DataFrame) -> DataFrame:
     )
 
 
-def _bucket_probe_candidates(buckets: DataFrame, n_queries: int) -> DataFrame:
+def _bucket_probe_candidates(buckets: DataFrame) -> DataFrame:
     """Slim (query_id, neighbor_id) candidates from the signature
     store: broadcast the tiny query bucket slice against the corpus
     bucket relation, drop self-pairs, dedup multi-table collisions —
     the ONE probe both :func:`range_search` and :func:`lsh_topk` score
     from, stated once so a probe change (e.g. a per-query candidate
     cap) cannot drift the two operators apart."""
-    qb = buckets.filter(F.col("vec_id") < n_queries).select(
+    qb = buckets.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"), "tbl", "bucket"
     )
     return (
@@ -614,7 +602,7 @@ def range_search(buckets: DataFrame, norms: DataFrame) -> DataFrame:
     interest (and the oracle replicates the banding, so the gate is
     exact).
     """
-    cand = _bucket_probe_candidates(buckets, N_QUERIES)
+    cand = _bucket_probe_candidates(buckets)
     return (
         cand.join(
             norms.select(
@@ -972,7 +960,7 @@ def lsh_topk(buckets: DataFrame, norms: DataFrame) -> DataFrame:
     ``buckets``/``norms`` are the signature relations shared with the
     near-dup path (:func:`lsh_buckets`, :func:`with_norms`).
     """
-    cand = _bucket_probe_candidates(buckets, N_QUERIES)
+    cand = _bucket_probe_candidates(buckets)
     q_emb = norms.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("q_emb"),
@@ -1629,7 +1617,7 @@ def pca_power_model(partials: list, dim: int = EMB_DIM) -> dict:
     folds cost minutes for no gate.
     """
     if dim > PCA_FOLD_MAX_DIM:
-        return _pca_power_model_np(partials, dim, PCA_ITERS, PCA_COMPONENTS)
+        return _pca_power_model_np(partials, dim)
     d = dim
     # deterministic combine order (partition/batch order is not part
     # of the contract): sort by FULL content — (n, s) alone could tie
@@ -1676,9 +1664,7 @@ def pca_power_model(partials: list, dim: int = EMB_DIM) -> dict:
     return {"n": n, "mu_q": mu_q, "m_q": m_q, "trace_q": trace_q, "comps": comps}
 
 
-def _pca_power_model_np(
-    partials: list, dim: int, iters: int, components: int
-) -> dict:
+def _pca_power_model_np(partials: list, dim: int) -> dict:
     """BLAS-accumulated twin of the fold path in
     :func:`pca_power_model` — same deterministic combine order, same
     1e-6 quantization, same power steps and deflation, with numpy
@@ -1723,9 +1709,9 @@ def _pca_power_model_np(
 
     comps: list[tuple[float, list[float]]] = []
     m = m_q.copy()
-    for _ in range(components):
+    for _ in range(PCA_COMPONENTS):
         v = np.ones(d)
-        for _ in range(iters):
+        for _ in range(PCA_ITERS):
             w = m @ v
             v = w / math.sqrt(float(w @ w))
         w = m @ v

@@ -1803,11 +1803,10 @@ def _register_dd_cdc_chunks() -> None:
         fixed-point dedup ratio, and the tokens sitting in redundant
         chunk instances (what cross-document storage dedup reclaims —
         the FastCDC-family backup/dataset-versioning measure, distinct
-        from the semantic near-dup families).  The corpus shuffles
-        once for the whole chunking stage: the boundary flag is a
-        narrow map, the running chunk id and the chunk-content
-        aggregate share the doc-keyed exchange, and only the
-        (chunk_hash, counts) relation flows on."""
+        from the semantic near-dup families).  Chunking runs inside
+        each document's row (boundary flags, chunk offsets, one md5
+        per chunk), so text never shuffles: the first exchange is the
+        (source, chunk_hash) aggregate over the chunk relation."""
         from ..operators.dedup import cdc_chunk_stats
 
         return cdc_chunk_stats(load_tables(spark, sf_dir)["documents"])
@@ -1890,9 +1889,9 @@ def _register_dd_cdc_incremental() -> None:
         Because CDC boundaries are content-local, an edited document
         re-ingests only its changed neighborhoods — the measured
         reuse ratio is the dataset-versioning storage win.  Both
-        versions collapse to chunk relations (one corpus-scale
-        exchange each); the classify join runs between two
-        ~1/16-sized hash relations, never between corpora."""
+        versions chunk inside their rows; their ~1/16-sized chunk rows
+        meet in one chunk_hash aggregation that classifies every v2
+        instance, then one global aggregation sums the report."""
         from ..operators.dedup import cdc_reuse_stats
 
         docs = load_tables(spark, sf_dir)["documents"].select(

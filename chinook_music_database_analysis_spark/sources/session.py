@@ -25,6 +25,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from ..cache import memo
 
@@ -109,6 +110,19 @@ def _load_one(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         return _normalize_event_ts(df) if name == "events" else df
 
     return memo(f"read:{name}", spark, sf_dir, read)
+
+
+def table_schema(spark: SparkSession, sf_dir: str, name: str) -> StructType:
+    """The schema of one corpus table as stored (events.ts before
+    :func:`_normalize_event_ts`), memoized in the session cache: a
+    schema read is a Spark job (~80 ms warm), and the stream readers
+    need one per drain.  A rewritten corpus is a new snapshot and
+    re-reads it."""
+
+    def read() -> StructType:
+        return spark.read.parquet(f"{sf_dir}/{name}.parquet").schema
+
+    return memo(f"schema:{name}", spark, sf_dir, read)
 
 
 def _normalize_event_ts(df: DataFrame) -> DataFrame:

@@ -30,9 +30,9 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     (nanos-long datasets divide to micros; native timestamps pass
     through untouched).
     """
-    from ..sources.session import _normalize_event_ts
+    from ..sources.session import _normalize_event_ts, table_schema
 
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    schema = table_schema(spark, sf_dir, "events")
     # The file stream source wants a directory base path — glob the
     # single file so the base resolves to the sf directory.
     raw = spark.readStream.schema(schema).parquet(f"{sf_dir}/events*.parquet")

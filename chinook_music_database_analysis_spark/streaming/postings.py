@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.text import tokens_expr
+from ..sources.session import table_schema
 from .sinks import start_batch_sink, write_batch
 
 
@@ -39,7 +40,7 @@ def read_documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream the documents table (file source standing in for the
     ingest bus; the glob makes the single-file path resolve against
     the sf directory base, the read_events_stream recipe)."""
-    schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
+    schema = table_schema(spark, sf_dir, "documents")
     return spark.readStream.schema(schema).parquet(f"{sf_dir}/documents*.parquet")
 
 

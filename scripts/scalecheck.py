@@ -239,12 +239,12 @@ QUERIES = {
     # version), so the bound is the broadcast-join + rollup it
     # actually is instead of the inherited LSH-build allowance
     "cur_leakage_safe_split": 1.3,
-    # r8: CDC chunking — posexplode + one doc-keyed exchange shared by
-    # the running chunk id and the chunk aggregate, then chunk-sized
-    # (~1/16 of tokens) relations; linear
-    "dd_cdc_chunks": 1.3,
-    # r8: two CDC chunk passes + a join of two ~1/16-sized hash
+    # r8: CDC chunking — chunks cut inside each doc's row (no
+    # doc-keyed exchange), then chunk-sized (~1/16 of tokens)
     # relations; linear
+    "dd_cdc_chunks": 1.3,
+    # r8: two in-row CDC chunk passes + one chunk_hash aggregation
+    # over their ~1/16-sized union; linear
     "dd_cdc_incremental": 1.3,
     # r8: k-means on the base subset + one broadcast-centroid argmax
     # over the corpus — the IVF family's N*sqrt(N) shape
@@ -589,8 +589,8 @@ def main() -> int:
         # vocabulary admits only ~30k distinct 3-grams, so at 50k docs
         # every shingle's df exceeds the cap (the total-hot-corpus
         # regime); candidates then come entirely from the LSH bands,
-        # which is also why the exact-containment router (below)
-        # switches to the capped path at this scale.
+        # which is also why the exact-containment guard (below)
+        # refuses this scale and names dd_containment_scale.
         print(
             f"containment probe candidates ({tag}): {n_cand} "
             f"(cap={cap}, bound={bound_pairs})"
@@ -610,6 +610,8 @@ def main() -> int:
     # guard demonstrably working — both decisions are logged.
     from chinook_music_database_analysis_spark.operators.dedup import (
         HOT_JOIN_FACTOR,
+        HotShingleCorpusError,
+        check_hot_shingles,
     )
     from chinook_music_database_analysis_spark.plans.extensions import (
         _containment_join_stats,
@@ -617,13 +619,17 @@ def main() -> int:
 
     for tag, d in (("base", BASE), (f"{args.factor}x", out_dir)):
         n_rows, join_rows = _containment_join_stats(spark, d)
-        routed = join_rows > HOT_JOIN_FACTOR * n_rows
+        try:
+            check_hot_shingles(n_rows, join_rows)
+            refused = False
+        except HotShingleCorpusError:
+            refused = True
         print(
             f"containment exact join rows ({tag}): {join_rows} "
             f"(shingle rows {n_rows}, bound {HOT_JOIN_FACTOR}x) -> "
-            f"{'guard REFUSES (use dd_containment_scale)' if routed else 'exact path'}"
+            f"{'guard REFUSES (use dd_containment_scale)' if refused else 'exact path'}"
         )
-        if tag == "base" and routed:
+        if tag == "base" and refused:
             failures.append(
                 ("containment_router_base", join_rows, HOT_JOIN_FACTOR * n_rows)
             )

@@ -402,6 +402,53 @@ def test_pair_window_cap_complete_on_benign_buckets(spark):
     assert n_cand < n * (n - 1) // 2  # strictly below the self-join
 
 
+def test_bucket_windowed_directed_matches_sequence_join(spark):
+    """The sliding successor window emits exactly the directed pair
+    multiset of the positional self-join reference (row_number, explode
+    of pos+1..pos+window, equi-join back on (tbl, bucket, pos)) on
+    buckets whose occupancy is above, equal to and below the window,
+    and with a window larger than every bucket."""
+    from pyspark.sql import Window
+
+    from chinook_music_database_analysis_spark.operators.similarity import (
+        _bucket_windowed_directed,
+    )
+
+    window = 4
+    rows = (
+        [(v, 0, 7) for v in range(window + 3)]  # occupancy > window
+        + [(v, 0, 8) for v in range(10, 10 + window)]  # == window
+        + [(v, 0, 9) for v in range(20, 22)]  # < window
+        + [(v, 1, v % 2) for v in range(30)]  # second table, mixed ids
+    )
+    buckets = spark.createDataFrame(rows, "vec_id long, tbl int, bucket long")
+
+    def reference(w: int):
+        key = F.md5(F.concat_ws(":", "tbl", "vec_id"))
+        posed = buckets.withColumn(
+            "pos",
+            F.row_number().over(
+                Window.partitionBy("tbl", "bucket").orderBy(key, F.col("vec_id"))
+            ),
+        )
+        lhs = posed.select(
+            "tbl",
+            "bucket",
+            F.col("vec_id").alias("va"),
+            F.explode(F.sequence(F.col("pos") + 1, F.col("pos") + w)).alias("pos"),
+        )
+        rhs = posed.select("tbl", "bucket", "pos", F.col("vec_id").alias("vb"))
+        return lhs.join(rhs, ["tbl", "bucket", "pos"]).select("va", "vb")
+
+    for w in (window, 10**6):
+        got = sorted(_bucket_windowed_directed(buckets, w).collect())
+        assert got == sorted(reference(w).collect()), w
+        # each member pairs with min(window, its successors) mates
+        assert len(got) == sum(
+            min(w, m - 1 - i) for m in (7, 4, 2, 15, 15) for i in range(m)
+        ), w
+
+
 def test_pca_power_model_matches_numpy(spark):
     """The quantize-then-power-iterate eigensolve must agree with
     numpy's exact eigendecomposition OF THE SAME quantized matrix:
@@ -548,7 +595,7 @@ def test_router_dual_route_oracle_gate(spark, tmp_path):
     bk, wn = lsh_buckets(emb, lsh_n_bits(emb.count())), with_norms(emb)
     # the corpus must actually be hot (the probe reaches at least half
     # of |q| x N), or this gate proves nothing the registry doesn't
-    n_cand = _bucket_probe_candidates(bk, n_q).count()
+    n_cand = _bucket_probe_candidates(bk).count()
     assert n_cand >= 0.5 * n_q * n, n_cand
 
     con = duckdb.connect()
@@ -576,9 +623,7 @@ def test_pca_power_model_method_routing():
     import numpy as np
 
     from chinook_music_database_analysis_spark.operators.similarity import (
-        PCA_COMPONENTS,
         PCA_FOLD_MAX_DIM,
-        PCA_ITERS,
         _pca_power_model_np,
         pca_power_model,
     )
@@ -594,7 +639,7 @@ def test_pca_power_model_method_routing():
         X[:, 0] *= 4.0
         parts.append((200, X.sum(axis=0).tolist(), (X.T @ X).ravel().tolist()))
     fold = pca_power_model(parts, dim=d)  # d=64 <= cap -> fold path
-    blas = _pca_power_model_np(parts, d, PCA_ITERS, PCA_COMPONENTS)
+    blas = _pca_power_model_np(parts, d)
     assert fold["m_q"] == blas["m_q"]
     assert fold["mu_q"] == blas["mu_q"]
     assert fold["trace_q"] == blas["trace_q"]

@@ -814,6 +814,135 @@ def test_cdc_chunking_is_insertion_robust(spark):
     assert len(a_segs & b_segs) == 0
 
 
+def _cdc_words(boundary: bool, n: int) -> list[str]:
+    """n words that do (or do not) open a CDC chunk: the md5 gear's
+    15-hex-digit prefix mod 16 is its 15th hex digit."""
+    import hashlib
+
+    from chinook_music_database_analysis_spark.operators.dedup import CDC_MOD
+
+    assert CDC_MOD == 16
+    return [
+        w
+        for w in (f"w{i}" for i in range(4000))
+        if (hashlib.md5(f"cdc|{w}".encode()).hexdigest()[14] == "0") == boundary
+    ][:n]
+
+
+def _cdc_chunks_reference(docs):
+    """The token-row definition of the CDC chunk relation: posexplode,
+    a running boundary count per doc as the chunk id, and the chunk
+    re-aggregated from its rows in position order."""
+    from pyspark.sql import Window
+
+    from chinook_music_database_analysis_spark.operators.dedup import CDC_MOD
+    from chinook_music_database_analysis_spark.operators.text import tokens_expr
+
+    toks = docs.select(
+        "doc_id", "source", F.posexplode(tokens_expr()).alias("pos", "tok")
+    )
+    flag = F.expr(
+        "CAST(pmod(CAST(conv(substring(md5(concat('cdc|', tok)), 1, 15), 16, 10)"
+        f" AS BIGINT), {CDC_MOD}) = 0 AS INT)"
+    )
+    w = Window.partitionBy("doc_id").orderBy("pos")
+    return (
+        toks.withColumn("chunk_idx", F.sum(flag).over(w))
+        .groupBy("doc_id", "source", "chunk_idx")
+        .agg(
+            F.count(F.lit(1)).alias("n_tok"),
+            F.expr(
+                "md5(array_join(transform(array_sort("
+                "collect_list(struct(pos, tok))), s -> s.tok), ' '))"
+            ).alias("chunk_hash"),
+        )
+    )
+
+
+def test_cdc_chunks_match_token_row_reference(spark):
+    """The in-row chunker equals the token-row reference (posexplode +
+    running-sum window + re-aggregation) row for row and type for type
+    on the edge shapes: NULL, empty and whitespace-only text, a first
+    token that is a boundary, one-token docs (boundary or not), runs
+    of consecutive boundaries and a doc ending on a boundary."""
+    from chinook_music_database_analysis_spark.operators.dedup import cdc_chunks
+
+    b0, b1, b2 = _cdc_words(True, 3)
+    n0, n1, n2 = _cdc_words(False, 3)
+    docs = spark.createDataFrame(
+        [
+            (1, "a", None),
+            (2, "a", ""),
+            (3, "b", "   "),
+            (4, "b", f"{b0} {n0} {n1} {b1} {n2}"),
+            (5, "a", n0),
+            (6, "a", b0),
+            (7, "b", f"{n0} {b0} {b1} {b2} {n1}\t{n2}"),
+            (8, None, f"  {n0} {n1} {b2}"),
+        ],
+        "doc_id long, source string, text string",
+    )
+    got, ref = cdc_chunks(docs), _cdc_chunks_reference(docs)
+    assert got.dtypes == ref.dtypes
+    rows = sorted(got.collect())
+    assert rows == sorted(ref.collect())
+    by_doc: dict = {}
+    for r in rows:
+        by_doc.setdefault(r.doc_id, []).append((r.chunk_idx, r.n_tok))
+    assert 1 not in by_doc  # NULL text: no chunks
+    assert by_doc[2] == by_doc[3] == [(0, 1)]  # one empty token
+    assert by_doc[4] == [(1, 3), (2, 2)]  # first token opens chunk 1
+    assert by_doc[5] == [(0, 1)] and by_doc[6] == [(1, 1)]
+    assert by_doc[7] == [(0, 1), (1, 1), (2, 1), (3, 3)]
+    assert by_doc[8] == [(0, 2), (1, 1)]
+
+
+def test_cdc_reuse_stats_counts_v2_instances(spark):
+    """Reuse classification counts every v2 chunk INSTANCE (a chunk
+    repeated inside v2 counts each time, reused or new) and ignores
+    hashes only v1 holds; pinned by hand and against the distinct-v1
+    left-join reference."""
+    from chinook_music_database_analysis_spark.operators.dedup import cdc_reuse_stats
+
+    a, b, c, d, e, f = _cdc_words(False, 6)
+    schema = "doc_id long, source string, text string"
+    v1 = spark.createDataFrame(
+        [(1, "s", f"{a} {b}"), (2, "s", f"{c} {d} {e}")], schema
+    )
+    v2 = spark.createDataFrame(
+        [
+            (1, "s", f"{a} {b}"),  # reused
+            (3, "s", f"{a} {b}"),  # reused, second instance
+            (4, "s", f),  # new
+            (5, "s", f),  # new, second instance
+            (6, "s", f"{e} {d} {c}"),  # new: v1's tokens, other order
+            (7, "s", None),  # no chunks
+        ],
+        schema,
+    )
+    row = cdc_reuse_stats(v1, v2).collect()[0].asDict()
+    assert row == {
+        "n_v2_chunks": 5,
+        "n_reused": 2,
+        "n_new": 3,
+        "reuse_ratio_q": 2 * 10000 // 5,
+        "n_new_tokens": 1 + 1 + 3,
+    }
+    seen = _cdc_chunks_reference(v1).select("chunk_hash").distinct()
+    ref = (
+        _cdc_chunks_reference(v2)
+        .join(seen.withColumn("seen", F.lit(True)), "chunk_hash", "left")
+        .agg(
+            F.count(F.lit(1)).alias("n_v2_chunks"),
+            F.count("seen").alias("n_reused"),
+            F.sum(F.col("seen").isNull().cast("bigint")).alias("n_new"),
+            F.sum(F.when(F.col("seen").isNull(), F.col("n_tok"))).alias("n_new_tokens"),
+        )
+        .collect()[0]
+    )
+    assert {k: row[k] for k in ref.asDict()} == ref.asDict()
+
+
 def test_hash_sample_100pct_keeps_every_row(docs):
     """r11 review regression: pct_threshold(100) used to emit '10000',
     which sorts lexicographically BELOW 'ffff'-ish buckets and

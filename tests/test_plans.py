@@ -477,18 +477,44 @@ def test_pca_outliers_zero_exchange_take_ordered(spark):
     assert "Exchange" not in mplan
 
 
-def test_embedding_cosine_pair_sweep_is_equi_join(spark):
+def test_embedding_cosine_pair_sweep_is_one_window(spark):
     """dd_embedding_cosine's r9 occupancy cap must keep the candidate
-    stage an EQUI-join on (tbl, bucket, pos) — no nested-loop/cartesian
-    node anywhere (the uncapped form was a bucket self-join whose hot
-    buckets went occupancy^2; the windowed rewrite bounds it by
-    construction, and this locks the plan so a regression to a
-    non-equi pair join can't ship silently)."""
+    stage ONE sliding window per (tbl, bucket) that collects each
+    member's PAIR_WINDOW successors — no nested-loop/cartesian node
+    anywhere (the uncapped form was a bucket self-join whose hot
+    buckets went occupancy^2; the windowed form bounds it by
+    construction), and no positional self-join (row_number + sequence
+    explode + equi-join evaluated the position window twice)."""
+    from chinook_music_database_analysis_spark.operators.similarity import (
+        PAIR_WINDOW,
+    )
+
     plan = _plan(spark, "dd_embedding_cosine")
     assert "BroadcastNestedLoopJoin" not in plan
     assert "CartesianProduct" not in plan
-    # the positional window runs per (tbl, bucket)
-    assert "row_number" in plan.lower() or "RunningWindowFunction" in plan
+    assert f"specifiedwindowframe(RowFrame, 1, {PAIR_WINDOW})" in plan
+    assert "row_number" not in plan.lower()
+
+
+def test_document_and_bucket_local_work_adds_no_exchange(spark):
+    """Per-document CDC chunking runs inside the row (no doc-keyed
+    exchange, window or sort), chunk reuse classifies in one chunk_hash
+    aggregation, and the bucket successor window shuffles the bucket
+    relation once: the exchange counts of the executed plans, so a
+    refactor that re-adds a shuffle fails here."""
+    from chinook_music_database_analysis_spark.engine import profile_query
+
+    expected = {
+        "dd_cdc_incremental": 2,
+        "dd_cdc_chunks": 2,
+        "sim_knn_graph": 3,
+        "dd_embedding_cosine": 2,
+    }
+    for name, n_exchanges in expected.items():
+        stats = profile_query(spark, SF_TEST_DIR, name)["plan_stats"]
+        assert stats["exchanges"] == n_exchanges, (name, stats)
+        if name.startswith("dd_cdc"):
+            assert stats["window"] == 0 and stats["sorts"] == 0, (name, stats)
 
 
 def test_core_tier_is_valid_subset():
