@@ -65,6 +65,11 @@ def profile_query(spark: SparkSession, sf_dir: str, name: str) -> dict:
       output column (a ``count()`` lets Catalyst prune the projections
       it does not need).  The write plans again inside its own
       QueryExecution, and that cost lands here, not in ``plan_sec``.
+    * ``compiles``: how many generated classes were compiled during
+      the write (Spark's ``CodegenMetrics`` compilation counter), i.e.
+      misses of the compiled-class cache.  The counter is the driver
+      JVM's, so it sees every compilation only in local mode, where
+      the executor threads share that JVM.  No plan shows this layer.
 
     ``plan`` is the formatted physical plan of that write, read from
     the SQL status store after the timer stops, so it works with the
@@ -80,9 +85,12 @@ def profile_query(spark: SparkSession, sf_dir: str, name: str) -> dict:
     df = QUERIES[name](spark, sf_dir)
     t1 = time.perf_counter()
     df._jdf.queryExecution().executedPlan()
+    compiled = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    n0 = compiled.getCount()
     t2 = time.perf_counter()
     df.write.format("noop").mode("overwrite").save()
     t3 = time.perf_counter()
+    compiles = compiled.getCount() - n0
     # The status store is fed by the listener bus: drain it so the
     # write's end and final-plan events have landed.
     spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
@@ -98,6 +106,7 @@ def profile_query(spark: SparkSession, sf_dir: str, name: str) -> dict:
         "build_sec": round(t1 - t0, 3),
         "plan_sec": round(t2 - t1, 3),
         "wall_sec": round(t3 - t2, 3),
+        "compiles": compiles,
         "plan": plan,
         "plan_stats": stats,
     }

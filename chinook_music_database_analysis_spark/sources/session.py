@@ -25,9 +25,9 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import StructType
+from pyspark.sql.types import StructType, _parse_datatype_json_string
 
-from ..cache import memo
+from ..cache import memo, table_files
 
 #: Every table the driver generates (TESTDATA.md).
 TABLES = (
@@ -44,6 +44,20 @@ TABLES = (
 )
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+#: Entries of the JVM's compiled-class cache
+#: (``spark.sql.codegen.cache.maxEntries``, Spark's default 100), which
+#: maps generated Java source to its compiled class.  It evicts in LRU
+#: order, so a cyclic workload whose working set exceeds it misses on
+#: nearly every lookup and recompiles.  MEASURED on local[4], one cold
+#: pass over all 169 registered queries in one session: 1877 distinct
+#: classes at both sf0.01 and sf0.1.  One pass of the perfbench olap
+#: and corpus queries alone needs 96 and 105, and their stream drains
+#: add more, so the default evicted within one pass.  4096 keeps
+#: >= 1.5x the larger count.  At sf0.1 the warm pass went from 2125
+#: recompiles in 98.7 s to 0 in 76.9 s, for 205 MB of metaspace
+#: instead of 192 MB.
+CODEGEN_CACHE_ENTRIES = 4096
 
 
 def get_spark(app_name: str = "chinook-spark") -> SparkSession:
@@ -77,6 +91,13 @@ def get_spark(app_name: str = "chinook-spark") -> SparkSession:
         .config("spark.sql.shuffle.partitions", cpus)
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
+        # A static conf: it sizes the JVM-wide cache when it is built.
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
+        # Keep the whole-stage codegen stage id out of the class name,
+        # so out of the cache key: AQE numbers stages in the order they
+        # materialize, which varies run to run, and each new number
+        # recompiled an otherwise identical class.
+        .config("spark.sql.codegen.useIdInClassName", "false")
         # events.parquet stores TIMESTAMP(NANOS); Spark's reader has no
         # nanos timestamp type — read as long and convert on load.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -90,7 +111,10 @@ def ensure_session_confs(spark: SparkSession) -> None:
     """Defensive runtime confs for sessions not built by get_spark
     (e.g. the driver's own session): nanos-timestamp parquet support
     and a UTC session timezone (collected timestamps must not shift
-    against the timezone-naive DuckDB oracle)."""
+    against the timezone-naive DuckDB oracle).  The codegen class
+    cache size (:data:`CODEGEN_CACHE_ENTRIES`) is a static conf that
+    only a builder can set, so such a session keeps Spark's 100 and
+    recompiles on warm passes whose working set exceeds it."""
     try:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         spark.conf.set("spark.sql.session.timeZone", "UTC")
@@ -99,14 +123,15 @@ def ensure_session_confs(spark: SparkSession) -> None:
 
 
 def _load_one(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """``spark.read.parquet`` of one corpus table, memoized in the session
-    cache: each read re-lists the path and re-reads the footer through
-    py4j (~15-40 ms per table per build).  The DataFrame is a lazy plan,
-    so every action still scans the files, and a rewritten corpus is a
-    new snapshot and reloads."""
+    """The parquet read of one corpus table under its
+    :func:`table_schema`, memoized in the session cache: each read
+    re-lists the path through py4j (~15-40 ms per table per build).
+    The DataFrame is a lazy plan, so every action still scans the
+    files, and a rewritten corpus is a new snapshot and reloads."""
 
     def read() -> DataFrame:
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+        schema = table_schema(spark, sf_dir, name)
+        df = spark.read.schema(schema).parquet(f"{sf_dir}/{name}.parquet")
         return _normalize_event_ts(df) if name == "events" else df
 
     return memo(f"read:{name}", spark, sf_dir, read)
@@ -114,13 +139,33 @@ def _load_one(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 def table_schema(spark: SparkSession, sf_dir: str, name: str) -> StructType:
     """The schema of one corpus table as stored (events.ts before
-    :func:`_normalize_event_ts`), memoized in the session cache: a
-    schema read is a Spark job (~80 ms warm), and the stream readers
-    need one per drain.  A rewritten corpus is a new snapshot and
-    re-reads it."""
+    :func:`_normalize_event_ts`), memoized in the session cache.
+
+    It is read on the driver from the footer of the table's first data
+    file (:func:`cache.table_files` order) with Spark's own converter,
+    as the inferring read does without its schema job (one per table).
+    Columns are nullable, as a file source reads them.  A partitioned
+    directory's footer lacks the partition columns: partition discovery
+    still adds them to a read under this schema.  A rewritten corpus is
+    a new snapshot and re-reads it."""
 
     def read() -> StructType:
-        return spark.read.parquet(f"{sf_dir}/{name}.parquet").schema
+        path = f"{sf_dir}/{name}.parquet"
+        first = table_files(path)[0][0]
+        jvm, jsession = spark._jvm, spark._jsparkSession
+        parquet = jvm.org.apache.spark.sql.execution.datasources.parquet
+        file = jvm.org.apache.hadoop.fs.Path(f"{path}/{first}" if first else path)
+        footer = parquet.ParquetFooterReader.readFooter(
+            jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+                file, jsession.sessionState().newHadoopConf()
+            ),
+            jvm.org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS,
+        )
+        schema = parquet.ParquetFileFormat.readSchemaFromFooter(
+            jvm.org.apache.parquet.hadoop.Footer(file, footer),
+            parquet.ParquetToSparkSchemaConverter(jsession.sessionState().conf()),
+        )
+        return _parse_datatype_json_string(schema.asNullable().json())
 
     return memo(f"schema:{name}", spark, sf_dir, read)
 

@@ -260,7 +260,7 @@ def test_cli_profile_and_explain(spark, capsys):
     for line, name in zip(lines, ("q04_rev_by_geo", "q02_top_parts_nation0")):
         res = json.loads(line)
         assert res["query"] == name
-        assert {"build_sec", "plan_sec", "wall_sec", "plan_stats"} <= set(res)
+        assert {"build_sec", "plan_sec", "wall_sec", "compiles", "plan_stats"} <= set(res)
     assert main(["explain", "q02_top_parts_nation0", "--sf-dir", SF_TEST_DIR]) == 0
     assert "Scan parquet" in capsys.readouterr().out
 
@@ -271,6 +271,68 @@ def test_shuffle_partitions_follow_core_count(spark):
     partitions than it has task slots."""
     parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
     assert parts == spark.sparkContext.defaultParallelism
+
+
+def test_codegen_cache_holds_the_working_set(spark):
+    """get_spark sizes the compiled-class cache from the one engine
+    constant (a static conf: only the builder can set it)."""
+    from chinook_music_database_analysis_spark.sources.session import CODEGEN_CACHE_ENTRIES
+
+    assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == str(CODEGEN_CACHE_ENTRIES)
+
+
+def test_warm_rerun_compiles_nothing(spark):
+    """A second run of the same queries in one session finds every
+    generated class in the cache: no class is compiled again, whatever
+    order AQE materialized the stages in."""
+    from chinook_music_database_analysis_spark.engine import profile_query
+
+    names = (
+        "q02_top_parts_nation0",
+        "q04c_rollup_geo",
+        "q06_top_part_per_cust",
+        "s02_intl_types",
+        "s04_affinity_brands",
+    )
+    for name in names:
+        profile_query(spark, SF_TEST_DIR, name)
+    again = {name: profile_query(spark, SF_TEST_DIR, name)["compiles"] for name in names}
+    assert again == dict.fromkeys(names, 0)
+
+
+def test_footer_schema_equals_inferring_read(spark, tmp_path):
+    """table_schema reads a table's schema from one footer on the
+    driver; it must equal what Spark's inferring read (a schema job)
+    gives, nullability and field metadata included, for every table of
+    every shipped corpus and of a Spark-written Chinook mount.  On a
+    partitioned directory the footer lacks the partition column, so
+    there the read relation's schema must equal the inferring read's."""
+    from chinook_music_database_analysis_spark.sources import load_tables
+    from chinook_music_database_analysis_spark.sources.chinook_adapter import mount_chinook
+    from chinook_music_database_analysis_spark.sources.session import TABLES, table_schema
+    from test_chinook_native import micro_chinook
+
+    root = os.path.dirname(SF_TEST_DIR)
+    here = os.path.dirname(os.path.abspath(__file__))
+    dirs = [f"{root}/sf{sf}" for sf in ("0.001", "0.01", "0.1")]
+    dirs.append(os.path.join(here, "..", "perfbench", "data", "sf0.01"))
+    dirs.append(mount_chinook(spark, micro_chinook(spark), str(tmp_path / "chinook")))
+    checked = 0
+    for sf_dir in dirs:
+        for name in TABLES:
+            path = f"{sf_dir}/{name}.parquet"
+            if os.path.exists(path):
+                want = spark.read.parquet(path).schema.json()
+                assert table_schema(spark, sf_dir, name).json() == want, path
+                checked += 1
+    assert checked >= 10 * 4 + 7
+
+    part = str(tmp_path / "part")
+    lineitem = spark.read.parquet(f"{SF_TEST_DIR}/lineitem.parquet").limit(200)
+    lineitem.write.partitionBy("l_returnflag").parquet(f"{part}/lineitem.parquet")
+    want = spark.read.parquet(f"{part}/lineitem.parquet").schema
+    assert "l_returnflag" not in table_schema(spark, part, "lineitem").fieldNames()
+    assert load_tables(spark, part)["lineitem"].schema.json() == want.json()
 
 
 def test_sorted_write_layout_enables_rowgroup_skipping(spark, tmp_path):
